@@ -961,7 +961,7 @@ class AnnRoutingRule(session: SparkSession) extends Rule[LogicalPlan] {
       case Some(a) => a
       case None => return None
     }
-    val probes = ivf.model.probeOrder(qvec).take(ivf.nprobe).map(_.toLong)
+    val probes = ivf.model.probeSet(qvec, ivf.nprobe)
     val filtered = Filter(
       In(clusterAttr, probes.map(p => Literal(p))), idxPlan)
     val mapped = Project(

@@ -62,11 +62,14 @@ final case class GraphCandidates(indexPath: String, idName: String,
                                  refine: Int = 8,
                                  hier: Boolean = false,
                                  hierMin: Int = -1) extends LeafNode {
-  override def maxRows: Option[Long] =
-    Some(if (quantized) k.toLong * refine else k.toLong)
-  override def computeStats(): Statistics =
-    Statistics(sizeInBytes =
-      math.max(1L, maxRows.get * 4L * (query.size + 2)))
+  // No `maxRows` override: a bound of k would let Catalyst's EliminateLimits
+  // drop the top-k Limit above this leaf, turning the TakeOrderedAndProject
+  // into a global Sort with a range-partitioning Exchange (three extra jobs
+  // per search under AQE). The size hint alone keeps broadcasts sized.
+  override def computeStats(): Statistics = {
+    val rows = if (quantized) k.toLong * refine else k.toLong
+    Statistics(sizeInBytes = math.max(1L, rows * 4L * (query.size + 2)))
+  }
 }
 
 object GraphCandidates {

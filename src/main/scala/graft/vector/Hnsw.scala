@@ -81,19 +81,47 @@ object Hnsw {
       Array.tabulate(m.dim)(i => m.dequantize(v(i), i))
   }
 
-  /** One partition's nodes, id-ascending. */
-  private final class SubGraph[V](val ids: Array[Long],
-                                  val vecs: Array[V],
-                                  space: Space[V]) {
+  /** One partition's nodes, id-ascending, with primitive adjacency: node
+    * i's neighbours are `adj(i)(0 until deg(i))`, in insertion order
+    * during [[build]] and ascending after [[rehydrate]]. A sub-graph is
+    * walked by one task at a time: [[searchBeam]] reuses its candidate
+    * heap and visited marks. */
+  private[vector] final class SubGraph[V](val ids: Array[Long],
+                                          val vecs: Array[V],
+                                          val space: Space[V]) {
     val n: Int = ids.length
-    val adj: Array[scala.collection.mutable.ArrayBuffer[Int]] =
-      Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
+    private val adj: Array[Array[Int]] = Array.fill(n)(Array.emptyIntArray)
+    private val deg: Array[Int] = new Array[Int](n)
 
-    /** id → index, built once per rehydration and shared by adjacency
-      * resolution and the hierarchy descent (review r15-4: the hier walk
-      * rebuilt this map per probe round). ids ascending ⇒ index order ==
-      * id order. */
-    lazy val idIndex: Map[Long, Int] = ids.zipWithIndex.toMap
+    def neighbors(i: Int): Array[Int] =
+      if (adj(i).length == deg(i)) adj(i)
+      else java.util.Arrays.copyOf(adj(i), deg(i))
+
+    /** Node i's neighbour ids ascending — the stored graph-table form. */
+    def neighborIds(i: Int): Seq[Long] = {
+      val out = new Array[Long](deg(i))
+      var j = 0
+      while (j < out.length) { out(j) = ids(adj(i)(j)); j += 1 }
+      java.util.Arrays.sort(out)
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
+    }
+
+    private def addEdge(i: Int, j: Int): Unit = {
+      if (deg(i) == adj(i).length)
+        adj(i) = java.util.Arrays.copyOf(adj(i), math.max(4, deg(i) * 2))
+      adj(i)(deg(i)) = j
+      deg(i) += 1
+    }
+
+    private[vector] def setNeighbors(i: Int, nbrs: Array[Int]): Unit = {
+      adj(i) = nbrs; deg(i) = nbrs.length
+    }
+
+    /** Index of `id` among the ascending [[ids]], or -1. */
+    def indexOf(id: Long): Int = {
+      val p = java.util.Arrays.binarySearch(ids, id)
+      if (p >= 0) p else -1
+    }
 
     private def d(i: Int, q: Array[Float]): Double =
       space.dist(vecs(i), q)
@@ -103,10 +131,21 @@ object Hnsw {
       * nodes with exactly the kernel the layer-0 beam uses. */
     def nodeDist(i: Int, q: Array[Float]): Double = d(i, q)
 
+    // walk scratch, reused across searches: the candidate min-heap and
+    // hnswlib-style visited marks (a node is visited iff its mark equals
+    // the current walk's stamp, so nothing is cleared between walks)
+    private val cand = new TopK.PairHeap(64, maxFirst = false)
+    private val visited = new Array[Int](n)
+    private var stamp = 0
+
     /** Beam search over the first `upTo` inserted nodes (the graph so far
-      * during build; the whole graph when upTo = n). Returns (dist, idx)
-      * ascending, at most ef entries — every reachable node when ef >= upTo
-      * (the chain edges make all of them reachable).
+      * during build; the whole graph when upTo = n). Returns the result
+      * heap sorted ascending by (dist, idx) — `value(j)` the distance,
+      * `id(j)` the node index — at most ef entries; every reachable node
+      * when ef >= upTo (the chain edges make all of them reachable).
+      * Candidates and results are primitive (dist, idx) heaps under
+      * `java.lang.Double.compare`, then the index — the hnswlib shape
+      * (knn/knn.cpp:455-537: two candidate heaps plus a visited list).
       *
       * `allowed` is K3's in-traversal filter (ref KNNFilter_i::IsAllowed,
       * knn/knn.h:87-94 wrapped for hnswlib by HNSWFilterWrapper_c,
@@ -114,14 +153,16 @@ object Hnsw {
       * keep the graph connected) but only allowed ones enter the result
       * beam. With ef >= upTo the result is exactly the allowed subset —
       * the bound never prunes, because the result heap holds at most the
-      * allowed count <= ef entries. */
-    /** `term`, when non-null, is the reference's ADAPTIVE termination
+      * allowed count <= ef entries.
+      *
+      * `term`, when non-null, is the reference's ADAPTIVE termination
       * (knn/termination.h:23-52): each expansion round reports its
       * discovery rate, and `patience` consecutive rounds below the moving
       * P² quantile of that rate end the walk before beam exhaustion —
       * opt-in, so the exact (full-ef) contract of every gate is
-      * untouched. */
-    /** `counters`, when non-null, receives walk telemetry: counters(0) +=
+      * untouched.
+      *
+      * `counters`, when non-null, receives walk telemetry: counters(0) +=
       * nodes EXPANDED (dequeued with their adjacency scanned — the "hops"
       * a walk takes), counters(1) += distances scored. Measurement only;
       * never changes the walk. This is the engine's analog of the
@@ -130,8 +171,9 @@ object Hnsw {
       * CreateIterator's bCollectMetrics is set, knn/iterator.cpp:35):
       * callers pass a `scoredAcc` LongAccumulator to the public search
       * entry points and read distances-scored across the distributed
-      * walk the way the host reads Iterator_i::GetStats(). */
-    /** `entry` is the layer-0 start node — node 0 (the lowest id, the flat
+      * walk the way the host reads Iterator_i::GetStats().
+      *
+      * `entry` is the layer-0 start node — node 0 (the lowest id, the flat
       * NSW convention) unless a hierarchy descent ([[descend]]) supplies a
       * closer one. At ef >= upTo the walk is exhaustive either way (chain
       * edges reach every node from any entry), so the exact contract of
@@ -140,43 +182,49 @@ object Hnsw {
                    allowed: Int => Boolean = _ => true,
                    term: Quantile.Termination = null,
                    counters: Array[Long] = null,
-                   entry: Int = 0): Seq[(Double, Int)] = {
-      if (upTo == 0) return Nil
-      val ord = Ordering.Tuple2[Double, Int]
-      // candidates: min-first by (dist, id-idx); results: max-first
-      val cand = scala.collection.mutable.PriorityQueue.empty[(Double, Int)](ord.reverse)
-      val res = scala.collection.mutable.PriorityQueue.empty[(Double, Int)](ord)
-      val visited = new java.util.BitSet(upTo)
-      val e0 = (d(entry, q), entry)
-      cand.enqueue(e0); visited.set(entry)
-      if (allowed(entry)) res.enqueue(e0)
-      while (cand.nonEmpty) {
-        val c = cand.dequeue()
-        if (res.size >= ef && ord.gt(c, res.head)) { cand.clear() }
+                   entry: Int = 0): TopK.BoundedTopK = {
+      val res = new TopK.BoundedTopK(ef)
+      if (upTo == 0) return res
+      stamp += 1
+      if (stamp == 0) { java.util.Arrays.fill(visited, 0); stamp = 1 }
+      cand.clear()
+      val d0 = d(entry, q)
+      cand.push(d0, entry); visited(entry) = stamp
+      if (allowed(entry)) res.offer(d0, entry)
+      while (!cand.isEmpty) {
+        val cd = cand.topValue
+        val c = cand.topId.toInt
+        cand.pop()
+        // stop once the nearest candidate lies past the worst result kept
+        if (res.isFull && TopK.before(res.topValue, res.topId, cd, c))
+          cand.clear()
         else if (term != null && term.shouldTerminate(ef, res.size)) {
           cand.clear()
         }
         else {
           if (counters != null) counters(0) += 1
-          adj(c._2).foreach { e =>
-            if (e < upTo && !visited.get(e)) {
-              visited.set(e)
-              val de = (d(e, q), e)
+          val nb = adj(c)
+          var j = 0
+          while (j < deg(c)) {
+            val e = nb(j)
+            if (e < upTo && visited(e) != stamp) {
+              visited(e) = stamp
+              val de = d(e, q)
               if (counters != null) counters(1) += 1
               if (term != null) term.onDistanceScored()
-              if (res.size < ef || ord.lt(de, res.head)) {
-                cand.enqueue(de)
+              if (res.admits(de, e)) {
+                cand.push(de, e)
                 if (allowed(e)) {
-                  res.enqueue(de)
+                  res.offer(de, e)
                   if (term != null) term.onCandidateCollected()
-                  if (res.size > ef) res.dequeue()
                 }
               }
             }
+            j += 1
           }
         }
       }
-      res.dequeueAll.reverse.toSeq
+      res.sortInPlace()
     }
 
     /** The published HNSW neighbor-selection heuristic (Malkov & Yashunin
@@ -189,23 +237,36 @@ object Hnsw {
       * graph into cliques connected only by the chain path, and beam
       * recall craters (the r13 BENCH_SF1 recall gate measured 0.69@ef=64
       * on 10×-replicated vectors; the diversity rule is the published fix
-      * and restores it). */
-    private def selectDiverse(base: V, cands: Seq[(Double, Int)],
-                              m: Int): Seq[Int] = {
+      * and restores it). `cands` holds (distance to the base, index)
+      * pairs sorted ascending. */
+    private def selectDiverse(cands: TopK.BoundedTopK, m: Int): Array[Int] = {
       // kept entries cache their query-form payload: each new candidate is
       // scored against every kept neighbor through the space kernel
-      val kept = scala.collection.mutable.ArrayBuffer.empty[(Double, Array[Float])]
-      val keptIdx = scala.collection.mutable.ArrayBuffer.empty[Int]
-      val rejected = scala.collection.mutable.ArrayBuffer.empty[Int]
-      val it = cands.iterator
-      while (it.hasNext && kept.size < m) {
-        val (dc, c) = it.next()
-        if (kept.forall { case (_, sq) => dc < space.dist(vecs(c), sq) }) {
-          kept += ((dc, space.toQuery(vecs(c))))
-          keptIdx += c
-        } else rejected += c
+      val len = cands.size
+      val keptQ = new Array[Array[Float]](m)
+      val out = new Array[Int](math.min(m, len))
+      val rejected = new Array[Int](len)
+      var kept = 0
+      var nRej = 0
+      var j = 0
+      while (j < len && kept < m) {
+        val dc = cands.value(j)
+        val c = cands.id(j).toInt
+        var diverse = true
+        var t = 0
+        while (diverse && t < kept) {
+          diverse = dc < space.dist(vecs(c), keptQ(t))
+          t += 1
+        }
+        if (diverse) {
+          keptQ(kept) = space.toQuery(vecs(c)); out(kept) = c; kept += 1
+        } else { rejected(nRej) = c; nRej += 1 }
+        j += 1
       }
-      (keptIdx ++ rejected.take(m - kept.size)).toSeq
+      val fill = math.min(m - kept, nRej)
+      System.arraycopy(rejected, 0, out, kept, fill)
+      if (kept + fill == out.length) out
+      else java.util.Arrays.copyOf(out, kept + fill)
     }
 
     /** NSW insert-all: id-ascending, heuristic-selected links from the
@@ -215,27 +276,43 @@ object Hnsw {
       var i = 1
       while (i < n) {
         val near = searchBeam(space.toQuery(vecs(i)), efC, i)
-        val links = selectDiverse(vecs(i), near, m)
+        val links = selectDiverse(near, m)
         val chain = i - 1
-        val mine = (links :+ chain).distinct
-        adj(i) ++= mine
+        val mine = if (links.contains(chain)) links else links :+ chain
         mine.foreach { j =>
-          adj(j) += i
+          addEdge(i, j)
+          addEdge(j, i)
           // prune j's NON-chain edges back to m with the same diversity
           // heuristic (chain edges j-1 and j+1 are load-bearing for
           // connectivity — never pruned)
-          if (adj(j).size > m + 2) {
-            val (chainE, rest) = adj(j).partition(e => e == j - 1 || e == j + 1)
-            val jq = space.toQuery(vecs(j))
-            val cand = rest.map(e => (space.dist(vecs(e), jq), e))
-              .sorted.toSeq
-            val kept = selectDiverse(vecs(j), cand, m)
-            adj(j).clear()
-            adj(j) ++= (chainE ++ kept).distinct
-          }
+          if (deg(j) > m + 2) prune(j, m)
         }
         i += 1
       }
+    }
+
+    /** Re-select j's non-chain edges by [[selectDiverse]] over their
+      * (distance to j, index) order; chain edges stay first, in place
+      * order. */
+    private def prune(j: Int, m: Int): Unit = {
+      val nb = adj(j)
+      val dg = deg(j)
+      val chainE = new Array[Int](dg)
+      var nChain = 0
+      val jq = space.toQuery(vecs(j))
+      val rest = new TopK.BoundedTopK(dg)
+      var t = 0
+      while (t < dg) {
+        val e = nb(t)
+        if (e == j - 1 || e == j + 1) { chainE(nChain) = e; nChain += 1 }
+        else rest.offer(space.dist(vecs(e), jq), e)
+        t += 1
+      }
+      val kept = selectDiverse(rest.sortInPlace(), m)
+      val out = new Array[Int](nChain + kept.length)
+      System.arraycopy(chainE, 0, out, 0, nChain)
+      System.arraycopy(kept, 0, out, nChain, kept.length)
+      setNeighbors(j, out)
     }
   }
 
@@ -255,7 +332,7 @@ object Hnsw {
       new FloatSpace(metric))
     g.build(p.m, p.efC)
     (0 until g.n).iterator.map { i =>
-      Row(pid, g.ids(i), g.vecs(i).toSeq, g.adj(i).map(g.ids(_)).sorted.toSeq)
+      Row(pid, g.ids(i), g.vecs(i).toSeq, g.neighborIds(i))
     }
   }
 
@@ -745,14 +822,17 @@ object Hnsw {
     * [[SubGraph]] — the ONE shared walk-site loader (search, telemetry,
     * batch join, quantized walk). A dangling neighbor id (e.g. after a
     * corrupted partial append) fails loudly here, in one place. */
-  private def rehydrate[V: scala.reflect.ClassTag](
+  private[vector] def rehydrate[V: scala.reflect.ClassTag](
       rows: Array[(Long, V, Array[Long])], space: Space[V]): SubGraph[V] = {
     val sorted = rows.sortBy(_._1)
     val g = new SubGraph(sorted.map(_._1), sorted.map(_._2), space)
     sorted.indices.foreach { i =>
-      g.adj(i) ++= sorted(i)._3.iterator.map(n => g.idIndex.getOrElse(n,
-        throw new IllegalStateException(
-          s"dangling neighbor id $n in sub-graph (node ${sorted(i)._1})")))
+      g.setNeighbors(i, sorted(i)._3.map { n =>
+        val j = g.indexOf(n)
+        if (j < 0) throw new IllegalStateException(
+          s"dangling neighbor id $n in sub-graph (node ${sorted(i)._1})")
+        j
+      })
     }
     g
   }
@@ -786,12 +866,13 @@ object Hnsw {
       // vectors ride along (k per sub-graph): the automatic ANN route
       // feeds candidates back under the original Sort, which recomputes
       // exact distances from them
-      val res = g.searchBeam(q, math.max(ef, k), g.n,
+      val r = g.searchBeam(q, math.max(ef, k), g.n,
           i => allowed(g.ids(i)), term, counters, entry)
-        .take(k)
-        .map { case (dist, i) => (g.ids(i), dist, g.vecs(i)) }
       if (scoredAcc != null) scoredAcc.add(counters(1))
-      res.iterator
+      Iterator.range(0, math.min(k, r.size)).map { j =>
+        val i = r.id(j).toInt
+        (g.ids(i), r.value(j), g.vecs(i))
+      }
     }
   }
 
@@ -1321,7 +1402,7 @@ object Hnsw {
   /** Layer rows (levels >= 1) for ONE sub-graph's id-sorted nodes — the
     * shared kernel of [[writeLayersFrom]] and the segment-append
     * extension. */
-  private def layerRowsFor[V: scala.reflect.ClassTag](
+  private[vector] def layerRowsFor[V: scala.reflect.ClassTag](
       nodes: Array[(Long, V)], pid: Int, space: Space[V], m: Int,
       efC: Int): Iterator[Row] = {
     val levels = nodes.map(n => nodeLevel(n._1, m))
@@ -1333,7 +1414,7 @@ object Hnsw {
         subset.map(i => nodes(i)._2).toArray, space)
       sub.build(m, efC)
       (0 until sub.n).iterator.map { i =>
-        Row(pid, l, sub.ids(i), sub.adj(i).map(sub.ids(_)).sorted.toSeq)
+        Row(pid, l, sub.ids(i), sub.neighborIds(i))
       }
     }
   }
@@ -1363,7 +1444,7 @@ object Hnsw {
       .write.mode("append").parquet(layersDir)
   }
 
-  private type LayerRow = (Int, Long, Array[Long]) // (level, id, neighbors)
+  private[vector] type LayerRow = (Int, Long, Array[Long]) // (level, id, neighbors)
   private val residentL =
     scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.rdd.RDD[(Int, LayerRow)]]
 
@@ -1432,16 +1513,19 @@ object Hnsw {
     * stale-sidecar failure message — the shared layer loader of every
     * hier walk site. `minRows` is the [[hierMinRows]] engagement gate
     * (empty layers = flat entry, descent skipped and not counted). */
-  private def hydratedLayers[V](g: SubGraph[V],
+  private[vector] def hydratedLayers[V](g: SubGraph[V],
                                 lt: Iterator[(Int, LayerRow)],
                                 minRows: Int = 0)
       : Array[(Int, Array[Int], Array[Array[Int]])] =
     if (g.n < minRows) Array.empty
-    else rehydrateLayers(lt.map(_._2).toArray, id =>
-      g.idIndex.getOrElse(id, throw new IllegalStateException(
+    else rehydrateLayers(lt.map(_._2).toArray, { id =>
+      val i = g.indexOf(id)
+      if (i < 0) throw new IllegalStateException(
         s"layer row references id $id absent from its sub-graph — stale " +
           "hierarchy sidecar; rebuild with buildHierarchy " +
-          "(buildHierarchyQuantized for code-space indexes)")))
+          "(buildHierarchyQuantized for code-space indexes)")
+      i
+    })
 
   /** Walks that actually ran a hierarchy descent (nonempty layers) —
     * spec instrumentation only, meaningful in local mode where executors
@@ -1533,7 +1617,7 @@ object Hnsw {
     * index, and (dist, index) strictly decreases lexicographically, so the
     * walk terminates. Returns the layer-0 beam entry; `counters` receives
     * (hops, distances scored) like the beam's. */
-  private def descend[V](g: SubGraph[V],
+  private[vector] def descend[V](g: SubGraph[V],
                          layers: Array[(Int, Array[Int], Array[Array[Int]])],
                          q: Array[Float],
                          counters: Array[Long]): Int = {
@@ -1712,8 +1796,9 @@ object Hnsw {
           val lyr = if (lt == null) null else hydratedLayers(g, lt, hmin)
           assigned.iterator.flatMap { case (qid, qv) =>
             val entry = if (lyr == null) 0 else descend(g, lyr, qv, null)
-            g.searchBeam(qv, efEff, g.n, entry = entry).take(kk)
-              .map { case (d, i) => (qid, g.ids(i), d) }
+            val r = g.searchBeam(qv, efEff, g.n, entry = entry)
+            Iterator.range(0, math.min(kk, r.size))
+              .map(j => (qid, g.ids(r.id(j).toInt), r.value(j)))
           }
         }
       }
@@ -1879,7 +1964,7 @@ object Hnsw {
             new CodeSpace(qmB.value))
           g.build(p.m, p.efC)
           (0 until g.n).iterator.map { i =>
-            Row(pid, g.ids(i), g.vecs(i), g.adj(i).map(g.ids(_)).sorted.toSeq)
+            Row(pid, g.ids(i), g.vecs(i), g.neighborIds(i))
           }
         }
       }
@@ -2073,9 +2158,10 @@ object Hnsw {
         val entry =
           if (lt == null) 0
           else descend(g, hydratedLayers(g, lt, hmin), q, null)
-        g.searchBeam(q, math.max(efEff, keep), g.n,
-            allowed = i => fv(g.ids(i)), entry = entry).take(keep)
-          .map { case (d, i) => (d, g.ids(i)) }.iterator
+        val r = g.searchBeam(q, math.max(efEff, keep), g.n,
+          allowed = i => fv(g.ids(i)), entry = entry)
+        Iterator.range(0, math.min(keep, r.size))
+          .map(j => (r.value(j), g.ids(r.id(j).toInt)))
       }
     }
     var remaining: Seq[Int] = order.toSeq
@@ -2159,8 +2245,9 @@ object Hnsw {
           val lyr = if (lt == null) null else hydratedLayers(g, lt, hmin)
           assigned.iterator.flatMap { case (qid, bq) =>
             val entry = if (lyr == null) 0 else descend(g, lyr, bq, null)
-            g.searchBeam(bq, efEff, g.n, entry = entry).take(keep)
-              .map { case (_, i) => (qid, g.ids(i)) }
+            val r = g.searchBeam(bq, efEff, g.n, entry = entry)
+            Iterator.range(0, math.min(keep, r.size))
+              .map(j => (qid, g.ids(r.id(j).toInt)))
           }
         }
       }
@@ -2317,7 +2404,7 @@ object Hnsw {
           g.build(p.m, p.efC)
           (0 until g.n).iterator.map { i =>
             Row(offset + ci, g.ids(i), g.vecs(i),
-              g.adj(i).map(g.ids(_)).sorted.toSeq)
+              g.neighborIds(i))
           }
         }
       }

@@ -46,6 +46,12 @@ object Ivf {
         (Ivf.scalarDist(met, bq, c), i)
       }.sortBy(_._1).map(_._2)
     }
+    /** The `nprobe` nearest list ids, ASCENDING — the form probe `IN`
+      * filters take: two queries that probe the same set then plan the
+      * same literal list and reuse one compiled filter, where probe order
+      * would compile a new class per query. */
+    def probeSet(q: Array[Float], nprobe: Int): Seq[Long] =
+      probeOrder(q).take(nprobe).sorted.map(_.toLong)
   }
 
   private[graft] def scalarDist(metric: Knn.Metric, a: Array[Float],
@@ -340,7 +346,7 @@ object Ivf {
   def search(spark: SparkSession, indexPath: String, m: Model,
              idCol: String, vecCol: String, query: Array[Float],
              k: Int, nprobe: Int): DataFrame = {
-    val probes = m.probeOrder(query).take(nprobe).map(_.toLong)
+    val probes = m.probeSet(query, nprobe)
     val scanned = graft.engine.Graft.cachedRead(spark, resolve(spark, indexPath))
       .filter(col("ivf_cluster").isin(probes: _*))
     Knn.knn(scanned, vecCol, idCol, query, k, m.metric)
@@ -694,7 +700,7 @@ object Ivf {
     // cosine: probe/screen in the normalized space the codes live in
     // (normalized-L2 order == cosine order for the rescore's cut)
     val bq = bindPqQuery(metric, query)
-    val probes = m.probeOrder(bq).take(nprobe).map(_.toLong)
+    val probes = m.probeSet(bq, nprobe)
     val tables: Map[Long, Array[Double]] = probes.map { l =>
       val cent = m.centroids(l.toInt)
       val res = Array.tabulate(bq.length)(i => bq(i) - cent(i))
@@ -837,34 +843,34 @@ object Ivf {
                     centOf: Int => Array[Float],
                     it: Iterator[(Long, Int, Array[Byte])])
         : Iterator[(Long, Long, Double)] = {
-      val heaps = new java.util.HashMap[Long, Quantize.BoundedTopK]()
+      val heaps = new java.util.HashMap[Long, TopK.BoundedTopK]()
       var curList = -1
-      var curTables: Array[(Long, Array[Double])] = null
+      // the current list's probing queries: ADC table and heap per query,
+      // resolved once at the list boundary
+      var curTables: Array[Array[Double]] = null
+      var curHeaps: Array[TopK.BoundedTopK] = null
       it.foreach { case (cid, cl, codes) =>
         if (cl != curList) {
           curList = cl
-          curTables = byKey.getOrElse(cl, Array.empty[(Long, Array[Float])])
-            .map { case (qid, qv) =>
-              val cent = centOf(cl)
-              val res = Array.tabulate(qv.length)(i => qv(i) - cent(i))
-              (qid, pq.adcTable(res))
-            }
+          val qs = byKey.getOrElse(cl, Array.empty[(Long, Array[Float])])
+          lazy val cent = centOf(cl)
+          curTables = qs.map { case (_, qv) =>
+            pq.adcTable(Array.tabulate(qv.length)(i => qv(i) - cent(i)))
+          }
+          curHeaps = qs.map { case (qid, _) =>
+            heaps.computeIfAbsent(qid, _ => new TopK.BoundedTopK(keep))
+          }
         }
         var j = 0
         while (j < curTables.length) {
-          val (qid, tbl) = curTables(j)
-          var h = heaps.get(qid)
-          if (h == null) {
-            h = new Quantize.BoundedTopK(keep); heaps.put(qid, h)
-          }
-          h.offer(pq.adc(codes, tbl), cid)
+          curHeaps(j).offer(pq.adc(codes, curTables(j)), cid)
           j += 1
         }
       }
       import scala.jdk.CollectionConverters._
       heaps.entrySet().asScala.iterator.flatMap { e =>
-        e.getValue.drain().iterator
-          .map { case (d, cid) => (e.getKey.longValue, cid, d) }
+        val (qid, h) = (e.getKey.longValue, e.getValue.sortInPlace())
+        Iterator.range(0, h.size).map(i => (qid, h.id(i), h.value(i)))
       }
     }
     def globalCut(coarse: DataFrame): DataFrame =

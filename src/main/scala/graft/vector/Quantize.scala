@@ -966,47 +966,6 @@ object Quantize {
   // collect per slice, broadcast freed between slices, distributed
   // rescore — the driver never holds more than one slice.
 
-  /** Bounded "keep the n smallest (dist, id)" pairs — the partition-local
-    * cut of the screened-join kernel. Array-backed max-heap ordered by
-    * (dist, id) with the root as the current worst kept: O(1) reject for
-    * a row worse than the nth best (the common case once warm),
-    * O(log n) insert. Deterministic: ties break toward the smaller id,
-    * the engine's knn convention. */
-  private[vector] final class BoundedTopK(cap: Int) {
-    private val ds = new Array[Double](cap)
-    private val ids = new Array[Long](cap)
-    private var n = 0
-    private def worse(d1: Double, i1: Long, d2: Double, i2: Long): Boolean =
-      d1 > d2 || (d1 == d2 && i1 > i2)
-    private def swap(a: Int, b: Int): Unit = {
-      val td = ds(a); ds(a) = ds(b); ds(b) = td
-      val ti = ids(a); ids(a) = ids(b); ids(b) = ti
-    }
-    def offer(d: Double, id: Long): Unit =
-      if (n < cap) {
-        var i = n; ds(i) = d; ids(i) = id; n += 1
-        while (i > 0 && worse(ds(i), ids(i), ds((i - 1) >> 1), ids((i - 1) >> 1))) {
-          swap(i, (i - 1) >> 1); i = (i - 1) >> 1
-        }
-      } else if (worse(ds(0), ids(0), d, id)) {
-        ds(0) = d; ids(0) = id
-        var i = 0
-        var done = false
-        while (!done) {
-          val l = 2 * i + 1
-          var m = i
-          if (l < n && worse(ds(l), ids(l), ds(m), ids(m))) m = l
-          if (l + 1 < n && worse(ds(l + 1), ids(l + 1), ds(m), ids(m))) m = l + 1
-          if (m == i) done = true else { swap(i, m); i = m }
-        }
-      }
-    def drain(): Array[(Double, Long)] = {
-      val out = Array.tabulate(n)(i => (ds(i), ids(i)))
-      scala.util.Sorting.quickSort(out)(Ordering.Tuple2[Double, Long])
-      out
-    }
-  }
-
   /** Shared kernel of the four screened joins: `prep` turns a query
     * vector into its screen-side state (ADC table / packed sign bits /
     * the raw floats), `extract` pulls a row's code representation ONCE
@@ -1037,7 +996,7 @@ object Quantize {
       if (qs.isEmpty) Iterator.empty
       else {
         val preps: Array[AnyRef] = qs.map(q => prep(q._2))
-        val heaps = Array.fill(qs.length)(new BoundedTopK(keep))
+        val heaps = Array.fill(qs.length)(new TopK.BoundedTopK(keep))
         rows.foreach { row =>
           val cid = row.getLong(0)
           val code = extract(row)
@@ -1048,8 +1007,8 @@ object Quantize {
           }
         }
         Iterator.range(0, qs.length).flatMap { j =>
-          heaps(j).drain().iterator
-            .map { case (cd, cid) => (qs(j)._1, cid, cd) }
+          val h = heaps(j).sortInPlace()
+          Iterator.range(0, h.size).map(i => (qs(j)._1, h.id(i), h.value(i)))
         }
       }
     def globalCut(coarse: DataFrame): DataFrame =

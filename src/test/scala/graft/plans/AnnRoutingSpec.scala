@@ -520,6 +520,82 @@ class AnnRoutingSpec extends AnyFunSuite {
     AnnRouting.unregister(SparkT.spark, pq)
   }
 
+  test("routed graph search plans a TakeOrderedAndProject, no Exchange: probe rounds + 1 jobs") {
+    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    object Aqe extends AdaptiveSparkPlanHelper
+    val tmp = Files.createTempDirectory("graft-annroute-graphplan")
+    val baseG = tmp.resolve("baseg").toString
+    val idxG = tmp.resolve("idxg").toString
+    Writer.write(vectors.toDF("vec_id", "embedding", "label"), baseG,
+      sortBy = Seq("vec_id"))
+    graft.vector.Hnsw.buildIndexClustered(
+      SparkT.spark.read.parquet(baseG), "embedding", "vec_id", idxG,
+      graft.vector.Hnsw.Params(m = 8, efC = 32, partitions = 4))
+    AnnRouting.registerGraph(SparkT.spark, baseG, idxG,
+      vecCol = "embedding", idCol = "vec_id")
+    def search(q: Array[Float]) =
+      Knn.knn(SparkT.spark.read.parquet(baseG), "embedding", "vec_id", q, 10)
+    search(vectors(100)._2).collect() // loads the resident graph
+    val df = search(query)
+    val rounds0 = graft.vector.Hnsw.probeRounds.get()
+    val (rows, work) = graft.WorkCount(SparkT.spark)(df.collect())
+    val rounds = graft.vector.Hnsw.probeRounds.get() - rounds0
+    assert(rows.map(_.getLong(0)).toSeq === exactTop10)
+    val plan = df.queryExecution.executedPlan
+    assert(Aqe.collect(plan) { case t: TakeOrderedAndProjectExec => t }
+      .nonEmpty, plan.toString)
+    assert(Aqe.collect(plan) { case e: Exchange => e }.isEmpty,
+      plan.toString)
+    // one job per probe round, then the collect of the k candidates
+    assert(rounds >= 1 && work.jobs === rounds + 1,
+      s"$work over $rounds probe rounds")
+    AnnRouting.unregister(SparkT.spark, baseG)
+  }
+
+  test("IVF probe lists plan sorted: a search with a different query compiles no new class") {
+    val tmp = Files.createTempDirectory("graft-annroute-ivfcompile")
+    val df = vectors.toDF("vec_id", "embedding", "label")
+    val idx = tmp.resolve("ivfpq").toString
+    val m = graft.vector.Ivf.train(df, "embedding", nlist = 4)
+    val pq = graft.vector.Ivf.buildIndexPq(df, "embedding", "vec_id", m, idx,
+      subM = 4, codeK = 16)
+    AnnRouting.registerIvfPq(SparkT.spark, idx, idx, m, pq,
+      vecCol = "embedding", idCol = "vec_id", nprobe = m.nlist,
+      refine = 40)
+    def search(q: Array[Float]) =
+      Knn.knn(SparkT.spark.read.parquet(idx), "embedding", "vec_id", q, 10)
+        .collect()
+    val (a, b) = (vectors.head._2, vectors(100)._2)
+    // the two queries visit the same lists in different orders
+    assert(m.probeOrder(a) !== m.probeOrder(b))
+    search(a)
+    val (_, work) = graft.WorkCount(SparkT.spark)(search(b))
+    assert(work.compiles === 0L, work.toString)
+    // so do the routed IVF family's probe filter ...
+    def routedIvf(q: Array[Float]) =
+      Knn.knn(SparkT.spark.read.parquet(baseDir), "embedding", "vec_id", q, 10)
+        .collect()
+    assert(model.probeOrder(a) !== model.probeOrder(b))
+    routedIvf(a)
+    val (_, routedWork) = graft.WorkCount(SparkT.spark)(routedIvf(b))
+    assert(routedWork.compiles === 0L, routedWork.toString)
+    // ... and the plain IVF search
+    val ivfIdx = tmp.resolve("ivf").toString
+    graft.vector.Ivf.buildIndex(df, "embedding", m, ivfIdx)
+    def ivf(q: Array[Float]) = graft.vector.Ivf.search(SparkT.spark, ivfIdx,
+      m, "vec_id", "embedding", q, 10, nprobe = 3).collect()
+    val p3 = m.probeSet(a, 3)
+    val c = vectors.map(_._2).find(v =>
+      m.probeSet(v, 3) == p3 && m.probeOrder(v).take(3) != m.probeOrder(a).take(3))
+    assert(c.isDefined, "fixture has no query probing the same 3 lists in another order")
+    ivf(a)
+    val (_, ivfWork) = graft.WorkCount(SparkT.spark)(ivf(c.get))
+    assert(ivfWork.compiles === 0L, ivfWork.toString)
+    AnnRouting.unregister(SparkT.spark, idx)
+  }
+
   test("IVF-ADC family routes through the probe-pruned per-list screen; batch joins dispatch too (r16)") {
     import org.apache.spark.sql.catalyst.plans.logical.Join
     val tmp = Files.createTempDirectory("graft-annroute-ivfpq")
