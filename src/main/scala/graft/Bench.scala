@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main. Runs every SparkEntry query against
@@ -75,18 +74,7 @@ object Bench {
     // retry budget the de-facto default).
     val loadStart = loadavg()
     val contended = loadStart > cpus.toInt / 2.0
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
-      .config("spark.sql.files.minPartitionNum", (cpus.toInt * 2).toString)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Graft.session("bench", s"local[$cpus]", cpus.toInt)
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()

@@ -220,18 +220,7 @@ object BenchScale {
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val loadStart = loadavg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
-      .config("spark.sql.files.minPartitionNum", (cpus.toInt * 2).toString)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Graft.session("benchscale", s"local[$cpus]", cpus.toInt)
 
     buildScaled(spark, src, dst, factor)
 

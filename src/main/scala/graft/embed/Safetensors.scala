@@ -93,32 +93,6 @@ object Safetensors {
     }
   }
 
-  /** Every tensor name in the file (checkpoint introspection — e.g. how
-    * many encoder layers a BERT export carries). Reads ONLY the 8-byte
-    * length prefix + the JSON header — listing names of a multi-GB
-    * checkpoint must not pull its tensor data into memory
-    * (review r18-7). */
-  def tensorNames(path: String): Seq[String] = {
-    val ch = java.nio.channels.FileChannel.open(
-      new java.io.File(path).toPath,
-      java.nio.file.StandardOpenOption.READ)
-    try {
-      val fileLen = ch.size()
-      require(fileLen >= 8, s"$path: not a safetensors file (too short)")
-      val lenBuf = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
-      while (lenBuf.hasRemaining && ch.read(lenBuf) >= 0) {}
-      lenBuf.flip()
-      val headerLen = lenBuf.getLong()
-      require(headerLen > 0 && headerLen <= fileLen - 8,
-        s"$path: corrupt safetensors header length $headerLen")
-      val hBuf = ByteBuffer.allocate(headerLen.toInt)
-      while (hBuf.hasRemaining && ch.read(hBuf) >= 0) {}
-      val headerJson = new String(hBuf.array(), StandardCharsets.UTF_8)
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      headerNames(om.readTree(headerJson))
-    } finally ch.close()
-  }
-
   /** Non-metadata field names of a parsed header — the ONE definition of
     * the listing loop (review r18-7). */
   private def headerNames(

@@ -162,17 +162,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Candidate pairs (a < b) from banded MinHash LSH over a shingle-set
-    * column. Rows with empty shingle sets never pair. The id column must be
-    * integral (cast to long). The banded frame is persisted across the
-    * self-join (signature kernel runs once per row, not once per side) and
-    * freed after the eager materialization. */
-  def minhashCandidates(df: DataFrame, idCol: String, shingleCol: String,
-                        k: Int = 128, bands: Int = 32): DataFrame = {
-    val banded = materialized(bandedFrame(df, idCol, shingleCol, k, bands))
-    eagerly(bandSelfJoin(banded), banded)
-  }
-
   /** Exact jaccard verification of candidate pairs against the shingle sets.
     * Returns (a, b, jac_micros) for pairs with jaccard >= threshold; the
     * floor-micros encoding keeps the value engine-stable. */
@@ -822,16 +811,6 @@ object Dedup {
   // rebuild with each token crossing the wire once. Never all-pairs;
   // every stage is linear in corpus tokens.
   // ------------------------------------------------------------------
-
-  /** Positional word n-grams: one row per window start — (mid, pos, gram),
-    * pos 0-based over the whitespace token array (posexplode order ==
-    * window order since allNgrams preserves it). Docs shorter than n
-    * tokens yield no rows. */
-  def positionalNgrams(df: DataFrame, idCol: String, textCol: String,
-                       n: Int): DataFrame =
-    df.select(col(idCol).cast("long").as("mid"),
-      posexplode(TextFunctions.allNgrams(col(textCol), n))
-        .as(Seq("pos", "gram")))
 
   /** Hash-only positional n-grams — (mid, pos, gram_hash) with
     * gram_hash = xxhash64(gram) computed INSIDE the gram kernel (r21):

@@ -41,19 +41,6 @@ import org.apache.spark.sql.functions._
   */
 object NgramLM {
 
-  /** Positional (gram, ctx) pairs per doc: one row per n-gram window —
-    * (mid, gram, ctx) with ctx = the gram's first n-1 tokens. Tokens carry
-    * no whitespace (split on \s+), so the space-joined gram's prefix up to
-    * its last space IS the context — substring_index avoids a second
-    * window transform. Docs shorter than n tokens yield no rows. */
-  def gramCtx(df: DataFrame, idCol: String, textCol: String,
-              n: Int): DataFrame = {
-    require(n >= 2, s"NgramLM: n must be >= 2, got $n")
-    df.select(col(idCol).cast("long").as("mid"),
-        explode(TextFunctions.allNgrams(col(textCol), n)).as("gram"))
-      .withColumn("ctx", substring_index(col("gram"), " ", n - 1))
-  }
-
   /** floor(1e6 * float32(-ln(num/den))) — the quantized gram cost. */
   private def costMicros(num: Column, den: Column): Column =
     floor(negate(log(num.cast("double") / den.cast("double")))

@@ -49,100 +49,89 @@ object AnnRouting {
   /** Index family behind a registration — the reference's CreateIterator
     * serves whatever index type the column has (knn/knn.cpp:600-610);
     * the same recognizer here dispatches on the registered family. */
-  sealed trait Family
+  sealed trait Family {
+    /** The metric the index serves — the routing key of the plan rule and
+      * the join dispatch (every family pins it at registration: a flat
+      * codec carries its trained metric, the graph family its sidecar's,
+      * IVF its coarse model's, IVF-ADC its explicit marker). */
+    def metric: Knn.Metric
+    /** The id column the candidate leaf truncates and tie-breaks on; None
+      * for the IVF leaf swap, which truncates nothing. */
+    def leafIdCol: Option[String]
+  }
   /** IVF: the routed plan is a probe-restricted scan of the clustered
     * index table (a pure leaf swap — Parquet pruning does the skipping). */
   final case class IvfFamily(model: Ivf.Model, nprobe: Int, ef: Int,
-                             indexPlan: LogicalPlan) extends Family
+                             indexPlan: LogicalPlan) extends Family {
+    def metric: Knn.Metric = model.metric
+    def leafIdCol: Option[String] = None
+  }
   /** Clustered/routed graph ([[graft.vector.Hnsw.buildIndexClustered]]):
     * the routed plan swaps the scan for [[GraphCandidates]] (the
     * centroid-ordered triangle-bounded walk, exact at full ef).
-    * `maxFilterIds` gates the FILTERED route: an attribute filter is
-    * consumed into the walk's allowed-id callback only when footer stats
-    * bound its survivors by this many ids (the broadcast-set budget — the
-    * analog of the reference's filter-bitmap size, which is likewise
-    * O(rows) on one node). */
-  /** `adaptive` opts the ROUTED walks this registration produces into the
-    * P²-quantile early termination (knn/termination.h) — an accuracy/cost
-    * knob: beams may stop before exhaustion, so results can be slightly
-    * sub-exact for k > 10 (the reference gates the policy off for k ≤ 10,
-    * knn.cpp:481-483, mirrored in the walk). Default off keeps every
-    * routed plan on the exact full-ef contract. */
-  /** `hier` serves this registration's routed walks through the layer
-    * hierarchy ([[graft.vector.Hnsw.searchRoutedHierRaw]]): each probed
-    * sub-graph greedily descends its upper layers to the beam entry —
-    * same exactness contract (entry-independent at full ef). Requires the
-    * index to have a `_layers` sidecar (checked at registration). */
-  /** `hierMin` is the [[graft.vector.Hnsw.hierMinRows]] threshold
-    * CAPTURED at registration (-1 = read the conf at walk time): a
-    * forced-descent registration stays forced across every later
-    * execution of its routed plans without leaving the global conf set
-    * session-wide (ADVICE r16 #1). */
+    *  - `maxFilterIds` gates the FILTERED route: an attribute filter is
+    *    consumed into the walk's allowed-id callback only when footer
+    *    stats bound its survivors by this many ids (the broadcast-set
+    *    budget — the analog of the reference's filter-bitmap size, which
+    *    is likewise O(rows) on one node).
+    *  - `adaptive` opts the routed walks into the P²-quantile early
+    *    termination (knn/termination.h) — an accuracy/cost knob: beams may
+    *    stop before exhaustion, so results can be slightly sub-exact for
+    *    k > 10 (the reference gates the policy off for k ≤ 10,
+    *    knn.cpp:481-483, mirrored in the walk). Default off keeps every
+    *    routed plan on the exact full-ef contract.
+    *  - `hier` serves the routed walks through the layer hierarchy
+    *    ([[graft.vector.Hnsw.searchRoutedHierRaw]]): each probed sub-graph
+    *    greedily descends its upper layers to the beam entry — same
+    *    exactness contract (entry-independent at full ef). Requires the
+    *    index to have a `_layers` sidecar (checked at registration).
+    *  - `hierMin` is the [[graft.vector.Hnsw.hierMinRows]] threshold
+    *    CAPTURED at registration (-1 = read the conf at walk time): a
+    *    forced-descent registration stays forced across every later
+    *    execution of its routed plans without leaving the global conf set
+    *    session-wide (ADVICE r16 #1).
+    *  - `quantized` marks the QUANTIZED clustered graph
+    *    ([[graft.vector.Hnsw.buildIndexClusteredQuantized]]): the leaf
+    *    runs the CODE-space walk and fetches the k·`refine` coarse
+    *    survivors' raw vectors from the base table — the untouched
+    *    Sort/Limit above is the exact rescore (the `searchQuantized`
+    *    serving contract). */
   final case class GraphFamily(idCol: String, ef: Int,
                                metric: Knn.Metric,
                                maxFilterIds: Long,
                                adaptive: Boolean = false,
                                hier: Boolean = false,
-                               hierMin: Int = -1) extends Family
-  /** QUANTIZED clustered graph
-    * ([[graft.vector.Hnsw.buildIndexClusteredQuantized]]): same leaf swap
-    * as the graph family, but the leaf runs the CODE-space walk and
-    * fetches the k·refine coarse survivors' raw vectors from the base
-    * table — the untouched Sort/Limit above is the exact rescore
-    * (the `searchQuantized` serving contract). */
-  final case class QGraphFamily(idCol: String, ef: Int,
-                                metric: Knn.Metric,
-                                refine: Int,
-                                maxFilterIds: Long,
-                                hier: Boolean = false,
-                                hierMin: Int = -1) extends Family
-  /** Quantized table ([[graft.vector.Quantize.quantizeTable]]): the
-    * routed plan splices the coarse int8 screen (top k·refine by code
-    * distance) + self-join under the original Sort/Limit — the exact
-    * rescore IS the untouched Sort recomputing float distances. Pure
-    * logical composition, no custom exec. */
-  final case class QuantFamily(model: graft.vector.Quantize.QModel,
-                               qCol: String, idCol: String,
-                               refine: Int,
-                               indexPlan: LogicalPlan) extends Family
-  /** 4-bit quantized table ([[graft.vector.Quantize.quantize4Table]]):
-    * same splice as int8 with the packed-nibble coarse screen. */
-  final case class Quant4Family(model: graft.vector.Quantize.Q4Model,
-                                qCol: String, idCol: String,
-                                refine: Int,
-                               indexPlan: LogicalPlan) extends Family
-  /** Product-quantized table ([[graft.vector.Quantize.quantizePqTable]]):
-    * same splice with the ADC coarse screen (one M×K exact
-    * query-subvector table per query, M byte-lookups per row). */
-  final case class PqFamily(model: graft.vector.Quantize.PqModel,
-                            qCol: String, idCol: String,
-                            refine: Int,
-                               indexPlan: LogicalPlan) extends Family
-  /** Binary (1-bit) quantized table
-    * ([[graft.vector.Quantize.binarizeTable]]): same splice with the
-    * Hamming (XOR+popcount) coarse screen. `rCol`, when set, names the
-    * residual-factor struct column written by `binarizeTableResidual` —
-    * the screen upgrades from raw Hamming to the magnitude-aware
-    * corrected estimate (knn/quantizer.h:48-61 factors), same
-    * exact-rescore contract. */
-  final case class BinaryFamily(model: graft.vector.Quantize.BModel,
-                                bCol: String, idCol: String,
-                                refine: Int,
-                                indexPlan: LogicalPlan,
-                                rCol: Option[String] = None) extends Family
+                               hierMin: Int = -1,
+                               quantized: Boolean = false,
+                               refine: Int = 8) extends Family {
+    def leafIdCol: Option[String] = Some(idCol)
+  }
+  /** Flat coded table ([[graft.vector.Quantize.encodeTable]] with any
+    * [[Quantize.FlatCodec]]): the routed plan splices the codec's coarse
+    * screen (top k·refine by code distance) + self-join under the original
+    * Sort/Limit — the exact rescore IS the untouched Sort recomputing
+    * float distances. Pure logical composition, no custom exec. */
+  final case class FlatFamily(codec: Quantize.FlatCodec, codeCol: String,
+                              idCol: String, refine: Int,
+                              indexPlan: LogicalPlan) extends Family {
+    def metric: Knn.Metric = codec.metric
+    def leafIdCol: Option[String] = Some(idCol)
+  }
   /** Composite IVF-ADC index ([[graft.vector.Ivf.buildIndexPq]] — coarse
-    * lists + residual PQ codes, r16): same splice as the flat quantized
-    * families, with the PROBE-PRUNED per-list ADC screen
+    * lists + residual PQ codes, r16): same splice as the flat family,
+    * with the PROBE-PRUNED per-list ADC screen
     * ([[graft.vector.Ivf.coarseIdsPq]]) — the scan touches only the
     * `nprobe` nearest lists' files. nprobe = nlist + the refine margin is
     * the oracle-exact configuration; smaller nprobe is the declared
     * recall contract, exactly like [[IvfFamily]]'s. */
   final case class IvfPqFamily(model: Ivf.Model,
-                               pq: graft.vector.Quantize.PqModel,
+                               pq: Quantize.PqModel,
                                idCol: String, nprobe: Int,
                                refine: Int,
                                metric: Knn.Metric = Knn.L2,
-                              indexPlan: LogicalPlan) extends Family
+                               indexPlan: LogicalPlan) extends Family {
+    def leafIdCol: Option[String] = Some(idCol)
+  }
 
   final case class Registered(basePath: String, indexPath: String,
                               vecCol: String, rows: Long, family: Family,
@@ -242,99 +231,44 @@ object AnnRouting {
         "sidecar — run Hnsw.buildHierarchyQuantized first")
     putUnlessMutated(spark, indexPath, epoch0, q,
       Registered(q, indexPath, vecCol, rows,
-        QGraphFamily(idCol, ef, metric, refine, maxFilterIds, hierarchy,
-          if (hierarchy) graft.vector.Hnsw.hierMinRows(spark) else -1)))
+        GraphFamily(idCol, ef, metric, maxFilterIds, hier = hierarchy,
+          hierMin = if (hierarchy) graft.vector.Hnsw.hierMinRows(spark) else -1,
+          quantized = true, refine = refine)))
   }
 
-  /** Register a QUANTIZED table ([[graft.vector.Quantize.quantizeTable]]
-    * at `quantPath` — base columns + `qCol` codes) for `basePath`: a
-    * plain L2 top-k routes through the coarse int8 screen with `refine`
-    * as the accuracy contract (true top-k must sit in the top k·refine
-    * coarse set — the same serving contract the explicit `searchRescore`
-    * carries). The coarse screen is L2-code distance, so only L2 queries
-    * route (the reference's int8 path is likewise L2-trained,
-    * knn/quantizer.cpp). Typical use registers the quant table as its
-    * OWN base (it carries the original vectors). */
-  def registerQuant(spark: SparkSession, basePath: String, quantPath: String,
-                    model: graft.vector.Quantize.QModel, vecCol: String,
-                    idCol: String, qCol: String = "qvec",
-                    refine: Int = 8): Unit = {
+  /** Register a FLAT coded table ([[graft.vector.Quantize.encodeTable]]
+    * at `quantPath` — base columns + the codec's code columns) for
+    * `basePath`: a top-k in the codec's trained metric routes through the
+    * codec's coarse screen, with `refine` (0 = the codec's
+    * [[Quantize.FlatCodec.defaultRefine]]) as the accuracy contract — the
+    * true top-k must sit in the top k·refine coarse set, the serving
+    * contract the explicit [[graft.vector.Quantize.searchRescore]]
+    * carries — and batch joins take [[graft.vector.Quantize.knnJoin]].
+    * The automatic route serves whatever codec the column has (ref
+    * CreateIterator dispatch, knn/knn.cpp:600-610). Typical use registers
+    * the coded table as its OWN base (it carries the original vectors). */
+  def registerFlat(spark: SparkSession, basePath: String, quantPath: String,
+                   codec: Quantize.FlatCodec, vecCol: String, idCol: String,
+                   codeCol: String, refine: Int = 0): Unit = {
     val q = qualify(spark, basePath)
     val epoch0 = epochOf(spark, quantPath)
     val rows = -1L // filled by putUnlessMutated's single footer sweep
     putUnlessMutated(spark, quantPath, epoch0, q,
       Registered(q, quantPath, vecCol, rows,
-        QuantFamily(model, qCol, idCol, refine,
+        FlatFamily(codec, codeCol, idCol, codec.refineOr(refine),
           analyzedPlan(spark, quantPath))))
-  }
-
-  /** Register a 4-BIT quantized table — the automatic route serves
-    * whatever quantization family the column has (ref CreateIterator
-    * dispatch, knn/knn.cpp:600-610); refine defaults match
-    * [[graft.vector.Quantize.searchRescore4]]'s. */
-  def registerQuant4(spark: SparkSession, basePath: String, quantPath: String,
-                     model: graft.vector.Quantize.Q4Model, vecCol: String,
-                     idCol: String, qCol: String = "q4vec",
-                     refine: Int = 12): Unit = {
-    val q = qualify(spark, basePath)
-    val epoch0 = epochOf(spark, quantPath)
-    val rows = -1L // filled by putUnlessMutated's single footer sweep
-    putUnlessMutated(spark, quantPath, epoch0, q,
-      Registered(q, quantPath, vecCol, rows,
-        Quant4Family(model, qCol, idCol, refine,
-          analyzedPlan(spark, quantPath))))
-  }
-
-  /** Register a PRODUCT-QUANTIZED table
-    * ([[graft.vector.Quantize.quantizePqTable]] at `quantPath` — base
-    * columns + `qCol` M-byte codes) for `basePath` (r14 VERDICT #5 —
-    * completing the six-family automatic dispatch: IVF / graph / int8 /
-    * 4-bit / binary / PQ, the reference's CreateIterator serves whatever
-    * index type the column has, knn/knn.cpp:600-610): a plain L2 top-k
-    * routes through the ADC coarse screen with `refine` as the accuracy
-    * contract — the same serving contract the explicit
-    * [[graft.vector.Quantize.searchRescorePq]] carries (its gate-measured
-    * default too). */
-  def registerPq(spark: SparkSession, basePath: String, quantPath: String,
-                 model: graft.vector.Quantize.PqModel, vecCol: String,
-                 idCol: String, qCol: String = "pqvec",
-                 refine: Int = 32): Unit = {
-    val q = qualify(spark, basePath)
-    val epoch0 = epochOf(spark, quantPath)
-    val rows = -1L // filled by putUnlessMutated's single footer sweep
-    putUnlessMutated(spark, quantPath, epoch0, q,
-      Registered(q, quantPath, vecCol, rows,
-        PqFamily(model, qCol, idCol, refine,
-          analyzedPlan(spark, quantPath))))
-  }
-
-  /** Register a BINARY quantized table — the Hamming screen is the
-    * coarsest proxy, so refine defaults to
-    * [[graft.vector.Quantize.searchHammingRescore]]'s. */
-  def registerBinary(spark: SparkSession, basePath: String, binPath: String,
-                     model: graft.vector.Quantize.BModel, vecCol: String,
-                     idCol: String, bCol: String = "bvec",
-                     refine: Int = 16,
-                     rCol: Option[String] = None): Unit = {
-    val q = qualify(spark, basePath)
-    val epoch0 = epochOf(spark, binPath)
-    val rows = -1L // filled by putUnlessMutated's single footer sweep
-    putUnlessMutated(spark, binPath, epoch0, q,
-      Registered(q, binPath, vecCol, rows,
-        BinaryFamily(model, bCol, idCol, refine,
-          analyzedPlan(spark, binPath), rCol)))
   }
 
   /** Register a composite IVF-ADC index
     * ([[graft.vector.Ivf.buildIndexPq]] at `indexPath`) for `basePath` —
-    * the EIGHTH family of the CreateIterator-style dispatch (the
+    * one family of the CreateIterator-style dispatch (the
     * reference serves whatever index type the column has,
     * knn/knn.cpp:600-610): a plain L2 top-k routes through the
     * probe-pruned per-list ADC screen with (`nprobe`, `refine`) as the
     * declared serving contract; batch joins dispatch to
     * [[graft.vector.Ivf.knnJoinPq]]. Typical use registers the coded
-    * table as its own base (it carries the original vectors). */
-  /** `metric` is the serving metric (L2 or Cosine — cosine routes the
+    * table as its own base (it carries the original vectors). `metric` is
+    * the serving metric (L2 or Cosine — cosine routes the
     * `1 - cosine_sim` sort key through the normalized-space screen, the
     * [[graft.vector.Ivf.buildIndexPq]] cosine layout; the reference
     * serves cosine on every quantized index, knn/knn.h:32-37). */
@@ -371,8 +305,8 @@ object AnnRouting {
     * for it — [[graft.vector.Ivf.knnJoin]] (list-probed equi-join),
     * [[graft.vector.Hnsw.knnJoinRouted]] (amortized sub-graph walks),
     * [[graft.vector.Hnsw.knnJoinQuantized]] (code-space walks + exact
-    * rescore), or the screened joins of the four flat quantized families
-    * — each at the accuracy contract its registration declared (nprobe /
+    * rescore), or [[graft.vector.Quantize.knnJoin]] (the flat codecs'
+    * screened join) — each at the accuracy contract its registration declared (nprobe /
     * ef / refine), exactly like the single-query route. Unregistered
     * tables take the exact [[graft.vector.Knn.knnJoin]] fullscan — the
     * same conservative fallback the plan rule uses.
@@ -397,43 +331,27 @@ object AnnRouting {
     def renamed(df: DataFrame, from: String): DataFrame =
       if (from == cIdCol) df else df.withColumnRenamed(from, cIdCol)
     reg.get(qualify(spark, basePath)) match {
-      case Some(r) if servingMetric(r.family) == metric => r.family match {
+      case Some(r) if r.family.metric == metric => r.family match {
         case IvfFamily(model, nprobe, _, _) =>
           renamed(Ivf.knnJoin(spark, r.indexPath, model, queries,
             qIdCol, qVecCol, idCol, r.vecCol, k, nprobe), idCol)
-        case GraphFamily(_, ef, _, _, _, hier, hmin) =>
-          Hnsw.knnJoinRouted(spark, r.indexPath, queries,
-            qIdCol, qVecCol, cIdCol, k, ef, hier = hier, hierMin = hmin)
-        case QGraphFamily(gIdCol, ef, _, refine, _, hier, hmin) =>
+        case g: GraphFamily if g.quantized =>
           Hnsw.knnJoinQuantized(spark, r.indexPath,
-            graft.engine.Graft.cachedRead(spark, r.basePath), gIdCol, r.vecCol,
-            queries, qIdCol, qVecCol, cIdCol, k, ef, refine, hier = hier,
-            hierMin = hmin)
-        case f @ QuantFamily(_, _, _, _, _) =>
-          val (model, qCol, fIdCol, refine) = (f.model, f.qCol, f.idCol, f.refine)
-          Quantize.knnJoinQuant(graft.engine.Graft.cachedRead(spark, r.indexPath), r.vecCol,
-            qCol, fIdCol, model, queries, qIdCol, qVecCol, cIdCol, k,
-            metric, refine)
-        case f @ Quant4Family(_, _, _, _, _) =>
-          val (model, qCol, fIdCol, refine) = (f.model, f.qCol, f.idCol, f.refine)
-          Quantize.knnJoinQuant4(graft.engine.Graft.cachedRead(spark, r.indexPath), r.vecCol,
-            qCol, fIdCol, model, queries, qIdCol, qVecCol, cIdCol, k,
-            metric, refine)
-        case f @ PqFamily(_, _, _, _, _) =>
-          val (model, qCol, fIdCol, refine) = (f.model, f.qCol, f.idCol, f.refine)
-          Quantize.knnJoinPq(graft.engine.Graft.cachedRead(spark, r.indexPath), r.vecCol,
-            qCol, fIdCol, model, queries, qIdCol, qVecCol, cIdCol, k,
-            metric, refine)
-        case f @ BinaryFamily(_, _, _, _, _, _) =>
-          val (model, bCol, fIdCol, refine, rCol) = (f.model, f.bCol, f.idCol, f.refine, f.rCol)
-          Quantize.knnJoinBinary(graft.engine.Graft.cachedRead(spark, r.indexPath), r.vecCol,
-            bCol, fIdCol, model, queries, qIdCol, qVecCol, cIdCol, k,
-            metric, refine, rCol)
-        case f @ IvfPqFamily(_, _, _, _, _, _, _) =>
-          val (model, pq, fIdCol, nprobe, refine, met) = (f.model, f.pq, f.idCol, f.nprobe, f.refine, f.metric)
-          Ivf.knnJoinPq(spark, r.indexPath, model, pq, queries,
-            qIdCol, qVecCol, cIdCol, fIdCol, r.vecCol, k, nprobe, refine,
-            met)
+            graft.engine.Graft.cachedRead(spark, r.basePath), g.idCol,
+            r.vecCol, queries, qIdCol, qVecCol, cIdCol, k, g.ef, g.refine,
+            hier = g.hier, hierMin = g.hierMin)
+        case g: GraphFamily =>
+          Hnsw.knnJoinRouted(spark, r.indexPath, queries,
+            qIdCol, qVecCol, cIdCol, k, g.ef, hier = g.hier,
+            hierMin = g.hierMin)
+        case f: FlatFamily =>
+          Quantize.knnJoin(graft.engine.Graft.cachedRead(spark, r.indexPath),
+            r.vecCol, f.codeCol, f.idCol, f.codec, queries, qIdCol, qVecCol,
+            cIdCol, k, metric, f.refine)
+        case f: IvfPqFamily =>
+          Ivf.knnJoinPq(spark, r.indexPath, f.model, f.pq, queries,
+            qIdCol, qVecCol, cIdCol, f.idCol, r.vecCol, k, f.nprobe,
+            f.refine, f.metric)
       }
       case _ =>
         import org.apache.spark.sql.functions.col
@@ -443,21 +361,6 @@ object AnnRouting {
             .select(col(idCol).as(cIdCol), col(vecCol)),
           qIdCol, qVecCol, cIdCol, vecCol, k, metric, fits)
     }
-  }
-
-  /** The metric a registration's index serves — the join dispatch's
-    * routing key (every family pinned its metric at registration: the
-    * flat models carry their trained metric, the graph families their
-    * sidecar's, IVF its coarse model's, IVF-ADC its explicit marker). */
-  private def servingMetric(f: Family): Knn.Metric = f match {
-    case x: IvfFamily => x.model.metric
-    case x: GraphFamily => x.metric
-    case x: QGraphFamily => x.metric
-    case x: QuantFamily => x.model.metric
-    case x: Quant4Family => x.model.metric
-    case x: PqFamily => x.model.metric
-    case x: BinaryFamily => x.model.metric
-    case x: IvfPqFamily => x.metric
   }
 
   /** Unregistered-table joins that crossed the product threshold — spec
@@ -708,7 +611,7 @@ class AnnRoutingRule(session: SparkSession) extends Rule[LogicalPlan] {
       //    NULLS FIRST: footer stats count zero null vectors (the
       //    registration records this), the sort asks NULLS LAST, the
       //    column is non-nullable, or a conjunct filters IsNotNull(vec).
-      def secondaryOk: Boolean = familyIdColName(r) match {
+      def secondaryOk: Boolean = r.family.leafIdCol match {
         // the IVF leaf swap truncates nothing — the Sort above sees every
         // probed row, so any secondary keys keep their exact semantics
         case None => true
@@ -730,7 +633,7 @@ class AnnRoutingRule(session: SparkSession) extends Rule[LogicalPlan] {
             }
       matchDist(resolve(sortExpr)) match {
         case Some((metric, vecAttr, qvec))
-            if metric == familyMetric(r) && r.rows > 0 &&
+            if metric == r.family.metric && r.rows > 0 &&
               vecAttr.name == r.vecCol && lr.outputSet.contains(vecAttr) &&
               secondaryOk && nullSafeOk(vecAttr) =>
           r.family match {
@@ -742,45 +645,18 @@ class AnnRoutingRule(session: SparkSession) extends Rule[LogicalPlan] {
             // bitmap, knn/knn.h:87-94); otherwise the plan stays on the
             // always-exact filtered fullscan
             case g: AnnRouting.GraphFamily =>
-              val filters = child.collect { case f: Filter => f }
-              if (filters.isEmpty) buildGraphRouted(gl, lr, r, g, qvec, k)
-              else buildGraphFilteredRouted(gl, lr, r, g, qvec, k, filters)
-            // quantized graph (r15): same leaf swap, code-space walk +
-            // raw-vector fetch for the k·refine survivors; the Sort above
-            // rescores exactly
-            case qg: AnnRouting.QGraphFamily =>
-              val filters = child.collect { case f: Filter => f }
-              if (filters.isEmpty) buildQGraphRouted(gl, lr, r, qg, qvec, k)
-              else buildQGraphFilteredRouted(gl, lr, r, qg, qvec, k, filters)
-            // quantized families (int8 / 4-bit / binary — the reference
-            // serves whatever index type the column has, knn.cpp:600-610):
-            // the filter rides INSIDE the coarse screen (the quant table
-            // carries the attribute columns), so the k·refine contract
-            // applies to the filtered corpus
-            case qf: AnnRouting.QuantFamily =>
-              buildQuantRouted(gl, lr, r, qf.idCol, qf.refine,
-                (df, n) => graft.vector.Quantize.coarseIds(
-                  df, qf.qCol, qf.idCol, qf.model, qvec, n),
-                k, child.collect { case f: Filter => f }, qf.indexPlan)
-            case qf: AnnRouting.Quant4Family =>
-              buildQuantRouted(gl, lr, r, qf.idCol, qf.refine,
-                (df, n) => graft.vector.Quantize.coarseIds4(
-                  df, qf.qCol, qf.idCol, qf.model, qvec, n),
-                k, child.collect { case f: Filter => f }, qf.indexPlan)
-            case qf: AnnRouting.PqFamily =>
-              buildQuantRouted(gl, lr, r, qf.idCol, qf.refine,
-                (df, n) => graft.vector.Quantize.coarseIdsPq(
-                  df, qf.qCol, qf.idCol, qf.model, qvec, n),
-                k, child.collect { case f: Filter => f }, qf.indexPlan)
-            case qf: AnnRouting.BinaryFamily =>
-              buildQuantRouted(gl, lr, r, qf.idCol, qf.refine,
-                (df, n) => qf.rCol match {
-                  case Some(rc) => graft.vector.Quantize.coarseIdsBinaryResidual(
-                    df, qf.bCol, rc, qf.idCol, qf.model, qvec, n)
-                  case None => graft.vector.Quantize.coarseIdsBinary(
-                    df, qf.bCol, qf.idCol, qf.model, qvec, n)
-                },
-                k, child.collect { case f: Filter => f }, qf.indexPlan)
+              buildGraphRouted(gl, lr, r, g, qvec, k,
+                child.collect { case f: Filter => f })
+            // flat codecs (the reference serves whatever index type the
+            // column has, knn.cpp:600-610): the filter rides INSIDE the
+            // coarse screen (the coded table carries the attribute
+            // columns), so the k·refine contract applies to the filtered
+            // corpus
+            case flat: AnnRouting.FlatFamily =>
+              buildQuantRouted(gl, lr, r, flat.idCol, flat.refine,
+                (df, n) => Quantize.coarseIds(df, flat.codeCol, flat.idCol,
+                  flat.codec, qvec, n),
+                k, child.collect { case f: Filter => f }, flat.indexPlan)
             // composite IVF-ADC (r16): the probe-pruned per-list ADC
             // screen — consumed filters ride inside it, so its survivors
             // come from the filtered corpus like the flat families'
@@ -799,37 +675,6 @@ class AnnRoutingRule(session: SparkSession) extends Rule[LogicalPlan] {
   private def splitConj(e: Expression): Seq[Expression] = e match {
     case And(l, r) => splitConj(l) ++ splitConj(r)
     case other => Seq(other)
-  }
-
-  /** The id column a family's candidate leaf tie-breaks on (None for the
-    * IVF leaf swap, which truncates nothing — but the uniform secondary-
-    * key gate keeps the exactness argument one sentence). */
-  private def familyIdColName(r: Registered): Option[String] = r.family match {
-    case g: AnnRouting.GraphFamily => Some(g.idCol)
-    case qg: AnnRouting.QGraphFamily => Some(qg.idCol)
-    case qf: AnnRouting.QuantFamily => Some(qf.idCol)
-    case qf: AnnRouting.Quant4Family => Some(qf.idCol)
-    case qf: AnnRouting.PqFamily => Some(qf.idCol)
-    case qf: AnnRouting.BinaryFamily => Some(qf.idCol)
-    case qf: AnnRouting.IvfPqFamily => Some(qf.idCol)
-    case _: AnnRouting.IvfFamily => None
-  }
-
-  private def familyMetric(r: Registered): Knn.Metric = r.family match {
-    case i: AnnRouting.IvfFamily => i.model.metric
-    case g: AnnRouting.GraphFamily => g.metric
-    case qg: AnnRouting.QGraphFamily => qg.metric
-    // IVF-ADC serves its registered metric (cosine binds through the
-    // normalized screen space — r17); the flat quantized families serve
-    // their MODEL's trained metric (r18 — cosine models code the
-    // normalized companion, and the coarse screens bound the query into
-    // that space internally, so the splice below needs no metric plumbing;
-    // the reference serves cosine on every quantized index, knn/knn.h:32-37)
-    case qf: AnnRouting.IvfPqFamily => qf.metric
-    case qf: AnnRouting.QuantFamily => qf.model.metric
-    case qf: AnnRouting.Quant4Family => qf.model.metric
-    case qf: AnnRouting.BinaryFamily => qf.model.metric
-    case qf: AnnRouting.PqFamily => qf.model.metric
   }
 
   /** (metric, vector attribute, query vector) of a distance sort key. */
@@ -1069,25 +914,16 @@ class AnnRoutingRule(session: SparkSession) extends Rule[LogicalPlan] {
     * the carried vectors). The graph table supplies only (id, vector), so
     * the route refuses when anything ABOVE the scan references another
     * column; unreferenced base columns ride along as nulls (they must be
-    * nullable — never read, but the schema contract stays honest). */
-  private def buildGraphRouted(gl: LogicalPlan, lr: LogicalRelation,
-                               r: Registered, g: AnnRouting.GraphFamily,
-                               qvec: Array[Float], k: Int): Option[LogicalPlan] = {
-    if (!graphGateOk(gl, lr, r, g.idCol, Nil)) None
-    else {
-      val leaf = GraphCandidates(r.indexPath, g.idCol, r.vecCol,
-        qvec.toSeq, k, g.ef, lr.output, adaptive = g.adaptive,
-        hier = g.hier, hierMin = g.hierMin)
-      Some(gl.transformUp { case l: LogicalRelation if l eq lr => leaf })
-    }
-  }
-
-  /** K3 automatic on the graph family: CONSUME the attribute filter into
-    * the routed walk's allowed-id callback (the reference host computes the
-    * filter bitmap and hands it to the KNN iterator, knn/knn.h:87-94;
-    * HNSWFilterWrapper_c knn.cpp:90-97 — traversal crosses disallowed
-    * nodes, only allowed enter the beam, over-probing keeps k survivors).
-    * Route only when
+    * nullable — never read, but the schema contract stays honest). A
+    * quantized leaf runs the code-space walk and fetches the k·refine
+    * coarse survivors' raw vectors from the base table, so its base path
+    * always rides along.
+    *
+    * K3 automatic: a `Filter` is CONSUMED into the routed walk's allowed-id
+    * callback (the reference host computes the filter bitmap and hands it
+    * to the KNN iterator, knn/knn.h:87-94; HNSWFilterWrapper_c
+    * knn.cpp:90-97 — traversal crosses disallowed nodes, only allowed
+    * enter the beam, over-probing keeps k survivors). Route only when
     *  - every conjunct is an SQL-safe estimable shape (numeric ranges from
     *    footer stats; string/typed comparisons and IN lists from the
     *    column's registered secondary-index stats) or an inferred
@@ -1106,83 +942,32 @@ class AnnRoutingRule(session: SparkSession) extends Rule[LogicalPlan] {
     *    the filter columns do not escape the matched subtree's output
     *    (they are pruned above the consumed Filter, else null-fill would
     *    show). */
-  private def buildGraphFilteredRouted(gl: LogicalPlan, lr: LogicalRelation,
-                                       r: Registered, g: AnnRouting.GraphFamily,
-                                       qvec: Array[Float], k: Int,
-                                       filters: Seq[Filter]): Option[LogicalPlan] = {
-    val cond = consumableCond(filters, lr) match {
-      case Some(c) => c
+  private def buildGraphRouted(gl: LogicalPlan, lr: LogicalRelation,
+                               r: Registered, g: AnnRouting.GraphFamily,
+                               qvec: Array[Float], k: Int,
+                               filters: Seq[Filter]): Option[LogicalPlan] = {
+    val cond = if (filters.isEmpty) None else consumableCond(filters, lr) match {
       case None => return None
+      case c => c
     }
     val conds = filters.map(_.condition)
-    val survivors = estimateSelectivity(conds, r).map(_ * r.rows.toDouble)
-    if (!survivors.exists(_ <= g.maxFilterIds.toDouble)) return None
-    if (!graphGateOk(gl, lr, r, g.idCol, excluded = filters)) None
-    else {
-      val leaf = GraphCandidates(r.indexPath, g.idCol, r.vecCol,
-        qvec.toSeq, k, g.ef, lr.output,
-        basePath = Some(r.basePath), filterSql = Some(cond.sql),
-        maxIds = g.maxFilterIds, adaptive = g.adaptive, hier = g.hier,
-        hierMin = g.hierMin)
-      // transformUp rebuilds parents after the leaf swap, so the consumed
-      // Filter nodes are copies — match them by their (unchanged)
-      // condition, not by reference
-      Some(gl.transformUp {
-        case l: LogicalRelation if l eq lr => leaf
-        case f: Filter if conds.exists(_ fastEquals f.condition) => f.child
-      })
-    }
-  }
-
-  /** Swap the base relation for the QUANTIZED graph leaf (r15): the leaf
-    * runs the code-space routed walk and fetches the k·refine coarse
-    * survivors' raw vectors from the base table, so the untouched
-    * Sort/Limit above is the exact rescore. Same (id, vector)-only
-    * referencing gate as the raw graph family; the base path always rides
-    * along (the vector fetch needs it even unfiltered). */
-  private def buildQGraphRouted(gl: LogicalPlan, lr: LogicalRelation,
-                                r: Registered, qg: AnnRouting.QGraphFamily,
-                                qvec: Array[Float], k: Int): Option[LogicalPlan] = {
-    if (!graphGateOk(gl, lr, r, qg.idCol, Nil)) None
-    else {
-      val leaf = GraphCandidates(r.indexPath, qg.idCol, r.vecCol,
-        qvec.toSeq, k, qg.ef, lr.output,
-        basePath = Some(r.basePath),
-        quantized = true, refine = qg.refine, hier = qg.hier,
-        hierMin = qg.hierMin)
-      Some(gl.transformUp { case l: LogicalRelation if l eq lr => leaf })
-    }
-  }
-
-  /** K3 automatic on the quantized graph family: the same consumed-filter
-    * contract as [[buildGraphFilteredRouted]] (estimable SQL-safe shapes,
-    * survivor estimate within the broadcast budget, (id, vector)-only
-    * referencing), with the allowed-id callback gating the CODE-space
-    * beam and the over-probe loop keeping k survivors. */
-  private def buildQGraphFilteredRouted(gl: LogicalPlan, lr: LogicalRelation,
-                                        r: Registered,
-                                        qg: AnnRouting.QGraphFamily,
-                                        qvec: Array[Float], k: Int,
-                                        filters: Seq[Filter]): Option[LogicalPlan] = {
-    val cond = consumableCond(filters, lr) match {
-      case Some(c) => c
-      case None => return None
-    }
-    val conds = filters.map(_.condition)
-    val survivors = estimateSelectivity(conds, r).map(_ * r.rows.toDouble)
-    if (!survivors.exists(_ <= qg.maxFilterIds.toDouble)) return None
-    if (!graphGateOk(gl, lr, r, qg.idCol, excluded = filters)) None
-    else {
-      val leaf = GraphCandidates(r.indexPath, qg.idCol, r.vecCol,
-        qvec.toSeq, k, qg.ef, lr.output,
-        basePath = Some(r.basePath), filterSql = Some(cond.sql),
-        maxIds = qg.maxFilterIds, quantized = true, refine = qg.refine,
-        hier = qg.hier, hierMin = qg.hierMin)
-      Some(gl.transformUp {
-        case l: LogicalRelation if l eq lr => leaf
-        case f: Filter if conds.exists(_ fastEquals f.condition) => f.child
-      })
-    }
+    if (cond.isDefined && !estimateSelectivity(conds, r)
+        .exists(_ * r.rows.toDouble <= g.maxFilterIds.toDouble)) return None
+    if (!graphGateOk(gl, lr, r, g.idCol, excluded = filters)) return None
+    val leaf = GraphCandidates(r.indexPath, g.idCol, r.vecCol,
+      qvec.toSeq, k, g.ef, lr.output,
+      basePath = if (cond.isDefined || g.quantized) Some(r.basePath) else None,
+      filterSql = cond.map(_.sql),
+      maxIds = if (cond.isDefined) g.maxFilterIds else Long.MaxValue,
+      adaptive = g.adaptive, quantized = g.quantized, refine = g.refine,
+      hier = g.hier, hierMin = g.hierMin)
+    // transformUp rebuilds parents after the leaf swap, so the consumed
+    // Filter nodes are copies — match them by their (unchanged)
+    // condition, not by reference
+    Some(gl.transformUp {
+      case l: LogicalRelation if l eq lr => leaf
+      case f: Filter if conds.exists(_ fastEquals f.condition) => f.child
+    })
   }
 
   /** Swap the base relation for the quantized coarse-screen survivors:
@@ -1232,10 +1017,8 @@ class AnnRoutingRule(session: SparkSession) extends Rule[LogicalPlan] {
       .map(c => qdf.filter(org.apache.spark.sql.functions.expr(c.sql)))
       .getOrElse(qdf)
     catch { case _: Exception => return None }
-    // k * refine in LONG: the Int product wraps for bulk-scale k and a
-    // negative keep silently empties the screen (review r18-9)
-    val keep = math.min(k.toLong * refine, Int.MaxValue.toLong).toInt
-    val survivors = qdf.join(coarse(screenBase, keep), Seq(idCol))
+    val survivors = qdf.join(
+      coarse(screenBase, Knn.refineKeep(k, refine)), Seq(idCol))
     val plan = survivors.queryExecution.analyzed
     val byName = plan.output.map(a => a.name -> a).toMap
     val mapped = Project(

@@ -191,7 +191,7 @@ object VectorQueries {
     "q_knn_join_quant" -> QueryDef(
       (s, d) => {
         val (m, path) = quantIndex(s, d)
-        Quantize.knnJoinQuant(
+        Quantize.knnJoin(
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
           "embedding", "qvec", "vec_id", m,
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
@@ -219,7 +219,7 @@ object VectorQueries {
     "q_knn_join_quant4" -> QueryDef(
       (s, d) => {
         val (m, path) = quant4Index(s, d)
-        Quantize.knnJoinQuant4(
+        Quantize.knnJoin(
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
           "embedding", "q4vec", "vec_id", m,
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
@@ -239,7 +239,7 @@ object VectorQueries {
     "q_knn_join_binary" -> QueryDef(
       (s, d) => {
         val (m, path) = binIndex(s, d)
-        Quantize.knnJoinBinary(
+        Quantize.knnJoin(
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
           "embedding", "bvec", "vec_id", m,
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
@@ -260,7 +260,7 @@ object VectorQueries {
     "q_knn_join_pq" -> QueryDef(
       (s, d) => {
         val (m, path) = pqIndex(s, d)
-        Quantize.knnJoinPq(
+        Quantize.knnJoin(
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
           "embedding", "pqvec", "vec_id", m,
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
@@ -355,7 +355,7 @@ object VectorQueries {
     "q_knn_join_quant_ip" -> QueryDef(
       (s, d) => {
         val (m, path) = quantIpIndex(s, d)
-        Quantize.knnJoinQuant(
+        Quantize.knnJoin(
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
           "embedding", "qvec", "vec_id", m,
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
@@ -373,7 +373,7 @@ object VectorQueries {
     "q_knn_join_quant_cos" -> QueryDef(
       (s, d) => {
         val (m, path) = quantCosIndex(s, d)
-        Quantize.knnJoinQuant(
+        Quantize.knnJoin(
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
           "embedding", "qvec", "vec_id", m,
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
@@ -433,7 +433,7 @@ object VectorQueries {
     "q_knn_join_quant4_ip" -> QueryDef(
       (s, d) => {
         val (m, path) = quant4IpIndex(s, d)
-        Quantize.knnJoinQuant4(
+        Quantize.knnJoin(
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
           "embedding", "q4vec", "vec_id", m,
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
@@ -448,7 +448,7 @@ object VectorQueries {
     "q_knn_join_quant4_cos" -> QueryDef(
       (s, d) => {
         val (m, path) = quant4CosIndex(s, d)
-        Quantize.knnJoinQuant4(
+        Quantize.knnJoin(
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
           "embedding", "q4vec", "vec_id", m,
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
@@ -463,7 +463,7 @@ object VectorQueries {
     "q_knn_join_pq_ip" -> QueryDef(
       (s, d) => {
         val (m, path) = pqIpIndex(s, d)
-        Quantize.knnJoinPq(
+        Quantize.knnJoin(
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
           "embedding", "pqvec", "vec_id", m,
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
@@ -478,7 +478,7 @@ object VectorQueries {
     "q_knn_join_pq_cos" -> QueryDef(
       (s, d) => {
         val (m, path) = pqCosIndex(s, d)
-        Quantize.knnJoinPq(
+        Quantize.knnJoin(
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
           "embedding", "pqvec", "vec_id", m,
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
@@ -496,13 +496,13 @@ object VectorQueries {
     "q_knn_join_binary_ip" -> QueryDef(
       (s, d) => {
         val (m, path) = binResIpIndex(s, d)
-        Quantize.knnJoinBinary(
+        Quantize.knnJoin(
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
           "embedding", "bvec", "vec_id", m,
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
             .select(col("vec_id").as("query_id"), col("embedding")),
           "query_id", "embedding", "corpus_id", k = 3, metric = Knn.IP,
-          refine = 320, rCol = Some("bres"))
+          refine = 320)
           .select(col("query_id"), col("corpus_id"),
             round(col("dist"), 6).as("dist"), col("rn").cast("long").as("rn"))
       },
@@ -511,13 +511,13 @@ object VectorQueries {
     "q_knn_join_binary_cos" -> QueryDef(
       (s, d) => {
         val (m, path) = binResCosIndex(s, d)
-        Quantize.knnJoinBinary(
+        Quantize.knnJoin(
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") >= 20),
           "embedding", "bvec", "vec_id", m,
           graft.engine.Graft.cachedRead(s, path).filter(col("vec_id") < 20)
             .select(col("vec_id").as("query_id"), col("embedding")),
           "query_id", "embedding", "corpus_id", k = 3, metric = Knn.Cosine,
-          refine = 320, rCol = Some("bres"))
+          refine = 320)
           .select(col("query_id"), col("corpus_id"),
             round(col("dist"), 6).as("dist"), col("rn").cast("long").as("rn"))
       },
@@ -666,8 +666,8 @@ object VectorQueries {
     "q_knn_filtered_quant" -> QueryDef(
       (s, d) => {
         val (m, path) = quantIndex(s, d)
-        graft.plans.AnnRouting.registerQuant(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id")
+        graft.plans.AnnRouting.registerFlat(s, path, path, m,
+          vecCol = "embedding", idCol = "vec_id", codeCol = "qvec")
         Knn.knn(graft.engine.Graft.cachedRead(s, path).filter(col("label") === 3),
             "embedding", "vec_id", queryVec(s, d), 10, Knn.L2)
           .select(col("vec_id"), round(col("dist"), 6).as("dist"))
@@ -1061,8 +1061,8 @@ object VectorQueries {
     "q_knn_pq" -> QueryDef(
       (s, d) => {
         val (m, path) = pqIndex(s, d)
-        Quantize.searchRescorePq(graft.engine.Graft.cachedRead(s, path), "embedding", "pqvec",
-            "vec_id", m, queryVec(s, d), k = 10, refine = 32)
+        Quantize.searchRescore(graft.engine.Graft.cachedRead(s, path), "embedding", "pqvec",
+            "vec_id", m, queryVec(s, d), k = 10)
           .select(col("vec_id"), round(col("dist"), 6).as("dist"))
       },
       Some(oracleFor(s"list_distance(embedding::DOUBLE[], $qSub)"))),
@@ -1287,8 +1287,8 @@ object VectorQueries {
     "q_knn_pq_auto" -> QueryDef(
       (s, d) => {
         val (m, path) = pqIndex(s, d)
-        graft.plans.AnnRouting.registerPq(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id")
+        graft.plans.AnnRouting.registerFlat(s, path, path, m,
+          vecCol = "embedding", idCol = "vec_id", codeCol = "pqvec")
         Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
             queryVec(s, d), 10, Knn.L2)
           .select(col("vec_id"), round(col("dist"), 6).as("dist"))
@@ -1302,8 +1302,8 @@ object VectorQueries {
     "q_knn_pq_auto_filtered" -> QueryDef(
       (s, d) => {
         val (m, path) = pqIndex(s, d)
-        graft.plans.AnnRouting.registerPq(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id")
+        graft.plans.AnnRouting.registerFlat(s, path, path, m,
+          vecCol = "embedding", idCol = "vec_id", codeCol = "pqvec")
         Knn.knn(graft.engine.Graft.cachedRead(s, path).filter(col("label") === 3),
             "embedding", "vec_id", queryVec(s, d), 10, Knn.L2)
           .select(col("vec_id"), round(col("dist"), 6).as("dist"))
@@ -1318,8 +1318,8 @@ object VectorQueries {
     "q_knn_pq_seg" -> QueryDef(
       (s, d) => {
         val (m, path) = pqSegIndex(s, d)
-        Quantize.searchRescorePq(graft.engine.Graft.cachedRead(s, path), "embedding", "pqvec",
-            "vec_id", m, queryVec(s, d), k = 10, refine = 32)
+        Quantize.searchRescore(graft.engine.Graft.cachedRead(s, path), "embedding", "pqvec",
+            "vec_id", m, queryVec(s, d), k = 10)
           .select(col("vec_id"), round(col("dist"), 6).as("dist"))
       },
       Some(oracleFor(s"list_distance(embedding::DOUBLE[], $qSub)"))),
@@ -1336,8 +1336,8 @@ object VectorQueries {
     "q_knn_quant_auto" -> QueryDef(
       (s, d) => {
         val (m, path) = quantIndex(s, d)
-        graft.plans.AnnRouting.registerQuant(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id")
+        graft.plans.AnnRouting.registerFlat(s, path, path, m,
+          vecCol = "embedding", idCol = "vec_id", codeCol = "qvec")
         Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
             queryVec(s, d), 10, Knn.L2)
           .select(col("vec_id"), round(col("dist"), 6).as("dist"))
@@ -1348,7 +1348,7 @@ object VectorQueries {
     // quantizer.cpp 4-bit transposed rep), AUTOMATICALLY ROUTED (r10
     // VERDICT #3 — the reference serves whatever index type the column
     // has, knn/knn.cpp:600-610): 2 dims/byte packed-nibble codes, 8x
-    // smaller scans; the registered Quant4Family splices the coarse
+    // smaller scans; the registered FlatFamily splices the coarse
     // nibble screen under the plain top-k's untouched Sort/Limit (the
     // exact rescore). Deterministic end to end; measured worst-case
     // true-top-10 coarse rank on these fixtures is 14 (sf0.01) /
@@ -1357,8 +1357,8 @@ object VectorQueries {
     "q_knn_quant4" -> QueryDef(
       (s, d) => {
         val (m, path) = quant4Index(s, d)
-        graft.plans.AnnRouting.registerQuant4(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id")
+        graft.plans.AnnRouting.registerFlat(s, path, path, m,
+          vecCol = "embedding", idCol = "vec_id", codeCol = "q4vec")
         Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
             queryVec(s, d), 10, Knn.L2)
           .select(col("vec_id"), round(col("dist"), 6).as("dist"))
@@ -1377,8 +1377,8 @@ object VectorQueries {
     "q_knn_binary" -> QueryDef(
       (s, d) => {
         val (m, path) = binIndex(s, d)
-        graft.plans.AnnRouting.registerBinary(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", refine = 40)
+        graft.plans.AnnRouting.registerFlat(s, path, path, m,
+          vecCol = "embedding", idCol = "vec_id", codeCol = "bvec", refine = 40)
         Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
             queryVec(s, d), 10, Knn.L2)
           .select(col("vec_id"), round(col("dist"), 6).as("dist"))
@@ -1398,9 +1398,8 @@ object VectorQueries {
         val (m, path) = binResIndex(s, d)
         // AUTOMATIC route (K4): plain top-k over the registered table
         // rewrites through the residual-corrected screen + exact rescore
-        graft.plans.AnnRouting.registerBinary(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", refine = 40,
-          rCol = Some("bres"))
+        graft.plans.AnnRouting.registerFlat(s, path, path, m,
+          vecCol = "embedding", idCol = "vec_id", codeCol = "bvec", refine = 40)
         Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
             queryVec(s, d), 10, Knn.L2)
           .select(col("vec_id"), round(col("dist"), 6).as("dist"))
@@ -1419,8 +1418,8 @@ object VectorQueries {
     "q_knn_quant_cos" -> QueryDef(
       (s, d) => {
         val (m, path) = quantCosIndex(s, d)
-        graft.plans.AnnRouting.registerQuant(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", qCol = "qvec",
+        graft.plans.AnnRouting.registerFlat(s, path, path, m,
+          vecCol = "embedding", idCol = "vec_id", codeCol = "qvec",
           refine = 16)
         Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
             queryVec(s, d), 10, Knn.Cosine)
@@ -1439,8 +1438,8 @@ object VectorQueries {
     "q_knn_quant_ip" -> QueryDef(
       (s, d) => {
         val (m, path) = quantIpIndex(s, d)
-        graft.plans.AnnRouting.registerQuant(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", qCol = "qvec",
+        graft.plans.AnnRouting.registerFlat(s, path, path, m,
+          vecCol = "embedding", idCol = "vec_id", codeCol = "qvec",
           refine = 16)
         Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
             queryVec(s, d), 10, Knn.IP)
@@ -1456,8 +1455,8 @@ object VectorQueries {
     "q_knn_quant4_cos" -> QueryDef(
       (s, d) => {
         val (m, path) = quant4CosIndex(s, d)
-        graft.plans.AnnRouting.registerQuant4(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", qCol = "q4vec",
+        graft.plans.AnnRouting.registerFlat(s, path, path, m,
+          vecCol = "embedding", idCol = "vec_id", codeCol = "q4vec",
           refine = 24)
         Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
             queryVec(s, d), 10, Knn.Cosine)
@@ -1472,8 +1471,8 @@ object VectorQueries {
     "q_knn_pq_cos" -> QueryDef(
       (s, d) => {
         val (m, path) = pqCosIndex(s, d)
-        graft.plans.AnnRouting.registerPq(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", qCol = "pqvec",
+        graft.plans.AnnRouting.registerFlat(s, path, path, m,
+          vecCol = "embedding", idCol = "vec_id", codeCol = "pqvec",
           refine = 48)
         Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
             queryVec(s, d), 10, Knn.Cosine)
@@ -1488,9 +1487,9 @@ object VectorQueries {
     "q_knn_binary_res_cos" -> QueryDef(
       (s, d) => {
         val (m, path) = binResCosIndex(s, d)
-        graft.plans.AnnRouting.registerBinary(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", bCol = "bvec",
-          refine = 40, rCol = Some("bres"))
+        graft.plans.AnnRouting.registerFlat(s, path, path, m,
+          vecCol = "embedding", idCol = "vec_id", codeCol = "bvec",
+          refine = 40)
         Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
             queryVec(s, d), 10, Knn.Cosine)
           .select(col("vec_id"), round(col("dist"), 6).as("dist"))
@@ -1504,8 +1503,8 @@ object VectorQueries {
     "q_knn_quant4_ip" -> QueryDef(
       (s, d) => {
         val (m, path) = quant4IpIndex(s, d)
-        graft.plans.AnnRouting.registerQuant4(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", qCol = "q4vec",
+        graft.plans.AnnRouting.registerFlat(s, path, path, m,
+          vecCol = "embedding", idCol = "vec_id", codeCol = "q4vec",
           refine = 24)
         Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
             queryVec(s, d), 10, Knn.IP)
@@ -1523,8 +1522,8 @@ object VectorQueries {
     "q_knn_pq_ip" -> QueryDef(
       (s, d) => {
         val (m, path) = pqIpIndex(s, d)
-        graft.plans.AnnRouting.registerPq(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", qCol = "pqvec",
+        graft.plans.AnnRouting.registerFlat(s, path, path, m,
+          vecCol = "embedding", idCol = "vec_id", codeCol = "pqvec",
           refine = 128)
         Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
             queryVec(s, d), 10, Knn.IP)
@@ -1539,9 +1538,9 @@ object VectorQueries {
     "q_knn_binary_res_ip" -> QueryDef(
       (s, d) => {
         val (m, path) = binResIpIndex(s, d)
-        graft.plans.AnnRouting.registerBinary(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", bCol = "bvec",
-          refine = 40, rCol = Some("bres"))
+        graft.plans.AnnRouting.registerFlat(s, path, path, m,
+          vecCol = "embedding", idCol = "vec_id", codeCol = "bvec",
+          refine = 40)
         Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
             queryVec(s, d), 10, Knn.IP)
           .select(col("vec_id"), round(col("dist"), 6).as("dist"))
@@ -1647,8 +1646,8 @@ object VectorQueries {
     "q_knn_quant_seg" -> QueryDef(
       (s, d) => {
         val (m, path) = quantSegIndex(s, d)
-        graft.plans.AnnRouting.registerQuant(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id", refine = 16)
+        graft.plans.AnnRouting.registerFlat(s, path, path, m,
+          vecCol = "embedding", idCol = "vec_id", codeCol = "qvec", refine = 16)
         Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
             queryVec(s, d), 10, Knn.L2)
           .select(col("vec_id"), round(col("dist"), 6).as("dist"))
@@ -1730,8 +1729,8 @@ object VectorQueries {
     "q_knn_quant_compact" -> QueryDef(
       (s, d) => {
         val (m, path) = quantCompactIndex(s, d)
-        graft.plans.AnnRouting.registerQuant(s, path, path, m,
-          vecCol = "embedding", idCol = "vec_id")
+        graft.plans.AnnRouting.registerFlat(s, path, path, m,
+          vecCol = "embedding", idCol = "vec_id", codeCol = "qvec")
         Knn.knn(graft.engine.Graft.cachedRead(s, path), "embedding", "vec_id",
             queryVec(s, d), 10, Knn.L2)
           .select(col("vec_id"), round(col("dist"), 6).as("dist"))
@@ -1788,7 +1787,7 @@ object VectorQueries {
       if (!new java.io.File(path, "_GRAFT_SEG_OK").isFile) {
         fsDelete(s, path)
         graft.tables.Writer.write(
-          Quantize.quantizeTable(build, "embedding", "qvec", m), path,
+          Quantize.encodeTable(build, "embedding", "qvec", m), path,
           sortBy = Seq("vec_id"))
         Quantize.appendSegment(append, "embedding", "qvec", path, m)
         new java.io.File(path, "_GRAFT_SEG_OK").createNewFile()
@@ -1928,11 +1927,11 @@ object VectorQueries {
           val (build, append) = segSplit(t(s, d, "embeddings"))
           val m0 = Quantize.train(build, "embedding")
           graft.tables.Writer.write(
-            Quantize.quantizeTable(build, "embedding", "qvec", m0), path,
+            Quantize.encodeTable(build, "embedding", "qvec", m0), path,
             sortBy = Seq("vec_id"))
           Quantize.appendSegment(append, "embedding", "qvec", path, m0)
-          val m2 = Quantize.compact(s, path, "embedding", "qvec",
-            Seq("vec_id"), m0, retrain = true)
+          val m2 = Quantize.compact(s, path, "embedding", "qvec", "vec_id",
+            m0, retrain = true)
           marker.createNewFile()
           m2
         }
@@ -2225,21 +2224,30 @@ object VectorQueries {
       (m, path, radii)
     })
 
+  /** Memoized flat coded table per sfDir, written under `dir` only when
+    * absent: training is deterministic, so a table written by an earlier
+    * process pairs with a freshly derived codec. */
+  private def flatIndex[C <: Quantize.FlatCodec](
+      cache: scala.collection.concurrent.TrieMap[String, (C, String)],
+      s: SparkSession, d: String, dir: String, codeCol: String)
+      (train: DataFrame => C): (C, String) =
+    cache.getOrElseUpdate(d, {
+      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/$dir"
+      val m = train(t(s, d, "embeddings"))
+      if (!new java.io.File(path, "_SUCCESS").isFile)
+        graft.tables.Writer.write(Quantize.encodeTable(t(s, d, "embeddings"),
+          "embedding", codeCol, m), path, sortBy = Seq("vec_id"))
+      (m, path)
+    })
+
   // Memoized quantized table per sfDir (training is deterministic, so a
   // table written by a previous process pairs with a freshly-derived model).
   private val quantCache =
     scala.collection.concurrent.TrieMap.empty[String, (Quantize.QModel, String)]
 
   private def quantIndex(s: SparkSession, d: String): (Quantize.QModel, String) =
-    quantCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/quant_embeddings"
-      val m = Quantize.train(t(s, d, "embeddings"), "embedding")
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantizeTable(t(s, d, "embeddings"), "embedding", "qvec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
+    flatIndex(quantCache, s, d, "quant_embeddings", "qvec")(e =>
+      Quantize.train(e, "embedding"))
 
   // Memoized per-list radii for the adaptive search (one aggregation over
   // the index table, reused across bench repetitions).
@@ -2302,15 +2310,8 @@ object VectorQueries {
       "cv)) THEN 0.0 ELSE list_cosine_similarity(qv, cv) END)")
 
   private def quant4Index(s: SparkSession, d: String): (Quantize.Q4Model, String) =
-    quant4Cache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/quant4_embeddings"
-      val m = Quantize.train4(t(s, d, "embeddings"), "embedding")
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantize4Table(t(s, d, "embeddings"), "embedding", "q4vec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
+    flatIndex(quant4Cache, s, d, "quant4_embeddings", "q4vec")(e =>
+      Quantize.train4(e, "embedding"))
 
   // Memoized PQ-coded table per sfDir (deterministic training: id-ordered
   // sample, evenly-spaced init, lowest-index ties — the model a later
@@ -2319,15 +2320,8 @@ object VectorQueries {
     scala.collection.concurrent.TrieMap.empty[String, (Quantize.PqModel, String)]
 
   private def pqIndex(s: SparkSession, d: String): (Quantize.PqModel, String) =
-    pqCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/pq_embeddings"
-      val m = Quantize.trainPq(t(s, d, "embeddings"), "embedding", "vec_id")
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantizePqTable(t(s, d, "embeddings"), "embedding", "pqvec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
+    flatIndex(pqCache, s, d, "pq_embeddings", "pqvec")(e =>
+      Quantize.trainPq(e, "embedding", "vec_id"))
 
   // Memoized IVF-ADC index per sfDir (coarse model + residual PQ
   // codebooks + the clustered coded table — Ivf.buildIndexPq's layout).
@@ -2459,9 +2453,9 @@ object VectorQueries {
       if (!new java.io.File(path, "_GRAFT_SEG_OK").isFile) {
         fsDelete(s, path)
         graft.tables.Writer.write(
-          Quantize.quantizePqTable(build, "embedding", "pqvec", m), path,
+          Quantize.encodeTable(build, "embedding", "pqvec", m), path,
           sortBy = Seq("vec_id"))
-        Quantize.appendSegmentPq(append, "embedding", "pqvec", path, m)
+        Quantize.appendSegment(append, "embedding", "pqvec", path, m)
         new java.io.File(path, "_GRAFT_SEG_OK").createNewFile()
       }
       (m, path)
@@ -2473,50 +2467,27 @@ object VectorQueries {
     scala.collection.concurrent.TrieMap.empty[String, (Quantize.BModel, String)]
 
   private def binIndex(s: SparkSession, d: String): (Quantize.BModel, String) =
-    binCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/bin_embeddings"
-      val m = Quantize.trainBinary(t(s, d, "embeddings"), "embedding")
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val bdf = Quantize.binarizeTable(t(s, d, "embeddings"), "embedding", "bvec", m)
-        graft.tables.Writer.write(bdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
+    flatIndex(binCache, s, d, "bin_embeddings", "bvec")(e =>
+      Quantize.trainBinary(e, "embedding"))
 
   // Residual-factor binary table (sign bits + per-vector ‖r‖ and the
   // least-squares scale — knn/quantizer.h:48-61 semantics).
   private val binResCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.BModel, String)]
+    scala.collection.concurrent.TrieMap.empty[String, (Quantize.BResidual, String)]
 
-  private[queries] def binResIndex(s: SparkSession, d: String): (Quantize.BModel, String) =
-    binResCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/binr_embeddings"
-      val m = Quantize.trainBinary(t(s, d, "embeddings"), "embedding")
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val bdf = Quantize.binarizeTableResidual(t(s, d, "embeddings"),
-          "embedding", "bvec", "bres", m)
-        graft.tables.Writer.write(bdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
+  private def binResIndex(s: SparkSession, d: String): (Quantize.BResidual, String) =
+    flatIndex(binResCache, s, d, "binr_embeddings", "bvec")(e =>
+      Quantize.BResidual(Quantize.trainBinary(e, "embedding"), "bres"))
 
   // COSINE int8 table (r18): the model trains over the unit-normalized
-  // companion and quantize() binds each row into that space internally —
+  // companion and encode() binds each row into that space internally —
   // same deterministic derivation contract as quantIndex.
   private val quantCosCache =
     scala.collection.concurrent.TrieMap.empty[String, (Quantize.QModel, String)]
 
   private def quantCosIndex(s: SparkSession, d: String): (Quantize.QModel, String) =
-    quantCosCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/quant_cos_embeddings"
-      val m = Quantize.train(t(s, d, "embeddings"), "embedding", Knn.Cosine)
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantizeTable(t(s, d, "embeddings"), "embedding",
-          "qvec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
+    flatIndex(quantCosCache, s, d, "quant_cos_embeddings", "qvec")(e =>
+      Quantize.train(e, "embedding", Knn.Cosine))
 
   // INNER-PRODUCT IVF-ADC index (r18): coarse model trained L2 over the
   // augmented companion, residual codes in that space, M in the marker.
@@ -2552,67 +2523,34 @@ object VectorQueries {
     scala.collection.concurrent.TrieMap.empty[String, (Quantize.QModel, String)]
 
   private def quantIpIndex(s: SparkSession, d: String): (Quantize.QModel, String) =
-    quantIpCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/quant_ip_embeddings"
-      val m = Quantize.train(t(s, d, "embeddings"), "embedding", Knn.IP)
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantizeTable(t(s, d, "embeddings"), "embedding",
-          "qvec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
+    flatIndex(quantIpCache, s, d, "quant_ip_embeddings", "qvec")(e =>
+      Quantize.train(e, "embedding", Knn.IP))
 
   // COSINE 4-bit table (r18): packed nibbles of the normalized companion.
   private val quant4CosCache =
     scala.collection.concurrent.TrieMap.empty[String, (Quantize.Q4Model, String)]
 
   private def quant4CosIndex(s: SparkSession, d: String): (Quantize.Q4Model, String) =
-    quant4CosCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/quant4_cos_embeddings"
-      val m = Quantize.train4(t(s, d, "embeddings"), "embedding", Knn.Cosine)
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantize4Table(t(s, d, "embeddings"), "embedding",
-          "q4vec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
+    flatIndex(quant4CosCache, s, d, "quant4_cos_embeddings", "q4vec")(e =>
+      Quantize.train4(e, "embedding", Knn.Cosine))
 
   // COSINE flat-PQ table (r18): codebooks + codes in the normalized space.
   private val pqCosCache =
     scala.collection.concurrent.TrieMap.empty[String, (Quantize.PqModel, String)]
 
   private def pqCosIndex(s: SparkSession, d: String): (Quantize.PqModel, String) =
-    pqCosCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/pq_cos_embeddings"
-      val m = Quantize.trainPq(t(s, d, "embeddings"), "embedding", "vec_id",
-        metric = Knn.Cosine)
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantizePqTable(t(s, d, "embeddings"), "embedding",
-          "pqvec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
+    flatIndex(pqCosCache, s, d, "pq_cos_embeddings", "pqvec")(e =>
+      Quantize.trainPq(e, "embedding", "vec_id", metric = Knn.Cosine))
 
   // COSINE residual-factor binary table (r18): bits + factors in the
   // normalized space.
   private val binResCosCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.BModel, String)]
+    scala.collection.concurrent.TrieMap.empty[String, (Quantize.BResidual, String)]
 
-  private def binResCosIndex(s: SparkSession, d: String): (Quantize.BModel, String) =
-    binResCosCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/binr_cos_embeddings"
-      val m = Quantize.trainBinary(t(s, d, "embeddings"), "embedding",
-        Knn.Cosine)
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val bdf = Quantize.binarizeTableResidual(t(s, d, "embeddings"),
-          "embedding", "bvec", "bres", m)
-        graft.tables.Writer.write(bdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
+  private def binResCosIndex(s: SparkSession, d: String): (Quantize.BResidual, String) =
+    flatIndex(binResCosCache, s, d, "binr_cos_embeddings", "bvec")(e =>
+      Quantize.BResidual(
+        Quantize.trainBinary(e, "embedding", Knn.Cosine), "bres"))
 
   // ---- INNER-PRODUCT fixtures (r19): every index family's codes /
   // centroids / radii live in the MIPS→L2 augmented space; raw vectors
@@ -2624,52 +2562,26 @@ object VectorQueries {
     scala.collection.concurrent.TrieMap.empty[String, (Quantize.Q4Model, String)]
 
   private def quant4IpIndex(s: SparkSession, d: String): (Quantize.Q4Model, String) =
-    quant4IpCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/quant4_ip_embeddings"
-      val m = Quantize.train4(t(s, d, "embeddings"), "embedding", Knn.IP)
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantize4Table(t(s, d, "embeddings"), "embedding",
-          "q4vec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
+    flatIndex(quant4IpCache, s, d, "quant4_ip_embeddings", "q4vec")(e =>
+      Quantize.train4(e, "embedding", Knn.IP))
 
   // IP flat-PQ table: codebooks + codes in the augmented space.
   private val pqIpCache =
     scala.collection.concurrent.TrieMap.empty[String, (Quantize.PqModel, String)]
 
   private def pqIpIndex(s: SparkSession, d: String): (Quantize.PqModel, String) =
-    pqIpCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/pq_ip_embeddings"
-      // augmented dim 64 + 1 = 65 = 5·13 → m = 5 (subvector count must
-      // divide dim + 1, the ivfPqIpIndex rationale)
-      val m = Quantize.trainPq(t(s, d, "embeddings"), "embedding", "vec_id",
-        m = 5, metric = Knn.IP)
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val qdf = Quantize.quantizePqTable(t(s, d, "embeddings"), "embedding",
-          "pqvec", m)
-        graft.tables.Writer.write(qdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
+    // augmented dim 64 + 1 = 65 = 5·13 → m = 5 (subvector count must
+    // divide dim + 1, the ivfPqIpIndex rationale)
+    flatIndex(pqIpCache, s, d, "pq_ip_embeddings", "pqvec")(e =>
+      Quantize.trainPq(e, "embedding", "vec_id", m = 5, metric = Knn.IP))
 
   // IP residual-factor binary table: bits + factors in the augmented space.
   private val binResIpCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Quantize.BModel, String)]
+    scala.collection.concurrent.TrieMap.empty[String, (Quantize.BResidual, String)]
 
-  private def binResIpIndex(s: SparkSession, d: String): (Quantize.BModel, String) =
-    binResIpCache.getOrElseUpdate(d, {
-      val path = s"${graft.tables.Derived.root}/${new java.io.File(d).getName}/binr_ip_embeddings"
-      val m = Quantize.trainBinary(t(s, d, "embeddings"), "embedding",
-        Knn.IP)
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val bdf = Quantize.binarizeTableResidual(t(s, d, "embeddings"),
-          "embedding", "bvec", "bres", m)
-        graft.tables.Writer.write(bdf, path, sortBy = Seq("vec_id"))
-      }
-      (m, path)
-    })
+  private def binResIpIndex(s: SparkSession, d: String): (Quantize.BResidual, String) =
+    flatIndex(binResIpCache, s, d, "binr_ip_embeddings", "bvec")(e =>
+      Quantize.BResidual(Quantize.trainBinary(e, "embedding", Knn.IP), "bres"))
 
   // IP plain (id-mod) NSW graph: sub-graphs built and walked under the
   // raw 1−dot kernel — hnswlib's InnerProductSpace shape.

@@ -812,12 +812,6 @@ object Hnsw {
     routeCache.remove(indexPath)
   }
 
-  /** Top-k search: beam-search every sub-graph (ef >= k), merge per-graph
-    * top-k with the [[Knn.knn]] (dist asc, id asc) contract. `ef` at least
-    * the sub-graph size ⇒ exact. Each sub-graph must be searched whole, so
-    * the (first-query-only) shuffle moves the index table, never facts. */
-  /** Rehydrate one partition's sub-graph and beam-search it: the shared
-    * task body of [[search]] and [[searchRouted]]. */
   /** Rehydrate one partition's (id, payload, neighborIds) rows into a
     * [[SubGraph]] — the ONE shared walk-site loader (search, telemetry,
     * batch join, quantized walk). A dangling neighbor id (e.g. after a
@@ -837,9 +831,11 @@ object Hnsw {
     g
   }
 
-  /** `layers`, when non-null, carries the partition's hierarchy rows:
-    * the beam starts at the descent's entry instead of node 0 (the shared
-    * walk body of the flat AND hier paths — review r15-4 deduplication). */
+  /** Rehydrate one partition's sub-graph and beam-search it: the shared
+    * task body of [[search]] and [[searchRouted]]. `layers`, when
+    * non-null, carries the partition's hierarchy rows: the beam starts at
+    * the descent's entry instead of node 0 (the shared walk body of the
+    * flat AND hier paths — review r15-4 deduplication). */
   private def searchSubGraph(it: Iterator[(Int, GraphRow)], q: Array[Float],
                              k: Int, ef: Int, metric: Knn.Metric,
                              allowed: Long => Boolean = _ => true,
@@ -876,7 +872,12 @@ object Hnsw {
     }
   }
 
-  /** `allowed` is K3 on the graph path — the reference's per-candidate
+  /** Top-k search: beam-search every sub-graph (ef >= k), merge per-graph
+    * top-k with the [[Knn.knn]] (dist asc, id asc) contract. `ef` at least
+    * the sub-graph size ⇒ exact. Each sub-graph must be searched whole, so
+    * the (first-query-only) shuffle moves the index table, never facts.
+    *
+    * `allowed` is K3 on the graph path — the reference's per-candidate
     * filter callback (KNNFilter_i, knn/knn.h:87-94): traversal expands
     * through disallowed nodes, only allowed ids enter the beam; exact over
     * the allowed subset at ef >= sub-graph size. The caller supplies the
@@ -885,11 +886,10 @@ object Hnsw {
     * prefer [[Ivf.searchFiltered]], whose index table carries the
     * attribute columns so the predicate rides the probe scan instead of a
     * driver-built set (the reference host hands its filter bitmaps to the
-    * callback the same way). */
-  /** `adaptiveTermination` opts into the reference's P²-quantile early
-    * stop (knn/termination.h) inside each sub-graph's beam walk — fewer
-    * distance evaluations at a small recall cost; leave false for the
-    * exact full-ef contract. */
+    * callback the same way). `adaptiveTermination` opts into the
+    * reference's P²-quantile early stop (knn/termination.h) inside each
+    * sub-graph's beam walk — fewer distance evaluations at a small recall
+    * cost; leave false for the exact full-ef contract. */
   def search(spark: SparkSession, indexPath: String, idCol: String,
              query: Array[Float], k: Int, ef: Int,
              metric: Knn.Metric = Knn.L2,
@@ -1041,10 +1041,10 @@ object Hnsw {
     * the form [[graft.plans.AnnRoutingRule]]'s graph family feeds back
     * under the original Sort/Limit (which recomputes exact distances from
     * the vectors, keeping the routed plan's results identical to the
-    * explicit API's). */
-  /** `scoredAcc`, when non-null, accumulates distances scored across the
-    * probed sub-graphs' walks — the probe-savings measurement behind the
-    * adaptive-termination knob (BenchScale reports adaptive vs exact). */
+    * explicit API's). `scoredAcc`, when non-null, accumulates distances
+    * scored across the probed sub-graphs' walks — the probe-savings
+    * measurement behind the adaptive-termination knob (BenchScale reports
+    * adaptive vs exact). */
   def searchRoutedRaw(spark: SparkSession, indexPath: String,
                       query: Array[Float], k: Int, ef: Int,
                       eps: Double = 1e-4,
@@ -1069,13 +1069,6 @@ object Hnsw {
     })
   }
 
-  /** The centroid-ordered, triangle-bounded probe schedule shared by the
-    * flat routed walk ([[searchRoutedRaw]]) and the hierarchy walk
-    * ([[searchRoutedHier]]): probe sub-graphs in centroid-distance order
-    * with a doubling batch, drop sub-graphs whose lower bound exceeds the
-    * kth-best once k hits are held (they can never re-enter — the kth best
-    * only improves), stop when none remain. `probeFn` runs one probe round
-    * over a pid set and returns its (id, dist, vec) candidates. */
   /** Driver-side PROBE-ROUND counter across the flat and quantized
     * routed schedules (r20 telemetry, VERDICT r19: each round of the
     * doubling schedule is one driver job launch — ~1 ms locally, ~100 ms
@@ -1087,6 +1080,13 @@ object Hnsw {
     * triangle-bound stop rule tolerates). */
   val probeRounds = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** The centroid-ordered, triangle-bounded probe schedule shared by the
+    * flat routed walk ([[searchRoutedRaw]]) and the hierarchy walk
+    * ([[searchRoutedHier]]): probe sub-graphs in centroid-distance order
+    * with a doubling batch, drop sub-graphs whose lower bound exceeds the
+    * kth-best once k hits are held (they can never re-enter — the kth best
+    * only improves), stop when none remain. `probeFn` runs one probe round
+    * over a pid set and returns its (id, dist, vec) candidates. */
   // k >= 1 at the schedule head (review r18-9): k = 0 reached
   // bestK.last on an empty Seq (and cands(k-1) = cands(-1) in the coarse
   // screen) — crash instead of an empty result; SQL LIMIT 0 never gets
@@ -1683,8 +1683,8 @@ object Hnsw {
 
   /** [[searchRoutedHier]] returning raw (id, dist, vector) rows — the form
     * the automatic route's [[graft.plans.GraphCandidates]] leaf feeds back
-    * under the original Sort/Limit (exactly as [[searchRoutedRaw]]). */
-  /** `hierMin` overrides the [[hierMinRows]] conf when >= 0 — the
+    * under the original Sort/Limit (exactly as [[searchRoutedRaw]]).
+    * `hierMin` overrides the [[hierMinRows]] conf when >= 0 — the
     * automatic route captures the threshold AT REGISTRATION (ADVICE r16:
     * a gate forcing the descent via the global conf would otherwise have
     * to leave it set for the leaf's later executions, leaking
@@ -1760,11 +1760,11 @@ object Hnsw {
     * EXACT at full ef, the q_knn_join_graph gate configuration (shared
     * brute-force oracle with q_knn_join/_ivf); smaller `probes` is the
     * IVF-nprobe-style economy knob with the usual clustered-recall
-    * contract. */
-  /** `hier = true` descends each probed sub-graph's layer sidecar once
-    * per assigned query (the layers rehydrate ONCE per sub-graph, like
-    * the graph itself) — so a hierarchy registration serves its batch
-    * joins and its single queries through the same walk (review r15-4). */
+    * contract. `hier = true` descends each probed sub-graph's layer
+    * sidecar once per assigned query (the layers rehydrate ONCE per
+    * sub-graph, like the graph itself) — so a hierarchy registration
+    * serves its batch joins and its single queries through the same walk
+    * (review r15-4). */
   def knnJoinRouted(spark: SparkSession, indexPath: String,
                     queries: DataFrame, qIdCol: String, qVecCol: String,
                     cIdCol: String, k: Int, ef: Int,
@@ -1953,7 +1953,7 @@ object Hnsw {
         .select(col("ivf_cluster").cast("int").as("pid"),
           col(idCol).cast("long").as("id"), col(boundCol).as("vec"))
         .as[(Int, Long, Array[Float])]
-        .rdd.map(t => (t._1, (t._2, qmB.value.quantize(t._3))))
+        .rdd.map(t => (t._1, (t._2, qmB.value.encode(t._3))))
         .partitionBy(new PidPartitioner(p.partitions))
       val rowRdd = keyed.mapPartitionsWithIndex { (pid, it) =>
         val rows = it.map(_._2).toSeq
@@ -2111,8 +2111,8 @@ object Hnsw {
     * the untouched Sort/Limit above the splice IS the exact rescore.
     * `allowed` gates the beam exactly as in [[searchRoutedRaw]] (K3):
     * traversal crosses disallowed nodes, only allowed enter the result
-    * set, and the < k survivor case keeps the loop probing (over-probe). */
-  /** `hier = true` walks each probed sub-graph from its layer-hierarchy
+    * set, and the < k survivor case keeps the loop probing (over-probe).
+    * `hier = true` walks each probed sub-graph from its layer-hierarchy
     * descent entry ([[buildHierarchyQuantized]]'s code-space layers)
     * instead of the lowest id — the reference's layered quantized index
     * composed; the coarse k·refine contract and the error-slack prune are
@@ -2141,9 +2141,7 @@ object Hnsw {
     val f = allowed.getOrElse((_: Long) => true)
     require(k >= 1, s"top-k needs k >= 1, got $k")
     val qB = spark.sparkContext.broadcast((qm, bq, f))
-    // LONG product: Int k*refine wraps for bulk-scale k and a negative
-    // keep silently empties the screen (review r18-9)
-    val keep = math.min(k.toLong * refine, Int.MaxValue.toLong).toInt
+    val keep = Knn.refineKeep(k, refine)
     val efEff = ef
     val hmin = if (hierMin >= 0) hierMin else hierMinRows(spark)
     // the shared per-partition code-space walk; `lt` carries the layer
@@ -2225,7 +2223,7 @@ object Hnsw {
     val layersOpt =
       if (hier) Some(loadLayers(spark, indexPath, graph.getNumPartitions))
       else None
-    val keep = k * refine
+    val keep = Knn.refineKeep(k, refine)
     val efEff = math.max(ef, keep)
     val qmB = spark.sparkContext.broadcast(qm)
     val hmin = if (hierMin >= 0) hierMin else hierMinRows(spark)
@@ -2379,7 +2377,7 @@ object Hnsw {
         col(idCol).cast("long").as("id"), col(boundCol).as("vec"))
       .as[(Int, Long, Array[Float])]
       .map { case (ci, id, v) =>
-        val code = qmB.value.quantize(v)
+        val code = qmB.value.encode(v)
         // QModel.l2(code, v) IS ‖v − deq(quant(v))‖
         (ci, id, code, qmB.value.l2(code, v))
       }

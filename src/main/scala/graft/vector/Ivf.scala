@@ -390,8 +390,8 @@ object Ivf {
     * on a deterministic bounded sample, store the M-byte codes alongside
     * the rows, range-clustered by list id (probes prune files exactly as
     * the plain IVF layout). Returns the residual codebooks — the caller
-    * passes them to [[searchPq]]/[[appendToIndexPq]]. */
-  /** `metric` is the SERVING metric (L2 or Cosine). For cosine, `m` must
+    * passes them to [[searchPq]]/[[appendToIndexPq]]. `metric` is the
+    * SERVING metric (L2 or Cosine). For cosine, `m` must
     * be the L2 coarse model trained over the unit-normalized copy of
     * `vecCol` (the bound space — the [[searchAdaptiveCosine]] contract);
     * assignment, residuals, and codes all live there, while the stored
@@ -407,7 +407,7 @@ object Ivf {
     val assigned = assign(bound, bcol, m)
       .withColumn("ivf_res", residualCol(col(bcol), col("ivf_cluster"), m))
     val pq = Quantize.trainPq(assigned, "ivf_res", idCol, subM, codeK)
-    val coded = Quantize.quantizePqTable(assigned, "ivf_res", "ivf_pq", pq)
+    val coded = Quantize.encodeTable(assigned, "ivf_res", "ivf_pq", pq)
       .drop("ivf_res", BoundCol)
     graft.tables.Writer.write(coded, path,
       sortBy = Seq("ivf_cluster"), files = files)
@@ -420,7 +420,7 @@ object Ivf {
     * always L2 (`m` trained L2 — over the normalized companion for
     * cosine, the MIPS→L2 augmented companion for IP); the serving metric
     * picks the binding (r18 adds IP through the Bachrach et al. 2014
-    * augmentation, the [[Quantize.FlatMetricModel]] construction —
+    * augmentation, the [[Quantize.FlatCodec]] construction —
     * corpus [v, √(M²−‖v‖²)], query [q, 0], augmented-L2 order exactly
     * monotone in the inner product; M rides the index's metric marker so
     * appends bind with the BUILD's bound, never a re-estimate). */
@@ -595,7 +595,7 @@ object Ivf {
     val (bound, bcol) = boundSide(df, vecCol, metric, ipM2)
     val assigned = assign(bound, bcol, m)
       .withColumn("ivf_res", residualCol(col(bcol), col("ivf_cluster"), m))
-    Quantize.quantizePqTable(assigned, "ivf_res", "ivf_pq", pq)
+    Quantize.encodeTable(assigned, "ivf_res", "ivf_pq", pq)
       .drop("ivf_res", BoundCol)
       .repartitionByRange(files, col("ivf_cluster"))
       .sortWithinPartitions(col("ivf_cluster"))
@@ -654,7 +654,7 @@ object Ivf {
     val pq2 = if (retrain) Quantize.trainPq(assigned, "ivf_res",
                 idCol, subM, codeK)
               else pq
-    val coded = Quantize.quantizePqTable(assigned, "ivf_res", "ivf_pq", pq2)
+    val coded = Quantize.encodeTable(assigned, "ivf_res", "ivf_pq", pq2)
       .drop("ivf_res", BoundCol)
     graft.tables.Writer.write(coded, next,
       sortBy = Seq("ivf_cluster"), files = files)
@@ -679,8 +679,8 @@ object Ivf {
     requirePqMetric(m, metric)
     checkPqMetric(spark, indexPath, metric)
     val table = graft.engine.Graft.cachedRead(spark, resolve(spark, indexPath))
-    val coarse = coarseIdsPq(table, m, pq, idCol, query, nprobe, k * refine,
-      metric)
+    val coarse = coarseIdsPq(table, m, pq, idCol, query, nprobe,
+      Knn.refineKeep(k, refine), metric)
     Knn.knn(table.join(coarse, Seq(idCol)), vecCol, idCol, query, k,
       metric)
   }
@@ -830,7 +830,7 @@ object Ivf {
     require(qIdCol != cIdCol,
       s"query and corpus id columns must have distinct names ($qIdCol)")
     import spark.implicits._
-    val keep = k * refine
+    val keep = Knn.refineKeep(k, refine)
     val table = graft.engine.Graft.cachedRead(spark, resolve(spark, indexPath))
     // the shared kernel of both arms: stream (cid, key, codes) rows —
     // KEY-CONTIGUOUS, where the key is the list id (in-budget and plain

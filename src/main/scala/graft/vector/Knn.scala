@@ -354,6 +354,13 @@ object Knn {
     TopK.topKPairs(scored, qIdCol, cIdCol, k)
   }
 
+  /** The k·refine coarse-survivor count of every screen-then-rescore
+    * path, taken in Long and clamped to `Int.MaxValue`: the Int product
+    * wraps negative for bulk-scale k (k = 3·10⁸, refine 8), and a negative
+    * keep would reach `limit`/[[TopK.BoundedTopK]]. */
+  private[graft] def refineKeep(k: Int, refine: Int): Int =
+    math.min(k.toLong * refine, Int.MaxValue.toLong).toInt
+
   /** Index-vs-fullscan cost rule (K4) — mirrors the shape of the reference's
     * ShouldUseFullscan (knn/knn.cpp:613-620): with a filter of selectivity
     * `sel` over `n` rows, it recommends brute force exactly when the filter

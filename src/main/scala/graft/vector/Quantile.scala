@@ -140,14 +140,13 @@ object Quantile {
     private var collected = 0
     private var prevCollected = 0
     private var scored = 0
-    private var scoredTotal = 0L
     private var badRounds = 0
     private var patience = patienceOf(10)
 
     private def patienceOf(ef: Int): Int =
       if (ef <= 800) 9 else if (ef <= 2000) 8 else if (ef <= 4000) 7 else 6
 
-    def onDistanceScored(): Unit = { scored += 1; scoredTotal += 1 }
+    def onDistanceScored(): Unit = scored += 1
     def onCandidateCollected(): Unit = collected += 1
 
     def shouldTerminate(ef: Int, currentSize: Int): Boolean = {
@@ -166,14 +165,6 @@ object Quantile {
       scored = 0
       badRounds >= patience
     }
-
-    /** Total distances evaluated across the walk (cumulative — the
-      * per-round `scored` counter resets; instrumentation for
-      * specs/benchmarks). */
-    def totalScored: Long = scoredTotal
-
-    /** Total result-heap insertions across the walk. */
-    def totalCollected: Int = collected
   }
 
   /** The reference's L2-tuned threshold (termination.h:50-52). */

@@ -1,8 +1,8 @@
 package graft.vector
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, FloatType, LongType, StructField, StructType}
 
 /** Scalar (int8) vector quantization with exact rescoring (K6 — ref
   * knn/quantizer.cpp:45-700, QuantizationSettings_t quantizer.h:28-60).
@@ -21,8 +21,7 @@ import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
   */
 object Quantize {
 
-  /** The SERVING-metric contract shared by all four flat quantized
-    * models (r18, VERDICT r17 #2 — the reference serves L2/IP/cosine on
+  /** The SERVING-metric contract shared by every [[FlatCodec]] (r18, VERDICT r17 #2 — the reference serves L2/IP/cosine on
     * every quantized index, knn/knn.h:32-37; the quantizer applies to
     * all spaces, knn/quantizer.cpp:45-700): a model carries the metric
     * it was TRAINED for, and codes live in that metric's SCREEN SPACE —
@@ -40,10 +39,10 @@ object Quantize {
     *    ‖q'−x'‖² = ‖q‖² + M² − 2⟨q,x⟩, EXACTLY monotone in the inner
     *    product, so the L2 screens serve MIPS with no new kernel.
     *
-    * [[QModel.quantize]]/[[BModel.binarize]]/[[PqModel.encode]] bind each
+    * [[QModel.encode]]/[[BModel.binarize]]/[[PqModel.encode]] bind each
     * CORPUS input internally (appends through the existing append/
     * streaming paths encode correctly with zero caller changes); screens
-    * bind the QUERY side via [[FlatMetricModel.bindQuery]]. The exact
+    * bind the QUERY side via [[FlatCodec.bindQuery]]. The exact
     * rescore always runs the metric kernel on the RAW float column.
     * IP drift caveat (same contract as the min/max clamp): an appended
     * row with ‖v‖ > the trained M clamps its augmented coordinate to 0 —
@@ -56,8 +55,8 @@ object Quantize {
         s"$serving — codes live in the trained metric's screen space " +
         "(train with the serving metric)")
 
-  /** Corpus-side screen-space binding — ONE definition shared by the four
-    * flat models AND the IVF-ADC family (the exactness of the MIPS→L2
+  /** Corpus-side screen-space binding — ONE definition shared by the flat
+    * codecs AND the IVF-ADC family (the exactness of the MIPS→L2
     * trick depends on every corpus side using the exact same
     * construction): identity for L2, unit-normalize for cosine,
     * [v, √(M²−‖v‖²)] for IP with `ipMaxNorm` = the trained bound M. */
@@ -104,35 +103,90 @@ object Quantize {
       case _ => vec
     }
 
-  /** Trained-metric space binding shared by the four flat models. */
-  sealed trait FlatMetricModel {
+  /** One flat quantized family. A codec encodes a corpus vector into its
+    * stored code column(s) and scores a stored code against a prepared
+    * query, both in the trained metric's screen space
+    * ([[requireFlatMetric]]). Every family serves through the same
+    * functions — [[encodeTable]], [[coarseIds]], [[searchRescore]],
+    * [[appendSegment]], [[compact]] and [[knnJoin]] — and differs only in
+    * this kernel (the reference likewise serves every quantized index
+    * through one composed space, knn/knn.cpp:105-135). The five codecs,
+    * each with the candidate multiple `refine` a caller passing none gets
+    * (coarser codes take more):
+    *
+    *  - [[QModel]]: int8 scalar codes in a `binary` column, refine 8;
+    *  - [[Q4Model]]: 4-bit scalar codes, two dims per byte, refine 12;
+    *  - [[BModel]]: 1-bit sign codes in an `array<bigint>` column, Hamming
+    *    screen, refine 16;
+    *  - [[BResidual]]: BModel's bits plus a residual-factor struct column
+    *    it owns, magnitude-aware L2 estimate, refine 16;
+    *  - [[PqModel]]: M-byte product-quantization codes, ADC screen,
+    *    refine 32. */
+  sealed trait FlatCodec extends Serializable {
     def metric: Knn.Metric
     /** Max corpus L2 norm at training (IP models only — the augmentation
       * bound M; 0 otherwise). */
     def ipMaxNorm: Float
+    /** Code-space dimension (the IP augmentation adds one). */
+    def dim: Int
+    def defaultRefine: Int
+    /** `refine` when positive, else [[defaultRefine]]. */
+    final def refineOr(refine: Int): Int =
+      if (refine > 0) refine else defaultRefine
+    /** The same codec re-fit to `df` with the same metric ([[compact]]). */
+    def retrain(df: DataFrame, vecCol: String, idCol: String): FlatCodec
+
+    /** A stored code as the screen reads it; a query prepared for it. */
+    private[vector] type Code
+    private[vector] type Query
+    /** The columns [[encodeTable]] appends for code column `codeCol`. */
+    private[vector] def fields(codeCol: String): Seq[StructField]
+    /** One corpus vector's values for [[fields]]. */
+    private[vector] def encodeRow(v: Array[Float]): Seq[Any]
+    /** The screen's input columns; [[readCode]] reads them from `at`. */
+    private[vector] def screenCols(codeCol: String): Seq[Column] =
+      Seq(col(codeCol))
+    private[vector] def readCode(r: Row, at: Int): Code
+    /** A RAW query bound into the screen space, ready for [[score]]. */
+    private[vector] def prepare(q: Array[Float]): Query
+    /** Coarse distance, ascending = closer. */
+    private[vector] def score(c: Code, p: Query): Double
+
     /** Corpus-side binding into the screen space (encode path). */
     private[vector] final def bindCorpus(v: Array[Float]): Array[Float] =
       bindCorpusSide(metric, ipMaxNorm, v)
     /** Query-side binding into the screen space (screen path). */
     private[vector] final def bindQuery(q: Array[Float]): Array[Float] =
       bindQuerySide(metric, q)
-    /** Expected RAW stored-vector length for a code/threshold width of
-      * `codeDim`: the IP augmentation adds one code dimension that never
-      * exists in the stored float column (integrity checks compare raw
-      * rows against this, not against the augmented dim). */
-    private[vector] final def rawDim(codeDim: Int): Int =
-      if (metric == Knn.IP) codeDim - 1 else codeDim
+    /** Expected RAW stored-vector length: the IP augmentation adds one
+      * code dimension that never exists in the stored float column. */
+    private[vector] final def rawDim: Int =
+      if (metric == Knn.IP) dim - 1 else dim
+  }
+
+  /** The codecs whose code is one `binary` column. */
+  sealed trait ByteCodec extends FlatCodec {
+    private[vector] type Code = Array[Byte]
+    def encode(v: Array[Float]): Array[Byte]
+    private[vector] def fields(codeCol: String): Seq[StructField] =
+      Seq(StructField(codeCol, BinaryType))
+    private[vector] def encodeRow(v: Array[Float]): Seq[Any] = Seq(encode(v))
+    private[vector] def readCode(r: Row, at: Int): Array[Byte] =
+      r.getAs[Array[Byte]](at)
   }
 
   final case class QModel(mins: Array[Float], maxs: Array[Float],
                           metric: Knn.Metric = Knn.L2,
-                          ipMaxNorm: Float = 0.0f) extends FlatMetricModel {
+                          ipMaxNorm: Float = 0.0f) extends ByteCodec {
     def dim: Int = mins.length
+    def defaultRefine: Int = 8
+    def retrain(df: DataFrame, vecCol: String, idCol: String): QModel =
+      train(df, vecCol, metric)
     def scale(i: Int): Float = {
       val r = maxs(i) - mins(i)
       if (r == 0.0f) 1.0f else r / 255.0f
     }
-    def quantize(v0: Array[Float]): Array[Byte] = {
+    def encode(v0: Array[Float]): Array[Byte] = {
       val v = bindCorpus(v0) // codes live in the metric's screen space
       val out = new Array[Byte](dim)
       var i = 0
@@ -148,7 +202,7 @@ object Quantize {
     /** Worst-case L2 distance between a corpus vector and its dequantized
       * code: each in-range dimension rounds to the nearest of 256 levels
       * (ideal error ≤ scale/2), so ‖v − deq(quant(v))‖ ≤ √Σ(scaleᵢ/2)².
-      * [[quantize]] and [[dequantize]] additionally round in float32
+      * [[encode]] and [[dequantize]] additionally round in float32
       * ((v−min)/scale, code·scale+min — each step contributes ≤ ulp/2
       * relative on magnitudes up to 255·scaleᵢ, so the true per-dimension
       * error can exceed scaleᵢ/2 by ≈ 3·255·2⁻²⁴·scaleᵢ ≈ 4.6e-5·scaleᵢ);
@@ -176,6 +230,9 @@ object Quantize {
       }
       math.sqrt(acc)
     }
+    private[vector] type Query = Array[Float]
+    private[vector] def prepare(q: Array[Float]): Array[Float] = bindQuery(q)
+    private[vector] def score(c: Array[Byte], p: Array[Float]): Double = l2(c, p)
   }
 
   /** The training-side column in the model's screen space (one codegen
@@ -184,8 +241,7 @@ object Quantize {
     * L2, the unit-normalized companion for cosine, [v, √(M²−‖v‖²)] for
     * IP. */
   private def boundTrain(df: DataFrame, vecCol: String,
-                         metric: Knn.Metric)
-      : (org.apache.spark.sql.Column, Float) = {
+                         metric: Knn.Metric): (Column, Float) = {
     val m2 = if (metric == Knn.IP) Ivf.maxSumsq(df, vecCol) else 0.0
     (boundSpaceCol(metric, col(vecCol), m2), math.sqrt(m2).toFloat)
   }
@@ -228,75 +284,27 @@ object Quantize {
     QModel(mins, maxs, metric, mNorm)
   }
 
-  /** Append `qCol: binary` with the int8 codes. */
-  def quantizeTable(df: DataFrame, vecCol: String, qCol: String,
-                    m: QModel): DataFrame = {
-    val schema = df.schema.add(StructField(qCol, BinaryType))
-    val vecIdx = df.schema.fieldIndex(vecCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val v = r.getSeq[Float](vecIdx).toArray
-        Row.fromSeq(r.toSeq :+ m.quantize(v))
-      }
-    }(Encoders.row(schema))
-  }
-
-  /** The coarse-screen candidate ids: top-`n` by int8-code L2 distance —
-    * a declarative sub-plan (typed map + TakeOrdered), shared by
-    * [[searchRescore]] and [[graft.plans.AnnRoutingRule]]'s automatic
-    * quantized route (which splices it under the original Sort/Limit).
-    * `query` is RAW; a cosine model screens against its normalized copy
-    * (the space the codes live in). */
-  def coarseIds(qdf: DataFrame, qCol: String, idCol: String, m: QModel,
-                query: Array[Float], n: Int): DataFrame = {
-    import qdf.sparkSession.implicits._
-    val qB = qdf.sparkSession.sparkContext
-      .broadcast((m, m.bindQuery(query)))
-    qdf.select(col(idCol).cast("long").as("cid"), col(qCol))
-      .as[(Long, Array[Byte])]
-      .map { case (id, codes) =>
-        val (mm, qv) = qB.value
-        (id, mm.l2(codes, qv))
-      }
-      .toDF("cid", "adist")
-      .orderBy(col("adist").asc, col("cid").asc)
-      .limit(n)
-      .select(col("cid").as(idCol))
-  }
-
-  /** Top-k search: coarse pass on the quantized codes (k·refine survivors),
-    * exact rescore on the float vectors. Returns (idCol, dist) best-first,
-    * ties by id — same contract as [[Knn.knn]]. `metric` must match the
-    * model's trained metric ([[requireFlatMetric]]); cosine screens in the
-    * normalized code space and rescores with the exact cosine kernel on
-    * the raw floats. */
-  def searchRescore(qdf: DataFrame, vecCol: String, qCol: String,
-                    idCol: String, m: QModel, query: Array[Float], k: Int,
-                    metric: Knn.Metric = Knn.L2, refine: Int = 8): DataFrame = {
-    requireFlatMetric(m.metric, metric)
-    val survivors = qdf.join(
-      coarseIds(qdf, qCol, idCol, m, query, k * refine), Seq(idCol))
-    Knn.knn(survivors, vecCol, idCol, query, k, metric)
-  }
-
   /** 4-bit scalar quantization (the reference's third variant — the 4-bit
     * query-side representation of knn/quantizer.cpp:45-700, quantizer.h:
     * 28-60): per-dimension min/max train, 16 levels, TWO dims packed per
     * byte (even dim = low nibble, odd dim = high nibble). 8x smaller than
     * float32 — between int8 (4x) and 1-bit (64x) on the scan-bytes /
-    * coarse-precision tradeoff. Same coarse + exact-rescore contract as
-    * the int8 path.
+    * coarse-precision tradeoff; coarser than int8, so its default refine
+    * sits between the int8 and binary settings.
     */
   final case class Q4Model(mins: Array[Float], maxs: Array[Float],
                            metric: Knn.Metric = Knn.L2,
-                           ipMaxNorm: Float = 0.0f) extends FlatMetricModel {
+                           ipMaxNorm: Float = 0.0f) extends ByteCodec {
     def dim: Int = mins.length
+    def defaultRefine: Int = 12
+    def retrain(df: DataFrame, vecCol: String, idCol: String): Q4Model =
+      train4(df, vecCol, metric)
     def bytes: Int = (dim + 1) >> 1
     def scale(i: Int): Float = {
       val r = maxs(i) - mins(i)
       if (r == 0.0f) 1.0f else r / 15.0f
     }
-    def quantize(v0: Array[Float]): Array[Byte] = {
+    def encode(v0: Array[Float]): Array[Byte] = {
       val v = bindCorpus(v0)
       val out = new Array[Byte](bytes)
       var i = 0
@@ -325,6 +333,9 @@ object Quantize {
       }
       math.sqrt(acc)
     }
+    private[vector] type Query = Array[Float]
+    private[vector] def prepare(q: Array[Float]): Array[Float] = bindQuery(q)
+    private[vector] def score(c: Array[Byte], p: Array[Float]): Double = l2(c, p)
   }
 
   /** Train per-dimension min/max (one distributed pass — shared stats shape
@@ -335,64 +346,21 @@ object Quantize {
     Q4Model(m.mins, m.maxs, metric, m.ipMaxNorm)
   }
 
-  /** Append `qCol: binary` with the packed 4-bit codes (2 dims/byte). */
-  def quantize4Table(df: DataFrame, vecCol: String, qCol: String,
-                     m: Q4Model): DataFrame = {
-    val schema = df.schema.add(StructField(qCol, BinaryType))
-    val vecIdx = df.schema.fieldIndex(vecCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val v = r.getSeq[Float](vecIdx).toArray
-        Row.fromSeq(r.toSeq :+ m.quantize(v))
-      }
-    }(Encoders.row(schema))
-  }
-
-  /** Top-k search over the 4-bit codes: coarse pass (k·refine survivors,
-    * deterministic (adist, id) order), exact rescore on the float column.
-    * Same (idCol, dist) best-first contract as [[Knn.knn]]. 4-bit is
-    * coarser than int8, so `refine` defaults between the int8 and binary
-    * settings. */
-  /** The 4-bit coarse-screen candidate ids: top-`n` by packed-nibble code
-    * L2 distance — same shape and sharing contract as [[coarseIds]] (the
-    * automatic route splices it under the original Sort/Limit). */
-  def coarseIds4(qdf: DataFrame, qCol: String, idCol: String, m: Q4Model,
-                 query: Array[Float], n: Int): DataFrame = {
-    import qdf.sparkSession.implicits._
-    val qB = qdf.sparkSession.sparkContext
-      .broadcast((m, m.bindQuery(query)))
-    qdf.select(col(idCol).cast("long").as("cid"), col(qCol))
-      .as[(Long, Array[Byte])]
-      .map { case (id, codes) =>
-        val (mm, qv) = qB.value
-        (id, mm.l2(codes, qv))
-      }
-      .toDF("cid", "adist")
-      .orderBy(col("adist").asc, col("cid").asc)
-      .limit(n)
-      .select(col("cid").as(idCol))
-  }
-
-  def searchRescore4(qdf: DataFrame, vecCol: String, qCol: String,
-                     idCol: String, m: Q4Model, query: Array[Float], k: Int,
-                     metric: Knn.Metric = Knn.L2, refine: Int = 12): DataFrame = {
-    requireFlatMetric(m.metric, metric)
-    val survivors = qdf.join(
-      coarseIds4(qdf, qCol, idCol, m, query, k * refine), Seq(idCol))
-    Knn.knn(survivors, vecCol, idCol, query, k, metric)
-  }
-
   /** 1-bit binary quantization (the reference's binary path with centroid
     * residual thresholds — knn/quantizer.cpp:45-700, `BQ` in
     * quantizer.h:28-60): bit i = (v(i) > threshold(i)) with per-dimension
     * mean thresholds, packed 64 bits/word. 64x smaller than float32: at
     * 100 TB of vectors the Hamming screen scans ~1.6 TB of codes, and
-    * XOR+popcount is the cheapest distance kernel there is.
+    * XOR+popcount is the cheapest distance kernel there is. Binary codes
+    * are a coarser proxy than int8, so `refine` defaults higher.
     */
   final case class BModel(thresholds: Array[Float],
                           metric: Knn.Metric = Knn.L2,
-                          ipMaxNorm: Float = 0.0f) extends FlatMetricModel {
+                          ipMaxNorm: Float = 0.0f) extends FlatCodec {
     def dim: Int = thresholds.length
+    def defaultRefine: Int = 16
+    def retrain(df: DataFrame, vecCol: String, idCol: String): BModel =
+      trainBinary(df, vecCol, metric)
     def words: Int = (dim + 63) >> 6
     /** Sign bits of a CORPUS row (bound into the screen space). */
     def binarize(v0: Array[Float]): Array[Long] =
@@ -473,6 +441,19 @@ object Quantize {
       val dot = 2.0 * s1 - sumQr
       qnorm2 + rnorm.toDouble * rnorm - 2.0 * rscale * dot
     }
+
+    private[vector] type Code = Array[Long]
+    private[vector] type Query = Array[Long]
+    private[vector] def fields(codeCol: String): Seq[StructField] =
+      Seq(StructField(codeCol, ArrayType(LongType)))
+    private[vector] def encodeRow(v: Array[Float]): Seq[Any] =
+      Seq(binarize(v).toSeq)
+    private[vector] def readCode(r: Row, at: Int): Array[Long] =
+      r.getSeq[Long](at).toArray
+    // binarizeQuery binds (normalizes for cosine, augments for IP) internally
+    private[vector] def prepare(q: Array[Float]): Array[Long] = binarizeQuery(q)
+    private[vector] def score(c: Array[Long], p: Array[Long]): Double =
+      hamming(c, p).toDouble
   }
 
   /** Train per-dimension mean thresholds: per-partition (sum, count) array
@@ -506,148 +487,60 @@ object Quantize {
     BModel(total.map(s => (s / n).toFloat), metric, mNorm)
   }
 
-  /** Append `bCol: array<bigint>` with the packed sign bits. */
-  def binarizeTable(df: DataFrame, vecCol: String, bCol: String,
-                    m: BModel): DataFrame = {
-    val schema = df.schema.add(StructField(bCol,
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)))
-    val vecIdx = df.schema.fieldIndex(vecCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val v = r.getSeq[Float](vecIdx).toArray
-        Row.fromSeq(r.toSeq :+ m.binarize(v).toSeq)
-      }
-    }(Encoders.row(schema))
-  }
+  /** Binary codes WITH the per-vector residual factors (`rCol: struct<norm,
+    * scale>`, [[BModel.residualFactors]]) stored beside the sign bits —
+    * the reference's binary-quantization factor block
+    * (knn/quantizer.h:48-61, knn/quantizer.cpp residual encode). Costs 8
+    * bytes/vector and buys the residual-corrected screen: rank by
+    * [[BModel.estimateL2]] over (bits, factors), reading ~(8·d/64 + 8)
+    * bytes per vector against the float column's 4·d — the same
+    * compact-screen economics as the plain Hamming pass, but
+    * magnitude-aware. The estimator is an L2² construction in the TRAINED
+    * space (raw for L2, normalized for cosine — where normalized-L2² order
+    * is cosine order — augmented for IP). At EQUAL refine it is strictly
+    * safer than Hamming, and QuantizeSpec shows it reaches exactness at a
+    * several-fold smaller refine; the default matches the plain screen's. */
+  final case class BResidual(bits: BModel, rCol: String) extends FlatCodec {
+    def metric: Knn.Metric = bits.metric
+    def ipMaxNorm: Float = bits.ipMaxNorm
+    def dim: Int = bits.dim
+    def defaultRefine: Int = bits.defaultRefine
+    def retrain(df: DataFrame, vecCol: String, idCol: String): BResidual =
+      BResidual(bits.retrain(df, vecCol, idCol), rCol)
 
-  /** Top-k search: Hamming screen on the packed codes (k·refine survivors,
-    * deterministic (hamming, id) order), exact rescore on the float column.
-    * Same (idCol, dist) best-first contract as [[Knn.knn]]. Binary codes are
-    * a coarser proxy than int8, so `refine` defaults higher. */
-  /** The Hamming coarse-screen candidate ids: top-`n` by XOR+popcount over
-    * the packed sign bits — same sharing contract as [[coarseIds]]. */
-  def coarseIdsBinary(bdf: DataFrame, bCol: String, idCol: String, m: BModel,
-                      query: Array[Float], n: Int): DataFrame = {
-    import bdf.sparkSession.implicits._
-    // binarize normalizes internally for a cosine model
-    val qB = bdf.sparkSession.sparkContext.broadcast((m, m.binarizeQuery(query)))
-    bdf.select(col(idCol).cast("long").as("cid"), col(bCol))
-      .as[(Long, Seq[Long])]
-      .map { case (id, code) =>
-        val (mm, qc) = qB.value
-        (id, mm.hamming(code.toArray, qc))
-      }
-      .toDF("cid", "hd")
-      .orderBy(col("hd").asc, col("cid").asc)
-      .limit(n)
-      .select(col("cid").as(idCol))
-  }
-
-  def searchHammingRescore(bdf: DataFrame, vecCol: String, bCol: String,
-                           idCol: String, m: BModel, query: Array[Float],
-                           k: Int, metric: Knn.Metric = Knn.L2,
-                           refine: Int = 16): DataFrame = {
-    requireFlatMetric(m.metric, metric)
-    val survivors = bdf.join(
-      coarseIdsBinary(bdf, bCol, idCol, m, query, k * refine), Seq(idCol))
-    Knn.knn(survivors, vecCol, idCol, query, k, metric)
-  }
-
-  /** Binarize WITH the per-vector residual factor (`rCol: float` =
-    * ‖v − thresholds‖) stored beside the sign bits — the reference's
-    * binary-quantization factor block (knn/quantizer.h:48-61,
-    * knn/quantizer.cpp residual encode). Costs 4 bytes/vector and buys
-    * the residual-corrected screen below. */
-  def binarizeTableResidual(df: DataFrame, vecCol: String, bCol: String,
-                            rCol: String, m: BModel): DataFrame = {
-    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
-    val factors = StructType(Seq(
-      StructField("norm", FloatType), StructField("scale", FloatType)))
-    val schema = df.schema
-      .add(StructField(bCol, ArrayType(LongType)))
-      .add(StructField(rCol, factors))
-    val vecIdx = df.schema.fieldIndex(vecCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        // bind ONCE into the screen space — factors and bits share it
-        // (the r15-2 encode-once contract)
-        val bv = m.bindCorpus(r.getSeq[Float](vecIdx).toArray)
-        val (rn, rs) = m.residualFactorsBound(bv)
-        Row.fromSeq(r.toSeq :+ (m.binarizeBound(bv).toSeq: Seq[Long]) :+
-          Row(rn, rs))
-      }
-    }(Encoders.row(schema))
-  }
-
-  /** Residual-corrected coarse screen: rank by [[BModel.estimateL2]] over
-    * (bits, residual norm) — reads ~(8·d/64 + 4) bytes per vector against
-    * the float column's 4·d, the same compact-screen economics as the
-    * plain Hamming pass, but magnitude-aware: QuantizeSpec shows it
-    * reaches exactness with a several-fold smaller candidate set. L2-family
-    * estimator (the fixture/gate metric); other metrics take the plain
-    * Hamming screen. */
-  def coarseIdsBinaryResidual(bdf: DataFrame, bCol: String, rCol: String,
-                              idCol: String, m: BModel, query: Array[Float],
-                              n: Int): DataFrame = {
-    import bdf.sparkSession.implicits._
-    // the estimator lives in the trained space: normalized for a cosine
-    // model (where normalized-L2² order == cosine order), raw for L2
-    val bq = m.bindQuery(query)
-    val qr = new Array[Double](m.dim)
-    var qnorm2 = 0.0
-    var sumQr = 0.0
-    var i = 0
-    while (i < m.dim) {
-      qr(i) = bq(i).toDouble - m.thresholds(i)
-      qnorm2 += qr(i) * qr(i)
-      sumQr += qr(i)
-      i += 1
+    private[vector] type Code = (Array[Long], Float, Float)
+    private[vector] type Query = (Array[Double], Double, Double)
+    private[vector] def fields(codeCol: String): Seq[StructField] =
+      bits.fields(codeCol) :+ StructField(rCol, StructType(Seq(
+        StructField("norm", FloatType), StructField("scale", FloatType))))
+    private[vector] def encodeRow(v: Array[Float]): Seq[Any] = {
+      // bind ONCE into the screen space — factors and bits share it
+      // (the r15-2 encode-once contract)
+      val bv = bits.bindCorpus(v)
+      val (rn, rs) = bits.residualFactorsBound(bv)
+      Seq(bits.binarizeBound(bv).toSeq, Row(rn, rs))
     }
-    val qB = bdf.sparkSession.sparkContext
-      .broadcast((m, qr, qnorm2, sumQr))
-    bdf.select(col(idCol).cast("long").as("cid"), col(bCol),
-        col(s"$rCol.norm"), col(s"$rCol.scale"))
-      .as[(Long, Seq[Long], Float, Float)]
-      .map { case (id, code, rnorm, rscale) =>
-        val (mm, q2, qn2, sq) = qB.value
-        (id, mm.estimateL2(code.toArray, rnorm, rscale, q2, qn2, sq))
+    override private[vector] def screenCols(codeCol: String): Seq[Column] =
+      Seq(col(codeCol), col(s"$rCol.norm"), col(s"$rCol.scale"))
+    private[vector] def readCode(r: Row, at: Int): Code =
+      (r.getSeq[Long](at).toArray, r.getFloat(at + 1), r.getFloat(at + 2))
+    private[vector] def prepare(q0: Array[Float]): Query = {
+      val q = bindQuery(q0)
+      val qr = new Array[Double](dim)
+      var qn2 = 0.0
+      var sq = 0.0
+      var i = 0
+      while (i < dim) {
+        qr(i) = q(i).toDouble - bits.thresholds(i)
+        qn2 += qr(i) * qr(i)
+        sq += qr(i)
+        i += 1
       }
-      .toDF("cid", "est")
-      .orderBy(col("est").asc, col("cid").asc)
-      .limit(n)
-      .select(col("cid").as(idCol))
+      (qr, qn2, sq)
+    }
+    private[vector] def score(c: Code, p: Query): Double =
+      bits.estimateL2(c._1, c._2, c._3, p._1, p._2, p._3)
   }
-
-  /** [[searchHammingRescore]] with the residual-corrected screen: same
-    * exact-rescore contract. The default candidate multiple matches the
-    * plain screen's — at EQUAL refine the corrected score is strictly
-    * safer (its worst-case true-top-k rank is a fraction of Hamming's on
-    * the fixture), and equal exactness is reached at a several-fold
-    * smaller refine (QuantizeSpec). */
-  def searchHammingRescoreResidual(bdf: DataFrame, vecCol: String,
-                                   bCol: String, rCol: String, idCol: String,
-                                   m: BModel, query: Array[Float], k: Int,
-                                   refine: Int = 16,
-                                   metric: Knn.Metric = Knn.L2): DataFrame = {
-    requireFlatMetric(m.metric, metric)
-    val survivors = bdf.join(
-      coarseIdsBinaryResidual(bdf, bCol, rCol, idCol, m, query, k * refine),
-      Seq(idCol))
-    Knn.knn(survivors, vecCol, idCol, query, k, metric)
-  }
-
-  // ───── I9 for the quantized families: segment maintenance ─────
-  //
-  // The reference's RT flow trains a quantizer once and then encodes every
-  // incoming segment with it (builder train/add/save lifecycle,
-  // knn/knn.cpp:638-786; knn/knn.h:135-144) — OPTIMIZE may retrain. The
-  // Spark analog: a quantized table is an ordinary Parquet dir, so append =
-  // encode ONLY the new batch with the existing model and add its files
-  // (the existing table is never touched — the 100 TB append cost is
-  // O(batch)); compact = re-sort to the canonical clustering and optionally
-  // re-fit the model to the full corpus. Every coarse screen reads all
-  // files, so search is correct IMMEDIATELY after an append; the routed
-  // plan's cached relation is invalidated via the AnnRouting epoch.
 
   // ------------------------------------------------------------------
   // PRODUCT QUANTIZATION (published: Jégou, Douze & Schmid, "Product
@@ -677,11 +570,16 @@ object Quantize {
     * ([[graft.vector.Ivf]]), not this field. */
   final case class PqModel(codebooks: Array[Array[Array[Float]]],
                            metric: Knn.Metric = Knn.L2,
-                           ipMaxNorm: Float = 0.0f) extends FlatMetricModel {
+                           ipMaxNorm: Float = 0.0f) extends ByteCodec {
     def m: Int = codebooks.length
     def k: Int = codebooks(0).length
     def subDim: Int = codebooks(0)(0).length
     def dim: Int = m * subDim
+    def defaultRefine: Int = 32
+    /** Same subspace count and codebook size; [[trainPq]]'s default
+      * sample and Lloyd rounds. */
+    def retrain(df: DataFrame, vecCol: String, idCol: String): PqModel =
+      trainPq(df, vecCol, idCol, m, k, metric = metric)
 
     /** Nearest codebook entry per subspace (ties → lowest index). */
     def encode(v0: Array[Float]): Array[Byte] = {
@@ -738,6 +636,12 @@ object Quantize {
       }
       math.sqrt(acc)
     }
+
+    private[vector] type Query = Array[Double]
+    private[vector] def prepare(q: Array[Float]): Array[Double] =
+      adcTable(bindQuery(q))
+    private[vector] def score(c: Array[Byte], p: Array[Double]): Double =
+      adc(c, p)
   }
 
   /** Train per-subspace codebooks: deterministic sample (lowest `sample`
@@ -796,130 +700,91 @@ object Quantize {
     PqModel(books, metric, mNorm)
   }
 
-  /** Append `qCol: binary` with the M-byte PQ codes. */
-  def quantizePqTable(df: DataFrame, vecCol: String, qCol: String,
-                      m: PqModel): DataFrame = {
-    val schema = df.schema.add(StructField(qCol, BinaryType))
+  /** Append the codec's code column(s) to `df`, encoding `vecCol`: one
+    * `binary` column `codeCol` for the byte codecs, `codeCol: array<bigint>`
+    * for the binary ones, plus the factor struct a [[BResidual]] owns. */
+  def encodeTable(df: DataFrame, vecCol: String, codeCol: String,
+                  c: FlatCodec): DataFrame = {
+    val schema = StructType(df.schema.fields ++ c.fields(codeCol))
     val vecIdx = df.schema.fieldIndex(vecCol)
     df.mapPartitions { it =>
       it.map { r =>
-        val v = r.getSeq[Float](vecIdx).toArray
-        Row.fromSeq(r.toSeq :+ m.encode(v))
+        Row.fromSeq(r.toSeq ++ c.encodeRow(r.getSeq[Float](vecIdx).toArray))
       }
     }(Encoders.row(schema))
   }
 
-  /** Coarse candidates by ADC distance: the table is built ONCE per
-    * partition per query (M×K exact sub-distances), each row costs M
-    * lookups. Same declarative TakeOrdered sub-plan contract as
-    * [[coarseIds]]. */
-  def coarseIdsPq(qdf: DataFrame, qCol: String, idCol: String, m: PqModel,
-                  query: Array[Float], n: Int): DataFrame = {
-    import qdf.sparkSession.implicits._
-    val qB = qdf.sparkSession.sparkContext
-      .broadcast((m, m.bindQuery(query)))
-    qdf.select(col(idCol).cast("long").as("cid"), col(qCol))
-      .as[(Long, Array[Byte])]
+  /** The coarse-screen candidate ids: top-`n` by code distance, ties by id
+    * — a declarative sub-plan (mapPartitions + TakeOrdered), shared by
+    * [[searchRescore]] and [[graft.plans.AnnRoutingRule]]'s automatic
+    * flat route (which splices it under the original Sort/Limit). `query`
+    * is RAW; the codec binds it into its screen space once per partition
+    * (for PQ that builds the M×K ADC table there). */
+  def coarseIds(df: DataFrame, codeCol: String, idCol: String, c: FlatCodec,
+                query: Array[Float], n: Int): DataFrame = {
+    val qB = df.sparkSession.sparkContext.broadcast((c, query))
+    df.select(col(idCol).cast("long") +: c.screenCols(codeCol): _*)
       .mapPartitions { it =>
-        val (mm, qv) = qB.value
-        val table = mm.adcTable(qv)
-        it.map { case (id, codes) => (id, mm.adc(codes, table)) }
-      }
+        val (cc, q) = qB.value
+        val p = cc.prepare(q)
+        it.map(r => (r.getLong(0), cc.score(cc.readCode(r, 1), p)))
+      }(Encoders.product[(Long, Double)])
       .toDF("cid", "adist")
       .orderBy(col("adist").asc, col("cid").asc)
       .limit(n)
       .select(col("cid").as(idCol))
   }
 
-  /** Top-k search: ADC coarse pass (k·refine survivors), exact rescore on
-    * the float vectors — same contract as [[searchRescore]]. */
-  def searchRescorePq(qdf: DataFrame, vecCol: String, qCol: String,
-                      idCol: String, m: PqModel, query: Array[Float], k: Int,
-                      metric: Knn.Metric = Knn.L2,
-                      refine: Int = 8): DataFrame = {
-    requireFlatMetric(m.metric, metric)
-    val survivors = qdf.join(
-      coarseIdsPq(qdf, qCol, idCol, m, query, k * refine), Seq(idCol))
-    Knn.knn(survivors, vecCol, idCol, query, k, metric)
+  /** Top-k search: coarse pass on the codes (k·refine survivors), exact
+    * rescore on the float vectors. Returns (idCol, dist) best-first, ties
+    * by id — same contract as [[Knn.knn]]. `metric` must match the codec's
+    * trained metric ([[requireFlatMetric]]); `refine` 0 takes the codec's
+    * [[FlatCodec.defaultRefine]]. */
+  def searchRescore(df: DataFrame, vecCol: String, codeCol: String,
+                    idCol: String, c: FlatCodec, query: Array[Float], k: Int,
+                    metric: Knn.Metric = Knn.L2, refine: Int = 0): DataFrame = {
+    requireFlatMetric(c.metric, metric)
+    val n = Knn.refineKeep(k, c.refineOr(refine))
+    Knn.knn(df.join(coarseIds(df, codeCol, idCol, c, query, n), Seq(idCol)),
+      vecCol, idCol, query, k, metric)
   }
 
-  private def appendRaw(encoded: DataFrame, quantPath: String): Unit = {
-    encoded.write.mode("append").parquet(quantPath)
-    graft.plans.AnnRouting.onIndexMutated(encoded.sparkSession, quantPath)
+  // ───── I9 for the quantized families: segment maintenance ─────
+  //
+  // The reference's RT flow trains a quantizer once and then encodes every
+  // incoming segment with it (builder train/add/save lifecycle,
+  // knn/knn.cpp:638-786; knn/knn.h:135-144) — OPTIMIZE may retrain. The
+  // Spark analog: a quantized table is an ordinary Parquet dir, so append =
+  // encode ONLY the new batch with the existing model and add its files
+  // (the existing table is never touched — the 100 TB append cost is
+  // O(batch)); compact = re-sort to the canonical clustering and optionally
+  // re-fit the model to the full corpus. Every coarse screen reads all
+  // files, so search is correct IMMEDIATELY after an append; the routed
+  // plan's cached relation is invalidated via the AnnRouting epoch.
+
+  /** Append `newRows` (base columns WITHOUT the code columns, same order
+    * as the coded table) encoded with the EXISTING codec. */
+  def appendSegment(newRows: DataFrame, vecCol: String, codeCol: String,
+                    quantPath: String, c: FlatCodec): Unit = {
+    encodeTable(newRows, vecCol, codeCol, c)
+      .write.mode("append").parquet(quantPath)
+    graft.plans.AnnRouting.onIndexMutated(newRows.sparkSession, quantPath)
   }
 
-  /** Append `newRows` (base columns WITHOUT `qCol`, same order as the
-    * quantized table) encoded with the EXISTING int8 model. */
-  def appendSegment(newRows: DataFrame, vecCol: String, qCol: String,
-                    quantPath: String, m: QModel): Unit =
-    appendRaw(quantizeTable(newRows, vecCol, qCol, m), quantPath)
-
-  /** Append a new batch encoded with the EXISTING 4-bit model. */
-  def appendSegment4(newRows: DataFrame, vecCol: String, qCol: String,
-                     quantPath: String, m: Q4Model): Unit =
-    appendRaw(quantize4Table(newRows, vecCol, qCol, m), quantPath)
-
-  /** Append a new batch encoded with the EXISTING binary model. */
-  def appendSegmentBinary(newRows: DataFrame, vecCol: String, bCol: String,
-                          quantPath: String, m: BModel): Unit =
-    appendRaw(binarizeTable(newRows, vecCol, bCol, m), quantPath)
-
-  /** Append a new batch encoded with the EXISTING PQ codebooks. */
-  def appendSegmentPq(newRows: DataFrame, vecCol: String, qCol: String,
-                      quantPath: String, m: PqModel): Unit =
-    appendRaw(quantizePqTable(newRows, vecCol, qCol, m), quantPath)
-
-  /** I9 OPTIMIZE for a quantized table: re-sort appended segments back to
-    * the canonical `sortBy` clustering and, with `retrain`, re-fit the
-    * model to the FULL corpus and re-encode (appended batches that drifted
-    * outside the trained min/max clamp until then — retraining restores
-    * the per-dim error bound). Swap is the rename-to-backup scheme of
-    * [[graft.index.SecondaryIndex.compact]]: the table exists at SOME path
-    * at every instant, and a crash between the renames leaves it intact at
-    * `<path>_old`. Returns the serving model — the caller re-registers the
-    * automatic route with it (the epoch bump already dropped the old
-    * entry). */
-  def compact(spark: org.apache.spark.sql.SparkSession, quantPath: String,
-              vecCol: String, qCol: String, sortBy: Seq[String],
-              m: QModel, retrain: Boolean = false): QModel =
-    compactImpl(spark, quantPath, qCol, sortBy) { base =>
-      // retrain preserves the serving metric (cosine retrains over the
-      // normalized companion, exactly like the original training)
-      val m2 = if (retrain) train(base, vecCol, m.metric) else m
-      (quantizeTable(base, vecCol, qCol, m2), m2)
-    }
-
-  /** [[compact]] for the 4-bit family (same swap + retrain semantics). */
-  def compact4(spark: org.apache.spark.sql.SparkSession, quantPath: String,
-               vecCol: String, qCol: String, sortBy: Seq[String],
-               m: Q4Model, retrain: Boolean = false): Q4Model =
-    compactImpl(spark, quantPath, qCol, sortBy) { base =>
-      val m2 = if (retrain) train4(base, vecCol, m.metric) else m
-      (quantize4Table(base, vecCol, qCol, m2), m2)
-    }
-
-  /** [[compact]] for the binary family (same swap + retrain semantics —
-    * retraining re-centers the per-dim sign thresholds on the full
-    * corpus's means, restoring screen selectivity after drifted appends). */
-  def compactBinary(spark: org.apache.spark.sql.SparkSession,
-                    quantPath: String, vecCol: String, bCol: String,
-                    sortBy: Seq[String], m: BModel,
-                    retrain: Boolean = false): BModel =
-    compactImpl(spark, quantPath, bCol, sortBy) { base =>
-      val m2 = if (retrain) trainBinary(base, vecCol, m.metric) else m
-      (binarizeTable(base, vecCol, bCol, m2), m2)
-    }
-
-  /** Shared rename-swap core of the three compacts: `reencode` maps the
-    * bare corpus (current table minus its code column) to the re-encoded
-    * table + serving model. The swap is the scheme of
-    * [[graft.index.SecondaryIndex.compact]]: the table exists at SOME path
-    * at every instant, and a crash between the renames leaves it intact
-    * at `<path>_old`. */
-  private def compactImpl[M](spark: org.apache.spark.sql.SparkSession,
-                             quantPath: String, qCol: String,
-                             sortBy: Seq[String])
-                            (reencode: DataFrame => (DataFrame, M)): M = {
+  /** I9 OPTIMIZE for a coded table: re-sort appended segments back to the
+    * canonical `idCol` clustering and, with `retrain`, re-fit the codec
+    * to the FULL corpus and re-encode (appended batches that drifted
+    * outside the trained min/max or thresholds screen worse until then —
+    * retraining restores the per-dim error bound and the sign-threshold
+    * selectivity; the serving metric is preserved). The swap is the
+    * rename-to-backup scheme of [[graft.index.SecondaryIndex.compact]]:
+    * the table exists at SOME path at every instant, and a crash between
+    * the renames leaves it intact at `<path>_old`. Returns the serving
+    * codec — the caller re-registers the automatic route with it (the
+    * epoch bump already dropped the old entry). */
+  def compact[C <: FlatCodec](spark: SparkSession, quantPath: String,
+                              vecCol: String, codeCol: String, idCol: String,
+                              c: C, retrain: Boolean = false): C = {
     val tmp = quantPath + "_compacting"
     val conf = spark.sparkContext.hadoopConfiguration
     val dst = new org.apache.hadoop.fs.Path(quantPath)
@@ -930,8 +795,12 @@ object Quantize {
     if (!fs.exists(dst) && fs.exists(bak) && !fs.rename(bak, dst))
       throw new java.io.IOException(
         s"table missing at $quantPath and backup restore from $bak failed")
-    val (encoded, m2) = reencode(spark.read.parquet(quantPath).drop(qCol))
-    graft.tables.Writer.write(encoded, tmp, sortBy = sortBy)
+    val base = spark.read.parquet(quantPath)
+      .drop(c.fields(codeCol).map(_.name): _*)
+    // every codec's retrain returns its own type
+    val c2 = if (retrain) c.retrain(base, vecCol, idCol).asInstanceOf[C] else c
+    graft.tables.Writer.write(encodeTable(base, vecCol, codeCol, c2), tmp,
+      sortBy = Seq(idCol))
     fs.delete(bak, true)
     if (!fs.rename(dst, bak))
       throw new java.io.IOException(s"could not back up $quantPath for swap")
@@ -944,7 +813,7 @@ object Quantize {
     }
     fs.delete(bak, true)
     graft.plans.AnnRouting.onIndexMutated(spark, quantPath)
-    m2
+    c2
   }
 
   // ───── Batch KNN JOIN for the flat quantized families (r15) ─────
@@ -953,7 +822,7 @@ object Quantize {
   // (every query row gets its k nearest corpus rows in ONE plan, the
   // quantized analog of [[Knn.knnJoin]]): the query batch broadcasts,
   // each corpus partition screens its CODE column against every query at
-  // the family's compact-bytes cost (M table lookups for PQ, XOR+popcount
+  // the codec's compact-bytes cost (M table lookups for PQ, XOR+popcount
   // for binary, dequantized L2 for the scalar codes — the float column is
   // never read by the screen), a per-(query, partition) bounded heap
   // keeps the k·refine best coarse survivors so the one shuffle carries
@@ -966,27 +835,22 @@ object Quantize {
   // collect per slice, broadcast freed between slices, distributed
   // rescore — the driver never holds more than one slice.
 
-  /** Shared kernel of the four screened joins: `prep` turns a query
-    * vector into its screen-side state (ADC table / packed sign bits /
-    * the raw floats), `extract` pulls a row's code representation ONCE
-    * (hoisted out of the per-query loop), `score` is the family's coarse
-    * distance. All three are plain serializable closures over the model
-    * case classes. */
-  private def screenedJoin(qdf: DataFrame, vecCol: String, idCol: String,
-                           codeCols: Seq[String],
-                           queries: DataFrame, qIdCol: String,
-                           qVecCol: String, cIdCol: String, k: Int,
-                           metric: Knn.Metric, refine: Int, dim: Int,
-                           prep: Array[Float] => AnyRef,
-                           extract: Row => AnyRef,
-                           score: (AnyRef, AnyRef) => Double): DataFrame = {
+  /** Batch KNN JOIN over a coded table ([[encodeTable]] output: float
+    * column + code columns). Same exactness contract as [[searchRescore]]
+    * — the true top-k must sit in the global top k·refine coarse set;
+    * `refine` 0 takes the codec's default. Returns (qIdCol, cIdCol, dist,
+    * rn), rn 1..k by (dist, id). */
+  def knnJoin(df: DataFrame, vecCol: String, codeCol: String, idCol: String,
+              c: FlatCodec, queries: DataFrame, qIdCol: String,
+              qVecCol: String, cIdCol: String, k: Int,
+              metric: Knn.Metric = Knn.L2, refine: Int = 0): DataFrame = {
+    requireFlatMetric(c.metric, metric)
     require(qIdCol != cIdCol,
       s"query and corpus id columns must have distinct names ($qIdCol)")
-    val spark = qdf.sparkSession
+    val spark = df.sparkSession
     import spark.implicits._
-    val keep = k * refine
-    val coded = qdf.select(
-      (col(idCol).cast("long") +: codeCols.map(col)): _*)
+    val keep = Knn.refineKeep(k, c.refineOr(refine))
+    val coded = df.select(col(idCol).cast("long") +: c.screenCols(codeCol): _*)
     // the one heap kernel both arms share: screen every corpus row of
     // `rows` against the query slice `qs`, emitting ≤ keep (qid, cid,
     // coarse-dist) rows per query — the per-(query, partition) bounded
@@ -995,14 +859,14 @@ object Quantize {
         : Iterator[(Long, Long, Double)] =
       if (qs.isEmpty) Iterator.empty
       else {
-        val preps: Array[AnyRef] = qs.map(q => prep(q._2))
+        val preps: Array[Any] = qs.map(q => c.prepare(q._2): Any)
         val heaps = Array.fill(qs.length)(new TopK.BoundedTopK(keep))
         rows.foreach { row =>
           val cid = row.getLong(0)
-          val code = extract(row)
+          val code = c.readCode(row, 1)
           var j = 0
           while (j < qs.length) {
-            heaps(j).offer(score(code, preps(j)), cid)
+            heaps(j).offer(c.score(code, preps(j).asInstanceOf[c.Query]), cid)
             j += 1
           }
         }
@@ -1014,7 +878,7 @@ object Quantize {
     def globalCut(coarse: DataFrame): DataFrame =
       TopK.topKPairs(coarse, "q", "c", keep)
         .select(col("q").as("__qid"), col("c").as("__cid"))
-    val rawSel = qdf.select(col(idCol).cast("long").as("__cid"),
+    val rawSel = df.select(col(idCol).cast("long").as("__cid"),
       col(vecCol).as("__cvec"))
     def rescored(withQvec: DataFrame): DataFrame = {
       val scored = withQvec.join(rawSel, "__cid")
@@ -1040,9 +904,9 @@ object Quantize {
     // distributed equi-join against the SAME persisted query projection
     // the slices were cut from (ADVICE r16: a nondeterministic query
     // source must feed the screen and the rescore identical rows).
-    // byte-aware row budget (r18): the model's dim sizes both the arm
+    // byte-aware row budget (r18): the codec's dim sizes both the arm
     // decision and the over-budget slice width
-    val max = Knn.maxQueryBatch(spark, dim)
+    val max = Knn.maxQueryBatch(spark, c.dim)
     Knn.boundedQueryBatch(queries, qIdCol, qVecCol, max) match {
       case Some(qRows) =>
         val qB = spark.sparkContext.broadcast(qRows)
@@ -1069,114 +933,5 @@ object Quantize {
         val qDf = spark.createDataset(qRdd).toDF("__qid", "__qvec")
         rescored(globalCut(coarse).join(qDf, "__qid"))
     }
-  }
-
-  /** Batch KNN JOIN over an int8-quantized table ([[quantizeTable]]
-    * output: float column + `qCol` codes): the screen reads a quarter of
-    * the vector bytes. Same exactness contract as [[searchRescore]] —
-    * the true top-k must sit in the global top k·refine coarse set.
-    * Returns (qIdCol, cIdCol, dist, rn), rn 1..k by (dist, id). */
-  def knnJoinQuant(qdf: DataFrame, vecCol: String, qCol: String,
-                   idCol: String, m: QModel,
-                   queries: DataFrame, qIdCol: String, qVecCol: String,
-                   cIdCol: String, k: Int, metric: Knn.Metric = Knn.L2,
-                   refine: Int = 8): DataFrame = {
-    requireFlatMetric(m.metric, metric)
-    screenedJoin(qdf, vecCol, idCol, Seq(qCol), queries, qIdCol, qVecCol,
-      cIdCol, k, metric, refine, m.dim,
-      prep = q => m.bindQuery(q),
-      extract = r => r.getAs[Array[Byte]](1),
-      score = (c, p) =>
-        m.l2(c.asInstanceOf[Array[Byte]], p.asInstanceOf[Array[Float]]))
-  }
-
-  /** [[knnJoinQuant]] for the 4-bit family (packed nibbles, 8× smaller
-    * screen bytes; refine default matches [[searchRescore4]]'s). */
-  def knnJoinQuant4(qdf: DataFrame, vecCol: String, qCol: String,
-                    idCol: String, m: Q4Model,
-                    queries: DataFrame, qIdCol: String, qVecCol: String,
-                    cIdCol: String, k: Int, metric: Knn.Metric = Knn.L2,
-                    refine: Int = 12): DataFrame = {
-    requireFlatMetric(m.metric, metric)
-    screenedJoin(qdf, vecCol, idCol, Seq(qCol), queries, qIdCol, qVecCol,
-      cIdCol, k, metric, refine, m.dim,
-      prep = q => m.bindQuery(q),
-      extract = r => r.getAs[Array[Byte]](1),
-      score = (c, p) =>
-        m.l2(c.asInstanceOf[Array[Byte]], p.asInstanceOf[Array[Float]]))
-  }
-
-  /** [[knnJoinQuant]] for the binary family: Hamming screen over the
-    * packed sign bits, or — with `rCol` naming the stored residual-factor
-    * struct ([[binarizeTableResidual]]) — the magnitude-aware corrected
-    * estimate, which reaches equal exactness at a several-fold smaller
-    * refine (the [[coarseIdsBinaryResidual]] economics). The residual
-    * estimator is L2-family, so `rCol` requires the L2 metric. */
-  def knnJoinBinary(bdf: DataFrame, vecCol: String, bCol: String,
-                    idCol: String, m: BModel,
-                    queries: DataFrame, qIdCol: String, qVecCol: String,
-                    cIdCol: String, k: Int, metric: Knn.Metric = Knn.L2,
-                    refine: Int = 16,
-                    rCol: Option[String] = None): DataFrame = {
-    requireFlatMetric(m.metric, metric)
-    rCol match {
-      case None =>
-        screenedJoin(bdf, vecCol, idCol, Seq(bCol), queries, qIdCol,
-          qVecCol, cIdCol, k, metric, refine, m.dim,
-          prep = q => m.binarizeQuery(q), // query-side space binding
-          extract = r => r.getSeq[Long](1).toArray,
-          score = (c, p) => m.hamming(c.asInstanceOf[Array[Long]],
-            p.asInstanceOf[Array[Long]]).toDouble)
-      case Some(rc) =>
-        // the residual estimator is an L2² construction in the TRAINED
-        // space: raw for L2, normalized for cosine (where normalized-L2²
-        // order == cosine order) — requireFlatMetric above already pinned
-        // metric == m.metric
-        screenedJoin(bdf, vecCol, idCol,
-          Seq(bCol, s"$rc.norm", s"$rc.scale"), queries, qIdCol, qVecCol,
-          cIdCol, k, metric, refine, m.dim,
-          prep = q0 => {
-            val q = m.bindQuery(q0)
-            val qr = new Array[Double](m.dim)
-            var qn2 = 0.0
-            var sq = 0.0
-            var i = 0
-            while (i < m.dim) {
-              qr(i) = q(i).toDouble - m.thresholds(i)
-              qn2 += qr(i) * qr(i)
-              sq += qr(i)
-              i += 1
-            }
-            (qr, qn2, sq)
-          },
-          extract = r =>
-            (r.getSeq[Long](1).toArray, r.getFloat(2), r.getFloat(3)),
-          score = (c, p) => {
-            val (code, rn, rs) =
-              c.asInstanceOf[(Array[Long], Float, Float)]
-            val (qr, qn2, sq) =
-              p.asInstanceOf[(Array[Double], Double, Double)]
-            m.estimateL2(code, rn, rs, qr, qn2, sq)
-          })
-    }
-  }
-
-  /** [[knnJoinQuant]] for the PQ family: one M×K ADC table per query per
-    * partition, M byte-lookups per (row, query) — 32× fewer screen bytes
-    * than float32 at dim 64 / M 8. refine default matches the
-    * gate-measured contract of the automatic PQ route
-    * ([[graft.plans.AnnRouting.registerPq]]). */
-  def knnJoinPq(qdf: DataFrame, vecCol: String, qCol: String,
-                idCol: String, m: PqModel,
-                queries: DataFrame, qIdCol: String, qVecCol: String,
-                cIdCol: String, k: Int, metric: Knn.Metric = Knn.L2,
-                refine: Int = 32): DataFrame = {
-    requireFlatMetric(m.metric, metric)
-    screenedJoin(qdf, vecCol, idCol, Seq(qCol), queries, qIdCol, qVecCol,
-      cIdCol, k, metric, refine, m.dim,
-      prep = q => m.adcTable(m.bindQuery(q)),
-      extract = r => r.getAs[Array[Byte]](1),
-      score = (c, p) => m.adc(c.asInstanceOf[Array[Byte]],
-        p.asInstanceOf[Array[Double]]))
   }
 }

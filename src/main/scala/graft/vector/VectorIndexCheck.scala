@@ -299,41 +299,64 @@ object VectorIndexCheck {
     Report(layersDir, rows, issues.toSeq)
   }
 
-  /** Shared quant-family pass: re-encode every stored vector with the
-    * model and require code equality, plus id uniqueness and optional
-    * fact reconciliation. `encode` returns None when the vector itself is
-    * un-encodable (wrong dim for the model). */
-  private def checkCodes(spark: SparkSession, path: String, qCol: String,
-                         idCol: String,
-                         mismatchIds: DataFrame => org.apache.spark.sql.Dataset[Long],
-                         fact: Option[(DataFrame, String)]): Report = {
+  /** Flat-codec family ([[Quantize.encodeTable]] layout): re-encode every
+    * stored vector with the codec and require the stored code columns to
+    * equal it (a vector of the wrong width for the codec counts as a
+    * mismatch), plus id uniqueness and optional fact reconciliation. */
+  def checkCodec(spark: SparkSession, path: String, vecCol: String,
+                 codeCol: String, idCol: String, c: Quantize.FlatCodec,
+                 fact: Option[(DataFrame, String)] = None): Report = {
     import spark.implicits._
     val issues = scala.collection.mutable.ArrayBuffer.empty[String]
     val t = spark.read.parquet(path)
     val rows = t.count()
-    val bad = mismatchIds(t)
+    val cb = spark.sparkContext.broadcast(c)
+    val bad = t.select(col(idCol).cast("long") +: col(vecCol) +:
+        c.fields(codeCol).map(f => col(f.name)): _*)
+      .flatMap { r =>
+        val cc = cb.value
+        val v = r.getSeq[Float](1)
+        val ok = v.length == cc.rawDim &&
+          cc.encodeRow(v.toArray).zipWithIndex.forall {
+            case (fresh: Array[Byte], i) =>
+              java.util.Arrays.equals(fresh, r.getAs[Array[Byte]](i + 2))
+            case (fresh, i) => fresh == r.get(i + 2)
+          }
+        if (ok) None else Some(r.getLong(0))
+      }
     val bc = bad.count()
     if (bc > 0)
-      issues += s"$bc stored $qCol codes disagree with the model re-encode: " +
+      issues += s"$bc stored $codeCol codes disagree with the model re-encode: " +
         s"ids ${sample(bad.take(SampleN))}"
+    Report(path, rows, (issues ++ idIssues(t, idCol, fact, "coded table")).toSeq)
+  }
+
+  /** The id passes shared by the coded-table and IVF checks: duplicate
+    * ids, and with `fact` = (fact table, its id column) reconciliation in
+    * both directions. `what` names the checked table in the messages. */
+  private def idIssues(t: DataFrame, idCol: String,
+                       fact: Option[(DataFrame, String)],
+                       what: String): Seq[String] = {
+    import t.sparkSession.implicits._
     val dupIds = t.groupBy(col(idCol)).count().filter(col("count") > 1)
       .select(col(idCol).cast("long")).as[Long]
     val dupc = dupIds.count()
-    if (dupc > 0)
-      issues += s"$dupc duplicate $idCol values: ${sample(dupIds.take(SampleN))}"
-    fact.foreach { case (f, fid) =>
+    val dup =
+      if (dupc > 0)
+        Seq(s"$dupc duplicate $idCol values: ${sample(dupIds.take(SampleN))}")
+      else Nil
+    dup ++ fact.toSeq.flatMap { case (f, fid) =>
       val fids = f.select(col(fid).cast("long").as("__fid"))
       val tids = t.select(col(idCol).cast("long").as("__fid"))
       val missing = fids.join(tids, Seq("__fid"), "left_anti").as[Long]
       val mc = missing.count()
-      if (mc > 0)
-        issues += s"$mc fact ids missing from the quantized table: ${sample(missing.take(SampleN))}"
       val extra = tids.join(fids, Seq("__fid"), "left_anti").as[Long]
       val ec = extra.count()
-      if (ec > 0)
-        issues += s"$ec quantized-table ids absent from the fact table: ${sample(extra.take(SampleN))}"
+      (if (mc > 0) Seq(s"$mc fact ids missing from the $what: " +
+        sample(missing.take(SampleN))) else Nil) ++
+        (if (ec > 0) Seq(s"$ec $what ids absent from the fact table: " +
+          sample(extra.take(SampleN))) else Nil)
     }
-    Report(path, rows, issues.toSeq)
   }
 
   /** IVF family ([[Ivf.buildIndex]] layout): every stored `ivf_cluster`
@@ -371,80 +394,6 @@ object VectorIndexCheck {
     if (dc > 0)
       issues += s"$dc stored ivf_cluster assignments disagree with the " +
         s"model re-assign: ids ${sample(drift.take(SampleN))}"
-    val dupIds = t.groupBy(col(idCol)).count().filter(col("count") > 1)
-      .select(col(idCol).cast("long")).as[Long]
-    val dupc = dupIds.count()
-    if (dupc > 0)
-      issues += s"$dupc duplicate $idCol values: ${sample(dupIds.take(SampleN))}"
-    fact.foreach { case (f, fid) =>
-      val fids = f.select(col(fid).cast("long").as("__fid"))
-      val tids = t.select(col(idCol).cast("long").as("__fid"))
-      val missing = fids.join(tids, Seq("__fid"), "left_anti").as[Long]
-      val mc = missing.count()
-      if (mc > 0)
-        issues += s"$mc fact ids missing from the IVF index: " +
-          s"${sample(missing.take(SampleN))}"
-      val extra = tids.join(fids, Seq("__fid"), "left_anti").as[Long]
-      val ec = extra.count()
-      if (ec > 0)
-        issues += s"$ec IVF-index ids absent from the fact table: " +
-          s"${sample(extra.take(SampleN))}"
-    }
-    Report(live, rows, issues.toSeq)
+    Report(live, rows, (issues ++ idIssues(t, idCol, fact, "IVF index")).toSeq)
   }
-
-  /** int8 family ([[Quantize.quantizeTable]]). */
-  def checkQuant(spark: SparkSession, path: String, vecCol: String,
-                 qCol: String, idCol: String, m: Quantize.QModel,
-                 fact: Option[(DataFrame, String)] = None): Report =
-    checkCodes(spark, path, qCol, idCol, { t =>
-      import spark.implicits._
-      val mb = spark.sparkContext.broadcast(m)
-      t.select(col(idCol).cast("long"), col(vecCol), col(qCol))
-        .as[(Long, Seq[Float], Array[Byte])]
-        .flatMap { case (id, v, codes) =>
-          val mm = mb.value
-          // an IP model's code dim is the AUGMENTED dim+1; stored rows
-          // stay raw-width (rawDim)
-          val ok = v.length == mm.rawDim(mm.dim) &&
-            java.util.Arrays.equals(codes, mm.quantize(v.toArray))
-          if (ok) None else Some(id)
-        }
-    }, fact)
-
-  /** 4-bit family ([[Quantize.quantize4Table]]). */
-  def checkQuant4(spark: SparkSession, path: String, vecCol: String,
-                  qCol: String, idCol: String, m: Quantize.Q4Model,
-                  fact: Option[(DataFrame, String)] = None): Report =
-    checkCodes(spark, path, qCol, idCol, { t =>
-      import spark.implicits._
-      val mb = spark.sparkContext.broadcast(m)
-      t.select(col(idCol).cast("long"), col(vecCol), col(qCol))
-        .as[(Long, Seq[Float], Array[Byte])]
-        .flatMap { case (id, v, codes) =>
-          val mm = mb.value
-          // an IP model's code dim is the AUGMENTED dim+1; stored rows
-          // stay raw-width (rawDim)
-          val ok = v.length == mm.rawDim(mm.dim) &&
-            java.util.Arrays.equals(codes, mm.quantize(v.toArray))
-          if (ok) None else Some(id)
-        }
-    }, fact)
-
-  /** Binary family ([[Quantize.binarizeTable]]). */
-  def checkBinary(spark: SparkSession, path: String, vecCol: String,
-                  bCol: String, idCol: String, m: Quantize.BModel,
-                  fact: Option[(DataFrame, String)] = None): Report =
-    checkCodes(spark, path, bCol, idCol, { t =>
-      import spark.implicits._
-      val mb = spark.sparkContext.broadcast(m)
-      t.select(col(idCol).cast("long"), col(vecCol), col(bCol))
-        .as[(Long, Seq[Float], Seq[Long])]
-        .flatMap { case (id, v, words) =>
-          val mm = mb.value
-          val ok = v.length == mm.rawDim(mm.dim) &&
-            words == mm.binarize(v.toArray).toSeq
-          if (ok) None else Some(id)
-        }
-    }, fact)
 }

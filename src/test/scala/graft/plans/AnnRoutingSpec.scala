@@ -377,11 +377,11 @@ class AnnRoutingSpec extends AnyFunSuite {
     val qt = tmp.resolve("qt").toString
     val m = graft.vector.Quantize.train(
       vectors.toDF("vec_id", "embedding", "label"), "embedding")
-    Writer.write(graft.vector.Quantize.quantizeTable(
+    Writer.write(graft.vector.Quantize.encodeTable(
       vectors.toDF("vec_id", "embedding", "label"), "embedding", "qvec", m),
       qt, sortBy = Seq("vec_id"))
-    AnnRouting.registerQuant(SparkT.spark, qt, qt, m,
-      vecCol = "embedding", idCol = "vec_id")
+    AnnRouting.registerFlat(SparkT.spark, qt, qt, m,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "qvec")
     val df = Knn.knn(SparkT.spark.read.parquet(qt),
       "embedding", "vec_id", query, 10)
     // routed: the plan holds the coarse-screen self-join (two scans of the
@@ -424,20 +424,20 @@ class AnnRoutingSpec extends AnyFunSuite {
     // refine is QuantizeSpec's subject
     val q4 = tmp.resolve("q4").toString
     val m4 = graft.vector.Quantize.train4(df, "embedding")
-    Writer.write(graft.vector.Quantize.quantize4Table(
+    Writer.write(graft.vector.Quantize.encodeTable(
       df, "embedding", "q4vec", m4), q4, sortBy = Seq("vec_id"))
-    AnnRouting.registerQuant4(SparkT.spark, q4, q4, m4,
-      vecCol = "embedding", idCol = "vec_id", refine = 40)
+    AnnRouting.registerFlat(SparkT.spark, q4, q4, m4,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "q4vec", refine = 40)
     val r4 = Knn.knn(SparkT.spark.read.parquet(q4),
       "embedding", "vec_id", query, 10)
     assert(joins(r4).nonEmpty, r4.queryExecution.optimizedPlan.toString)
     assert(r4.select("vec_id").as[Long].collect().toSeq === exactTop10)
     val qb = tmp.resolve("qb").toString
     val mb = graft.vector.Quantize.trainBinary(df, "embedding")
-    Writer.write(graft.vector.Quantize.binarizeTable(
+    Writer.write(graft.vector.Quantize.encodeTable(
       df, "embedding", "bvec", mb), qb, sortBy = Seq("vec_id"))
-    AnnRouting.registerBinary(SparkT.spark, qb, qb, mb,
-      vecCol = "embedding", idCol = "vec_id", refine = 40)
+    AnnRouting.registerFlat(SparkT.spark, qb, qb, mb,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "bvec", refine = 40)
     val rb = Knn.knn(SparkT.spark.read.parquet(qb),
       "embedding", "vec_id", query, 10)
     assert(joins(rb).nonEmpty, rb.queryExecution.optimizedPlan.toString)
@@ -447,11 +447,11 @@ class AnnRoutingSpec extends AnyFunSuite {
     // would stay green even if routing silently stood down) and stay
     // exact through the corrected screen + rescore
     val qbr = tmp.resolve("qbr").toString
-    Writer.write(graft.vector.Quantize.binarizeTableResidual(
-      df, "embedding", "bvec", "bres", mb), qbr, sortBy = Seq("vec_id"))
-    AnnRouting.registerBinary(SparkT.spark, qbr, qbr, mb,
-      vecCol = "embedding", idCol = "vec_id", refine = 40,
-      rCol = Some("bres"))
+    val mbr = graft.vector.Quantize.BResidual(mb, "bres")
+    Writer.write(graft.vector.Quantize.encodeTable(
+      df, "embedding", "bvec", mbr), qbr, sortBy = Seq("vec_id"))
+    AnnRouting.registerFlat(SparkT.spark, qbr, qbr, mbr,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "bvec", refine = 40)
     val rbr = Knn.knn(SparkT.spark.read.parquet(qbr),
       "embedding", "vec_id", query, 10)
     assert(joins(rbr).nonEmpty, rbr.queryExecution.optimizedPlan.toString)
@@ -462,12 +462,12 @@ class AnnRoutingSpec extends AnyFunSuite {
     // re-registers — then the route serves the appended corpus too
     val extra = Seq((9001L, Array.fill(dim)(99f), 0))
       .toDF("vec_id", "embedding", "label")
-    graft.vector.Quantize.appendSegment4(extra, "embedding", "q4vec", q4, m4)
+    graft.vector.Quantize.appendSegment(extra, "embedding", "q4vec", q4, m4)
     val dropped = Knn.knn(SparkT.spark.read.parquet(q4),
       "embedding", "vec_id", query, 10)
     assert(joins(dropped).isEmpty, "stale entry must drop after append")
-    AnnRouting.registerQuant4(SparkT.spark, q4, q4, m4,
-      vecCol = "embedding", idCol = "vec_id", refine = 41)
+    AnnRouting.registerFlat(SparkT.spark, q4, q4, m4,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "q4vec", refine = 41)
     val rerouted = Knn.knn(SparkT.spark.read.parquet(q4),
       "embedding", "vec_id", query, 10)
     assert(joins(rerouted).nonEmpty)
@@ -485,13 +485,13 @@ class AnnRoutingSpec extends AnyFunSuite {
     val pq = tmp.resolve("pq").toString
     val mpq = graft.vector.Quantize.trainPq(df, "embedding", "vec_id",
       m = 4, k = 16)
-    Writer.write(graft.vector.Quantize.quantizePqTable(
+    Writer.write(graft.vector.Quantize.encodeTable(
       df, "embedding", "pqvec", mpq), pq, sortBy = Seq("vec_id"))
     // refine sized past the fixture's row count: exactness is structural
     // (the screen passes every row); screen economy at honest refine is
     // QuantizeSpec's subject — same convention as the 4-bit/binary pins
-    AnnRouting.registerPq(SparkT.spark, pq, pq, mpq,
-      vecCol = "embedding", idCol = "vec_id", refine = 40)
+    AnnRouting.registerFlat(SparkT.spark, pq, pq, mpq,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "pqvec", refine = 40)
     val rp = Knn.knn(SparkT.spark.read.parquet(pq),
       "embedding", "vec_id", query, 10)
     assert(joins(rp).nonEmpty, rp.queryExecution.optimizedPlan.toString)
@@ -507,12 +507,12 @@ class AnnRoutingSpec extends AnyFunSuite {
     // until re-registration serves the appended corpus
     val extra = Seq((9002L, Array.fill(dim)(98f), 0))
       .toDF("vec_id", "embedding", "label")
-    graft.vector.Quantize.appendSegmentPq(extra, "embedding", "pqvec", pq, mpq)
+    graft.vector.Quantize.appendSegment(extra, "embedding", "pqvec", pq, mpq)
     val dropped = Knn.knn(SparkT.spark.read.parquet(pq),
       "embedding", "vec_id", query, 10)
     assert(joins(dropped).isEmpty, "stale PQ entry must drop after append")
-    AnnRouting.registerPq(SparkT.spark, pq, pq, mpq,
-      vecCol = "embedding", idCol = "vec_id", refine = 41)
+    AnnRouting.registerFlat(SparkT.spark, pq, pq, mpq,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "pqvec", refine = 41)
     val rerouted = Knn.knn(SparkT.spark.read.parquet(pq),
       "embedding", "vec_id", query, 10)
     assert(joins(rerouted).nonEmpty)
@@ -872,10 +872,10 @@ class AnnRoutingSpec extends AnyFunSuite {
     // a quant table registered as its own base → the screened-join leg
     val m = Quantize.train(SparkT.spark.read.parquet(baseDir), "embedding")
     val qt = Files.createTempDirectory("graft-annjoin").resolve("q").toString
-    Quantize.quantizeTable(SparkT.spark.read.parquet(baseDir),
+    Quantize.encodeTable(SparkT.spark.read.parquet(baseDir),
       "embedding", "qvec", m).write.parquet(qt)
-    AnnRouting.registerQuant(SparkT.spark, qt, qt, m,
-      vecCol = "embedding", idCol = "vec_id", refine = 64)
+    AnnRouting.registerFlat(SparkT.spark, qt, qt, m,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "qvec", refine = 64)
     run(AnnRouting.knnJoin(SparkT.spark, qt, "embedding", "vec_id",
       queriesDf, "query_id", "embedding", "corpus_id", 4), "quant leg")
     AnnRouting.unregister(SparkT.spark, qt)
@@ -905,10 +905,10 @@ class AnnRoutingSpec extends AnyFunSuite {
     val m = Quantize.train(df, "embedding", Knn.IP)
     val tmp = Files.createTempDirectory("graft-annjoin-metric")
     val qt = tmp.resolve("qip").toString
-    Writer.write(Quantize.quantizeTable(df, "embedding", "qvec", m),
+    Writer.write(Quantize.encodeTable(df, "embedding", "qvec", m),
       qt, sortBy = Seq("vec_id"))
-    AnnRouting.registerQuant(SparkT.spark, qt, qt, m,
-      vecCol = "embedding", idCol = "vec_id", refine = 64)
+    AnnRouting.registerFlat(SparkT.spark, qt, qt, m,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "qvec", refine = 64)
     // matching metric (IP): the screened leg serves — the plan reads the
     // code column — and equals the exact IP cross join
     val served = AnnRouting.knnJoin(SparkT.spark, qt, "embedding", "vec_id",
@@ -960,10 +960,10 @@ class AnnRoutingSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-annroute-cos")
     val qt = tmp.resolve("qcos").toString
     val m = Quantize.train(df, "embedding", Knn.Cosine)
-    Writer.write(Quantize.quantizeTable(df, "embedding", "qvec", m),
+    Writer.write(Quantize.encodeTable(df, "embedding", "qvec", m),
       qt, sortBy = Seq("vec_id"))
-    AnnRouting.registerQuant(SparkT.spark, qt, qt, m,
-      vecCol = "embedding", idCol = "vec_id", refine = 16)
+    AnnRouting.registerFlat(SparkT.spark, qt, qt, m,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "qvec", refine = 16)
     val routed = Knn.knn(SparkT.spark.read.parquet(qt),
       "embedding", "vec_id", query, 10, Knn.Cosine)
     assert(joins(routed).nonEmpty,
@@ -976,25 +976,25 @@ class AnnRoutingSpec extends AnyFunSuite {
     AnnRouting.unregister(SparkT.spark, qt)
     // binary residual cosine model: same dispatch contract
     val bt = tmp.resolve("bcos").toString
-    val mb = Quantize.trainBinary(df, "embedding", Knn.Cosine)
-    Writer.write(Quantize.binarizeTableResidual(df, "embedding", "bvec",
-      "rfac", mb), bt, sortBy = Seq("vec_id"))
-    AnnRouting.registerBinary(SparkT.spark, bt, bt, mb,
-      vecCol = "embedding", idCol = "vec_id", refine = 48,
-      rCol = Some("rfac"))
+    val mb = Quantize.BResidual(
+      Quantize.trainBinary(df, "embedding", Knn.Cosine), "rfac")
+    Writer.write(Quantize.encodeTable(df, "embedding", "bvec", mb), bt,
+      sortBy = Seq("vec_id"))
+    AnnRouting.registerFlat(SparkT.spark, bt, bt, mb,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "bvec", refine = 48)
     val routedB = Knn.knn(SparkT.spark.read.parquet(bt),
       "embedding", "vec_id", query, 10, Knn.Cosine)
     assert(joins(routedB).nonEmpty)
     assert(routedB.select("vec_id").as[Long].collect().toSeq === wantCos)
     AnnRouting.unregister(SparkT.spark, bt)
     // the L2-model registration (the shared r10 fixture behavior) keeps
-    // refusing cosine keys — familyMetric now reads the model
+    // refusing cosine keys — the family metric is the model's
     val qtL2 = tmp.resolve("ql2").toString
     val mL2 = Quantize.train(df, "embedding")
-    Writer.write(Quantize.quantizeTable(df, "embedding", "qvec", mL2),
+    Writer.write(Quantize.encodeTable(df, "embedding", "qvec", mL2),
       qtL2, sortBy = Seq("vec_id"))
-    AnnRouting.registerQuant(SparkT.spark, qtL2, qtL2, mL2,
-      vecCol = "embedding", idCol = "vec_id")
+    AnnRouting.registerFlat(SparkT.spark, qtL2, qtL2, mL2,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "qvec")
     val cosOverL2 = Knn.knn(SparkT.spark.read.parquet(qtL2),
       "embedding", "vec_id", query, 10, Knn.Cosine)
     assert(joins(cosOverL2).isEmpty)
@@ -1051,10 +1051,10 @@ class AnnRoutingSpec extends AnyFunSuite {
     // 3. flat int8 IP model: screen splice on the 1-ip_score key
     val qt = tmp.resolve("qip").toString
     val qm = Quantize.train(df, "embedding", Knn.IP)
-    Writer.write(Quantize.quantizeTable(df, "embedding", "qvec", qm),
+    Writer.write(Quantize.encodeTable(df, "embedding", "qvec", qm),
       qt, sortBy = Seq("vec_id"))
-    AnnRouting.registerQuant(SparkT.spark, qt, qt, qm,
-      vecCol = "embedding", idCol = "vec_id", refine = 16)
+    AnnRouting.registerFlat(SparkT.spark, qt, qt, qm,
+      vecCol = "embedding", idCol = "vec_id", codeCol = "qvec", refine = 16)
     val routedQ = Knn.knn(SparkT.spark.read.parquet(qt),
       "embedding", "vec_id", query, 10, Knn.IP)
     assert(joins(routedQ).nonEmpty)

@@ -619,7 +619,7 @@ class StreamingSpec extends AnyFunSuite {
     val build = emb.filter($"vec_id" < 400)
     val m = Quantize.train(build, "embedding")
     graft.tables.Writer.write(
-      Quantize.quantizeTable(build, "embedding", "qvec", m), d,
+      Quantize.encodeTable(build, "embedding", "qvec", m), d,
       sortBy = Seq("vec_id"))
     val streamed = emb.filter($"vec_id" >= 400)
       .as[(Long, Array[Float])].collect().map(VecRow.tupled.apply)

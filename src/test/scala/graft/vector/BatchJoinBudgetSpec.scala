@@ -208,10 +208,10 @@ class BatchJoinBudgetSpec extends AnyFunSuite {
 
   test("screened quant join over budget: distributed block-nested-loop, identical rows") {
     val m = Quantize.train(emb, "embedding")
-    val qdf = Quantize.quantizeTable(emb, "embedding", "qvec", m)
+    val qdf = Quantize.encodeTable(emb, "embedding", "qvec", m)
     // distinct query vec col name: screened joins reuse qdf's columns
     val q2 = queries.withColumnRenamed("qvec", "qvec2")
-    def go2 = Quantize.knnJoinQuant(qdf, "embedding", "qvec", "vec_id", m,
+    def go2 = Quantize.knnJoin(qdf, "embedding", "qvec", "vec_id", m,
       q2, "qid", "qvec2", "vec_id", k = 5)
     val base = rows(go2)
     assert(base.nonEmpty)
@@ -221,22 +221,22 @@ class BatchJoinBudgetSpec extends AnyFunSuite {
   test("screened quant4/binary/pq joins over budget: distributed screen, identical rows (r17)") {
     val q2 = queries.withColumnRenamed("qvec", "qvec2")
     val m4 = Quantize.train4(emb, "embedding")
-    val qdf4 = Quantize.quantize4Table(emb, "embedding", "q4vec", m4)
-    def go4 = Quantize.knnJoinQuant4(qdf4, "embedding", "q4vec", "vec_id",
+    val qdf4 = Quantize.encodeTable(emb, "embedding", "q4vec", m4)
+    def go4 = Quantize.knnJoin(qdf4, "embedding", "q4vec", "vec_id",
       m4, q2, "qid", "qvec2", "vec_id", k = 5, refine = 32)
     val base4 = rows(go4)
     assert(base4.nonEmpty)
     assert(overBudget(go4, distributed = true) === base4)
     val mb = Quantize.trainBinary(emb, "embedding")
-    val bdf = Quantize.binarizeTable(emb, "embedding", "bvec", mb)
-    def gob = Quantize.knnJoinBinary(bdf, "embedding", "bvec", "vec_id",
+    val bdf = Quantize.encodeTable(emb, "embedding", "bvec", mb)
+    def gob = Quantize.knnJoin(bdf, "embedding", "bvec", "vec_id",
       mb, q2, "qid", "qvec2", "vec_id", k = 5, refine = 320)
     val baseb = rows(gob)
     assert(baseb.nonEmpty)
     assert(overBudget(gob, distributed = true) === baseb)
     val mp = Quantize.trainPq(emb, "embedding", "vec_id")
-    val pdf = Quantize.quantizePqTable(emb, "embedding", "pqvec", mp)
-    def gop = Quantize.knnJoinPq(pdf, "embedding", "pqvec", "vec_id",
+    val pdf = Quantize.encodeTable(emb, "embedding", "pqvec", mp)
+    def gop = Quantize.knnJoin(pdf, "embedding", "pqvec", "vec_id",
       mp, q2, "qid", "qvec2", "vec_id", k = 5, refine = 128)
     val basep = rows(gop)
     assert(basep.nonEmpty)
@@ -271,9 +271,9 @@ class BatchJoinBudgetSpec extends AnyFunSuite {
 
   test("arm engagement flips on byte pressure ALONE: row conf untouched, identical rows") {
     val m = Quantize.train(emb, "embedding")
-    val qdf = Quantize.quantizeTable(emb, "embedding", "qvec", m)
+    val qdf = Quantize.encodeTable(emb, "embedding", "qvec", m)
     val q2 = queries.withColumnRenamed("qvec", "qvec2")
-    def go = Quantize.knnJoinQuant(qdf, "embedding", "qvec", "vec_id", m,
+    def go = Quantize.knnJoin(qdf, "embedding", "qvec", "vec_id", m,
       q2, "qid", "qvec2", "vec_id", k = 5)
     val base = rows(go)
     assert(base.nonEmpty)
@@ -306,14 +306,14 @@ class BatchJoinBudgetSpec extends AnyFunSuite {
     val q2 = queries.withColumnRenamed("qvec", "qvec2")
     // flat screened leg
     val m = Quantize.train(emb, "embedding")
-    val qdf = Quantize.quantizeTable(emb, "embedding", "qvec", m)
-    val base = rows(Quantize.knnJoinQuant(qdf, "embedding", "qvec",
+    val qdf = Quantize.encodeTable(emb, "embedding", "qvec", m)
+    val base = rows(Quantize.knnJoin(qdf, "embedding", "qvec",
       "vec_id", m, q2, "qid", "qvec2", "vec_id", k = 5))
     withBudget(4) {
       // screen/rescore row identity is preserved THROUGH the release
       // machinery (the persist exists for identity; release must not
       // break it within one action)
-      assert(rows(Quantize.knnJoinQuant(qdf, "embedding", "qvec", "vec_id",
+      assert(rows(Quantize.knnJoin(qdf, "embedding", "qvec", "vec_id",
         m, q2, "qid", "qvec2", "vec_id", k = 5)) === base)
       awaitDrained()
     }
@@ -341,7 +341,7 @@ class BatchJoinBudgetSpec extends AnyFunSuite {
 
   test("a never-actioned over-budget plan is bounded by the retained cap") {
     val m = Quantize.train(emb, "embedding")
-    val qdf = Quantize.quantizeTable(emb, "embedding", "qvec", m)
+    val qdf = Quantize.encodeTable(emb, "embedding", "qvec", m)
     val q2 = queries.withColumnRenamed("qvec", "qvec2")
     SparkT.spark.conf
       .set("spark.graft.knnJoin.maxPersistedQueryProjections", "2")
@@ -349,12 +349,12 @@ class BatchJoinBudgetSpec extends AnyFunSuite {
       // build (never act on) several over-budget joins: the FIFO cap
       // unpersists the oldest, so retained projections never exceed it
       (1 to 5).foreach { _ =>
-        Quantize.knnJoinQuant(qdf, "embedding", "qvec", "vec_id", m,
+        Quantize.knnJoin(qdf, "embedding", "qvec", "vec_id", m,
           q2, "qid", "qvec2", "vec_id", k = 5)
       }
       assert(Knn.livePersistedCount <= 2)
       // an action on a FRESH join still drains everything it consumed
-      assert(rows(Quantize.knnJoinQuant(qdf, "embedding", "qvec", "vec_id",
+      assert(rows(Quantize.knnJoin(qdf, "embedding", "qvec", "vec_id",
         m, q2, "qid", "qvec2", "vec_id", k = 5)).nonEmpty)
     } finally SparkT.spark.conf
       .unset("spark.graft.knnJoin.maxPersistedQueryProjections")
@@ -363,7 +363,7 @@ class BatchJoinBudgetSpec extends AnyFunSuite {
   test("a NONDETERMINISTIC query source is never eager-released: screen " +
       "and rescore stay identical across repeated actions (r18 review)") {
     val m = Quantize.train(emb, "embedding")
-    val qdf = Quantize.quantizeTable(emb, "embedding", "qvec", m)
+    val qdf = Quantize.encodeTable(emb, "embedding", "qvec", m)
     // rand() makes the filtered query set nondeterministic under
     // recompute -- eager release (cap eviction or post-action) would let
     // the screen and the rescore see DIFFERENT rows; such plans skip the
@@ -373,7 +373,7 @@ class BatchJoinBudgetSpec extends AnyFunSuite {
       .select($"vec_id".as("qid"), $"embedding".as("qvec2"))
     withBudget(4) {
       val before = Knn.livePersistedCount
-      val j = Quantize.knnJoinQuant(qdf, "embedding", "qvec", "vec_id", m,
+      val j = Quantize.knnJoin(qdf, "embedding", "qvec", "vec_id", m,
         qNondet, "qid", "qvec2", "vec_id", k = 5)
       assert(Knn.livePersistedCount === before,
         "nondeterministic projections must not enter the eager-release set")

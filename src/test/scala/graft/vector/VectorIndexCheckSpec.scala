@@ -151,8 +151,8 @@ class VectorIndexCheckSpec extends AnyFunSuite {
 
   test("int8 family: healthy passes; code drift, dup ids, fact drift caught") {
     val m = Quantize.train(emb, "embedding")
-    val path = writeTable(Quantize.quantizeTable(emb, "embedding", "qvec", m))
-    val ok = VectorIndexCheck.checkQuant(SparkT.spark, path, "embedding",
+    val path = writeTable(Quantize.encodeTable(emb, "embedding", "qvec", m))
+    val ok = VectorIndexCheck.checkCodec(SparkT.spark, path, "embedding",
       "qvec", "vec_id", m, fact = Some((emb, "vec_id")))
     assert(ok.ok, ok.issues.mkString("; "))
     assert(ok.rows === 500)
@@ -160,34 +160,34 @@ class VectorIndexCheckSpec extends AnyFunSuite {
     // codes are BINARY, so the flip runs in typed space
     val t = SparkT.spark.read.parquet(path)
     val bad = writeTable(flipByte(t, "qvec"))
-    val r1 = VectorIndexCheck.checkQuant(SparkT.spark, bad, "embedding",
+    val r1 = VectorIndexCheck.checkCodec(SparkT.spark, bad, "embedding",
       "qvec", "vec_id", m)
     assert(r1.issues.exists(_.contains("disagree with the model re-encode")),
       r1.issues)
     // duplicated id
     val dup = writeTable(t.union(t.filter(col("vec_id") === 3)))
-    val r2 = VectorIndexCheck.checkQuant(SparkT.spark, dup, "embedding",
+    val r2 = VectorIndexCheck.checkCodec(SparkT.spark, dup, "embedding",
       "qvec", "vec_id", m)
     assert(r2.issues.exists(_.contains("duplicate")), r2.issues)
     // stale table vs fact, both directions
     val part = writeTable(t.filter(col("vec_id") =!= 3))
-    val r3 = VectorIndexCheck.checkQuant(SparkT.spark, part, "embedding",
+    val r3 = VectorIndexCheck.checkCodec(SparkT.spark, part, "embedding",
       "qvec", "vec_id", m, fact = Some((emb, "vec_id")))
     assert(r3.issues.exists(_.contains("fact ids missing")), r3.issues)
-    val r4 = VectorIndexCheck.checkQuant(SparkT.spark, path, "embedding",
+    val r4 = VectorIndexCheck.checkCodec(SparkT.spark, path, "embedding",
       "qvec", "vec_id", m, fact = Some((emb.filter($"vec_id" =!= 3), "vec_id")))
     assert(r4.issues.exists(_.contains("absent from the fact table")), r4.issues)
   }
 
   test("4-bit family: healthy passes; nibble drift caught") {
     val m = Quantize.train4(emb, "embedding")
-    val path = writeTable(Quantize.quantize4Table(emb, "embedding", "q4vec", m))
-    val ok = VectorIndexCheck.checkQuant4(SparkT.spark, path, "embedding",
+    val path = writeTable(Quantize.encodeTable(emb, "embedding", "q4vec", m))
+    val ok = VectorIndexCheck.checkCodec(SparkT.spark, path, "embedding",
       "q4vec", "vec_id", m)
     assert(ok.ok, ok.issues.mkString("; "))
     val t = SparkT.spark.read.parquet(path)
     val bad = writeTable(flipByte(t, "q4vec"))
-    val r = VectorIndexCheck.checkQuant4(SparkT.spark, bad, "embedding",
+    val r = VectorIndexCheck.checkCodec(SparkT.spark, bad, "embedding",
       "q4vec", "vec_id", m)
     assert(r.issues.exists(_.contains("disagree with the model re-encode")),
       r.issues)
@@ -195,8 +195,8 @@ class VectorIndexCheckSpec extends AnyFunSuite {
 
   test("binary family: healthy passes; flipped sign word caught") {
     val m = Quantize.trainBinary(emb, "embedding")
-    val path = writeTable(Quantize.binarizeTable(emb, "embedding", "bvec", m))
-    val ok = VectorIndexCheck.checkBinary(SparkT.spark, path, "embedding",
+    val path = writeTable(Quantize.encodeTable(emb, "embedding", "bvec", m))
+    val ok = VectorIndexCheck.checkCodec(SparkT.spark, path, "embedding",
       "bvec", "vec_id", m, fact = Some((emb, "vec_id")))
     assert(ok.ok, ok.issues.mkString("; "))
     val t = SparkT.spark.read.parquet(path)
@@ -204,7 +204,7 @@ class VectorIndexCheckSpec extends AnyFunSuite {
       when(col("vec_id") === 3,
         array(element_at(col("bvec"), 1).bitwiseXOR(lit(1L))))
         .otherwise(col("bvec"))))
-    val r = VectorIndexCheck.checkBinary(SparkT.spark, bad, "embedding",
+    val r = VectorIndexCheck.checkCodec(SparkT.spark, bad, "embedding",
       "bvec", "vec_id", m)
     assert(r.issues.exists(_.contains("disagree with the model re-encode")),
       r.issues)
@@ -313,25 +313,25 @@ class VectorIndexCheckSpec extends AnyFunSuite {
     // while stored rows stay raw-width -- the check must compare against
     // rawDim, not flag every row (review r18-2)
     val mq = Quantize.train(emb, "embedding", Knn.IP)
-    val qp = writeTable(Quantize.quantizeTable(emb, "embedding", "qvec", mq))
-    val okQ = VectorIndexCheck.checkQuant(SparkT.spark, qp, "embedding",
+    val qp = writeTable(Quantize.encodeTable(emb, "embedding", "qvec", mq))
+    val okQ = VectorIndexCheck.checkCodec(SparkT.spark, qp, "embedding",
       "qvec", "vec_id", mq, fact = Some((emb, "vec_id")))
     assert(okQ.ok, okQ.issues.mkString("; "))
     assert(okQ.rows === 500)
     val badQ = writeTable(flipByte(SparkT.spark.read.parquet(qp), "qvec"))
-    assert(VectorIndexCheck.checkQuant(SparkT.spark, badQ, "embedding",
+    assert(VectorIndexCheck.checkCodec(SparkT.spark, badQ, "embedding",
       "qvec", "vec_id", mq).issues
       .exists(_.contains("disagree with the model re-encode")))
 
     val m4 = Quantize.train4(emb, "embedding", Knn.IP)
-    val p4 = writeTable(Quantize.quantize4Table(emb, "embedding", "q4vec", m4))
-    val ok4 = VectorIndexCheck.checkQuant4(SparkT.spark, p4, "embedding",
+    val p4 = writeTable(Quantize.encodeTable(emb, "embedding", "q4vec", m4))
+    val ok4 = VectorIndexCheck.checkCodec(SparkT.spark, p4, "embedding",
       "q4vec", "vec_id", m4)
     assert(ok4.ok, ok4.issues.mkString("; "))
 
     val mb = Quantize.trainBinary(emb, "embedding", Knn.IP)
-    val pb = writeTable(Quantize.binarizeTable(emb, "embedding", "bvec", mb))
-    val okB = VectorIndexCheck.checkBinary(SparkT.spark, pb, "embedding",
+    val pb = writeTable(Quantize.encodeTable(emb, "embedding", "bvec", mb))
+    val okB = VectorIndexCheck.checkCodec(SparkT.spark, pb, "embedding",
       "bvec", "vec_id", mb)
     assert(okB.ok, okB.issues.mkString("; "))
   }
