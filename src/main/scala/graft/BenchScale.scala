@@ -475,7 +475,7 @@ object BenchScale {
         Hnsw.buildHierarchy(spark, bigIdx,
           Hnsw.Params(m = 8, efC = 64, partitions = 4))
       val perH = qs.flatMap(q =>
-        Hnsw.walkStatsHier(spark, bigIdx, q.toArray, k = 10, ef = 64))
+        Hnsw.walkStats(spark, bigIdx, q.toArray, k = 10, ef = 64, hier = true))
       val expHier = perH.map(_._3).sum.toDouble / perH.length
       val scoredHier = perH.map(_._4).sum.toDouble / perH.length
       val hierOk = scoredHier <= scoredFlat * 2.0
@@ -513,7 +513,7 @@ object BenchScale {
       }
       val (expF50, sz50, scoredF50) = meanExpanded(hugeIdx)
       val perH50 = qs.flatMap(q =>
-        Hnsw.walkStatsHier(spark, hugeIdx, q.toArray, k = 10, ef = 64))
+        Hnsw.walkStats(spark, hugeIdx, q.toArray, k = 10, ef = 64, hier = true))
       val expH50 = perH50.map(_._3).sum.toDouble / perH50.length
       val scoredH50 = perH50.map(_._4).sum.toDouble / perH50.length
       val winOk = expH50 < expF50 && scoredH50 < scoredF50
@@ -556,7 +556,7 @@ object BenchScale {
         }
         val (expF, szF, scF) = meanExpanded(cIdx)
         val perHx = qs.flatMap(q =>
-          Hnsw.walkStatsHier(spark, cIdx, q.toArray, k = 10, ef = 64))
+          Hnsw.walkStats(spark, cIdx, q.toArray, k = 10, ef = 64, hier = true))
         val expH = perHx.map(_._3).sum.toDouble / perHx.length
         val scH = perHx.map(_._4).sum.toDouble / perHx.length
         if (rows == 20000) loseAt20k = scH > scF
@@ -591,7 +591,7 @@ object BenchScale {
           Seq("vec_id"), Nil, Seq("embedding"))
         Hnsw.buildIndexClusteredQuantized(corpus50k, "embedding", "vec_id",
           qhIdx, Hnsw.Params(m = 8, efC = 64, partitions = 1))
-        Hnsw.buildHierarchyQuantized(spark, qhIdx,
+        Hnsw.buildHierarchy(spark, qhIdx,
           Hnsw.Params(m = 8, efC = 64, partitions = 1))
       }
       def meanQ(hier: Boolean): (Double, Double) = {

@@ -81,7 +81,7 @@ object AnnRouting {
     *    knn.cpp:481-483, mirrored in the walk). Default off keeps every
     *    routed plan on the exact full-ef contract.
     *  - `hier` serves the routed walks through the layer hierarchy
-    *    ([[graft.vector.Hnsw.searchRoutedHierRaw]]): each probed sub-graph
+    *    (`Hnsw.searchRoutedRaw(hier = true)`): each probed sub-graph
     *    greedily descends its upper layers to the beam entry — same
     *    exactness contract (entry-independent at full ef). Requires the
     *    index to have a `_layers` sidecar (checked at registration).
@@ -90,9 +90,10 @@ object AnnRouting {
     *    forced-descent registration stays forced across every later
     *    execution of its routed plans without leaving the global conf set
     *    session-wide (ADVICE r16 #1).
-    *  - `quantized` marks the QUANTIZED clustered graph
-    *    ([[graft.vector.Hnsw.buildIndexClusteredQuantized]]): the leaf
-    *    runs the CODE-space walk and fetches the k·`refine` coarse
+    *  - `quantized` records, read from the index at registration, that
+    *    it holds int8 codes
+    *    ([[graft.vector.Hnsw.buildIndexClusteredQuantized]]): the leaf's
+    *    walk returns coarse survivors and the leaf fetches the k·`refine` coarse
     *    survivors' raw vectors from the base table — the untouched
     *    Sort/Limit above is the exact rescore (the `searchQuantized`
     *    serving contract). */
@@ -178,9 +179,11 @@ object AnnRouting {
         IvfFamily(model, nprobe, ef, idxPlan)))
   }
 
-  /** Register a CLUSTERED GRAPH index
-    * ([[graft.vector.Hnsw.buildIndexClustered]]) for `basePath`: every
-    * matching `ORDER BY dist LIMIT k` over the table routes through the
+  /** Register a CLUSTERED GRAPH index — float
+    * ([[graft.vector.Hnsw.buildIndexClustered]]) or int8 code
+    * ([[graft.vector.Hnsw.buildIndexClusteredQuantized]]), the space is
+    * read from the index — for `basePath`: every matching
+    * `ORDER BY dist LIMIT k` over the table routes through the
     * centroid-ordered sub-graph walk at accuracy `ef` (full ef ⇒ exact —
     * the oracle-checked configuration). The sidecar metric is read ONCE
     * here (a few rows) so plan time stays metadata-only; latest
@@ -190,12 +193,37 @@ object AnnRouting {
                     ef: Int = 1 << 20,
                     maxFilterIds: Long = 4L * 1000 * 1000,
                     adaptiveTermination: Boolean = false,
-                    hierarchy: Boolean = false): Unit = {
+                    hierarchy: Boolean = false): Unit =
+    registerGraphIndex(spark, basePath, indexPath, vecCol, idCol, ef, 8,
+      maxFilterIds, adaptiveTermination, hierarchy)
+
+  /** [[registerGraph]] with the code graph's accuracy contract: `refine`
+    * is the k·refine coarse-survivor count (the explicit
+    * `searchQuantized` default — r15: the reference serves whatever index
+    * type the column has, knn/knn.cpp:600-610, including the quantized
+    * HNSW of knn.cpp:105-135). Filters are consumed into the walk's
+    * allowed-id callback under the same `maxFilterIds` broadcast budget as
+    * the float graph. */
+  def registerGraphQuantized(spark: SparkSession, basePath: String,
+                             indexPath: String, vecCol: String,
+                             idCol: String, ef: Int = 1 << 20,
+                             refine: Int = 8,
+                             maxFilterIds: Long = 4L * 1000 * 1000,
+                             hierarchy: Boolean = false): Unit =
+    registerGraphIndex(spark, basePath, indexPath, vecCol, idCol, ef, refine,
+      maxFilterIds, adaptiveTermination = false, hierarchy)
+
+  private def registerGraphIndex(spark: SparkSession, basePath: String,
+                                 indexPath: String, vecCol: String,
+                                 idCol: String, ef: Int, refine: Int,
+                                 maxFilterIds: Long,
+                                 adaptiveTermination: Boolean,
+                                 hierarchy: Boolean): Unit = {
     val q = qualify(spark, basePath)
     val epoch0 = epochOf(spark, indexPath)
     val rows = -1L // filled by putUnlessMutated's single footer sweep
-    val metric = graft.vector.Hnsw.indexMetric(spark, indexPath)
-    require(!hierarchy || graft.vector.Hnsw.hasHierarchy(spark, indexPath),
+    val metric = Hnsw.indexMetric(spark, indexPath)
+    require(!hierarchy || Hnsw.hasHierarchy(spark, indexPath),
       s"registerGraph(hierarchy = true): $indexPath has no layer sidecar " +
         "— run Hnsw.buildHierarchy first")
     putUnlessMutated(spark, indexPath, epoch0, q,
@@ -204,36 +232,8 @@ object AnnRouting {
           hierarchy,
           // capture the engagement threshold NOW — the registration, not
           // the session conf at some later execution, owns the contract
-          if (hierarchy) graft.vector.Hnsw.hierMinRows(spark) else -1)))
-  }
-
-  /** Register a QUANTIZED CLUSTERED GRAPH index
-    * ([[graft.vector.Hnsw.buildIndexClusteredQuantized]]) for `basePath`
-    * (r15 — the reference serves whatever index type the column has,
-    * knn/knn.cpp:600-610, including the quantized HNSW of
-    * knn.cpp:105-135): a matching `ORDER BY dist LIMIT k` routes through
-    * the code-space walk with `refine` as the k·refine coarse-survivor
-    * accuracy contract (the explicit `searchQuantized` default). Filters
-    * are consumed into the walk's allowed-id callback under the same
-    * `maxFilterIds` broadcast budget as the raw graph family. */
-  def registerGraphQuantized(spark: SparkSession, basePath: String,
-                             indexPath: String, vecCol: String,
-                             idCol: String, ef: Int = 1 << 20,
-                             refine: Int = 8,
-                             maxFilterIds: Long = 4L * 1000 * 1000,
-                             hierarchy: Boolean = false): Unit = {
-    val q = qualify(spark, basePath)
-    val epoch0 = epochOf(spark, indexPath)
-    val rows = -1L // filled by putUnlessMutated's single footer sweep
-    val metric = graft.vector.Hnsw.indexMetric(spark, indexPath)
-    require(!hierarchy || graft.vector.Hnsw.hasHierarchy(spark, indexPath),
-      s"registerGraphQuantized(hierarchy = true): $indexPath has no layer " +
-        "sidecar — run Hnsw.buildHierarchyQuantized first")
-    putUnlessMutated(spark, indexPath, epoch0, q,
-      Registered(q, indexPath, vecCol, rows,
-        GraphFamily(idCol, ef, metric, maxFilterIds, hier = hierarchy,
-          hierMin = if (hierarchy) graft.vector.Hnsw.hierMinRows(spark) else -1,
-          quantized = true, refine = refine)))
+          if (hierarchy) Hnsw.hierMinRows(spark) else -1,
+          quantized = Hnsw.holdsCodes(spark, indexPath), refine = refine)))
   }
 
   /** Register a FLAT coded table ([[graft.vector.Quantize.encodeTable]]
@@ -303,10 +303,10 @@ object AnnRouting {
     * surface): each query row of `queries` gets its k nearest rows of the
     * table at `basePath`, served by whatever index family is REGISTERED
     * for it — [[graft.vector.Ivf.knnJoin]] (list-probed equi-join),
-    * [[graft.vector.Hnsw.knnJoinRouted]] (amortized sub-graph walks),
-    * [[graft.vector.Hnsw.knnJoinQuantized]] (code-space walks + exact
-    * rescore), or [[graft.vector.Quantize.knnJoin]] (the flat codecs'
-    * screened join) — each at the accuracy contract its registration declared (nprobe /
+    * [[graft.vector.Hnsw.knnJoinRouted]] (amortized sub-graph walks; for
+    * a code graph [[graft.vector.Hnsw.knnJoinQuantized]]'s code-space
+    * walks + exact rescore), or [[graft.vector.Quantize.knnJoin]] (the
+    * flat codecs' screened join) — each at the accuracy contract its registration declared (nprobe /
     * ef / refine), exactly like the single-query route. Unregistered
     * tables take the exact [[graft.vector.Knn.knnJoin]] fullscan — the
     * same conservative fallback the plan rule uses.
@@ -335,15 +335,12 @@ object AnnRouting {
         case IvfFamily(model, nprobe, _, _) =>
           renamed(Ivf.knnJoin(spark, r.indexPath, model, queries,
             qIdCol, qVecCol, idCol, r.vecCol, k, nprobe), idCol)
-        case g: GraphFamily if g.quantized =>
-          Hnsw.knnJoinQuantized(spark, r.indexPath,
+        case g: GraphFamily =>
+          // the raw table is read only to rescore a code graph's survivors
+          Hnsw.knnJoinGraph(spark, r.indexPath,
             graft.engine.Graft.cachedRead(spark, r.basePath), g.idCol,
             r.vecCol, queries, qIdCol, qVecCol, cIdCol, k, g.ef, g.refine,
             hier = g.hier, hierMin = g.hierMin)
-        case g: GraphFamily =>
-          Hnsw.knnJoinRouted(spark, r.indexPath, queries,
-            qIdCol, qVecCol, cIdCol, k, g.ef, hier = g.hier,
-            hierMin = g.hierMin)
         case f: FlatFamily =>
           Quantize.knnJoin(graft.engine.Graft.cachedRead(spark, r.indexPath),
             r.vecCol, f.codeCol, f.idCol, f.codec, queries, qIdCol, qVecCol,

@@ -9,10 +9,11 @@ import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 /** The graph family's routed-candidate leaf (K4 beyond IVF, VERDICT r9
   * #4): [[AnnRoutingRule]] swaps a registered base-table scan under an
   * `ORDER BY dist LIMIT k` for this node, which produces the top-k
-  * (id, vector) rows of [[graft.vector.Hnsw.searchRoutedRaw]] — the
-  * centroid-ordered, triangle-bounded routed walk over the clustered
-  * sub-graphs. The ORIGINAL Sort/Limit stays above and recomputes exact
-  * distances from the carried vectors, so the routed plan's results are
+  * (id, vector) rows of the routed walk
+  * ([[graft.vector.Hnsw.searchRoutedRaw]] and its code-space form) — the
+  * centroid-ordered, triangle-bounded walk over the clustered sub-graphs.
+  * The ORIGINAL Sort/Limit stays above and recomputes exact distances
+  * from the carried vectors, so the routed plan's results are
   * identical to the explicit API's (and to the fullscan at full ef) —
   * the same leaf-swap contract as the IVF route.
   *
@@ -40,13 +41,14 @@ import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
   * NOT a Dataset orderBy/limit, which is the very shape the routing rule
   * would re-route into this leaf, recursing unboundedly).
   *
-  * `quantized = true` switches the in-budget arm to the CODE-space routed
-  * walk ([[graft.vector.Hnsw.searchQuantizedCoarse]]): the leaf collects
-  * the k·`refine` coarse survivor ids, fetches their RAW vectors from the
-  * base table (one id-IN pushdown job over ≤ k·refine ids — the index
-  * stores codes, floats are never resident), and the untouched Sort/Limit
-  * above performs the exact rescore — the same k·refine serving contract
-  * as the explicit `searchQuantized` and the quant-table splices.
+  * `quantized = true` marks a CODE-space graph: the same walk call returns
+  * its k·`refine` coarse survivor ids (the
+  * [[graft.vector.Hnsw.searchQuantizedCoarse]] contract), the leaf fetches
+  * their RAW vectors from the base table (one id-IN pushdown job over
+  * ≤ k·refine ids — the index stores codes, floats are never resident),
+  * and the untouched Sort/Limit above performs the exact rescore — the
+  * same k·refine serving contract as the explicit `searchQuantized` and
+  * the quant-table splices.
   *
   * `output` reuses the base relation's attributes verbatim (same exprIds),
   * so every upstream expression rebinds without aliasing. */
@@ -143,32 +145,23 @@ final case class GraphCandidatesExec(node: GraphCandidates)
           (id: Long) => java.util.Arrays.binarySearch(b.value, id) >= 0
         }
         try {
-          if (node.quantized) {
-            // code-space coarse walk → candidate ids → ONE bounded raw
-            // fetch (≤ k·refine ids pushed as an IN filter; the vector
-            // column is read only for the survivors)
-            val ids = graft.vector.Hnsw.searchQuantizedCoarse(spark,
-              node.indexPath, node.query.toArray, node.k, node.ef,
-              node.refine, allowed = allowed, hier = node.hier,
-              hierMin = node.hierMin)._1
-            if (ids.isEmpty) Array.empty[(Long, Double, Array[Float])]
-            else graft.engine.Graft.cachedRead(spark, node.basePath.get)
-              .filter(col(node.idName).isin(ids: _*))
-              .filter(col(node.vecName).isNotNull)
-              .select(col(node.idName), col(node.vecName))
-              .collect()
-              .map(r => (r.getLong(0), 0.0, r.getSeq[Float](1).toArray))
-          } else if (node.hier)
-            // hierarchy-entry routed walk (registerGraph(hierarchy=true)):
-            // same raw-rows contract, the beam just starts at the descent's
-            // entry inside every probed sub-graph
-            graft.vector.Hnsw.searchRoutedHierRaw(spark, node.indexPath,
-              node.query.toArray, node.k, node.ef, allowed = allowed,
-              adaptiveTermination = node.adaptive,
-              hierMin = node.hierMin)._1
-          else graft.vector.Hnsw.searchRoutedRaw(spark, node.indexPath,
-            node.query.toArray, node.k, node.ef, allowed = allowed,
-            adaptiveTermination = node.adaptive)._1
+          // ONE routed walk over whichever node space the index holds
+          // (flat or hierarchy entry per the registration)
+          val walked = graft.vector.Hnsw.walkRouted(spark, node.indexPath,
+            node.query.toArray, node.k, node.ef, node.refine,
+            allowed = allowed, adaptive = node.adaptive, hier = node.hier,
+            hierMin = node.hierMin)._1
+          // a code graph returns k·refine coarse survivor ids without
+          // vectors → ONE bounded raw fetch (≤ k·refine ids pushed as an IN
+          // filter; the vector column is read only for the survivors)
+          if (!node.quantized) walked
+          else if (walked.isEmpty) Array.empty[(Long, Double, Array[Float])]
+          else graft.engine.Graft.cachedRead(spark, node.basePath.get)
+            .filter(col(node.idName).isin(walked.map(_._1): _*))
+            .filter(col(node.vecName).isNotNull)
+            .select(col(node.idName), col(node.vecName))
+            .collect()
+            .map(r => (r.getLong(0), 0.0, r.getSeq[Float](1).toArray))
         }
         // the walk is fully driver-orchestrated, so the broadcast is dead
         // once it returns — free the up-to-maxIds*8 bytes instead of

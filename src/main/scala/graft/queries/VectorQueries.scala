@@ -943,7 +943,8 @@ object VectorQueries {
     // descent from the top layer's entry to a near-optimal layer-0 start,
     // then the ef beam): the optional `_layers` sidecar is built over the
     // finished clustered graph (levels a deterministic hash of the id),
-    // and searchRoutedHier descends it inside every probed sub-graph.
+    // and searchRouted(hier = true) descends it inside every probed
+    // sub-graph.
     // Exact at full ef — entry choice cannot change an exhaustive walk —
     // so it shares the fullscan oracle; the descent's entry quality and
     // the stale-sidecar fallbacks are spec-tested (HnswSpec).
@@ -954,8 +955,8 @@ object VectorQueries {
         s.conf.set("spark.graft.graph.hierMinRows", "0")
         try {
           val path = hnswhIndex(s, d)
-          val (df, _) = Hnsw.searchRoutedHier(s, path, "vec_id",
-            queryVec(s, d), k = 10, ef = 1 << 20)
+          val (df, _) = Hnsw.searchRouted(s, path, "vec_id",
+            queryVec(s, d), k = 10, ef = 1 << 20, hier = true)
           df.select(col("vec_id"), round(col("dist"), 6).as("dist"))
         } finally s.conf.unset("spark.graft.graph.hierMinRows")
       },
@@ -972,8 +973,8 @@ object VectorQueries {
         s.conf.set("spark.graft.graph.hierMinRows", "0")
         try {
           val path = hnswhCosIndex(s, d)
-          val (df, _) = Hnsw.searchRoutedHier(s, path, "vec_id",
-            queryVec(s, d), k = 10, ef = 1 << 20)
+          val (df, _) = Hnsw.searchRouted(s, path, "vec_id",
+            queryVec(s, d), k = 10, ef = 1 << 20, hier = true)
           df.select(col("vec_id"), round(col("dist"), 6).as("dist"))
         } finally s.conf.unset("spark.graft.graph.hierMinRows")
       },
@@ -992,8 +993,8 @@ object VectorQueries {
         s.conf.set("spark.graft.graph.hierMinRows", "0")
         try {
           val path = hnswhIpIndex(s, d)
-          val (df, _) = Hnsw.searchRoutedHier(s, path, "vec_id",
-            queryVec(s, d), k = 10, ef = 1 << 20)
+          val (df, _) = Hnsw.searchRouted(s, path, "vec_id",
+            queryVec(s, d), k = 10, ef = 1 << 20, hier = true)
           df.select(col("vec_id"), round(col("dist"), 6).as("dist"))
         } finally s.conf.unset("spark.graft.graph.hierMinRows")
       },
@@ -2106,7 +2107,7 @@ object VectorQueries {
 
   // Memoized SEGMENTED quantized clustered graph per sfDir: 90% build
   // trains the int8 model + coarse router, the remaining 10% arrives via
-  // appendSegmentQuantized (frozen model; observed reconstruction error
+  // appendSegment (frozen model; observed reconstruction error
   // recorded in the _qerr sidecar).
   private def hnswqSegIndex(s: SparkSession, d: String): String =
     hnswcCache.getOrElseUpdate(d + "#quantseg", {
@@ -2117,7 +2118,7 @@ object VectorQueries {
         val (build, append) = segSplit(t(s, d, "embeddings"))
         Hnsw.buildIndexClusteredQuantized(build, "embedding", "vec_id",
           path, Hnsw.Params(m = 8, efC = 64, partitions = 8))
-        Hnsw.appendSegmentQuantized(append, "embedding", "vec_id", path)
+        Hnsw.appendSegment(append, "embedding", "vec_id", path)
         new java.io.File(path, "_GRAFT_SEG_OK").createNewFile()
       }
       path
@@ -2135,7 +2136,7 @@ object VectorQueries {
         val (build, append) = segSplit(t(s, d, "embeddings"))
         Hnsw.buildIndexClusteredQuantized(build, "embedding", "vec_id",
           path, Hnsw.Params(m = 8, efC = 64, partitions = 8))
-        Hnsw.appendSegmentQuantized(append, "embedding", "vec_id", path)
+        Hnsw.appendSegment(append, "embedding", "vec_id", path)
         Hnsw.compactQuantized(t(s, d, "embeddings"), "embedding", "vec_id",
           path, Hnsw.Params(m = 8, efC = 64, partitions = 8))
       }
@@ -2187,7 +2188,7 @@ object VectorQueries {
     hnswcCache.getOrElseUpdate(d + "#hierquant", {
       val path = hnswqIndex(s, d)
       if (!new java.io.File(Hnsw.layersPath(path), "_SUCCESS").isFile)
-        Hnsw.buildHierarchyQuantized(s, path, Hnsw.Params(m = 8, efC = 64))
+        Hnsw.buildHierarchy(s, path, Hnsw.Params(m = 8, efC = 64))
       path
     })
 

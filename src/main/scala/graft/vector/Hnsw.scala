@@ -1,8 +1,16 @@
 package graft.vector
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+import org.apache.spark.util.LongAccumulator
+
+import scala.collection.concurrent.TrieMap
+import scala.reflect.ClassTag
 
 /** Partitioned graph ANN — the Spark shape of the reference's headline HNSW
   * index (hnswlib: knn/knn.cpp:221 build, :455-537 search; SURVEY M4).
@@ -22,8 +30,8 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
   * a fixed entry point — at sub-graph sizes of 10^5-10^6 rows the
   * hierarchy buys one hop, BENCH_SF1 walk_telemetry), with the full layer
   * hierarchy available as an OPT-IN sidecar ([[buildHierarchy]] /
-  * [[searchRoutedHier]]; code-space twin for the quantized family) for
-  * deployments whose sub-graphs grow past that regime. Insertion in
+  * `searchRouted(hier = true)`) for deployments whose sub-graphs grow past
+  * that regime. Insertion in
   * ascending-id order; each node's links come from the ef-construction beam through the
   * PUBLISHED diversity heuristic (Malkov Algorithm 4 — plain m-nearest
   * collapses into cliques on duplicate-heavy data, see selectDiverse), plus
@@ -34,6 +42,16 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
   * spec-tested recall (1.0@ef=32 on the decorrelated 10× corpus,
   * BENCH_SF1). Opt-in P²-quantile adaptive termination
   * ([[Quantile.Termination]]) trims beam exhaustion further.
+  *
+  * One clustered graph, two node spaces (the reference hands hnswlib a raw
+  * or a quantized space from one constructor, knn/knn.cpp:105-135): a
+  * clustered index holds float vectors ([[buildIndexClustered]], column
+  * `vec`, walked under the index metric) or int8 codes
+  * ([[buildIndexClusteredQuantized]], column `qcode` plus a `_qmodel`
+  * sidecar, walked in the bound space with k·refine survivors rescored
+  * exactly). The space is read once per path beside the route sidecar, so
+  * build, walk, batch join, append, rebuild and invalidation are each one
+  * body over [[Space]]; callers never pick a twin.
   *
   * Determinism: insertion order, distance ties, beam membership and the
   * final merge all tie-break on id, so results are a function of the data
@@ -46,12 +64,6 @@ object Hnsw {
     * @param partitions sub-graph count; pid = id mod partitions */
   final case class Params(m: Int = 8, efC: Int = 64, partitions: Int = 4)
 
-  private val graphSchema = StructType(Seq(
-    StructField("pid", IntegerType),
-    StructField("id", LongType),
-    StructField("vec", ArrayType(FloatType)),
-    StructField("neighbors", ArrayType(LongType))))
-
   /** The NODE SPACE a sub-graph is built and walked in — the Spark analog
     * of the reference's space-interface selection (knn/knn.cpp:105-135:
     * `HNSWDist_c` hands hnswlib a RAW or a QUANTIZED space from the same
@@ -62,6 +74,21 @@ object Hnsw {
   private[vector] trait Space[V] extends Serializable {
     def dist(v: V, q: Array[Float]): Double
     def toQuery(v: V): Array[Float]
+    /** True for codes: nodes hold the index's BOUND-space vectors (raw for
+      * L2, normalized for cosine, augmented for IP) and walk under L2
+      * against the bound query. False for floats: raw vectors walked under
+      * the index metric. */
+    def bound: Boolean
+    /** Node payload of a build-side vector (the bound-space one for codes). */
+    def encode(v: Array[Float]): V
+    /** The float vector a walk result carries back — null for codes, whose
+      * callers rescore against the raw table. */
+    def vector(v: V): Array[Float]
+    /** Graph-table payload column, its SQL type, encoder and class tag. */
+    def column: String
+    def sqlType: DataType
+    def encoder: Encoder[V]
+    def tag: ClassTag[V]
   }
 
   private[vector] final class FloatSpace(metric: Knn.Metric)
@@ -69,17 +96,35 @@ object Hnsw {
     def dist(v: Array[Float], q: Array[Float]): Double =
       Ivf.scalarDist(metric, v, q)
     def toQuery(v: Array[Float]): Array[Float] = v
+    def bound: Boolean = false
+    def encode(v: Array[Float]): Array[Float] = v
+    def vector(v: Array[Float]): Array[Float] = v
+    def column: String = "vec"
+    def sqlType: DataType = ArrayType(FloatType)
+    def encoder: Encoder[Array[Float]] = ExpressionEncoder[Array[Float]]()
+    val tag: ClassTag[Array[Float]] = ClassTag(classOf[Array[Float]])
   }
 
   /** int8-code space: the graph holds dim-byte codes (4× smaller resident
     * set than float32) and every walk distance dequantizes inline —
     * identical arithmetic to [[Quantize.QModel.l2]]'s coarse screen. */
-  private[vector] final class CodeSpace(m: Quantize.QModel)
+  private[vector] final class CodeSpace(val m: Quantize.QModel)
       extends Space[Array[Byte]] {
     def dist(v: Array[Byte], q: Array[Float]): Double = m.l2(v, q)
     def toQuery(v: Array[Byte]): Array[Float] =
       Array.tabulate(m.dim)(i => m.dequantize(v(i), i))
+    def bound: Boolean = true
+    def encode(v: Array[Float]): Array[Byte] = m.encode(v)
+    def vector(v: Array[Byte]): Array[Float] = null
+    def column: String = "qcode"
+    def sqlType: DataType = BinaryType
+    def encoder: Encoder[Array[Byte]] = Encoders.BINARY
+    val tag: ClassTag[Array[Byte]] = ClassTag(classOf[Array[Byte]])
   }
+
+  private def spaceOf(metric: Knn.Metric,
+                      qm: Option[Quantize.QModel]): Space[_] =
+    qm.fold[Space[_]](new FloatSpace(metric))(new CodeSpace(_))
 
   /** One partition's nodes, id-ascending, with primitive adjacency: node
     * i's neighbours are `adj(i)(0 until deg(i))`, in insertion order
@@ -325,38 +370,81 @@ object Hnsw {
     override def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
 
-  private def buildOne(rows: Seq[(Long, Array[Float])], pid: Int,
-                       p: Params, metric: Knn.Metric): Iterator[Row] = {
-    val sorted = rows.sortBy(_._1).toArray
-    val g = new SubGraph(sorted.map(_._1), sorted.map(_._2),
-      new FloatSpace(metric))
-    g.build(p.m, p.efC)
-    (0 until g.n).iterator.map { i =>
-      Row(pid, g.ids(i), g.vecs(i).toSeq, g.neighborIds(i))
+  private type Node[V] = (Long, V, Array[Long]) // (id, payload, neighbor ids)
+  private lazy val LongsEnc: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+
+  /** Graph-table schema for nodes of `space`: (pid, id, payload, neighbors). */
+  private def graphSchema(space: Space[_]): StructType = StructType(Seq(
+    StructField("pid", IntegerType),
+    StructField("id", LongType),
+    StructField(space.column, space.sqlType),
+    StructField("neighbors", ArrayType(LongType))))
+
+  /** A graph table's (pid, (id, payload, neighbors)) rows, typed by `space`. */
+  private def graphRows[V](df: DataFrame, space: Space[V]): RDD[(Int, Node[V])] =
+    df.select(col("pid"), col("id"), col(space.column), col("neighbors"))
+      .as(Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong, space.encoder,
+        LongsEnc))
+      .rdd.map(t => (t._1, (t._2, t._3, t._4)))
+
+  /** Build one sub-graph over its (id, payload) rows; its graph-table rows. */
+  private def buildOne[V](rows: Iterator[(Long, V)], pid: Int, p: Params,
+                          space: Space[V]): Iterator[Row] = {
+    val sorted = rows.toArray.sortBy(_._1)
+    if (sorted.isEmpty) Iterator.empty
+    else {
+      val g = new SubGraph(sorted.map(_._1), sorted.map(_._2)(space.tag), space)
+      g.build(p.m, p.efC)
+      (0 until g.n).iterator.map { i =>
+        Row(pid, g.ids(i), g.vecs(i), g.neighborIds(i))
+      }
     }
   }
 
-  /** Shuffle `(pid, id, vec)` rows into one Spark partition per pid, build
-    * each sub-graph there, write the graph table range-clustered by
-    * (pid, id). */
-  private def writeGraph(df: DataFrame, pidCol: org.apache.spark.sql.Column,
-                         vecCol: String, idCol: String, path: String,
-                         p: Params, metric: Knn.Metric): Unit = {
+  /** Shuffle `(pid, id, vecCol)` rows into one Spark partition per pid,
+    * encode each vector into its node payload, build each sub-graph there,
+    * write the graph table range-clustered by (pid, id). */
+  private def writeGraph[V](df: DataFrame, pidCol: Column, vecCol: String,
+                            idCol: String, path: String, p: Params,
+                            space: Space[V]): Unit = {
     import df.sparkSession.implicits._
     val keyed = df
-      .select(pidCol.cast("int").as("pid"),
-        col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+      .select(pidCol.cast("int"), col(idCol).cast("long"), col(vecCol))
       .as[(Int, Long, Array[Float])]
-      .rdd.map(t => (t._1, (t._2, t._3)))
+      .rdd.map(t => (t._1, (t._2, space.encode(t._3))))
       .partitionBy(new PidPartitioner(p.partitions))
-    val rowRdd = keyed.mapPartitionsWithIndex { (pid, it) =>
-      val rows = it.map(_._2).toSeq
-      if (rows.isEmpty) Iterator.empty
-      else buildOne(rows, pid, p, metric)
-    }
-    val graph = df.sparkSession.createDataFrame(rowRdd, graphSchema)
-    graft.tables.Writer.write(graph, path, sortBy = Seq("pid", "id"),
-      files = p.partitions)
+    val rowRdd = keyed.mapPartitionsWithIndex((pid, it) =>
+      buildOne(it.map(_._2), pid, p, space))
+    graft.tables.Writer.write(
+      df.sparkSession.createDataFrame(rowRdd, graphSchema(space)), path,
+      sortBy = Seq("pid", "id"), files = p.partitions)
+  }
+
+  /** Sidecar names of a clustered index, for both node spaces. */
+  private val Sidecars = Seq("route", "layers", "qmodel", "qerr")
+
+  /** Base-layout location of a graph index part: the graph at the path
+    * itself, each sidecar at `<path>_<name>`. */
+  private def baseDir(path: String, name: String): String =
+    if (name == "graph") path else s"${path}_$name"
+
+  /** The preamble of every base-path build. A manifest-managed index is
+    * refused (readers resolve through the manifest, so a base-path rebuild
+    * would be silently ignored; it is maintained through the compactions).
+    * Then the sidecars of BOTH node spaces are swept BEFORE the new graph
+    * lands (ADVICE r16-1): route and layer rows name the old build's
+    * pids/ids, an old `_qmodel` would label a float graph as codes, and old
+    * `_qerr` rows would inflate the prune slack. Delete-first leaves every
+    * crash interleaving either fully old or loudly sidecar-less, never a
+    * new graph paired with the old build's centroids/radii (review r15-5,
+    * r18-9). */
+  private def sweepForBuild(spark: SparkSession, path: String): Unit = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(graft.index.SecondaryIndex.manifestVersions(fs, path).isEmpty,
+      s"$path is manifest-managed: readers resolve through the manifest, so " +
+        "a rebuild at the base path would be silently ignored — use " +
+        "compactClustered / compactQuantized")
+    Sidecars.foreach(s => fs.delete(new Path(baseDir(path, s)), true))
   }
 
   /** Build the partitioned graph index and write it as a Parquet table,
@@ -366,23 +454,9 @@ object Hnsw {
     * the same residency assumption as the reference's mmap'd hnswlib. */
   def buildIndex(df: DataFrame, vecCol: String, idCol: String, path: String,
                  p: Params = Params(), metric: Knn.Metric = Knn.L2): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    require(graft.index.SecondaryIndex.manifestVersions(fs, path).isEmpty,
-      s"$path is manifest-managed: readers resolve through the manifest, " +
-        "so a plain rebuild at the base path would be silently ignored")
-    // a rebuild at the same path leaves any prior CLUSTERED build's
-    // sidecars stale (route rows and layer rows name the old build's
-    // pids/ids — hasHierarchy would pass yet the descent would crash or
-    // silently mis-walk; review r15-5). Sweep them BEFORE the graph write
-    // (ADVICE r16-1): every crash interleaving then leaves either the old
-    // consistent pair or a sidecar-less index that fails/falls back
-    // loudly, never a new flat graph paired with the old build's
-    // centroids/radii (the silent mis-prune).
-    fs.delete(new org.apache.hadoop.fs.Path(routePath(path)), true)
-    fs.delete(new org.apache.hadoop.fs.Path(layersPath(path)), true)
+    sweepForBuild(df.sparkSession, path)
     writeGraph(df, pmod(col(idCol).cast("long"), lit(p.partitions)),
-      vecCol, idCol, path, p, metric)
+      vecCol, idCol, path, p, new FloatSpace(metric))
     invalidate(path)
     graft.plans.AnnRouting.onIndexMutated(df.sparkSession, path)
   }
@@ -403,40 +477,58 @@ object Hnsw {
     * probing can reuse it; searchRouted itself reads the sidecar). */
   def buildIndexClustered(df: DataFrame, vecCol: String, idCol: String,
                           path: String, p: Params = Params(),
-                          metric: Knn.Metric = Knn.L2): Ivf.Model = {
-    // mixing build-at-base with the manifest commit scheme would strand
-    // readers on the committed generation (same guard as
-    // SecondaryIndex.compact) — a manifest-managed index is maintained
-    // through appendSegment/compactClustered
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    require(graft.index.SecondaryIndex.manifestVersions(fs, path).isEmpty,
-      s"$path is manifest-managed: use compactClustered, not a rebuild " +
-        "at the base path (readers resolve through the manifest)")
-    // sweep the PRIOR build's sidecars BEFORE the new graph lands (ADVICE
-    // r16-1, same ordering as [[buildIndex]]): layer rows and route rows
-    // name the old build's pids/ids, and a crash between the graph write
-    // and a post-hoc sweep would pair the new graph with them — a silent
-    // mis-descent/mis-prune. Delete-first leaves every crash interleaving
-    // either fully old or loudly sidecar-less (searchRouted/hier fail with
-    // their missing-sidecar message until the rebuild is retried).
-    fs.delete(new org.apache.hadoop.fs.Path(layersPath(path)), true)
-    fs.delete(new org.apache.hadoop.fs.Path(routePath(path)), true)
-    val m = buildClusteredTo(df, vecCol, idCol, path, routePath(path), p, metric)
+                          metric: Knn.Metric = Knn.L2): Ivf.Model =
+    buildClustered(df, vecCol, idCol, path, p, metric, codes = false)._1
+
+  /** Clustered build in CODE space (r13 VERDICT #2 — the reference composes
+    * the quantizer INTO the graph's space, knn/knn.cpp:105-135): train the
+    * int8 model and the coarse router on the BOUND-space vectors, quantize,
+    * then build every sub-graph's links over the codes (build-time
+    * distances dequantize inline — the same space the walk uses). Writes
+    * the graph table (pid, id, qcode, neighbors), the `_route` sidecar
+    * (bound-space centroids + radii) and the `_qmodel` sidecar. Sub-graphs
+    * store dim-BYTE codes — 4× less resident memory per vector — and the
+    * raw float column never enters the resident set: the beam's k·refine
+    * survivors are rescored exactly against it ([[searchQuantized]]).
+    *
+    * Metric-complete (r14 VERDICT #3, r19): L2 quantizes the raw vectors,
+    * COSINE the unit-normalized companion (cosine distance of a unit pair
+    * is half its squared L2), IP the MIPS→L2 augmented companion — so the
+    * code-space walk, the triangle bound AND the quantization-error slack
+    * share one L2 geometry; the final rescore is the exact metric kernel
+    * on raw floats. */
+  def buildIndexClusteredQuantized(df: DataFrame, vecCol: String,
+                                   idCol: String, path: String,
+                                   p: Params = Params(),
+                                   metric: Knn.Metric = Knn.L2)
+      : (Ivf.Model, Quantize.QModel) = {
+    val (m, qm) = buildClustered(df, vecCol, idCol, path, p, metric, codes = true)
+    (m, qm.get)
+  }
+
+  private def buildClustered(df: DataFrame, vecCol: String, idCol: String,
+                             path: String, p: Params, metric: Knn.Metric,
+                             codes: Boolean)
+      : (Ivf.Model, Option[Quantize.QModel]) = {
+    sweepForBuild(df.sparkSession, path)
+    val out = buildClusteredTo(df, vecCol, idCol, baseDir(path, _), p,
+      metric, codes)
     // a rebuild at the same path invalidates the resident copy and any
     // automatic-routing entry that froze the old graph (same contract as
     // Ivf.buildIndex)
     invalidate(path)
     graft.plans.AnnRouting.onIndexMutated(df.sparkSession, path)
-    m
+    out
   }
 
-  /** The clustered build against explicit target dirs — shared by
-    * [[buildIndexClustered]] (base-path layout) and [[compactClustered]]
-    * (immutable generation dirs). */
+  /** The clustered build against explicit target dirs (`dir` maps a part
+    * name — graph, route, qmodel — to its dir) — shared by the base-path
+    * builds and the generation rebuild of [[rebuildClustered]]. */
   private def buildClusteredTo(df: DataFrame, vecCol: String, idCol: String,
-                               graphDir: String, routeDir: String, p: Params,
-                               metric: Knn.Metric): Ivf.Model = {
+                               dir: String => String, p: Params,
+                               metric: Knn.Metric, codes: Boolean)
+      : (Ivf.Model, Option[Quantize.QModel]) = {
+    import df.sparkSession.implicits._
     // The routing bound lives in an L2 space: raw vectors for L2, the
     // unit-normalized companion for cosine (cosDist of a unit pair is half
     // its squared L2 distance — same move as Ivf.searchAdaptiveCosine),
@@ -448,54 +540,42 @@ object Hnsw {
     val base = if (metric == Knn.L2) df
                else df.withColumn(boundCol,
                  Quantize.boundSpaceCol(metric, col(vecCol), ipM2))
+    val qm = if (codes) Some(Quantize.train(base, boundCol)) else None
     val m = Ivf.train(base, boundCol, nlist = p.partitions, metric = Knn.L2)
     // persisted: the graph write and the radius aggregation are separate
     // actions, and the assignment (normalize + nearest-of-nlist per row)
     // is a full corpus pass that must not run twice
-    val assigned = Ivf.assign(base, boundCol, m)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val assigned = Ivf.assign(base, boundCol, m).persist(MEMORY_AND_DISK)
     try {
-      // sub-graphs store and beam-search the RAW vectors under `metric`
-      // (for IP the walk's 1−dot values order exactly as augmented L2,
-      // and hnswlib builds its IP graphs over the raw ip distance too —
-      // knn/knn.cpp:105-135 hands hnswlib an InnerProductSpace)
-      writeGraph(assigned, col("ivf_cluster"), vecCol, idCol, graphDir, p, metric)
-      writeRouteSidecar(assigned, boundCol, m, routeDir, metric,
-        if (metric == Knn.IP) Some(math.sqrt(ipM2)) else None)
-      m
+      // float sub-graphs store and beam-search the RAW vectors under
+      // `metric` (for IP the walk's 1−dot values order exactly as
+      // augmented L2, and hnswlib builds its IP graphs over the raw ip
+      // distance too — knn/knn.cpp:105-135 hands hnswlib an
+      // InnerProductSpace); code sub-graphs quantize the bound space
+      val space = spaceOf(metric, qm)
+      writeGraph(assigned, col("ivf_cluster"),
+        if (space.bound) boundCol else vecCol, idCol, dir("graph"), p, space)
+      writeRoutes(assigned, boundCol, m.centroids, 0, metric,
+        if (metric == Knn.IP) Some(math.sqrt(ipM2)) else None, dir("route"),
+        append = false)
+      qm.foreach(q => graft.tables.Writer.write(
+        Seq((q.mins.toSeq, q.maxs.toSeq)).toDF("mins", "maxs"), dir("qmodel"),
+        sortBy = Seq()))
+      (m, qm)
     } finally assigned.unpersist(false)
   }
 
-  /** Route-sidecar writer shared by the raw and quantized clustered
-    * builds: per-pid (centroid, max bound-space L2 radius, metric). */
-  private def writeRouteSidecar(assigned: DataFrame, boundCol: String,
-                                m: Ivf.Model, routeDir: String,
-                                metric: Knn.Metric,
-                                ipMaxNorm: Option[Double]): Unit = {
-    val cents = typedLit(m.centroids.map(_.toSeq))
-    val route = assigned
-      .select(col("ivf_cluster").cast("int").as("pid"),
-        distances.l2Dist(col(boundCol),
-          element_at(cents, col("ivf_cluster").cast("int") + 1)
-            .cast("array<float>")).as("d"))
-      .groupBy("pid").agg(max(col("d")).as("radius"))
-      .withColumn("centroid",
-        element_at(cents, col("pid") + 1).cast("array<float>"))
-      .withColumn("metric", lit(metricName(metric)))
-      // the IP augmentation bound M rides every row (the graph family's
-      // metric marker — Ivf's ADC family stores its M the same way)
-      .withColumn("max_norm",
-        ipMaxNorm.map(lit(_)).getOrElse(lit(null)).cast("double"))
-    graft.tables.Writer.write(route, routeDir, sortBy = Seq("pid"))
-  }
-
-  /** Segment-append route rows for new pids `offset + cluster` — shared
-    * by the raw and quantized segment appends (one definition of the
-    * sidecar row shape, next to [[writeRouteSidecar]]'s). */
-  private def appendRouteRows(assigned: DataFrame, boundCol: String,
-                              cents: Seq[Array[Float]], offset: Int,
-                              metric: Knn.Metric, routeDir: String,
-                              ipMaxNorm: Option[Double]): Unit = {
+  /** Route-sidecar rows for pids `offset + cluster`: (pid, centroid, max
+    * bound-space L2 radius, metric, IP bound M) — written fresh by a build
+    * (offset 0), appended by a segment append. The IP augmentation bound M
+    * rides every row (the graph family's metric marker — Ivf's ADC family
+    * stores its M the same way); appends carry the BUILD's M verbatim — a
+    * batch-local re-estimate would put the segment in a different
+    * augmented space. */
+  private def writeRoutes(assigned: DataFrame, boundCol: String,
+                          cents: Seq[Array[Float]], offset: Int,
+                          metric: Knn.Metric, ipMaxNorm: Option[Double],
+                          routeDir: String, append: Boolean): Unit = {
     val centsLit = typedLit(cents.map(_.toSeq))
     val route = assigned
       .select((col("ivf_cluster").cast("int") + offset).as("pid"),
@@ -506,18 +586,17 @@ object Hnsw {
       .withColumn("centroid",
         element_at(centsLit, col("pid") - offset + 1).cast("array<float>"))
       .withColumn("metric", lit(metricName(metric)))
-      // appends carry the BUILD's M verbatim — a batch-local re-estimate
-      // would put the segment in a different augmented space
       .withColumn("max_norm",
         ipMaxNorm.map(lit(_)).getOrElse(lit(null)).cast("double"))
-    route.write.mode("append").parquet(routeDir)
+    if (append) route.write.mode("append").parquet(routeDir)
+    else graft.tables.Writer.write(route, routeDir, sortBy = Seq("pid"))
   }
 
   /** Sidecar location for the routing table of a clustered graph index. */
-  def routePath(indexPath: String): String = indexPath + "_route"
+  def routePath(indexPath: String): String = baseDir(indexPath, "route")
 
   /** Current (graph dir, route dir) of a clustered index — the single
-    * read-side entry point ([[loadGraph]]/[[routes]]/[[appendSegment]] go
+    * read-side entry point ([[loadGraph]]/[[index]]/[[appendSegment]] go
     * through it; the same role as
     * [[graft.index.SecondaryIndex.resolve]]). Resolution order: highest
     * valid manifest version (`<path>_manifest/v<N>` naming an existing
@@ -527,19 +606,18 @@ object Hnsw {
     * serving it after a manifest-dir loss would be silent stale data. */
   def resolveDirs(spark: SparkSession, indexPath: String): (String, String) = {
     import graft.index.SecondaryIndex.{manifestVersions, readSmallFile, SupersededMarker}
-    val base = new org.apache.hadoop.fs.Path(indexPath)
+    val base = new Path(indexPath)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     manifestVersions(fs, indexPath).foreach { case (_, vfile) =>
       val content = readSmallFile(fs, vfile)
       if (content.nonEmpty) {
-        val gen = new org.apache.hadoop.fs.Path(base.getParent, content)
+        val gen = new Path(base.getParent, content)
         if (fs.exists(gen))
-          return (new org.apache.hadoop.fs.Path(gen, "graph").toString,
-            new org.apache.hadoop.fs.Path(gen, "route").toString)
+          return (new Path(gen, "graph").toString, new Path(gen, "route").toString)
       }
     }
     val superseded =
-      try fs.exists(new org.apache.hadoop.fs.Path(base, SupersededMarker))
+      try fs.exists(new Path(base, SupersededMarker))
       catch { case _: java.io.IOException => false }
     if (superseded)
       throw new IllegalStateException(
@@ -550,16 +628,37 @@ object Hnsw {
     (indexPath, routePath(indexPath))
   }
 
+  /** Current dir of sidecar `name` (layers, qmodel, qerr): beside the
+    * graph — `<path>_<name>` in the base layout, `<name>/` inside a
+    * committed generation. */
+  private[vector] def sidecarDir(spark: SparkSession, indexPath: String,
+                                 name: String): String = {
+    val g = resolveDirs(spark, indexPath)._1
+    if (g == indexPath) baseDir(indexPath, name)
+    else new Path(new Path(g).getParent, name).toString
+  }
+
   /** I9 for the graph family — the reference's RT per-segment KNN build
     * (each ingested segment gets its own index built under the shared
     * settings: builder train/add/save, knn/knn.cpp:638-786,
-    * knn/knn.h:135-144): assign the new batch to the EXISTING sidecar
-    * centroids (no retrain — the coarse quantizer is the shared "model"),
-    * build fresh SEGMENT sub-graphs for the batch's non-empty clusters
-    * under NEW pids, and append their graph rows + route rows.
-    * [[searchRouted]] unions automatically: the schedule reads ALL route
-    * rows, several pids may share a centroid, and the triangle bound holds
-    * per pid — routed search stays EXACT (at full ef) mid-segment.
+    * knn/knn.h:135-144), in whichever node space the index holds: assign
+    * the new batch to the EXISTING sidecar centroids (no retrain — the
+    * coarse quantizer is the shared "model"; codes also keep the frozen
+    * int8 model, the contract of [[Quantize.appendSegment]]), build fresh
+    * SEGMENT sub-graphs for the batch's non-empty clusters under NEW pids,
+    * and append their graph rows + route rows. Routed search unions
+    * automatically: the schedule reads ALL route rows, several pids may
+    * share a centroid, and the triangle bound holds per pid — routed
+    * search stays EXACT (at full ef) mid-segment.
+    *
+    * Appended vectors may fall OUTSIDE a code model's trained [min,max]
+    * box (they clamp — the model bound no longer covers their
+    * reconstruction error), so a code append measures the batch's ACTUAL
+    * max reconstruction error in its encode pass and records it in the
+    * `_qerr` sidecar, which the routed prune folds into its slack. That
+    * row is written FIRST: a slack wider than needed only over-probes
+    * (exactness is one-sided), so a crash between it and the graph append
+    * is harmless, while the reverse order could serve a too-tight slack.
     *
     * Cost at 100 TB: ONE pass over the batch (assignment + per-cluster
     * builds) — the existing graph is never read or rewritten; probe
@@ -570,14 +669,19 @@ object Hnsw {
     * `p.partitions` is ignored: segment sub-graph count = existing
     * centroid count. `newRows` ids must be new (the unique-id contract). */
   def appendSegment(newRows: DataFrame, vecCol: String, idCol: String,
-                    indexPath: String, p: Params = Params()): Unit = {
+                    indexPath: String, p: Params = Params()): Unit =
+    appendIn(newRows, vecCol, idCol, indexPath, p,
+      index(newRows.sparkSession, indexPath))
+
+  private def appendIn[V](newRows: DataFrame, vecCol: String, idCol: String,
+                          indexPath: String, p: Params, ix: Index[V]): Unit = {
     val spark = newRows.sparkSession
+    import spark.implicits._
     val (graphDir, routeDir) = resolveDirs(spark, indexPath)
-    val ri = routeInfo(spark, indexPath)
-    val (metric, rts) = (ri.metric, ri.rts)
+    val (metric, rts, space) = (ix.metric, ix.rts, ix.space)
     require(rts.nonEmpty,
       s"no route sidecar rows at $routeDir — appendSegment maintains a " +
-        "buildIndexClustered index")
+        "buildIndexClustered / buildIndexClusteredQuantized index")
     // next free pid from BOTH sidecars: a crash between the graph append
     // and the route append below leaves orphaned graph rows (invisible to
     // routed search — no route rows), and deriving the offset from the
@@ -592,19 +696,18 @@ object Hnsw {
     // the ORIGINAL k-means centroids, deduped by content (prior appends
     // re-used them under new pids)
     val cents: Seq[Array[Float]] =
-      rts.map(_._2.toSeq).distinct.map(_.toArray)
-    val model = Ivf.Model(cents, Knn.L2)
-    // IP binds with the BUILD's stored M (routeInfo fails loudly on a
-    // lost marker) — a batch-local re-estimate would assign/bound the
-    // segment in a DIFFERENT augmented space than the existing pids'.
-    // And the batch must FIT under M: the routed schedule's sphere bound
-    // assumes ‖v'‖ = M for every row, so a clamped over-M append would
-    // let the prune drop the sub-graph holding the true top-1 — the
-    // exact-at-full-ef contract breaks SILENTLY (r19 review). The ADC
-    // family tolerates drift because its screen carries a refine margin;
-    // the raw routed graph's bound is exactness-bearing, so refuse.
+      rts.toSeq.map(_._2.toSeq).distinct.map(_.toArray)
+    // IP binds with the BUILD's stored M (index() fails loudly on a lost
+    // marker) — a batch-local re-estimate would assign/bound the segment
+    // in a DIFFERENT augmented space than the existing pids'. And the
+    // batch must FIT under M: the routed schedule's sphere bound assumes
+    // ‖v'‖ = M for every row, so a clamped over-M append would let the
+    // prune drop the sub-graph holding the true top-1 (and for codes it
+    // breaks the augmented-L2 == IP-order identity beyond what the refine
+    // margin covers) — the exact-at-full-ef contract breaks SILENTLY (r19
+    // review), so refuse.
     val ipM2 = if (metric == Knn.IP) {
-      val mn = ri.ipMaxNorm.get
+      val mn = ix.ipMaxNorm.get
       requireBatchUnderM(newRows, vecCol, mn, indexPath)
       mn * mn
     } else 0.0
@@ -612,38 +715,53 @@ object Hnsw {
     val base = if (metric == Knn.L2) newRows
                else newRows.withColumn(boundCol,
                  Quantize.boundSpaceCol(metric, col(vecCol), ipM2))
-    val assigned = Ivf.assign(base, boundCol, model)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      import spark.implicits._
-      val offset = maxPid + 1
-      val keyed = assigned
-        .select(col("ivf_cluster").cast("int").as("ci"),
-          col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-        .as[(Int, Long, Array[Float])]
-        .rdd.map(t => (t._1, (t._2, t._3)))
-        .partitionBy(new PidPartitioner(cents.length))
-      val rowRdd = keyed.mapPartitionsWithIndex { (ci, it) =>
-        val rows = it.map(_._2).toSeq
-        if (rows.isEmpty) Iterator.empty
-        else buildOne(rows, offset + ci, p, metric)
+    val assigned = Ivf.assign(base, boundCol, Ivf.Model(cents, Knn.L2))
+      .persist(MEMORY_AND_DISK)
+    // ONE encode pass serves both the observed-error measurement and the
+    // sub-graph build (review r15-2): (cluster, id, payload, recon-error)
+    // persists; for codes space.dist(code, v) IS ‖v − deq(quant(v))‖
+    val encoded = assigned
+      .select(col("ivf_cluster").cast("int"), col(idCol).cast("long"),
+        col(if (space.bound) boundCol else vecCol))
+      .as[(Int, Long, Array[Float])].rdd
+      .map { case (ci, id, v) =>
+        val c = space.encode(v)
+        (ci, id, c, if (space.bound) space.dist(c, v) else 0.0)
       }
-      spark.createDataFrame(rowRdd, graphSchema)
+      .persist(MEMORY_AND_DISK)
+    try {
+      if (space.bound) {
+        val err = encoded.map(_._4).fold(-1.0)(math.max)
+        if (err < 0) return // empty batch: nothing to append
+        Seq(err).toDF("max_err")
+          .write.mode("append").parquet(sidecarDir(spark, indexPath, "qerr"))
+      }
+      val offset = maxPid + 1
+      val keyed = encoded.map(t => (t._1, (t._2, t._3)))
+        .partitionBy(new PidPartitioner(cents.length))
+      val rowRdd = keyed.mapPartitionsWithIndex((ci, it) =>
+        buildOne(it.map(_._2), offset + ci, p, space))
+      spark.createDataFrame(rowRdd, graphSchema(space))
         .write.mode("append").parquet(graphDir)
-      // route rows for the new pids — same column order as the sidecar
-      appendRouteRows(assigned, boundCol, cents, offset, metric, routeDir,
-        ri.ipMaxNorm)
-      // hierarchy follows ingest: extend the layers sidecar to the new
-      // pids when the index has one (crash before this = flat fallback)
+      writeRoutes(assigned, boundCol, cents, offset, metric, ix.ipMaxNorm,
+        routeDir, append = true)
+      // THE HIERARCHY FOLLOWS INGEST (r16): layer rows for the new pids
+      // append after the graph+route rows, so hier walks descend fresh
+      // segments too. Deterministic (levels hash from ids — the rows a
+      // full rebuild would emit) and crash-safe: a crash before this
+      // append leaves the new pids on the flat-entry fallback.
       if (hasHierarchy(spark, indexPath))
-        appendSegmentLayers(spark, keyed, offset, new FloatSpace(metric),
-          p, indexPath)
-    } finally assigned.unpersist(false)
+        spark.createDataFrame(layerRows(keyed, offset, space, p), layerSchema)
+          .write.mode("append").parquet(sidecarDir(spark, indexPath, "layers"))
+    } finally {
+      encoded.unpersist(false)
+      assigned.unpersist(false)
+    }
     invalidate(indexPath)
     graft.plans.AnnRouting.onIndexMutated(spark, indexPath)
   }
 
-  /** I9 OPTIMIZE for the clustered graph, with the OBJECT-STORE-SAFE
+  /** I9 OPTIMIZE for the clustered FLOAT graph, with the OBJECT-STORE-SAFE
     * commit of [[graft.index.SecondaryIndex.compactManifest]]: re-cluster
     * the full corpus — read from the index itself, whose (id, vec) rows
     * ARE the dataset — into a NEW immutable generation dir `<path>__g<N>`
@@ -655,12 +773,14 @@ object Hnsw {
     * (in-flight readers that resolved it pre-commit finish on a
     * consistent snapshot); a retained legacy base pair gets the
     * superseded marker so a later manifest-dir loss fails loudly instead
-    * of silently serving stale data; the next compact sweeps it. */
+    * of silently serving stale data; the next compact sweeps it. A code
+    * graph holds no floats: compact it with [[compactQuantized]]. */
   def compactClustered(spark: SparkSession, indexPath: String,
                        p: Params = Params()): Unit =
-    rebuildClustered(spark, indexPath, p)(identity)
+    rebuildClustered(spark, indexPath, p, "vec", "id")(
+      graphCorpus(spark, indexPath, _))
 
-  /** Row-DELETION maintenance for the clustered graph family (the ANN
+  /** Row-DELETION maintenance for the clustered float graph (the ANN
     * analog of [[graft.index.SecondaryIndex.deleteKeys]] beside
     * [[Ivf.deleteFromIndex]]): rebuild the index from its OWN graph
     * table's (id, vec) rows MINUS the deleted ids into a new
@@ -680,71 +800,82 @@ object Hnsw {
                           p: Params = Params()): Unit = {
     val del = deletedKeys.select(col(keyCol).cast("long").as("__delkey"))
       .filter(col("__delkey").isNotNull).distinct()
-    rebuildClustered(spark, indexPath, p)(corpus =>
-      corpus.join(del, corpus("id") === del("__delkey"), "left_anti"))
+    rebuildClustered(spark, indexPath, p, "vec", "id") { graphDir =>
+      val corpus = graphCorpus(spark, indexPath, graphDir)
+      corpus.join(del, corpus("id") === del("__delkey"), "left_anti")
+    }
   }
 
-  /** Shared generation-rebuild body of [[compactClustered]] and
-    * [[deleteFromClustered]]: re-cluster + re-link the (transformed)
-    * corpus read back from the live graph, then manifest-commit. */
+  /** I9 OPTIMIZE for a code graph, with the same commit protocol as
+    * [[compactClustered]]. Because the index stores CODES (floats never
+    * resident), the rebuild takes the raw corpus `df` — the same table
+    * [[searchQuantized]] rescores against. A compact RETRAINS the int8
+    * model on the current corpus and resets the `_qerr` drift slack (the
+    * fresh box covers every resident vector again) — the recovery path
+    * when appended drift has inflated the slack toward probe-everything. */
+  def compactQuantized(df: DataFrame, vecCol: String, idCol: String,
+                       indexPath: String, p: Params = Params()): Unit =
+    rebuildClustered(df.sparkSession, indexPath, p, vecCol, idCol)(_ => df)
+
+  /** A float graph's (id, vec) rows — its corpus. */
+  private def graphCorpus(spark: SparkSession, indexPath: String,
+                          graphDir: String): DataFrame = {
+    floatsOnly(index(spark, indexPath), indexPath,
+      "compactClustered/deleteFromClustered", "compactQuantized")
+    spark.read.parquet(graphDir).select(col("id"), col("vec"))
+  }
+
+  /** The generation-rebuild body of every compaction and deletion:
+    * re-cluster + re-link `corpus(live graph dir)` in the index's node
+    * space into a new generation dir, rebuild the hierarchy there when the
+    * index had one, then manifest-commit. */
   private def rebuildClustered(spark: SparkSession, indexPath: String,
-                               p: Params)
-                              (transform: DataFrame => DataFrame): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val base = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = base.getFileSystem(conf)
-    val (graphDir, _) = resolveDirs(spark, indexPath)
-    val (metric, _) = routes(spark, indexPath)
-    val curVersion = graft.index.SecondaryIndex.manifestVersions(fs, indexPath)
-      .headOption.map(_._1).getOrElse(0L)
-    val nextVersion = curVersion + 1
-    val nextPath = new org.apache.hadoop.fs.Path(s"${indexPath}__g$nextVersion")
+                               p: Params, vecCol: String, idCol: String)
+                              (corpus: String => DataFrame): Unit = {
+    val base = new Path(indexPath)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val graphDir = resolveDirs(spark, indexPath)._1
+    val ix = index(spark, indexPath)
+    val nextVersion = graft.index.SecondaryIndex.manifestVersions(fs, indexPath)
+      .headOption.map(_._1).getOrElse(0L) + 1
+    val nextPath = new Path(s"${indexPath}__g$nextVersion")
     fs.delete(nextPath, true) // a crashed prior attempt at this version
-    val corpus = transform(
-      spark.read.parquet(graphDir).select(col("id"), col("vec")))
-    buildClusteredTo(corpus, "vec", "id",
-      new org.apache.hadoop.fs.Path(nextPath, "graph").toString,
-      new org.apache.hadoop.fs.Path(nextPath, "route").toString, p, metric)
+    val dir = (name: String) => new Path(nextPath, name).toString
+    val (_, qm) = buildClusteredTo(corpus(graphDir), vecCol, idCol, dir, p,
+      ix.metric, ix.space.bound)
     // a hierarchy registration survives OPTIMIZE (r15 VERDICT #7): when
     // the superseded generation carried layers, rebuild them over the NEW
-    // graph INSIDE the same uncommitted generation dir — the manifest
-    // commit below swaps graph + layers atomically, so hier search never
-    // sees a generation without its sidecar (the old sweep-and-fail-loud
-    // contract remains only for indexes that never had a hierarchy)
+    // graph (codes: with the RETRAINED model) INSIDE the same uncommitted
+    // generation dir — the manifest commit below swaps graph + layers
+    // atomically, so hier search never sees a generation without its
+    // sidecar
     if (hasHierarchy(spark, indexPath))
-      buildLayersFlatTo(spark,
-        new org.apache.hadoop.fs.Path(nextPath, "graph").toString, metric,
-        new org.apache.hadoop.fs.Path(nextPath, "layers").toString, p)
-    // "_layers" in the sweep: a legacy-layout hierarchy sidecar is built
-    // over the OLD graph's pids — stale once the generation commits
-    commitGeneration(fs, base, indexPath, graphDir, nextVersion, nextPath,
-      sidecarSuffixes = Seq("_route", "_layers"))
+      buildLayersTo(spark, dir("graph"), spaceOf(ix.metric, qm),
+        dir("layers"), p)
+    commitGeneration(fs, base, indexPath, graphDir, nextVersion, nextPath)
     invalidate(indexPath)
     graft.plans.AnnRouting.onIndexMutated(spark, indexPath)
   }
 
-  /** The shared generation-commit tail of [[compactClustered]] and
-    * [[compactQuantized]] (one definition of the crash-safety protocol —
-    * review r15-2): write ONE manifest object naming the new generation,
-    * sweep stale dirs by name (base layout + its per-family sidecar
-    * suffixes + other `__gN` generations) while RETAINING the generation
-    * that was live until this commit for one cycle, and mark a retained
-    * legacy base superseded so a lost manifest fails loudly instead of
-    * silently serving stale data. */
-  private def commitGeneration(fs: org.apache.hadoop.fs.FileSystem,
-                               base: org.apache.hadoop.fs.Path,
-                               indexPath: String, graphDir: String,
-                               nextVersion: Long,
-                               nextPath: org.apache.hadoop.fs.Path,
-                               sidecarSuffixes: Seq[String]): Unit = {
+  /** The generation-commit tail of [[rebuildClustered]] (one definition of
+    * the crash-safety protocol — review r15-2): write ONE manifest object
+    * naming the new generation, sweep stale dirs by name (base layout +
+    * its sidecars + other `__gN` generations) while RETAINING the
+    * generation that was live until this commit for one cycle, and mark a
+    * retained legacy base superseded so a lost manifest fails loudly
+    * instead of silently serving stale data. A legacy-layout `_layers`
+    * sidecar is built over the OLD graph's pids, stale once the generation
+    * commits. */
+  private def commitGeneration(fs: FileSystem, base: Path, indexPath: String,
+                               graphDir: String, nextVersion: Long,
+                               nextPath: Path): Unit = {
     graft.index.SecondaryIndex.writeManifest(fs, indexPath, nextVersion,
       nextPath.getName)
     val baseName = base.getName
-    val baseNames: Set[String] =
-      Set(baseName) ++ sidecarSuffixes.map(baseName + _)
+    val baseNames: Set[String] = Set(baseName) ++ Sidecars.map(baseDir(baseName, _))
     val retained: Set[String] =
       if (graphDir == indexPath) baseNames
-      else Set(new org.apache.hadoop.fs.Path(graphDir).getParent.getName)
+      else Set(new Path(graphDir).getParent.getName)
     if (fs.exists(base.getParent)) {
       fs.listStatus(base.getParent).foreach { st =>
         val n = st.getPath.getName
@@ -757,7 +888,7 @@ object Hnsw {
       }
     }
     if (retained.contains(baseName)) {
-      val mk = fs.create(new org.apache.hadoop.fs.Path(base,
+      val mk = fs.create(new Path(base,
         graft.index.SecondaryIndex.SupersededMarker), true)
       try mk.write("superseded by manifest commit\n"
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -770,56 +901,62 @@ object Hnsw {
   // would be the 100 TB defect): first search of an index pays ONE
   // pid-shuffle and pins the grouped graph in executor storage
   // (MEMORY_AND_DISK); every later query scans cache partition-locally and
-  // ships k rows per sub-graph to the driver.
-  private type GraphRow = (Long, Array[Float], Array[Long])
-  private val resident =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.rdd.RDD[(Int, GraphRow)]]
+  // ships k rows per sub-graph to the driver. One map for both node
+  // spaces, keyed by path, holding (payload column, grouped graph).
+  private val resident = TrieMap.empty[String, (String, RDD[_])]
 
   /** Grouped, persisted graph for `indexPath`: identity-partitioned by pid
     * (one sub-graph per Spark partition, never split or doubled-up).
     * Rebuilding an index at the same path within a session requires
-    * [[invalidate]]. */
-  private def loadGraph(spark: SparkSession,
-                        indexPath: String): org.apache.spark.rdd.RDD[(Int, GraphRow)] =
+    * [[invalidate]] (every build and maintenance call does it). */
+  private def loadGraph[V](spark: SparkSession, indexPath: String,
+                           space: Space[V]): RDD[(Int, Node[V])] =
     // synchronized: TrieMap.getOrElseUpdate may evaluate the loader twice
     // under concurrent first searches, and the loser would leak a
     // persisted, counted RDD for the life of the session. Loads are rare;
     // the coarse lock only guards them.
     resident.synchronized {
-      resident.getOrElseUpdate(indexPath, {
-        import spark.implicits._
-        val df = spark.read.parquet(resolveDirs(spark, indexPath)._1)
-          .select(col("pid"), col("id"), col("vec"), col("neighbors"))
+      val (column, g) = resident.getOrElseUpdate(indexPath, {
+        val dir = resolveDirs(spark, indexPath)._1
+        val df = spark.read.parquet(dir)
+        require(df.columns.contains(space.column),
+          s"graph table at $dir has no ${space.column} column — its " +
+            "_qmodel sidecar and graph disagree on the node space; rebuild " +
+            "the index")
         val maxPid = df.agg(max(col("pid"))).head
         if (maxPid.isNullAt(0)) {
           // empty index table: empty search results, nothing to persist
-          spark.sparkContext.emptyRDD[(Int, GraphRow)]
+          (space.column, spark.sparkContext.emptyRDD[(Int, Node[V])])
         } else {
-          val g = df.as[(Int, Long, Array[Float], Array[Long])]
-            .rdd.map(t => (t._1, (t._2, t._3, t._4)))
+          val g = graphRows(df, space)
             .partitionBy(new PidPartitioner(maxPid.getInt(0) + 1))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .persist(MEMORY_AND_DISK)
           g.count() // materialize: later queries must never race the shuffle
-          g
+          (space.column, g)
         }
       })
+      require(column == space.column,
+        s"$indexPath is resident with $column nodes, not ${space.column}")
+      g.asInstanceOf[RDD[(Int, Node[V])]]
     }
 
-  /** Drop the resident copy of an index (call after rebuilding it). */
+  /** Drop everything served from an index path — its resident graph and
+    * layers and its route/space record (call after rebuilding it; every
+    * build and maintenance entry point does). */
   def invalidate(indexPath: String): Unit = {
-    resident.remove(indexPath).foreach(_.unpersist(false))
+    resident.remove(indexPath).foreach(_._2.unpersist(false))
     residentL.remove(indexPath).foreach(_.unpersist(false))
-    routeCache.remove(indexPath)
+    indexes.remove(indexPath)
   }
 
   /** Rehydrate one partition's (id, payload, neighborIds) rows into a
-    * [[SubGraph]] — the ONE shared walk-site loader (search, telemetry,
-    * batch join, quantized walk). A dangling neighbor id (e.g. after a
-    * corrupted partial append) fails loudly here, in one place. */
-  private[vector] def rehydrate[V: scala.reflect.ClassTag](
-      rows: Array[(Long, V, Array[Long])], space: Space[V]): SubGraph[V] = {
+    * [[SubGraph]] — the ONE shared walk-site loader. A dangling neighbor
+    * id (e.g. after a corrupted partial append) fails loudly here, in one
+    * place. */
+  private[vector] def rehydrate[V](rows: Array[(Long, V, Array[Long])],
+                                   space: Space[V]): SubGraph[V] = {
     val sorted = rows.sortBy(_._1)
-    val g = new SubGraph(sorted.map(_._1), sorted.map(_._2), space)
+    val g = new SubGraph(sorted.map(_._1), sorted.map(_._2)(space.tag), space)
     sorted.indices.foreach { i =>
       g.setNeighbors(i, sorted(i)._3.map { n =>
         val j = g.indexOf(n)
@@ -831,43 +968,46 @@ object Hnsw {
     g
   }
 
-  /** Rehydrate one partition's sub-graph and beam-search it: the shared
-    * task body of [[search]] and [[searchRouted]]. `layers`, when
-    * non-null, carries the partition's hierarchy rows: the beam starts at
-    * the descent's entry instead of node 0 (the shared walk body of the
-    * flat AND hier paths — review r15-4 deduplication). */
-  private def searchSubGraph(it: Iterator[(Int, GraphRow)], q: Array[Float],
-                             k: Int, ef: Int, metric: Knn.Metric,
-                             allowed: Long => Boolean = _ => true,
-                             adaptive: Boolean = false,
-                             scoredAcc: org.apache.spark.util.LongAccumulator = null,
-                             layers: Iterator[(Int, LayerRow)] = null,
-                             hierMin: Int = 0)
+  /** One partition's sub-graph and, when `lt` is non-null, its hierarchy
+    * layers under the `hmin` gate (no layers = the flat lowest-id entry). */
+  private def hydrate[V](rows: Array[(Int, Node[V])],
+                         lt: Iterator[(Int, LayerRow)], hmin: Int,
+                         space: Space[V]): (SubGraph[V], Layers) = {
+    val g = rehydrate(rows.map(_._2), space)
+    (g, if (lt == null) Array.empty else hydratedLayers(g, lt, hmin))
+  }
+
+  /** One sub-graph's walk — the task body of [[search]] and every routed
+    * single search: rehydrate, descend to the beam entry when layers are
+    * zipped in, beam at max(ef, keep), return the best `keep` as
+    * (id, dist, carried vector). Vectors ride along for floats: the
+    * automatic ANN route feeds candidates back under the original Sort,
+    * which recomputes exact distances from them. */
+  private def walkPart[V](it: Iterator[(Int, Node[V])],
+                          lt: Iterator[(Int, LayerRow)], hmin: Int,
+                          space: Space[V], q: Array[Float], keep: Int,
+                          ef: Int, allowed: Long => Boolean,
+                          adaptive: Boolean, acc: LongAccumulator)
       : Iterator[(Long, Double, Array[Float])] = {
-    val rows = it.map(_._2).toArray
+    val rows = it.toArray
     if (rows.isEmpty) Iterator.empty
     else {
-      val g = rehydrate(rows, new FloatSpace(metric))
+      val (g, layers) = hydrate(rows, lt, hmin, space)
       // small result sets complete before the discovery-rate signal means
       // anything — the reference disables quantile termination for k <= 10
       // (knn.cpp:481-483), mirrored here
       val term =
-        if (adaptive && k > 10)
+        if (adaptive && keep > 10)
           new Quantile.Termination(Quantile.L2ThresholdQuantile)
         else null
-      val counters = if (scoredAcc != null) new Array[Long](2) else null
-      val entry =
-        if (layers == null) 0
-        else descend(g, hydratedLayers(g, layers, hierMin), q, counters)
-      // vectors ride along (k per sub-graph): the automatic ANN route
-      // feeds candidates back under the original Sort, which recomputes
-      // exact distances from them
-      val r = g.searchBeam(q, math.max(ef, k), g.n,
-          i => allowed(g.ids(i)), term, counters, entry)
-      if (scoredAcc != null) scoredAcc.add(counters(1))
-      Iterator.range(0, math.min(k, r.size)).map { j =>
+      val counters = if (acc != null) new Array[Long](2) else null
+      val entry = descend(g, layers, q, counters)
+      val r = g.searchBeam(q, math.max(ef, keep), g.n,
+        i => allowed(g.ids(i)), term, counters, entry)
+      if (acc != null) acc.add(counters(1))
+      Iterator.range(0, math.min(keep, r.size)).map { j =>
         val i = r.id(j).toInt
-        (g.ids(i), r.value(j), g.vecs(i))
+        (g.ids(i), r.value(j), space.vector(g.vecs(i)))
       }
     }
   }
@@ -899,26 +1039,32 @@ object Hnsw {
     val qB = spark.sparkContext.broadcast(query)
     val f = allowed.getOrElse((_: Long) => true)
     val adapt = adaptiveTermination
-    val perPart = loadGraph(spark, indexPath)
+    val space = new FloatSpace(metric)
+    val perPart = loadGraph(spark, indexPath, space)
       .mapPartitions(it =>
-        searchSubGraph(it, qB.value, k, ef, metric, f, adapt)
+        walkPart(it, null, 0, space, qB.value, k, ef, f, adapt, null)
           .map(t => (t._1, t._2)))
     spark.createDataset(perPart).toDF(idCol, "dist")
       .orderBy(col("dist").asc, col(idCol).asc).limit(k)
   }
 
-  // Memoized routing sidecars: metric + IP augmentation bound M +
-  // (pid, centroid, radius) per sub-graph — a few rows per index, read
-  // once per session.
-  private final case class RouteInfo(metric: Knn.Metric,
-                                     ipMaxNorm: Option[Double],
-                                     rts: Array[(Int, Array[Float], Double)])
+  /** What one clustered index serves, read once per path beside its route
+    * sidecar and dropped by [[invalidate]]: the route rows (metric, IP
+    * augmentation bound M, per-pid centroid and radius) and the node space
+    * its graph holds — int8 codes when a `_qmodel` sidecar sits beside the
+    * graph, float vectors otherwise (every build sweeps both spaces'
+    * sidecars first, and [[loadGraph]] checks the graph column agrees).
+    * `slack` widens the routed prune: 0 for floats; for codes the worst
+    * quantization error (see [[qerrPath]]). */
+  private final case class Index[V](metric: Knn.Metric,
+                                    ipMaxNorm: Option[Double],
+                                    rts: Array[(Int, Array[Float], Double)],
+                                    space: Space[V], slack: Double)
 
-  private val routeCache =
-    scala.collection.concurrent.TrieMap.empty[String, RouteInfo]
+  private val indexes = TrieMap.empty[String, Index[_]]
 
-  private def routeInfo(spark: SparkSession, indexPath: String): RouteInfo =
-    routeCache.getOrElseUpdate(indexPath, {
+  private def index(spark: SparkSession, indexPath: String): Index[_] =
+    indexes.getOrElseUpdate(indexPath, {
       val raw = spark.read.parquet(resolveDirs(spark, indexPath)._2)
       // sidecars written before the metric column default to L2
       val withMetric = if (raw.columns.contains("metric")) raw
@@ -957,16 +1103,49 @@ object Hnsw {
           s"route sidecar at ${routePath(indexPath)} is metric=ip but " +
             "carries no augmentation bound max_norm — rebuild with " +
             "buildIndexClustered (which writes it) or restore the sidecar")
-      RouteInfo(metric, norms.headOption,
-        rows.map(r => (r.getInt(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
-          .sortBy(_._1))
+      val rts = rows.map(r =>
+        (r.getInt(0), r.getSeq[Float](1).toArray, r.getDouble(2))).sortBy(_._1)
+      val qmDir = new Path(sidecarDir(spark, indexPath, "qmodel"))
+      val fs = qmDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(qmDir))
+        Index(metric, norms.headOption, rts, new FloatSpace(metric), 0.0)
+      else {
+        val r = spark.read.parquet(qmDir.toString).head()
+        val qm = Quantize.QModel(r.getSeq[Float](r.fieldIndex("mins")).toArray,
+          r.getSeq[Float](r.fieldIndex("maxs")).toArray)
+        // the prune slack: max(model worst-case bound, observed max
+        // reconstruction error across appended segments). An empty/
+        // unreadable `_qerr` (a crash during the FIRST append's write,
+        // before any data file committed) reads as 0.0 — the model bound
+        // still serves, and the retried append rewrites the row (review
+        // r15-2)
+        val qerr = new Path(sidecarDir(spark, indexPath, "qerr"))
+        val seg =
+          if (fs.exists(qerr))
+            try {
+              val e = spark.read.parquet(qerr.toString)
+                .agg(max(col("max_err"))).head
+              if (e.isNullAt(0)) 0.0 else e.getDouble(0)
+            } catch { case _: org.apache.spark.sql.AnalysisException => 0.0 }
+          else 0.0
+        Index(metric, norms.headOption, rts, new CodeSpace(qm),
+          math.max(qm.l2ErrorBound, seg))
+      }
     })
 
-  private def routes(spark: SparkSession, indexPath: String)
-      : (Knn.Metric, Array[(Int, Array[Float], Double)]) = {
-    val ri = routeInfo(spark, indexPath)
-    (ri.metric, ri.rts)
-  }
+  /** Fail loudly when a float-only entry point meets a code graph (a
+    * rebuild may have changed the space the path holds). */
+  private def floatsOnly(ix: Index[_], indexPath: String, api: String,
+                         codeApi: String): Unit =
+    require(!ix.space.bound,
+      s"$api: $indexPath holds an int8 code graph " +
+        s"(buildIndexClusteredQuantized) — serve it with $codeApi")
+
+  /** The query a walk of `ix` scores: the bound-space query for codes (the
+    * space the codes, centroids and radii were all built in), the raw one
+    * for floats. */
+  private def walkQuery(ix: Index[_], query: Array[Float]): Array[Float] =
+    if (ix.space.bound) Quantize.bindQuerySide(ix.metric, query) else query
 
   private def metricName(m: Knn.Metric): String = m match {
     case Knn.L2     => "l2"
@@ -1010,6 +1189,14 @@ object Hnsw {
     * small `ef` it inherits beam-search recall within the probed
     * sub-graphs.
     *
+    * `hier = true` walks each probed sub-graph from its layer-hierarchy
+    * descent entry ([[buildHierarchy]]) instead of the lowest id — the
+    * reference's two-phase walk composed with the sub-graph routing; EXACT
+    * at full ef either way (entry choice cannot change an exhaustive walk).
+    * `hierMin` overrides the [[hierMinRows]] conf when >= 0 — the
+    * automatic route captures the threshold AT REGISTRATION (ADVICE r16).
+    * Fails loudly if the index has no hierarchy sidecar.
+    *
     * Scale shape: selected sub-graphs run as tasks of a
     * PartitionPruningRDD over the resident graph — unprobed partitions are
     * never scheduled (0 tasks, not "tasks that return nothing"), and each
@@ -1021,11 +1208,13 @@ object Hnsw {
                    eps: Double = 1e-4,
                    allowed: Option[Long => Boolean] = None,
                    adaptiveTermination: Boolean = false,
-                   scoredAcc: org.apache.spark.util.LongAccumulator = null)
+                   scoredAcc: LongAccumulator = null,
+                   hier: Boolean = false,
+                   hierMin: Int = -1)
       : (DataFrame, Int) = {
     import spark.implicits._
     val (rows, probed) = searchRoutedRaw(spark, indexPath, query, k, ef,
-      eps, allowed, adaptiveTermination, scoredAcc)
+      eps, allowed, adaptiveTermination, scoredAcc, hier, hierMin)
     (rows.map { case (id, dist, _) => (id, dist) }.toSeq.toDF(idCol, "dist"),
       probed)
   }
@@ -1035,7 +1224,11 @@ object Hnsw {
     * ANN route consults this at REGISTRATION so plan time stays
     * metadata-free. */
   def indexMetric(spark: SparkSession, indexPath: String): Knn.Metric =
-    routes(spark, indexPath)._1
+    index(spark, indexPath).metric
+
+  /** Whether the clustered index at `indexPath` holds int8 codes. */
+  private[graft] def holdsCodes(spark: SparkSession, indexPath: String): Boolean =
+    index(spark, indexPath).space.bound
 
   /** [[searchRouted]] returning raw (id, dist, vector) rows, best-first —
     * the form [[graft.plans.AnnRoutingRule]]'s graph family feeds back
@@ -1044,61 +1237,100 @@ object Hnsw {
     * explicit API's). `scoredAcc`, when non-null, accumulates distances
     * scored across the probed sub-graphs' walks — the probe-savings
     * measurement behind the adaptive-termination knob (BenchScale reports
-    * adaptive vs exact). */
+    * adaptive vs exact). Float graphs only: a code graph is served by
+    * [[searchQuantized]]. */
   def searchRoutedRaw(spark: SparkSession, indexPath: String,
                       query: Array[Float], k: Int, ef: Int,
                       eps: Double = 1e-4,
                       allowed: Option[Long => Boolean] = None,
                       adaptiveTermination: Boolean = false,
-                      scoredAcc: org.apache.spark.util.LongAccumulator = null)
+                      scoredAcc: LongAccumulator = null,
+                      hier: Boolean = false,
+                      hierMin: Int = -1)
       : (Array[(Long, Double, Array[Float])], Int) = {
-    val graph = loadGraph(spark, indexPath)
-    val qB = spark.sparkContext.broadcast(query)
-    // K3: the filter callback rides inside each probed sub-graph's beam
-    // walk; the triangle bound still holds a fortiori for the allowed
-    // subset, and < k survivors keeps the loop probing (over-probe)
-    val f = allowed.getOrElse((_: Long) => true)
-    val metric = routes(spark, indexPath)._1
-    val adapt = adaptiveTermination
-    val acc = scoredAcc
-    routedSchedule(spark, indexPath, query, k, eps, probes => {
-      val pruned = org.apache.spark.rdd.PartitionPruningRDD.create(
-        graph, probes.contains)
-      pruned.mapPartitions(it =>
-        searchSubGraph(it, qB.value, k, ef, metric, f, adapt, acc)).collect()
-    })
+    floatsOnly(index(spark, indexPath), indexPath, "searchRouted",
+      "searchQuantized")
+    walkRouted(spark, indexPath, query, k, ef, eps = eps, allowed = allowed,
+      adaptive = adaptiveTermination, scoredAcc = scoredAcc, hier = hier,
+      hierMin = hierMin)
   }
 
-  /** Driver-side PROBE-ROUND counter across the flat and quantized
-    * routed schedules (r20 telemetry, VERDICT r19: each round of the
-    * doubling schedule is one driver job launch — ~1 ms locally, ~100 ms
-    * of scheduling on a real cluster. BENCH_SF1's `probe_rounds` block
-    * pins rounds ≤ log₂(probed)+1 per search at the default
-    * probeBatch=1; a deployment sizes `spark.graft.graph.probeBatch`
-    * toward its expected probe count to collapse the rounds toward 1 —
-    * exactness is unaffected, over-probing only wastes walk work the
-    * triangle-bound stop rule tolerates). */
+  /** THE routed single-search walk, over whichever node space the index
+    * holds: floats keep their top k (id, dist, vector) rows; codes keep
+    * the k·`refine` coarse survivors (id, code-space dist, null) for an
+    * exact rescore by the caller. `allowed` gates the beam (K3): traversal
+    * crosses disallowed nodes, only allowed enter the result set, and the
+    * < k survivor case keeps the loop probing (over-probe). The walk
+    * collects before it returns, so its query broadcast is destroyed here
+    * rather than left to the ContextCleaner. */
+  private[graft] def walkRouted(spark: SparkSession, indexPath: String,
+                                query: Array[Float], k: Int, ef: Int,
+                                refine: Int = 8, eps: Double = 1e-4,
+                                allowed: Option[Long => Boolean] = None,
+                                adaptive: Boolean = false,
+                                scoredAcc: LongAccumulator = null,
+                                hier: Boolean = false, hierMin: Int = -1)
+      : (Array[(Long, Double, Array[Float])], Int) =
+    walkIn(spark, indexPath, index(spark, indexPath), query, k, ef, refine,
+      eps, allowed, adaptive, scoredAcc, hier, hierMin)
+
+  private def walkIn[V](spark: SparkSession, indexPath: String, ix: Index[V],
+                        query: Array[Float], k: Int, ef: Int, refine: Int,
+                        eps: Double, allowed: Option[Long => Boolean],
+                        adaptive: Boolean, acc: LongAccumulator,
+                        hier: Boolean, hierMin: Int)
+      : (Array[(Long, Double, Array[Float])], Int) = {
+    val space = ix.space
+    val keep = if (space.bound) Knn.refineKeep(k, refine) else k
+    val graph = loadGraph(spark, indexPath, space)
+    val layers =
+      if (hier) Some(loadLayers(spark, indexPath, graph.getNumPartitions))
+      else None
+    val f = allowed.getOrElse((_: Long) => true)
+    val hmin = if (hierMin >= 0) hierMin else hierMinRows(spark)
+    val qB = spark.sparkContext.broadcast(walkQuery(ix, query))
+    try routedSchedule(spark, ix, query, k, keep, eps, probes =>
+      prunedWalk(graph, layers, probes.contains) { (git, lt) =>
+        walkPart(git, lt, hmin, space, qB.value, keep, ef, f, adaptive, acc)
+      }.collect())
+    finally qB.destroy()
+  }
+
+  /** Driver-side PROBE-ROUND counter across the routed schedules (r20
+    * telemetry, VERDICT r19: each round of the doubling schedule is one
+    * driver job launch — ~1 ms locally, ~100 ms of scheduling on a real
+    * cluster. BENCH_SF1's `probe_rounds` block pins rounds ≤
+    * log₂(probed)+1 per search at the default probeBatch=1; a deployment
+    * sizes `spark.graft.graph.probeBatch` toward its expected probe count
+    * to collapse the rounds toward 1 — exactness is unaffected,
+    * over-probing only wastes walk work the triangle-bound stop rule
+    * tolerates). */
   val probeRounds = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** The centroid-ordered, triangle-bounded probe schedule shared by the
-    * flat routed walk ([[searchRoutedRaw]]) and the hierarchy walk
-    * ([[searchRoutedHier]]): probe sub-graphs in centroid-distance order
-    * with a doubling batch, drop sub-graphs whose lower bound exceeds the
-    * kth-best once k hits are held (they can never re-enter — the kth best
-    * only improves), stop when none remain. `probeFn` runs one probe round
-    * over a pid set and returns its (id, dist, vec) candidates. */
+  /** The centroid-ordered, triangle-bounded probe schedule of every routed
+    * walk: probe sub-graphs in centroid-distance order with a doubling
+    * batch, keep the best `keep` candidates, drop sub-graphs whose lower
+    * bound exceeds the kth-best + the index's prune slack once k hits are
+    * held (they can never re-enter — the kth best only improves), stop
+    * when none remain. Floats bound under the index metric with no slack;
+    * codes bound in L2 in the bound space with the quantization-error
+    * slack: true-kth ≤ coarse-kth + slack, and every node in a pruned
+    * sub-graph has true distance > that, so no true top-k member is lost
+    * to routing. `probeFn` runs one probe round over a pid set and returns
+    * its (id, dist, vec) candidates. */
   // k >= 1 at the schedule head (review r18-9): k = 0 reached
   // bestK.last on an empty Seq (and cands(k-1) = cands(-1) in the coarse
   // screen) — crash instead of an empty result; SQL LIMIT 0 never gets
   // here only because OptimizeLimitZero removes the plan first.
-  private def routedSchedule(spark: SparkSession, indexPath: String,
-                             query: Array[Float], k: Int, eps: Double,
+  private def routedSchedule(spark: SparkSession, ix: Index[_],
+                             query: Array[Float], k: Int, keep: Int,
+                             eps: Double,
                              probeFn: Set[Int] => Array[(Long, Double, Array[Float])])
       : (Array[(Long, Double, Array[Float])], Int) = {
     require(k >= 1, s"top-k needs k >= 1, got $k")
-    val ri = routeInfo(spark, indexPath)
-    val (metric, rts) = (ri.metric, ri.rts)
-    val boundQ = Quantize.bindQuerySide(metric, query)
+    val rts = ix.rts
+    val metric = if (ix.space.bound) Knn.L2 else ix.metric
+    val boundQ = Quantize.bindQuerySide(ix.metric, query)
     val centDist = rts.map(r => r._1 -> Ivf.scalarDist(Knn.L2, boundQ, r._2)).toMap
     val radius = rts.map(r => r._1 -> r._3).toMap
     val order = rts.map(_._1).sortBy(centDist)
@@ -1114,7 +1346,7 @@ object Hnsw {
     // with projection). Both bounds are true lower bounds — max is too.
     val qSumsq = query.map(x => x.toDouble * x).sum
     val qNorm = math.sqrt(qSumsq)
-    val ipM2 = ri.ipMaxNorm.map(m => m * m).getOrElse(0.0)
+    val ipM2 = ix.ipMaxNorm.map(m => m * m).getOrElse(0.0)
     val dotQC: Map[Int, Double] =
       if (metric != Knn.IP) Map.empty
       else rts.map { r =>
@@ -1141,97 +1373,81 @@ object Hnsw {
     // (HnswSpec pins identical exact results with fewer jobs).
     var batch = spark.conf.getOption("spark.graft.graph.probeBatch")
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
-    var bestK: Seq[(Double, Long, Array[Float])] = Nil // (dist, id, vec) asc
+    var best: Seq[(Double, Long, Array[Float])] = Nil // (dist, id, vec) asc
     // Once k hits are held, sub-graphs whose lower bound exceeds the kth
     // best are dropped from the schedule permanently (ADVICE r8: the kth
     // best only improves, so they can never re-enter) — the next round
     // schedules only still-relevant sub-graphs, not the blind prefix.
     // <= keeps equal-bound sub-graphs probed (the tie rule).
     while ({
-      if (bestK.size >= k)
-        remaining = remaining.filter(j => bound(j) <= bestK.last._1)
+      if (best.size >= k) {
+        val kth = best(k - 1)._1 + ix.slack
+        remaining = remaining.filter(j => bound(j) <= kth)
+      }
       remaining.nonEmpty
     }) {
       val probes = remaining.take(batch).toSet
       val rows = probeFn(probes).map { case (id, d, vec) => (d, id, vec) }
       // sortBy (dist, id): the vector slot has no ordering
-      bestK = (bestK ++ rows).sortBy(t => (t._1, t._2)).take(k)
+      best = (best ++ rows).sortBy(t => (t._1, t._2)).take(keep)
       probed += probes.size
       probeRounds.incrementAndGet()
       remaining = remaining.drop(batch)
       batch *= 2
     }
-    (bestK.map { case (dist, id, vec) => (id, dist, vec) }.toArray, probed)
+    (best.map { case (dist, id, vec) => (id, dist, vec) }.toArray, probed)
   }
 
   /** WALK TELEMETRY (r13 VERDICT #5 — turning the flat-NSW-vs-hierarchy
     * decision into a number): beam-walk every sub-graph for one query and
-    * return per-sub-graph (pid, size, nodesExpanded, distancesScored).
-    * "Expanded" counts dequeued nodes whose adjacency was scanned — the
-    * hops a walk takes; the Hnsw scaladoc's claim that the layer
+    * return per-sub-graph (pid, size, nodesExpanded, distancesScored), in
+    * whichever node space the index holds (the quantized descent pays
+    * int8 distance costs, so its crossover economics are measured too —
+    * r17). "Expanded" counts dequeued nodes whose adjacency was scanned —
+    * the hops a walk takes; the Hnsw scaladoc's claim that the layer
     * hierarchy "buys one hop" at our sub-graph sizes predicts expansion
     * grows ~logarithmically with sub-graph size. BenchScale measures this
     * at two sizes over the same 10× corpus and pins a sub-logarithmic
     * growth ceiling; super-logarithmic growth there is the signal to add
-    * the entry-point layer. */
+    * the entry-point layer. `hier = true` always descends (no
+    * [[hierMinRows]] gate) and both counters INCLUDE the descent's hops
+    * and scores — the honest comparison against the flat walk (BENCH_SF1
+    * hier_telemetry reports both). */
   def walkStats(spark: SparkSession, indexPath: String,
-                query: Array[Float], k: Int, ef: Int)
-      : Array[(Int, Int, Long, Long)] = {
-    val (metric, _) = routes(spark, indexPath)
-    val qB = spark.sparkContext.broadcast(query)
-    loadGraph(spark, indexPath).mapPartitions(it =>
-      walkOne(it.toArray, null, qB.value, k, ef, metric)).collect()
-  }
+                query: Array[Float], k: Int, ef: Int,
+                hier: Boolean = false)
+      : Array[(Int, Int, Long, Long)] =
+    statsIn(spark, indexPath, index(spark, indexPath), query, k, ef, hier)
 
-  /** One partition's telemetry walk — the shared body of [[walkStats]]
-    * and [[walkStatsHier]] (`lt` null = flat lowest-id entry). */
-  private def walkOne(rows: Array[(Int, GraphRow)],
-                      lt: Iterator[(Int, LayerRow)],
-                      q: Array[Float], k: Int, ef: Int, metric: Knn.Metric)
-      : Iterator[(Int, Int, Long, Long)] =
-    if (rows.isEmpty) Iterator.empty
-    else {
-      val pid = rows.head._1
-      val g = rehydrate(rows.map(_._2), new FloatSpace(metric))
-      val c = new Array[Long](2)
-      val entry = if (lt == null) 0 else descend(g, hydratedLayers(g, lt), q, c)
-      g.searchBeam(q, math.max(ef, k), g.n, counters = c, entry = entry)
-      Iterator.single((pid, g.n, c(0), c(1)))
-    }
-
-  /** [[walkStats]]/[[walkStatsHier]] for a CODE-space index (r17,
-    * VERDICT r16 #7 — the quantized descent pays ADC/int8 distance costs,
-    * not float ones, so its crossover economics are measured separately):
-    * per-sub-graph (pid, size, nodesExpanded, distancesScored) of the
-    * quantized beam, both counters including the descent's hops/scores
-    * when `hier`. */
+  /** [[walkStats]] — kept as the name the code-space telemetry callers use. */
   def walkStatsQuantized(spark: SparkSession, indexPath: String,
                          query: Array[Float], k: Int, ef: Int,
                          hier: Boolean = false)
+      : Array[(Int, Int, Long, Long)] =
+    walkStats(spark, indexPath, query, k, ef, hier)
+
+  private def statsIn[V](spark: SparkSession, indexPath: String, ix: Index[V],
+                         query: Array[Float], k: Int, ef: Int, hier: Boolean)
       : Array[(Int, Int, Long, Long)] = {
-    val (metric, _) = routes(spark, indexPath)
-    val qm = qmodel(spark, indexPath)
-    val bq = Quantize.bindQuerySide(metric, query)
-    val graph = loadQuantizedGraph(spark, indexPath)
-    val qB = spark.sparkContext.broadcast((qm, bq))
+    val space = ix.space
+    val graph = loadGraph(spark, indexPath, space)
+    val layers =
+      if (hier) Some(loadLayers(spark, indexPath, graph.getNumPartitions))
+      else None
     val efEff = math.max(ef, k)
-    val one = (rows: Array[(Int, QGraphRow)], lt: Iterator[(Int, LayerRow)]) =>
+    val qB = spark.sparkContext.broadcast(walkQuery(ix, query))
+    try prunedWalk(graph, layers, _ => true) { (git, lt) =>
+      val rows = git.toArray
       if (rows.isEmpty) Iterator.empty[(Int, Int, Long, Long)]
       else {
-        val (mm, q) = qB.value
-        val pid = rows.head._1
-        val g = rehydrate(rows.map(_._2), new CodeSpace(mm))
+        val (g, lyr) = hydrate(rows, lt, 0, space)
         val c = new Array[Long](2)
-        val entry =
-          if (lt == null) 0 else descend(g, hydratedLayers(g, lt), q, c)
-        g.searchBeam(q, efEff, g.n, counters = c, entry = entry)
-        Iterator.single((pid, g.n, c(0), c(1)))
+        val entry = descend(g, lyr, qB.value, c)
+        g.searchBeam(qB.value, efEff, g.n, counters = c, entry = entry)
+        Iterator.single((rows.head._1, g.n, c(0), c(1)))
       }
-    if (hier) {
-      val layers = loadLayers(spark, indexPath, graph.getNumPartitions)
-      graph.zipPartitions(layers, preservesPartitioning = true)(
-        (git, lit) => one(git.toArray, lit)).collect()
-    } else graph.mapPartitions(it => one(it.toArray, null)).collect()
+    }.collect()
+    finally qB.destroy()
   }
 
   // ==================== Layer hierarchy =====================
@@ -1247,24 +1463,17 @@ object Hnsw {
   // a fixed entry grows with sub-graph size where the descent's does not.
   // The hierarchy is therefore an OPTIONAL sidecar (`<path>_layers`, or
   // `layers/` inside a committed generation): built per-partition from the
-  // finished layer-0 table, levels drawn as a deterministic hash of the id
-  // (rebuild-stable), and consumed by [[searchRoutedHier]], which descends
-  // the layers to pick the beam entry. Layer-0 storage, every existing
-  // gate, and the exact full-ef contract are untouched (entry choice
-  // cannot change an exhaustive walk); sub-graphs appended after the
-  // hierarchy build simply have no layer rows and fall back to the flat
-  // entry — graceful, never wrong.
+  // finished layer-0 table in the index's node space, levels drawn as a
+  // deterministic hash of the id (rebuild-stable), and consumed by the
+  // `hier = true` walks, which descend the layers to pick the beam entry.
+  // Layer-0 storage, every existing gate, and the exact full-ef contract
+  // are untouched (entry choice cannot change an exhaustive walk);
+  // sub-graphs appended after the hierarchy build simply have no layer
+  // rows and fall back to the flat entry — graceful, never wrong.
 
   /** Sidecar location of the layer hierarchy of a graph index (legacy
     * layout; a [[compactClustered]] generation holds a `layers/` subdir). */
-  def layersPath(indexPath: String): String = indexPath + "_layers"
-
-  private[vector] def resolveLayersDir(spark: SparkSession, indexPath: String): String = {
-    val (g, _) = resolveDirs(spark, indexPath)
-    if (g == indexPath) layersPath(indexPath)
-    else new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(g).getParent, "layers").toString
-  }
+  def layersPath(indexPath: String): String = baseDir(indexPath, "layers")
 
   private val layerSchema = StructType(Seq(
     StructField("pid", IntegerType),
@@ -1289,129 +1498,80 @@ object Hnsw {
     math.min(31.0, math.floor(-math.log(u) * mL)).toInt
   }
 
-  /** Build the layer-hierarchy sidecar for a CLUSTERED graph index (the
-    * metric comes from its route sidecar): one pass over the graph table,
+  /** Build the layer-hierarchy sidecar for a CLUSTERED graph index, in the
+    * node space its graph holds (codes build and walk their upper layers
+    * in the same [[CodeSpace]] kernel as the layer-0 beam — the
+    * reference's hierarchy and quantizer compose the same way, so the
+    * hierarchy adds no float residency): one pass over the graph table,
     * one task per sub-graph — each draws levels from the node ids, builds
     * an NSW over every level>=l subset with the SAME diversity heuristic +
     * chain edges as layer 0, and emits (pid, level, id, neighbors) rows
     * for levels >= 1. Safe to run on a live index: readers that loaded the
-    * flat graph are unaffected, and [[searchRoutedHier]] picks the sidecar
-    * up on its next load. [[compactClustered]] rebuilds the layers INSIDE
-    * the new generation when the superseded one had them (r15 VERDICT #7
-    * — a hier registration survives OPTIMIZE without an operator step),
-    * and [[appendSegment]] extends the sidecar to its new pids (r16 — the
+    * flat graph are unaffected, and hier walks pick the sidecar up on
+    * their next load. Compactions rebuild the layers INSIDE the new
+    * generation when the superseded one had them (r15 VERDICT #7 — a hier
+    * registration survives OPTIMIZE without an operator step), and
+    * [[appendSegment]] extends the sidecar to its new pids (r16 — the
     * hierarchy follows ingest; a crash mid-append leaves the new pids on
     * the flat-entry fallback, still exact). */
   def buildHierarchy(spark: SparkSession, indexPath: String,
                      p: Params = Params()): Unit = {
-    val (graphDir, _) = resolveDirs(spark, indexPath)
-    val metric = routes(spark, indexPath)._1
-    buildLayersFlatTo(spark, graphDir, metric,
-      resolveLayersDir(spark, indexPath), p)
+    buildLayersTo(spark, resolveDirs(spark, indexPath)._1,
+      index(spark, indexPath).space, sidecarDir(spark, indexPath, "layers"), p)
     residentL.remove(indexPath).foreach(_.unpersist(false))
   }
 
   /** [[buildHierarchy]] against explicit dirs — shared by the live-index
-    * build and [[compactClustered]]'s in-generation rebuild. */
-  private def buildLayersFlatTo(spark: SparkSession, graphDir: String,
-                                metric: Knn.Metric, layersDir: String,
-                                p: Params): Unit = {
-    import spark.implicits._
+    * build and [[rebuildClustered]]'s in-generation rebuild. An empty graph
+    * gets an empty (but present) sidecar, so hier search over the empty
+    * index stays consistent instead of failing the missing-sidecar
+    * require. */
+  private def buildLayersTo[V](spark: SparkSession, graphDir: String,
+                               space: Space[V], layersDir: String,
+                               p: Params): Unit = {
     // mL = 1/ln(m): the geometric layer-thinning math (and the <1/(m-1)
     // edge-overhead claim) assume m >= 2 — m = 1 draws level 31 for EVERY
     // node, 31 full duplicate NSWs per sub-graph (ADVICE r16-3)
     require(p.m >= 2, s"hierarchy build requires m >= 2 (got ${p.m})")
     val df = spark.read.parquet(graphDir)
-      .select(col("pid"), col("id"), col("vec"))
-    val maxPidRow = df.agg(max(col("pid"))).head
-    if (maxPidRow.isNullAt(0)) {
-      // empty graph: write an empty (but present) sidecar so hier search
-      // over the empty index stays consistent instead of failing the
-      // missing-sidecar require
-      graft.tables.Writer.write(
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], layerSchema),
-        layersDir, sortBy = Seq("pid", "level", "id"))
-      return
-    }
-    val maxPid = maxPidRow.getInt(0)
-    val keyed = df.as[(Int, Long, Array[Float])]
-      .rdd.map(t => (t._1, (t._2, t._3)))
-      .partitionBy(new PidPartitioner(maxPid + 1))
-    writeLayersFrom(spark, keyed, new FloatSpace(metric), p, layersDir,
-      maxPid + 1)
+    val maxPid = df.agg(max(col("pid"))).head
+    val numParts = if (maxPid.isNullAt(0)) 0 else maxPid.getInt(0) + 1
+    val rows =
+      if (numParts == 0) spark.sparkContext.emptyRDD[Row]
+      else layerRows(graphRows(df, space)
+        .map { case (pid, (id, v, _)) => (pid, (id, v)) }
+        .partitionBy(new PidPartitioner(numParts)), 0, space, p)
+    graft.tables.Writer.write(spark.createDataFrame(rows, layerSchema),
+      layersDir, sortBy = Seq("pid", "level", "id"),
+      files = math.max(numParts, 1))
   }
 
-  /** [[buildHierarchy]] for a QUANTIZED clustered graph
-    * ([[buildIndexClusteredQuantized]]): the upper layers are built and
-    * walked in CODE space (the same [[CodeSpace]] kernel as the layer-0
-    * beam — the reference's hierarchy and quantizer compose the same way,
-    * knn/knn.cpp:105-135 hands hnswlib the quantized space and hnswlib
-    * layers it), so the hierarchy adds no float residency. */
-  def buildHierarchyQuantized(spark: SparkSession, indexPath: String,
-                              p: Params = Params()): Unit = {
-    val graphDir = resolveQuantizedDirs(spark, indexPath)._1
-    val qm = qmodel(spark, indexPath)
-    buildLayersQuantizedTo(spark, graphDir, qm,
-      resolveLayersDir(spark, indexPath), p)
-    residentL.remove(indexPath).foreach(_.unpersist(false))
-  }
-
-  /** [[buildHierarchyQuantized]] against explicit dirs — shared by the
-    * live-index build and [[compactQuantized]]'s in-generation rebuild. */
-  private def buildLayersQuantizedTo(spark: SparkSession, graphDir: String,
-                                     qm: Quantize.QModel, layersDir: String,
-                                     p: Params): Unit = {
-    import spark.implicits._
+  /** Layer rows of every sub-graph of `keyed` (one Spark partition per
+    * sub-graph, pid = `offset` + partition index) — the per-partition
+    * layer builder of [[buildLayersTo]] and the segment-append extension. */
+  private def layerRows[V](keyed: RDD[(Int, (Long, V))], offset: Int,
+                           space: Space[V], p: Params): RDD[Row] = {
     require(p.m >= 2, s"hierarchy build requires m >= 2 (got ${p.m})")
-    val df = spark.read.parquet(graphDir)
-      .select(col("pid"), col("id"), col("qcode"))
-    val maxPidRow = df.agg(max(col("pid"))).head
-    if (maxPidRow.isNullAt(0)) {
-      graft.tables.Writer.write(
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], layerSchema),
-        layersDir, sortBy = Seq("pid", "level", "id"))
-      return
-    }
-    val maxPid = maxPidRow.getInt(0)
-    val keyed = df.as[(Int, Long, Array[Byte])]
-      .rdd.map(t => (t._1, (t._2, t._3)))
-      .partitionBy(new PidPartitioner(maxPid + 1))
-    writeLayersFrom(spark, keyed, new CodeSpace(qm), p, layersDir, maxPid + 1)
-  }
-
-  /** The shared per-partition layer builder: draw levels from the ids,
-    * build an NSW over every level>=l subset through the space kernel
-    * (same diversity heuristic + chain edges as layer 0), write
-    * (pid, level, id, neighbors) rows for levels >= 1. */
-  private def writeLayersFrom[V: scala.reflect.ClassTag](
-      spark: SparkSession,
-      keyed: org.apache.spark.rdd.RDD[(Int, (Long, V))],
-      space: Space[V], p: Params, layersDir: String,
-      numParts: Int): Unit = {
-    val m = p.m
-    val efC = p.efC
-    val rowRdd = keyed.mapPartitionsWithIndex { (pid, it) =>
+    keyed.mapPartitionsWithIndex { (ci, it) =>
       val nodes = it.map(_._2).toArray.sortBy(_._1)
       if (nodes.isEmpty) Iterator.empty
-      else layerRowsFor(nodes, pid, space, m, efC)
+      else layerRowsFor(nodes, offset + ci, space, p.m, p.efC)
     }
-    graft.tables.Writer.write(spark.createDataFrame(rowRdd, layerSchema),
-      layersDir, sortBy = Seq("pid", "level", "id"), files = numParts)
   }
 
-  /** Layer rows (levels >= 1) for ONE sub-graph's id-sorted nodes — the
-    * shared kernel of [[writeLayersFrom]] and the segment-append
-    * extension. */
-  private[vector] def layerRowsFor[V: scala.reflect.ClassTag](
-      nodes: Array[(Long, V)], pid: Int, space: Space[V], m: Int,
-      efC: Int): Iterator[Row] = {
+  /** Layer rows (levels >= 1) for ONE sub-graph's id-sorted nodes: draw
+    * levels from the ids, build an NSW over every level>=l subset through
+    * the space kernel. */
+  private[vector] def layerRowsFor[V](nodes: Array[(Long, V)], pid: Int,
+                                      space: Space[V], m: Int,
+                                      efC: Int): Iterator[Row] = {
     val levels = nodes.map(n => nodeLevel(n._1, m))
     val maxL = levels.max
     (1 to maxL).iterator.flatMap { l =>
       val subset = nodes.indices.filter(levels(_) >= l)
       val sub = new SubGraph[V](
         subset.map(i => nodes(i)._1).toArray,
-        subset.map(i => nodes(i)._2).toArray, space)
+        subset.map(i => nodes(i)._2).toArray(space.tag), space)
       sub.build(m, efC)
       (0 until sub.n).iterator.map { i =>
         Row(pid, l, sub.ids(i), sub.neighborIds(i))
@@ -1419,34 +1579,11 @@ object Hnsw {
     }
   }
 
-  /** THE HIERARCHY FOLLOWS INGEST (r16): when an index already carries a
-    * layers sidecar, its segment appends extend it — layer rows for the
-    * new pids append after the graph+route rows, so hier walks descend
-    * fresh segments too instead of falling back to flat entries until the
-    * next full build. Deterministic (levels hash from ids, the same rows
-    * a full rebuild would emit for these pids) and crash-safe: any crash
-    * before this append leaves the new pids on the flat-entry fallback,
-    * never a mismatched descent. */
-  private def appendSegmentLayers[V: scala.reflect.ClassTag](
-      spark: SparkSession,
-      keyed: org.apache.spark.rdd.RDD[(Int, (Long, V))],
-      offset: Int, space: Space[V], p: Params, indexPath: String): Unit = {
-    val layersDir = resolveLayersDir(spark, indexPath)
-    val m = p.m
-    val efC = p.efC
-    require(m >= 2, s"hierarchy build requires m >= 2 (got $m)")
-    val rowRdd = keyed.mapPartitionsWithIndex { (ci, it) =>
-      val nodes = it.map(_._2).toArray.sortBy(_._1)
-      if (nodes.isEmpty) Iterator.empty
-      else layerRowsFor(nodes, offset + ci, space, m, efC)
-    }
-    spark.createDataFrame(rowRdd, layerSchema)
-      .write.mode("append").parquet(layersDir)
-  }
-
   private[vector] type LayerRow = (Int, Long, Array[Long]) // (level, id, neighbors)
-  private val residentL =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.rdd.RDD[(Int, LayerRow)]]
+  /** Rehydrated layers, levels DESCENDING: (level, member layer-0 indices
+    * ascending, adjacency as layer-0 indices). */
+  private type Layers = Array[(Int, Array[Int], Array[Array[Int]])]
+  private val residentL = TrieMap.empty[String, RDD[(Int, LayerRow)]]
 
   /** Resident layer rows, co-partitioned with [[loadGraph]]'s RDD
     * (`numParts` = the graph's partition count, so the two zip). Pids
@@ -1454,12 +1591,12 @@ object Hnsw {
     * crash before a segment's layer append) are empty partitions —
     * flat-entry fallback. */
   private def loadLayers(spark: SparkSession, indexPath: String,
-                         numParts: Int): org.apache.spark.rdd.RDD[(Int, LayerRow)] =
+                         numParts: Int): RDD[(Int, LayerRow)] =
     residentL.synchronized {
       residentL.getOrElseUpdate(indexPath, {
         import spark.implicits._
-        val dir = resolveLayersDir(spark, indexPath)
-        val p = new org.apache.hadoop.fs.Path(dir)
+        val dir = sidecarDir(spark, indexPath, "layers")
+        val p = new Path(dir)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         require(fs.exists(p),
           s"no layer hierarchy at $dir — run Hnsw.buildHierarchy first " +
@@ -1469,20 +1606,17 @@ object Hnsw {
         val l = df.as[(Int, Int, Long, Array[Long])]
           .rdd.map(t => (t._1, (t._2, t._3, t._4)))
           .partitionBy(new PidPartitioner(numParts))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .persist(MEMORY_AND_DISK)
         l.count()
         l
       })
     }
 
   /** Rehydrate one partition's layer rows against the layer-0 id→index
-    * map: levels DESCENDING, each as (level, member layer-0 indices
-    * ascending, adjacency as layer-0 indices). Ascending-id layer-0 arrays
-    * make id order == index order, so members stay binary-searchable. A
-    * dangling id fails loudly (same contract as [[rehydrate]]). */
-  private def rehydrateLayers(rows: Array[LayerRow],
-                              idx: Long => Int)
-      : Array[(Int, Array[Int], Array[Array[Int]])] =
+    * map. Ascending-id layer-0 arrays make id order == index order, so
+    * members stay binary-searchable. A dangling id fails loudly (same
+    * contract as [[rehydrate]]). */
+  private def rehydrateLayers(rows: Array[LayerRow], idx: Long => Int): Layers =
     rows.groupBy(_._1).toArray.sortBy(-_._1).map { case (lvl, rs) =>
       val sorted = rs.sortBy(_._2)
       (lvl, sorted.map(r => idx(r._2)), sorted.map(_._3.map(idx(_))))
@@ -1502,7 +1636,7 @@ object Hnsw {
     * keep the same beam-recall contract either way). Conf
     * `spark.graft.graph.hierMinRows`; 0 forces the descent everywhere
     * (gates/specs pinning the descent itself). Telemetry
-    * ([[walkStatsHier]]) always descends — it measures the descent. */
+    * (`walkStats(hier = true)`) always descends — it measures the descent. */
   val DefaultHierMinRows: Int = 24576
 
   def hierMinRows(spark: SparkSession): Int =
@@ -1514,16 +1648,14 @@ object Hnsw {
     * hier walk site. `minRows` is the [[hierMinRows]] engagement gate
     * (empty layers = flat entry, descent skipped and not counted). */
   private[vector] def hydratedLayers[V](g: SubGraph[V],
-                                lt: Iterator[(Int, LayerRow)],
-                                minRows: Int = 0)
-      : Array[(Int, Array[Int], Array[Array[Int]])] =
+                                        lt: Iterator[(Int, LayerRow)],
+                                        minRows: Int = 0): Layers =
     if (g.n < minRows) Array.empty
     else rehydrateLayers(lt.map(_._2).toArray, { id =>
       val i = g.indexOf(id)
       if (i < 0) throw new IllegalStateException(
         s"layer row references id $id absent from its sub-graph — stale " +
-          "hierarchy sidecar; rebuild with buildHierarchy " +
-          "(buildHierarchyQuantized for code-space indexes)")
+          "hierarchy sidecar; rebuild with buildHierarchy")
       i
     })
 
@@ -1536,22 +1668,21 @@ object Hnsw {
   /** Schedule `body` over the probed partitions, zipping the layer RDD in
     * when the hier path is on (`body` receives null layer iterators on the
     * flat path) — the ONE definition of the graph×layers pruning
-    * composition shared by the routed walk, the quantized coarse pass,
-    * and both batch joins (review r15-5). */
-  private def prunedWalk[R, T: scala.reflect.ClassTag](
-      graph: org.apache.spark.rdd.RDD[(Int, R)],
-      layersOpt: Option[org.apache.spark.rdd.RDD[(Int, LayerRow)]],
+    * composition shared by the routed walks, the telemetry walk and the
+    * in-budget batch join (review r15-5). */
+  private def prunedWalk[R, T: ClassTag](
+      graph: RDD[(Int, R)], layersOpt: Option[RDD[(Int, LayerRow)]],
       pred: Int => Boolean)(
       body: (Iterator[(Int, R)], Iterator[(Int, LayerRow)]) => Iterator[T])
-      : org.apache.spark.rdd.RDD[T] =
+      : RDD[T] =
     layersOpt match {
       case Some(layers) =>
-        org.apache.spark.rdd.PartitionPruningRDD.create(
+        PartitionPruningRDD.create(
           graph.zipPartitions(layers, preservesPartitioning = true)(
             (a, b) => body(a, b)),
           pred)
       case None =>
-        org.apache.spark.rdd.PartitionPruningRDD.create(graph, pred)
+        PartitionPruningRDD.create(graph, pred)
           .mapPartitions(it => body(it, null))
     }
 
@@ -1563,14 +1694,12 @@ object Hnsw {
     * — but a task whose query slice is empty returns before rehydrating
     * anything, and at over-budget batch sizes every sub-graph is assigned
     * work anyway. */
-  private def zipWalk[R: scala.reflect.ClassTag,
-                      T: scala.reflect.ClassTag](
-      graph: org.apache.spark.rdd.RDD[(Int, R)],
-      layersOpt: Option[org.apache.spark.rdd.RDD[(Int, LayerRow)]],
-      qAssign: org.apache.spark.rdd.RDD[(Int, (Long, Array[Float]))])(
+  private def zipWalk[R: ClassTag, T: ClassTag](
+      graph: RDD[(Int, R)], layersOpt: Option[RDD[(Int, LayerRow)]],
+      qAssign: RDD[(Int, (Long, Array[Float]))])(
       body: (Iterator[(Int, R)], Iterator[(Int, LayerRow)],
              Array[(Long, Array[Float])]) => Iterator[T])
-      : org.apache.spark.rdd.RDD[T] =
+      : RDD[T] =
     layersOpt match {
       case Some(layers) =>
         graph.zipPartitions(layers, qAssign, preservesPartitioning = true)(
@@ -1580,31 +1709,36 @@ object Hnsw {
           (g, q) => body(g, null, q.map(_._2).toArray))
     }
 
+  /** A query's `nprobe` nearest sub-graphs by centroid distance in the
+    * bound space, each paired with (qid, the vector the walk consumes —
+    * the bound-space one for codes, the raw one for floats). */
+  private def probesOf(cents: Array[(Int, Array[Float])], metric: Knn.Metric,
+                       nprobe: Int, carryBound: Boolean)
+                      (qid: Long, qv: Array[Float])
+      : Array[(Int, (Long, Array[Float]))] = {
+    val bq = Quantize.bindQuerySide(metric, qv)
+    val carry = if (carryBound) bq else qv
+    cents.map(r => (Ivf.scalarDist(Knn.L2, bq, r._2), r._1))
+      .sortBy(identity).take(nprobe)
+      .map { case (_, pid) => (pid, (qid, carry)) }
+  }
+
   /** Distributed pid assignment for the over-budget batch joins: each
-    * query row maps to its `nprobe` nearest sub-graphs by centroid
-    * distance in the bound space (`carry` picks what the walk consumes —
-    * the raw vector for the float graph, the bound-space vector for the
-    * code graph) and shuffles by pid to co-locate with the resident
-    * graph's partitioning. Centroids broadcast (≤ nlist rows); pids
-    * outside the graph's partition range (route rows of an empty appended
-    * cluster) drop — they have no corpus vectors. */
-  private def assignQueriesByPid(qRdd: org.apache.spark.rdd.RDD[(Long, Array[Float])],
+    * query row maps to its [[probesOf]] sub-graphs and shuffles by pid to
+    * co-locate with the resident graph's partitioning. Centroids broadcast
+    * (≤ nlist rows); pids outside the graph's partition range (route rows
+    * of an empty appended cluster) drop — they have no corpus vectors. */
+  private def assignQueriesByPid(qRdd: RDD[(Long, Array[Float])],
                                  spark: SparkSession, metric: Knn.Metric,
-                                 rts: Seq[(Int, Array[Float], Double)],
+                                 cents: Array[(Int, Array[Float])],
                                  nprobe: Int, numParts: Int,
                                  carryBound: Boolean)
-      : org.apache.spark.rdd.RDD[(Int, (Long, Array[Float]))] = {
-    val rtsB = spark.sparkContext.broadcast(
-      rts.map(r => (r._1, r._2)).toArray)
+      : RDD[(Int, (Long, Array[Float]))] = {
+    val centsB = spark.sparkContext.broadcast(cents)
     qRdd
       .flatMap { case (qid, qv) =>
-        val bq = Quantize.bindQuerySide(metric, qv)
-        val carry = if (carryBound) bq else qv
-        rtsB.value.iterator
-          .map(r => (Ivf.scalarDist(Knn.L2, bq, r._2), r._1))
-          .toArray.sortBy(identity).take(nprobe).iterator
-          .collect { case (_, pid) if pid < numParts =>
-            (pid, (qid, carry)) }
+        probesOf(centsB.value, metric, nprobe, carryBound)(qid, qv)
+          .filter(_._1 < numParts)
       }
       .partitionBy(new PidPartitioner(numParts))
   }
@@ -1615,12 +1749,12 @@ object Hnsw {
     * drop a layer — a node at level l is a member of every lower layer, so
     * the position carries down. Deterministic: ties move to the LOWER
     * index, and (dist, index) strictly decreases lexicographically, so the
-    * walk terminates. Returns the layer-0 beam entry; `counters` receives
-    * (hops, distances scored) like the beam's. */
-  private[vector] def descend[V](g: SubGraph[V],
-                         layers: Array[(Int, Array[Int], Array[Array[Int]])],
-                         q: Array[Float],
-                         counters: Array[Long]): Int = {
+    * walk terminates. Returns the layer-0 beam entry (node 0 — the flat
+    * entry — for empty layers); `counters` receives (hops, distances
+    * scored) like the beam's. */
+  private[vector] def descend[V](g: SubGraph[V], layers: Layers,
+                                 q: Array[Float],
+                                 counters: Array[Long]): Int = {
     if (layers.isEmpty) return 0
     descents.incrementAndGet()
     var cur = layers.head._2(0)
@@ -1639,7 +1773,7 @@ object Hnsw {
         if (pos < 0) throw new IllegalStateException(
           s"hierarchy layer misses node $cur present in the layer above " +
             "— stale or corrupt hierarchy sidecar; rebuild with " +
-            "buildHierarchy (buildHierarchyQuantized for code-space indexes)")
+            "buildHierarchy")
         val nbrs = adj(pos)
         var i = 0
         while (i < nbrs.length) {
@@ -1656,89 +1790,16 @@ object Hnsw {
     cur
   }
 
-  /** [[searchRouted]] through the layer hierarchy: the same centroid-
-    * ordered, triangle-bounded probe schedule, but each probed sub-graph
-    * descends its upper layers to a near-optimal beam entry instead of
-    * starting at the lowest id — the reference's two-phase walk
-    * (knn/knn.cpp:455-537) composed with the engine's sub-graph routing.
-    * EXACT at full ef (entry choice cannot change an exhaustive walk — the
-    * oracle-checked configuration); at small ef the descent buys its value
-    * at scale, where a fixed entry's localization cost grows with
-    * sub-graph size and the descent's does not. Fails loudly if the index
-    * has no hierarchy sidecar. */
-  def searchRoutedHier(spark: SparkSession, indexPath: String, idCol: String,
-                       query: Array[Float], k: Int, ef: Int,
-                       eps: Double = 1e-4,
-                       allowed: Option[Long => Boolean] = None,
-                       adaptiveTermination: Boolean = false,
-                       scoredAcc: org.apache.spark.util.LongAccumulator = null,
-                       hierMin: Int = -1)
-      : (DataFrame, Int) = {
-    import spark.implicits._
-    val (rows, probed) = searchRoutedHierRaw(spark, indexPath, query, k, ef,
-      eps, allowed, adaptiveTermination, scoredAcc, hierMin)
-    (rows.map { case (id, dist, _) => (id, dist) }.toSeq.toDF(idCol, "dist"),
-      probed)
-  }
-
-  /** [[searchRoutedHier]] returning raw (id, dist, vector) rows — the form
-    * the automatic route's [[graft.plans.GraphCandidates]] leaf feeds back
-    * under the original Sort/Limit (exactly as [[searchRoutedRaw]]).
-    * `hierMin` overrides the [[hierMinRows]] conf when >= 0 — the
-    * automatic route captures the threshold AT REGISTRATION (ADVICE r16:
-    * a gate forcing the descent via the global conf would otherwise have
-    * to leave it set for the leaf's later executions, leaking
-    * forced-descent behavior into the whole shared session). */
-  def searchRoutedHierRaw(spark: SparkSession, indexPath: String,
-                          query: Array[Float], k: Int, ef: Int,
-                          eps: Double = 1e-4,
-                          allowed: Option[Long => Boolean] = None,
-                          adaptiveTermination: Boolean = false,
-                          scoredAcc: org.apache.spark.util.LongAccumulator = null,
-                          hierMin: Int = -1)
-      : (Array[(Long, Double, Array[Float])], Int) = {
-    val graph = loadGraph(spark, indexPath)
-    val layers = loadLayers(spark, indexPath, graph.getNumPartitions)
-    val qB = spark.sparkContext.broadcast(query)
-    val f = allowed.getOrElse((_: Long) => true)
-    val metric = routes(spark, indexPath)._1
-    val adapt = adaptiveTermination
-    val acc = scoredAcc
-    val hmin = if (hierMin >= 0) hierMin else hierMinRows(spark)
-    routedSchedule(spark, indexPath, query, k, eps,
-      probes =>
-        prunedWalk(graph, Some(layers), probes.contains) { (git, lit) =>
-          searchSubGraph(git, qB.value, k, ef, metric, f, adapt, acc, lit,
-            hmin)
-        }.collect())
-  }
-
   /** Whether `indexPath` currently has a layer-hierarchy sidecar (at its
     * RESOLVED generation) — lets the automatic route fail loudly at
     * registration instead of at first query. */
   def hasHierarchy(spark: SparkSession, indexPath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(resolveLayersDir(spark, indexPath))
+    val p = new Path(sidecarDir(spark, indexPath, "layers"))
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** [[walkStats]] through the hierarchy: per-sub-graph (pid, size,
-    * nodesExpanded, distancesScored) where both counters INCLUDE the
-    * descent's hops and scores — the honest comparison against the flat
-    * walk's telemetry (BENCH_SF1 hier_telemetry reports both). */
-  def walkStatsHier(spark: SparkSession, indexPath: String,
-                    query: Array[Float], k: Int, ef: Int)
-      : Array[(Int, Int, Long, Long)] = {
-    val metric = routes(spark, indexPath)._1
-    val graph = loadGraph(spark, indexPath)
-    val layers = loadLayers(spark, indexPath, graph.getNumPartitions)
-    val qB = spark.sparkContext.broadcast(query)
-    graph.zipPartitions(layers, preservesPartitioning = true) { (git, lit) =>
-      walkOne(git.toArray, lit, qB.value, k, ef, metric)
-    }.collect()
-  }
-
-  /** BATCH KNN JOIN over a clustered graph index (r13 VERDICT #4 — the
-    * missing third leg of the batch-retrieval surface beside [[Knn.knnJoin]]
+  /** BATCH KNN JOIN over a clustered float graph (r13 VERDICT #4 — the
+    * third leg of the batch-retrieval surface beside [[Knn.knnJoin]]
     * (exact) and [[Ivf.knnJoin]] (list-probed)): every query row gets its
     * k nearest corpus ids, the bulk-retrieval shape of a training
     * pipeline ("each doc → its k neighbors").
@@ -1764,246 +1825,164 @@ object Hnsw {
     * sidecar once per assigned query (the layers rehydrate ONCE per
     * sub-graph, like the graph itself) — so a hierarchy registration
     * serves its batch joins and its single queries through the same walk
-    * (review r15-4). */
+    * (review r15-4). A code graph needs its raw table for the rescore:
+    * join it with [[knnJoinQuantized]]. */
   def knnJoinRouted(spark: SparkSession, indexPath: String,
                     queries: DataFrame, qIdCol: String, qVecCol: String,
                     cIdCol: String, k: Int, ef: Int,
                     probes: Int = Int.MaxValue,
                     hier: Boolean = false,
                     hierMin: Int = -1): DataFrame = {
+    floatsOnly(index(spark, indexPath), indexPath, "knnJoinRouted",
+      "knnJoinQuantized")
+    knnJoinGraph(spark, indexPath, null, null, null, queries, qIdCol, qVecCol,
+      cIdCol, k, ef, probes = probes, hier = hier, hierMin = hierMin)
+  }
+
+  /** BATCH KNN JOIN over a code graph (r15): the [[knnJoinRouted]] shape
+    * with the quantized serving contract — each (query, sub-graph) keeps
+    * k·refine COARSE survivors, and the merged candidate set is
+    * exact-rescored against the raw float table `raw` in one codegen join
+    * (floats never enter the resident set; the query side of the rescore
+    * is the collected batch, or the same persisted projection the walk
+    * consumed over budget). `probes` >= sub-graph count at full ef keeps
+    * every true neighbor inside some probed sub-graph's coarse k·refine —
+    * the per-sub-graph union is a SUPERSET of the single-query walk's
+    * globally-merged coarse set, so the gate shares the brute-force
+    * oracle. Output contract matches the other joins. */
+  def knnJoinQuantized(spark: SparkSession, indexPath: String,
+                       raw: DataFrame, rawIdCol: String, rawVecCol: String,
+                       queries: DataFrame, qIdCol: String, qVecCol: String,
+                       cIdCol: String, k: Int, ef: Int,
+                       refine: Int = 8,
+                       probes: Int = Int.MaxValue,
+                       hier: Boolean = false,
+                       hierMin: Int = -1): DataFrame =
+    knnJoinGraph(spark, indexPath, raw, rawIdCol, rawVecCol, queries, qIdCol,
+      qVecCol, cIdCol, k, ef, refine, probes, hier, hierMin)
+
+  /** THE graph batch join, over whichever node space the index holds;
+    * `raw` (the float table, by name) is read only to rescore codes. */
+  private[graft] def knnJoinGraph(spark: SparkSession, indexPath: String,
+                                  raw: => DataFrame, rawIdCol: String,
+                                  rawVecCol: String, queries: DataFrame,
+                                  qIdCol: String, qVecCol: String,
+                                  cIdCol: String, k: Int, ef: Int,
+                                  refine: Int = 8,
+                                  probes: Int = Int.MaxValue,
+                                  hier: Boolean = false,
+                                  hierMin: Int = -1): DataFrame =
+    joinIn(spark, indexPath, index(spark, indexPath), raw, rawIdCol,
+      rawVecCol, queries, qIdCol, qVecCol, cIdCol, k, ef, refine, probes,
+      hier, hierMin)
+
+  private def joinIn[V](spark: SparkSession, indexPath: String, ix: Index[V],
+                        raw: => DataFrame, rawIdCol: String,
+                        rawVecCol: String, queries: DataFrame,
+                        qIdCol: String, qVecCol: String, cIdCol: String,
+                        k: Int, ef: Int, refine: Int, probes: Int,
+                        hier: Boolean, hierMin: Int): DataFrame = {
     import spark.implicits._
-    val (metric, rts) = routes(spark, indexPath)
-    require(rts.nonEmpty, s"no route sidecar at ${routePath(indexPath)}")
-    val nprobe = math.min(probes, rts.length)
-    val graph = loadGraph(spark, indexPath)
+    require(ix.rts.nonEmpty, s"no route sidecar at ${routePath(indexPath)}")
+    val (metric, space) = (ix.metric, ix.space)
+    // codes keep k·refine coarse survivors per (query, sub-graph) and
+    // rescore them exactly below; floats keep their top k
+    val rescore = space.bound
+    val keep = if (rescore) Knn.refineKeep(k, refine) else k
+    val cents = ix.rts.map(r => (r._1, r._2))
+    val nprobe = math.min(probes, cents.length)
+    val graph = loadGraph(spark, indexPath, space)
     val layersOpt =
       if (hier) Some(loadLayers(spark, indexPath, graph.getNumPartitions))
       else None
-    val kk = k
-    val efEff = math.max(ef, kk)
+    val efEff = math.max(ef, keep)
     val hmin = if (hierMin >= 0) hierMin else hierMinRows(spark)
     // the shared per-sub-graph walk: ONE rehydrated graph (and layer set)
-    // serves every query assigned to this pid
-    val walk = (git: Iterator[(Int, GraphRow)],
+    // serves every query assigned to this pid; queries arrive in the
+    // walk's space (bound for codes)
+    val walk = (git: Iterator[(Int, Node[V])],
                 lt: Iterator[(Int, LayerRow)],
                 assigned: Array[(Long, Array[Float])]) => {
-      if (assigned.isEmpty) Iterator.empty[(Long, Long, Double)]
+      val rows = if (assigned.isEmpty) Array.empty[(Int, Node[V])] else git.toArray
+      if (rows.isEmpty) Iterator.empty[(Long, Long, Double)]
       else {
-        val rows = git.toArray
-        if (rows.isEmpty) Iterator.empty[(Long, Long, Double)]
-        else {
-          val g = rehydrate(rows.map(_._2), new FloatSpace(metric))
-          val lyr = if (lt == null) null else hydratedLayers(g, lt, hmin)
-          assigned.iterator.flatMap { case (qid, qv) =>
-            val entry = if (lyr == null) 0 else descend(g, lyr, qv, null)
-            val r = g.searchBeam(qv, efEff, g.n, entry = entry)
-            Iterator.range(0, math.min(kk, r.size))
-              .map(j => (qid, g.ids(r.id(j).toInt), r.value(j)))
-          }
+        val (g, lyr) = hydrate(rows, lt, hmin, space)
+        assigned.iterator.flatMap { case (qid, qv) =>
+          val r = g.searchBeam(qv, efEff, g.n, entry = descend(g, lyr, qv, null))
+          Iterator.range(0, math.min(keep, r.size))
+            .map(j => (qid, g.ids(r.id(j).toInt), r.value(j)))
         }
       }
     }
-    val perPart =
+    // (rescore query side, (qid, cid, dist) rows)
+    val (qSide, perPart) =
       Knn.boundedQueryBatch(queries, qIdCol, qVecCol,
-        Knn.maxQueryBatch(spark, rts.head._2.length)) match {
+        Knn.maxQueryBatch(spark, cents.head._2.length)) match {
         case Some(qRows) =>
           // IN-BUDGET: driver-side pid assignment (nprobe nearest
           // centroids per query, distances in the bound space), broadcast
           // map, ZERO tasks for unprobed sub-graphs
           val byPid: Map[Int, Array[(Long, Array[Float])]] = qRows
             .flatMap { case (qid, qv) =>
-              val bq = Quantize.bindQuerySide(metric, qv)
-              rts.map(r => (Ivf.scalarDist(Knn.L2, bq, r._2), r._1))
-                .sortBy(identity).take(nprobe)
-                .map { case (_, pid) => (pid, (qid, qv)) }
-            }
+              probesOf(cents, metric, nprobe, rescore)(qid, qv) }
             .groupBy(_._1).map { case (pid, xs) => pid -> xs.map(_._2) }
           val qB = spark.sparkContext.broadcast(byPid)
-          prunedWalk(graph, layersOpt, byPid.contains) { (git, lt) =>
-            val rows = git.toArray
-            if (rows.isEmpty) Iterator.empty[(Long, Long, Double)]
-            else walk(rows.iterator, lt,
-              qB.value.getOrElse(rows.head._1,
-                Array.empty[(Long, Array[Float])]))
-          }
+          // the rescore side IS the collected batch (never a second
+          // evaluation of the queries plan — review r16-2: a
+          // non-deterministic query source must feed the walk and the
+          // rescore the same rows)
+          (() => broadcast(qRows.toSeq.toDF("__qid", "__qvec")),
+            prunedWalk(graph, layersOpt, byPid.contains) { (git, lt) =>
+              val rows = git.toArray
+              if (rows.isEmpty) Iterator.empty[(Long, Long, Double)]
+              else walk(rows.iterator, lt,
+                qB.value.getOrElse(rows.head._1,
+                  Array.empty[(Long, Array[Float])]))
+            })
         case None =>
           // OVER-BUDGET (r15 VERDICT #1): the query side stays a
           // distributed dataset end to end — assignment is a flatMap
           // against the ≤nlist broadcast centroids, the shuffle
           // co-locates each query slice with its sub-graph, and the walk
           // zips the two. Per-task memory is the pid's query slice
-          // (|Q|·nprobe / nlist on average), never the whole batch.
-          zipWalk(graph, layersOpt,
-            assignQueriesByPid(
-              queries.select(col(qIdCol).cast("long"), col(qVecCol))
-                .as[(Long, Array[Float])].rdd,
-              spark, metric, rts,
-              nprobe, graph.getNumPartitions, carryBound = false))(walk)
+          // (|Q|·nprobe / nlist on average), never the whole batch. Codes
+          // read the raw query back for the rescore through a shuffle
+          // equi-join on __qid from the SAME persisted projection the walk
+          // consumed (ADVICE r16).
+          val qRdd =
+            if (rescore) Knn.persistedQueryRdd(queries, qIdCol, qVecCol)
+            else queries.select(col(qIdCol).cast("long"), col(qVecCol))
+              .as[(Long, Array[Float])].rdd
+          (() => spark.createDataset(qRdd).toDF("__qid", "__qvec"),
+            zipWalk(graph, layersOpt,
+              assignQueriesByPid(qRdd, spark, metric, cents, nprobe,
+                graph.getNumPartitions, carryBound = rescore))(walk))
       }
     val scored = perPart.toDF("__qid", "__cid", "__dist")
-    TopK.topKPairs(scored, qIdCol, cIdCol, k)
-  }
-
-  // ------------------------------------------------ quantized-space graph
-
-  /** QUANTIZED-SPACE graph walk (r13 VERDICT #2 — the last reference KNN
-    * capability: knn/knn.cpp:105-135 `HNSWDist_c` composes the quantizer
-    * INTO the graph's space interface, so hnswlib builds and walks int8
-    * codes, not floats; quantizer.cpp supplies the space). The Spark
-    * shape: sub-graphs store dim-BYTE codes ([[CodeSpace]]) — 4× less
-    * graph-resident memory per vector, the economics that let a
-    * 1000-executor cluster keep billion-vector sub-graphs resident — the
-    * beam walks code-space L2, and the beam's survivors (k·refine per
-    * query) are EXACT-rescored against the raw float column, which never
-    * enters the resident set (the reference rescans originals for
-    * rescoring the same way).
-    *
-    * Exactness: the routed probe schedule prunes a sub-graph only when
-    * its RAW-space triangle lower bound exceeds the kth-best COARSE
-    * distance + the model's worst-case quantization error
-    * ([[Quantize.QModel.l2ErrorBound]]): true-kth ≤ coarse-kth + E and
-    * every node in a pruned sub-graph has true distance > that, so no
-    * true top-k member is lost to routing. Within probed sub-graphs the
-    * k·refine coarse-candidate contract is the SAME as
-    * [[Quantize.searchRescore]] (q_knn_quant) — refine=8 keeps the true
-    * top-k inside the coarse set on these fixtures, and
-    * `q_knn_graph_quant` pins the equality against the exact fullscan
-    * oracle at full ef. */
-  def qmodelPath(indexPath: String): String = indexPath + "_qmodel"
-
-  private val qgraphSchema = StructType(Seq(
-    StructField("pid", IntegerType),
-    StructField("id", LongType),
-    StructField("qcode", BinaryType),
-    StructField("neighbors", ArrayType(LongType))))
-
-  /** Clustered build in CODE space: train the int8 model and the coarse
-    * router on the BOUND-space vectors, quantize, then build every
-    * sub-graph's links over the codes (build-time distances dequantize
-    * inline — the same space the walk uses, as in the reference). Writes
-    * the graph table (pid, id, qcode, neighbors), the `_route` sidecar
-    * (bound-space centroids + radii), and the `_qmodel` sidecar.
-    *
-    * Metric-complete (r14 VERDICT #3; the reference serves EVERY
-    * similarity through the quantized space — knn/knn.cpp:105-135
-    * `HNSWDist_c` takes the similarity, space.cpp supplies the IP/cosine
-    * kernels): L2 quantizes the raw vectors; COSINE quantizes the
-    * unit-normalized companion (cosine distance of a unit pair is half
-    * its squared L2 — the [[buildClusteredTo]] / Ivf.searchAdaptiveCosine
-    * composition), so the code-space walk, the triangle bound, AND the
-    * quantization-error slack all live in one consistent normalized-L2
-    * space; the final rescore is the exact metric kernel on raw floats
-    * either way. */
-  def buildIndexClusteredQuantized(df: DataFrame, vecCol: String,
-                                   idCol: String, path: String,
-                                   p: Params = Params(),
-                                   metric: Knn.Metric = Knn.L2)
-      : (Ivf.Model, Quantize.QModel) = {
-    // same guard as buildIndexClustered: a base-path rebuild under a
-    // manifest-managed index would be silently ignored by readers that
-    // resolve through the manifest (review r14)
-    val fsQ = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    require(graft.index.SecondaryIndex.manifestVersions(fsQ, path).isEmpty,
-      s"$path is manifest-managed: use compactQuantized, not a rebuild " +
-        "at the base path (readers resolve through the manifest)")
-    // sweep stale sidecars BEFORE the new graph lands (the
-    // buildIndexClustered crash-ordering contract, review r18-9: a crash
-    // AFTER the graph write but before a post-write delete would pair
-    // the NEW graph with the OLD build's layer rows — hasHierarchy still
-    // true, every hier walk stale; old _qerr rows would likewise inflate
-    // the new model's prune slack). Delete-first leaves every crash
-    // interleaving either old-consistent or loudly sidecar-less.
-    fsQ.delete(new org.apache.hadoop.fs.Path(layersPath(path)), true)
-    fsQ.delete(new org.apache.hadoop.fs.Path(qerrPath(path)), true)
-    val out = buildQuantizedTo(df, vecCol, idCol, path, routePath(path),
-      qmodelPath(path), p, metric)
-    invalidateQuantized(path)
-    graft.plans.AnnRouting.onIndexMutated(df.sparkSession, path)
-    out
-  }
-
-  /** The quantized clustered build against explicit target dirs — shared
-    * by [[buildIndexClusteredQuantized]] (base-path layout) and
-    * [[compactQuantized]] (immutable generation dirs). */
-  private def buildQuantizedTo(df: DataFrame, vecCol: String, idCol: String,
-                               graphDir: String, routeDir: String,
-                               qmodelDir: String, p: Params,
-                               metric: Knn.Metric)
-      : (Ivf.Model, Quantize.QModel) = {
-    import df.sparkSession.implicits._
-    // IP (r19): codes, centroids and radii all live in the MIPS→L2
-    // augmented space — the code-space walk, the triangle bound, AND the
-    // quantization-error slack share one L2 geometry (the cosine
-    // construction verbatim, with the augmented companion as the bound
-    // space); the final rescore applies the exact 1−dot kernel to raw
-    // floats.
-    val ipM2 = if (metric == Knn.IP) Ivf.maxSumsq(df, vecCol) else 0.0
-    val boundCol = if (metric == Knn.L2) vecCol else "__vbound"
-    val base = if (metric == Knn.L2) df
-               else df.withColumn(boundCol,
-                 Quantize.boundSpaceCol(metric, col(vecCol), ipM2))
-    val qm = Quantize.train(base, boundCol)
-    val m = Ivf.train(base, boundCol, nlist = p.partitions, metric = Knn.L2)
-    val assigned = Ivf.assign(base, boundCol, m)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val qmB = df.sparkSession.sparkContext.broadcast(qm)
-      val keyed = assigned
-        .select(col("ivf_cluster").cast("int").as("pid"),
-          col(idCol).cast("long").as("id"), col(boundCol).as("vec"))
-        .as[(Int, Long, Array[Float])]
-        .rdd.map(t => (t._1, (t._2, qmB.value.encode(t._3))))
-        .partitionBy(new PidPartitioner(p.partitions))
-      val rowRdd = keyed.mapPartitionsWithIndex { (pid, it) =>
-        val rows = it.map(_._2).toSeq
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val sorted = rows.sortBy(_._1).toArray
-          val g = new SubGraph(sorted.map(_._1), sorted.map(_._2),
-            new CodeSpace(qmB.value))
-          g.build(p.m, p.efC)
-          (0 until g.n).iterator.map { i =>
-            Row(pid, g.ids(i), g.vecs(i), g.neighborIds(i))
-          }
-        }
-      }
-      val graph = df.sparkSession.createDataFrame(rowRdd, qgraphSchema)
-      graft.tables.Writer.write(graph, graphDir, sortBy = Seq("pid", "id"),
-        files = p.partitions)
-      // route sidecar: bound-space radii (the triangle bound's space —
-      // raw for L2, normalized for cosine, augmented for IP)
-      writeRouteSidecar(assigned, boundCol, m, routeDir, metric,
-        if (metric == Knn.IP) Some(math.sqrt(ipM2)) else None)
-      val sidecar = Seq((qm.mins.toSeq, qm.maxs.toSeq)).toDF("mins", "maxs")
-      graft.tables.Writer.write(sidecar, qmodelDir, sortBy = Seq())
-      (m, qm)
-    } finally assigned.unpersist(false)
-  }
-
-  /** Current (graph, route, qmodel, qerr) dirs of a quantized clustered
-    * index: the generic [[resolveDirs]] resolution for graph/route, with
-    * the qmodel/qerr sidecars living beside them — base-suffix paths for
-    * the legacy layout, `qmodel`/`qerr` subdirs of the committed
-    * generation for a [[compactQuantized]]-managed index. */
-  private def resolveQuantizedDirs(spark: SparkSession, indexPath: String)
-      : (String, String, String, String) = {
-    val (g, r) = resolveDirs(spark, indexPath)
-    if (g == indexPath) (g, r, qmodelPath(indexPath), qerrPath(indexPath))
+    if (!rescore) TopK.topKPairs(scored, qIdCol, cIdCol, k)
     else {
-      val gen = new org.apache.hadoop.fs.Path(g).getParent
-      (g, r, new org.apache.hadoop.fs.Path(gen, "qmodel").toString,
-        new org.apache.hadoop.fs.Path(gen, "qerr").toString)
+      // multi-probe duplicates collapse before the rescore join
+      val cands = scored.select("__qid", "__cid").distinct()
+      val rawSel = raw.select(col(rawIdCol).cast("long").as("__cid"),
+        col(rawVecCol).as("__cvec"))
+      val dist = metric match {
+        case Knn.Cosine =>
+          lit(1.0) - distances.cosineSim(col("__qvec"), col("__cvec"))
+        case Knn.IP =>
+          lit(1.0) - distances.ipScore(col("__qvec"), col("__cvec"))
+        case _ => distances.l2Dist(col("__qvec"), col("__cvec"))
+      }
+      TopK.topKPairs(cands.join(qSide(), "__qid").join(rawSel, "__cid")
+        .select(col("__qid"), col("__cid"), dist.cast("double").as("__dist")),
+        qIdCol, cIdCol, k)
     }
   }
 
-  private type QGraphRow = (Long, Array[Byte], Array[Long])
-  private val residentQ =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.rdd.RDD[(Int, QGraphRow)]]
-  private val qmodelCache =
-    scala.collection.concurrent.TrieMap.empty[String, Quantize.QModel]
-  private val qerrCache =
-    scala.collection.concurrent.TrieMap.empty[String, Double]
+  // ------------------------------------------------ code-space serving
+
+  /** Sidecar holding a code graph's int8 model (its presence marks the
+    * index's node space as codes). */
+  def qmodelPath(indexPath: String): String = baseDir(indexPath, "qmodel")
 
   /** Sidecar holding the OBSERVED max reconstruction error of appended
     * segments (one row per append). The model's [[Quantize.QModel.l2ErrorBound]]
@@ -2011,82 +1990,22 @@ object Hnsw {
     * vectors may clamp, so the error-slack prune must widen to the
     * observed worst case or it could lose a true top-k member. Absent for
     * a fresh build (the model bound suffices). */
-  def qerrPath(indexPath: String): String = indexPath + "_qerr"
+  def qerrPath(indexPath: String): String = baseDir(indexPath, "qerr")
 
-  /** The prune slack for a quantized index: max(model worst-case bound,
-    * observed max reconstruction error across appended segments). A wider
-    * slack only ever OVER-probes — exactness is one-sided — so segment
-    * appends write the `_qerr` row BEFORE their graph rows (a crash in
-    * between leaves a harmlessly-wide slack, never a too-tight one). */
-  private def qerrBound(spark: SparkSession, indexPath: String,
-                        qm: Quantize.QModel): Double =
-    qerrCache.getOrElseUpdate(indexPath, {
-      val dir = resolveQuantizedDirs(spark, indexPath)._4
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // an empty/unreadable dir (a crash during the FIRST append's qerr
-      // write, before any data file committed) reads as 0.0 — the model
-      // bound still serves, and the retried append rewrites the row
-      // (review r15-2)
-      val seg =
-        if (fs.exists(p))
-          try {
-            val r = spark.read.parquet(dir).agg(max(col("max_err"))).head
-            if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-          } catch { case _: org.apache.spark.sql.AnalysisException => 0.0 }
-        else 0.0
-      math.max(qm.l2ErrorBound, seg)
-    })
-
-  private def loadQuantizedGraph(spark: SparkSession, indexPath: String)
-      : org.apache.spark.rdd.RDD[(Int, QGraphRow)] =
-    residentQ.synchronized {
-      residentQ.getOrElseUpdate(indexPath, {
-        import spark.implicits._
-        val df = spark.read.parquet(resolveQuantizedDirs(spark, indexPath)._1)
-          .select(col("pid"), col("id"), col("qcode"), col("neighbors"))
-        val maxPid = df.agg(max(col("pid"))).head
-        if (maxPid.isNullAt(0)) spark.sparkContext.emptyRDD[(Int, QGraphRow)]
-        else {
-          val g = df.as[(Int, Long, Array[Byte], Array[Long])]
-            .rdd.map(t => (t._1, (t._2, t._3, t._4)))
-            .partitionBy(new PidPartitioner(maxPid.getInt(0) + 1))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          g.count()
-          g
-        }
-      })
-    }
-
-  private def qmodel(spark: SparkSession, indexPath: String): Quantize.QModel =
-    qmodelCache.getOrElseUpdate(indexPath, {
-      val r = spark.read
-        .parquet(resolveQuantizedDirs(spark, indexPath)._3).head()
-      Quantize.QModel(r.getSeq[Float](r.fieldIndex("mins")).toArray,
-        r.getSeq[Float](r.fieldIndex("maxs")).toArray)
-    })
-
-  /** Drop the resident copy of a quantized graph index. */
-  def invalidateQuantized(indexPath: String): Unit = {
-    residentQ.remove(indexPath).foreach(_.unpersist(false))
-    residentL.remove(indexPath).foreach(_.unpersist(false))
-    qmodelCache.remove(indexPath)
-    qerrCache.remove(indexPath)
-    routeCache.remove(indexPath)
-  }
-
-  /** Routed top-k over a [[buildIndexClusteredQuantized]] index: probe
-    * sub-graphs in centroid-distance order (same doubling schedule as
-    * [[searchRoutedRaw]]), walk each probed sub-graph in CODE space, keep
-    * k·refine coarse survivors, and prune the schedule with the
-    * error-slack triangle bound; one exact rescore of the merged
-    * survivors against `raw` (the float table) ends the query. Under
-    * COSINE every routing/walk/prune quantity lives in the normalized-L2
-    * bound space the index was built in (normalized-L2 order IS cosine
-    * order on a unit sphere), and only the final rescore applies the
-    * exact cosine kernel to the raw floats — so the error-slack argument
-    * is the L2 one verbatim. Returns (top-k DataFrame with [[Knn.knn]]'s
-    * contract, sub-graphs probed). */
+  /** Routed top-k over a [[buildIndexClusteredQuantized]] index: the
+    * routed schedule walks each probed sub-graph in CODE space, keeps
+    * k·refine coarse survivors, and prunes with the error-slack triangle
+    * bound; one exact rescore of the merged survivors against `raw` (the
+    * float table) ends the query. Under COSINE/IP every routing/walk/prune
+    * quantity lives in the bound space the index was built in, and only
+    * the final rescore applies the exact metric kernel to the raw floats —
+    * so the error-slack argument is the L2 one verbatim. Within probed
+    * sub-graphs the k·refine coarse-candidate contract is the SAME as
+    * [[Quantize.searchRescore]] (q_knn_quant); `q_knn_graph_quant` pins
+    * the equality against the exact fullscan oracle at full ef. A float
+    * graph at the path is served by its own exact-metric walk (k
+    * survivors). Returns (top-k DataFrame with [[Knn.knn]]'s contract,
+    * sub-graphs probed). */
   def searchQuantized(spark: SparkSession, indexPath: String,
                       raw: DataFrame, vecCol: String, idCol: String,
                       query: Array[Float], k: Int, ef: Int,
@@ -2095,28 +2014,18 @@ object Hnsw {
                       hier: Boolean = false)
       : (DataFrame, Int) = {
     import spark.implicits._
-    val metric = routes(spark, indexPath)._1
     val (ids, probed) =
       searchQuantizedCoarse(spark, indexPath, query, k, ef, refine, allowed,
         hier)
     val survivors = raw.join(ids.toDF(idCol), Seq(idCol))
-    (Knn.knn(survivors, vecCol, idCol, query, k, metric), probed)
+    (Knn.knn(survivors, vecCol, idCol, query, k, indexMetric(spark, indexPath)),
+      probed)
   }
 
-  /** The code-space coarse pass of [[searchQuantized]]: routed probe loop
-    * over the resident quantized graph, returning the merged k·refine
-    * coarse survivor IDS (dist-asc) and the probe count. Split out so the
-    * automatic route's leaf ([[graft.plans.GraphCandidates]] with
-    * `quantized = true`) can run the walk and fetch raw vectors itself —
-    * the untouched Sort/Limit above the splice IS the exact rescore.
-    * `allowed` gates the beam exactly as in [[searchRoutedRaw]] (K3):
-    * traversal crosses disallowed nodes, only allowed enter the result
-    * set, and the < k survivor case keeps the loop probing (over-probe).
-    * `hier = true` walks each probed sub-graph from its layer-hierarchy
-    * descent entry ([[buildHierarchyQuantized]]'s code-space layers)
-    * instead of the lowest id — the reference's layered quantized index
-    * composed; the coarse k·refine contract and the error-slack prune are
-    * unchanged (entry choice cannot change an exhaustive full-ef walk). */
+  /** The coarse pass of [[searchQuantized]]: the routed walk's merged
+    * k·refine coarse survivor IDS (dist-asc) and the probe count. `hier =
+    * true` walks each probed sub-graph from its code-space layer descent
+    * entry; the coarse contract and the error-slack prune are unchanged. */
   def searchQuantizedCoarse(spark: SparkSession, indexPath: String,
                             query: Array[Float], k: Int, ef: Int,
                             refine: Int = 8,
@@ -2124,342 +2033,8 @@ object Hnsw {
                             hier: Boolean = false,
                             hierMin: Int = -1)
       : (Seq[Long], Int) = {
-    val (metric, rts) = routes(spark, indexPath)
-    val qm = qmodel(spark, indexPath)
-    val err = qerrBound(spark, indexPath, qm)
-    // the bound-space query: raw for L2, unit-normalized for cosine (the
-    // space the codes, centroids, and radii were all built in)
-    val bq = Quantize.bindQuerySide(metric, query)
-    val centDist = rts.map(r => r._1 -> Ivf.scalarDist(Knn.L2, bq, r._2)).toMap
-    val radius = rts.map(r => r._1 -> r._3).toMap
-    val order = rts.map(_._1).sortBy(centDist)
-    def bound(pid: Int): Double = centDist(pid) - radius(pid)
-    val graph = loadQuantizedGraph(spark, indexPath)
-    val layersOpt =
-      if (hier) Some(loadLayers(spark, indexPath, graph.getNumPartitions))
-      else None
-    val f = allowed.getOrElse((_: Long) => true)
-    require(k >= 1, s"top-k needs k >= 1, got $k")
-    val qB = spark.sparkContext.broadcast((qm, bq, f))
-    val keep = Knn.refineKeep(k, refine)
-    val efEff = ef
-    val hmin = if (hierMin >= 0) hierMin else hierMinRows(spark)
-    // the shared per-partition code-space walk; `lt` carries the layer
-    // rows on the hier path (null = flat lowest-id entry)
-    val walk = (it: Iterator[(Int, QGraphRow)],
-                lt: Iterator[(Int, LayerRow)]) => {
-      val part = it.map(_._2).toArray
-      if (part.isEmpty) Iterator.empty[(Double, Long)]
-      else {
-        val (mm, q, fv) = qB.value
-        val g = rehydrate(part, new CodeSpace(mm))
-        val entry =
-          if (lt == null) 0
-          else descend(g, hydratedLayers(g, lt, hmin), q, null)
-        val r = g.searchBeam(q, math.max(efEff, keep), g.n,
-          allowed = i => fv(g.ids(i)), entry = entry)
-        Iterator.range(0, math.min(keep, r.size))
-          .map(j => (r.value(j), g.ids(r.id(j).toInt)))
-      }
-    }
-    var remaining: Seq[Int] = order.toSeq
-    var probed = 0
-    var batch = spark.conf.getOption("spark.graft.graph.probeBatch")
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
-    var cands: Seq[(Double, Long)] = Nil // coarse (dist, id) asc, ≤ keep
-    while ({
-      if (cands.size >= k)
-        // prune on the COARSE kth best + worst-case quantization error:
-        // true-kth ≤ coarse-kth + err, and every node in a pruned
-        // sub-graph has true distance ≥ bound > that (a fortiori for the
-        // allowed subset)
-        remaining = remaining.filter(j => bound(j) <= cands(k - 1)._1 + err)
-      remaining.nonEmpty
-    }) {
-      val probes = remaining.take(batch).toSet
-      val rows = prunedWalk(graph, layersOpt, probes.contains)(walk).collect()
-      cands = (cands ++ rows).sortBy(identity).take(keep)
-      probed += probes.size
-      probeRounds.incrementAndGet()
-      remaining = remaining.drop(batch)
-      batch *= 2
-    }
-    (cands.map(_._2), probed)
-  }
-
-  /** BATCH KNN JOIN over a quantized clustered graph index (r15 — the
-    * fourth leg of the batch-retrieval surface beside [[Knn.knnJoin]]
-    * (exact), [[Ivf.knnJoin]] (list-probed), and [[knnJoinRouted]] (raw
-    * graph)): same assignment shape as [[knnJoinRouted]] — each
-    * probed sub-graph rehydrates its CODE graph ONCE and beam-walks every
-    * query assigned to it; a batch within [[Knn.maxQueryBatch]] collects
-    * and broadcasts (zero tasks for unprobed sub-graphs), a larger one
-    * pid-assigns distributed and never touches the driver — with
-    * the quantized serving contract: each (query, sub-graph) keeps
-    * k·refine COARSE survivors, and the merged candidate set is
-    * exact-rescored against the raw float table in one codegen join
-    * (floats never enter the resident set; the query side of the rescore
-    * is the broadcast batch). `probes` >= sub-graph count at full ef
-    * keeps every true neighbor inside some probed sub-graph's coarse
-    * k·refine — the per-sub-graph union is a SUPERSET of the single-query
-    * walk's globally-merged coarse set, so the gate shares the
-    * brute-force oracle; smaller `probes` is the usual clustered-recall
-    * economy knob. Output contract matches the other joins:
-    * (qIdCol, cIdCol, dist, rn), rn 1..k by (dist, id). */
-  def knnJoinQuantized(spark: SparkSession, indexPath: String,
-                       raw: DataFrame, rawIdCol: String, rawVecCol: String,
-                       queries: DataFrame, qIdCol: String, qVecCol: String,
-                       cIdCol: String, k: Int, ef: Int,
-                       refine: Int = 8,
-                       probes: Int = Int.MaxValue,
-                       hier: Boolean = false,
-                       hierMin: Int = -1): DataFrame = {
-    import spark.implicits._
-    val (metric, rts) = routes(spark, indexPath)
-    require(rts.nonEmpty, s"no route sidecar at ${routePath(indexPath)}")
-    val qm = qmodel(spark, indexPath)
-    val nprobe = math.min(probes, rts.length)
-    val graph = loadQuantizedGraph(spark, indexPath)
-    val layersOpt =
-      if (hier) Some(loadLayers(spark, indexPath, graph.getNumPartitions))
-      else None
-    val keep = Knn.refineKeep(k, refine)
-    val efEff = math.max(ef, keep)
-    val qmB = spark.sparkContext.broadcast(qm)
-    val hmin = if (hierMin >= 0) hierMin else hierMinRows(spark)
-    // the shared per-sub-graph CODE walk; queries arrive in the BOUND
-    // space (normalized for cosine — the space the codes were trained in)
-    val walk = (git: Iterator[(Int, QGraphRow)],
-                lt: Iterator[(Int, LayerRow)],
-                assigned: Array[(Long, Array[Float])]) => {
-      if (assigned.isEmpty) Iterator.empty[(Long, Long)]
-      else {
-        val rows = git.toArray
-        if (rows.isEmpty) Iterator.empty[(Long, Long)]
-        else {
-          // ONE rehydrated code graph (and layer set) serves every
-          // assigned query
-          val g = rehydrate(rows.map(_._2), new CodeSpace(qmB.value))
-          val lyr = if (lt == null) null else hydratedLayers(g, lt, hmin)
-          assigned.iterator.flatMap { case (qid, bq) =>
-            val entry = if (lyr == null) 0 else descend(g, lyr, bq, null)
-            val r = g.searchBeam(bq, efEff, g.n, entry = entry)
-            Iterator.range(0, math.min(keep, r.size))
-              .map(j => (qid, g.ids(r.id(j).toInt)))
-          }
-        }
-      }
-    }
-    // (rescore query side, (qid, coarse-survivor-cid) rows)
-    val (qDf, perPart) =
-      Knn.boundedQueryBatch(queries, qIdCol, qVecCol,
-        Knn.maxQueryBatch(spark, qm.dim)) match {
-        case Some(qRows) =>
-          val byPid: Map[Int, Array[(Long, Array[Float])]] = qRows
-            .flatMap { case (qid, qv) =>
-              val bq = Quantize.bindQuerySide(metric, qv)
-              rts.map(r => (Ivf.scalarDist(Knn.L2, bq, r._2), r._1))
-                .sortBy(identity).take(nprobe)
-                .map { case (_, pid) => (pid, (qid, bq)) }
-            }
-            .groupBy(_._1).map { case (pid, xs) => pid -> xs.map(_._2) }
-          val qB = spark.sparkContext.broadcast(byPid)
-          // the rescore side IS the collected batch (never a second
-          // evaluation of the queries plan — review r16-2: a
-          // non-deterministic query source must feed the walk and the
-          // rescore the same rows)
-          val qDf = broadcast(qRows.toSeq.toDF("__qid", "__qvec"))
-          (qDf, prunedWalk(graph, layersOpt, byPid.contains) { (git, lt) =>
-            val rows = git.toArray
-            if (rows.isEmpty) Iterator.empty[(Long, Long)]
-            else walk(rows.iterator, lt,
-              qB.value.getOrElse(rows.head._1,
-                Array.empty[(Long, Array[Float])]))
-          })
-        case None =>
-          // OVER-BUDGET (r15 VERDICT #1): distributed pid assignment —
-          // the query side never touches the driver; the walk consumes
-          // the bound-space vector (carryBound), the rescore reads the
-          // raw one back through a shuffle equi-join on __qid (no
-          // broadcast of a huge side). Both consume the SAME persisted
-          // projection, so a nondeterministic query source cannot feed
-          // the walk and the rescore different rows (ADVICE r16).
-          val qRdd = Knn.persistedQueryRdd(queries, qIdCol, qVecCol)
-          (spark.createDataset(qRdd).toDF("__qid", "__qvec"),
-            zipWalk(graph, layersOpt,
-              assignQueriesByPid(qRdd, spark, metric, rts,
-                nprobe, graph.getNumPartitions, carryBound = true))(walk))
-      }
-    // multi-probe duplicates collapse before the rescore join
-    val cands = perPart.toDF("__qid", "__cid").distinct()
-    val rawSel = raw.select(col(rawIdCol).cast("long").as("__cid"),
-      col(rawVecCol).as("__cvec"))
-    val dist = metric match {
-      case Knn.Cosine =>
-        lit(1.0) - distances.cosineSim(col("__qvec"), col("__cvec"))
-      case Knn.IP =>
-        lit(1.0) - distances.ipScore(col("__qvec"), col("__cvec"))
-      case _ => distances.l2Dist(col("__qvec"), col("__cvec"))
-    }
-    val scored = cands.join(qDf, "__qid").join(rawSel, "__cid")
-      .select(col("__qid"), col("__cid"), dist.cast("double").as("__dist"))
-    TopK.topKPairs(scored, qIdCol, cIdCol, k)
-  }
-
-  /** I9 for the QUANTIZED graph family — the reference's RT per-segment
-    * build applies to whatever index type the column has
-    * (knn/knn.cpp:638-786 with the quantized space of knn.cpp:105-135):
-    * assign the new batch to the EXISTING route centroids (no coarse
-    * retrain), encode it with the EXISTING int8 model (the frozen-model
-    * contract of [[Quantize.appendSegment]]), build fresh CODE-space
-    * segment sub-graphs under new pids, and append graph + route rows.
-    * [[searchQuantized]] unions segments through the same error-slack
-    * schedule and stays exact at full ef mid-segment.
-    *
-    * Appended vectors may fall OUTSIDE the model's trained [min,max] box
-    * (they clamp — the model bound no longer covers their reconstruction
-    * error), so the append measures the batch's ACTUAL max reconstruction
-    * error in the encode pass and records it in the `_qerr` sidecar,
-    * which [[searchQuantized]] folds into its prune slack. The sidecar
-    * row is written FIRST: a slack wider than needed only over-probes
-    * (exactness is one-sided), so a crash between the sidecar and the
-    * graph append is harmless, while the reverse order could serve a
-    * too-tight slack. Heavy drift inflates the slack toward probe-
-    * everything (correct, slower) — the signal to rebuild/retrain. */
-  def appendSegmentQuantized(newRows: DataFrame, vecCol: String,
-                             idCol: String, indexPath: String,
-                             p: Params = Params()): Unit = {
-    val spark = newRows.sparkSession
-    import spark.implicits._
-    val (graphDir, routeDir, _, qerrDir) =
-      resolveQuantizedDirs(spark, indexPath)
-    val ri = routeInfo(spark, indexPath)
-    val (metric, rts) = (ri.metric, ri.rts)
-    require(rts.nonEmpty,
-      s"no route sidecar rows at $routeDir — " +
-        "appendSegmentQuantized maintains a buildIndexClusteredQuantized index")
-    val qm = qmodel(spark, indexPath)
-    val qmB = spark.sparkContext.broadcast(qm)
-    // IP binds with the BUILD's stored M (frozen-model contract — the
-    // codes were trained in that augmented space). Over-M rows clamp,
-    // and in the CODE family a clamp breaks the augmented-L2 == IP-order
-    // identity for those rows — the refine margin cannot bound the
-    // misranking (unlike the trained-box drift _qerr covers), so refuse
-    // loudly; compactQuantized re-estimates M (r19 review).
-    val ipM2 = if (metric == Knn.IP) {
-      val mn = ri.ipMaxNorm.get
-      requireBatchUnderM(newRows, vecCol, mn, indexPath)
-      mn * mn
-    } else 0.0
-    val boundCol = if (metric == Knn.L2) vecCol else "__vbound"
-    val base = if (metric == Knn.L2) newRows
-               else newRows.withColumn(boundCol,
-                 Quantize.boundSpaceCol(metric, col(vecCol), ipM2))
-    // next free pid from both the sidecar and the graph files (same
-    // crash-orphan reasoning as the raw appendSegment)
-    val maxPid = math.max(
-      rts.map(_._1).max,
-      graft.stats.Stats.minMax(graphDir, "pid") match {
-        case Some((_, mx: Int)) => mx
-        case _ => Int.MinValue
-      })
-    val cents: Seq[Array[Float]] =
-      rts.map(_._2.toSeq).distinct.map(_.toArray)
-    val model = Ivf.Model(cents, Knn.L2)
-    val assigned = Ivf.assign(base, boundCol, model)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE encode pass serves both the observed-error measurement and the
-    // sub-graph build (review r15-2: encoding twice doubled the batch's
-    // int8 work): (cluster, id, code, recon-error) persists, the error
-    // aggregate and the graph build both read the cache.
-    val encoded = assigned
-      .select(col("ivf_cluster").cast("int").as("ci"),
-        col(idCol).cast("long").as("id"), col(boundCol).as("vec"))
-      .as[(Int, Long, Array[Float])]
-      .map { case (ci, id, v) =>
-        val code = qmB.value.encode(v)
-        // QModel.l2(code, v) IS ‖v − deq(quant(v))‖
-        (ci, id, code, qmB.value.l2(code, v))
-      }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val errRow = encoded.toDF("ci", "id", "code", "e")
-        .agg(max(col("e"))).head
-      if (errRow.isNullAt(0)) return // empty batch: nothing to append
-      Seq(errRow.getDouble(0)).toDF("max_err")
-        .write.mode("append").parquet(qerrDir)
-      val offset = maxPid + 1
-      val keyed = encoded
-        .rdd.map(t => (t._1, (t._2, t._3)))
-        .partitionBy(new PidPartitioner(cents.length))
-      val rowRdd = keyed.mapPartitionsWithIndex { (ci, it) =>
-        val rows = it.map(_._2).toSeq
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val sorted = rows.sortBy(_._1).toArray
-          val g = new SubGraph(sorted.map(_._1), sorted.map(_._2),
-            new CodeSpace(qmB.value))
-          g.build(p.m, p.efC)
-          (0 until g.n).iterator.map { i =>
-            Row(offset + ci, g.ids(i), g.vecs(i),
-              g.neighborIds(i))
-          }
-        }
-      }
-      spark.createDataFrame(rowRdd, qgraphSchema)
-        .write.mode("append").parquet(graphDir)
-      appendRouteRows(assigned, boundCol, cents, offset, metric, routeDir,
-        ri.ipMaxNorm)
-      // hierarchy follows ingest — CODE-space layers for the new pids
-      if (hasHierarchy(spark, indexPath))
-        appendSegmentLayers(spark, keyed, offset, new CodeSpace(qm),
-          p, indexPath)
-    } finally {
-      encoded.unpersist(false)
-      assigned.unpersist(false)
-    }
-    invalidateQuantized(indexPath)
-    graft.plans.AnnRouting.onIndexMutated(spark, indexPath)
-  }
-
-  /** I9 OPTIMIZE for the quantized graph family, with the same
-    * OBJECT-STORE-SAFE commit protocol as [[compactClustered]]: rebuild
-    * the WHOLE index into an immutable generation dir (graph/ route/
-    * qmodel/ subdirs), commit with ONE manifest object, sweep stale
-    * generations by name while retaining the previously-live one for a
-    * cycle. Because the index stores CODES (floats never resident), the
-    * rebuild takes the raw corpus `df` — the same table
-    * [[searchQuantized]] rescores against. A compact RETRAINS the int8
-    * model on the current corpus and resets the `_qerr` drift slack (the
-    * fresh box covers every resident vector again) — the recovery path
-    * when appended drift has inflated the slack toward probe-everything. */
-  def compactQuantized(df: DataFrame, vecCol: String, idCol: String,
-                       indexPath: String, p: Params = Params()): Unit = {
-    val spark = df.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val base = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = base.getFileSystem(conf)
-    val (graphDir, _, _, _) = resolveQuantizedDirs(spark, indexPath)
-    val (metric, _) = routes(spark, indexPath)
-    val curVersion = graft.index.SecondaryIndex.manifestVersions(fs, indexPath)
-      .headOption.map(_._1).getOrElse(0L)
-    val nextVersion = curVersion + 1
-    val nextPath = new org.apache.hadoop.fs.Path(s"${indexPath}__g$nextVersion")
-    fs.delete(nextPath, true) // a crashed prior attempt at this version
-    val (_, qm2) = buildQuantizedTo(df, vecCol, idCol,
-      new org.apache.hadoop.fs.Path(nextPath, "graph").toString,
-      new org.apache.hadoop.fs.Path(nextPath, "route").toString,
-      new org.apache.hadoop.fs.Path(nextPath, "qmodel").toString, p, metric)
-    // hierarchy-at-compaction (r15 VERDICT #7, same as [[compactClustered]]):
-    // rebuild the code-space layers over the new graph with the RETRAINED
-    // model, inside the same generation — the commit swaps them together
-    if (hasHierarchy(spark, indexPath))
-      buildLayersQuantizedTo(spark,
-        new org.apache.hadoop.fs.Path(nextPath, "graph").toString, qm2,
-        new org.apache.hadoop.fs.Path(nextPath, "layers").toString, p)
-    commitGeneration(fs, base, indexPath, graphDir, nextVersion, nextPath,
-      sidecarSuffixes = Seq("_route", "_qmodel", "_qerr", "_layers"))
-    invalidateQuantized(indexPath)
-    graft.plans.AnnRouting.onIndexMutated(spark, indexPath)
+    val (rows, probed) = walkRouted(spark, indexPath, query, k, ef, refine,
+      allowed = allowed, hier = hier, hierMin = hierMin)
+    (rows.map(_._1).toSeq, probed)
   }
 }

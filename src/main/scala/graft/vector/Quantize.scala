@@ -208,7 +208,7 @@ object Quantize {
       * error can exceed scaleᵢ/2 by ≈ 3·255·2⁻²⁴·scaleᵢ ≈ 4.6e-5·scaleᵢ);
       * the per-dimension half-step is inflated by 1e-3 — 10× that worst
       * case, still a 0.1% slack — so callers using the bound as a STRICT
-      * prune threshold ([[Hnsw.searchQuantized]]'s sub-graph schedule)
+      * prune threshold (the code graph's routed schedule, [[Hnsw.searchQuantized]])
       * never lose a tie-tight top-k member to float rounding (ADVICE r14).
       * Valid for vectors INSIDE the trained [min,max] box — i.e. the
       * corpus the model was trained on (clamped out-of-range vectors have

@@ -109,7 +109,7 @@ object VectorIndexCheck {
       issues += s"unknown sidecar metric: ${metrics.mkString(", ")}"
     // an IP sidecar must carry its augmentation bound M (one value on
     // every row) — the bound space is [v, √(M²−‖v‖²)] and a lost/mixed M
-    // makes pass 4 unverifiable (the routeInfo loader refuses it too)
+    // makes pass 4 unverifiable (the index loader refuses it too)
     val ipNorms =
       if (!metrics.contains("ip")) Array.empty[Double]
       else if (!routeRaw.columns.contains("max_norm")) Array.empty[Double]
@@ -223,9 +223,8 @@ object VectorIndexCheck {
     Report(indexPath, rows, issues.toSeq)
   }
 
-  /** Layer-hierarchy sidecar check ([[Hnsw.buildHierarchy]] /
-    * [[Hnsw.buildHierarchyQuantized]] layout — serves both, the sidecar
-    * schema is shared): a corrupt sidecar cannot make full-ef search
+  /** Layer-hierarchy sidecar check ([[Hnsw.buildHierarchy]] layout, for
+    * either node space — the sidecar schema is shared): a corrupt sidecar cannot make full-ef search
     * WRONG (the descent only picks the beam entry; the walk is
     * exhaustive), but a dangling member id crashes the walk and a broken
     * layer graph silently degrades small-ef recall — so the pass
@@ -240,7 +239,7 @@ object VectorIndexCheck {
   def checkLayers(spark: SparkSession, indexPath: String): Report = {
     import spark.implicits._
     val issues = scala.collection.mutable.ArrayBuffer.empty[String]
-    val layersDir = Hnsw.resolveLayersDir(spark, indexPath)
+    val layersDir = Hnsw.sidecarDir(spark, indexPath, "layers")
     val graphDir = Hnsw.resolveDirs(spark, indexPath)._1
     val raw = spark.read.parquet(layersDir)
       .select(col("pid"), col("level"), col("id"), col("neighbors"))

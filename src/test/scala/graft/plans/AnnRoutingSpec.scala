@@ -705,7 +705,7 @@ class AnnRoutingSpec extends AnyFunSuite {
     // fullscan) until re-registration serves the appended corpus
     val extra = Seq((9003L, Array.fill(dim)(97f), 0))
       .toDF("vec_id", "embedding", "label")
-    graft.vector.Hnsw.appendSegmentQuantized(extra, "embedding", "vec_id",
+    graft.vector.Hnsw.appendSegment(extra, "embedding", "vec_id",
       idxQ)
     val dropped = Knn.knn(SparkT.spark.read.parquet(baseQ),
       "embedding", "vec_id", query, 10)
@@ -814,8 +814,8 @@ class AnnRoutingSpec extends AnyFunSuite {
       AnnRouting.registerGraphQuantized(SparkT.spark, baseG, idxQ,
         vecCol = "embedding", idCol = "vec_id", hierarchy = true)
     }
-    assert(eq.getMessage.contains("buildHierarchyQuantized"))
-    graft.vector.Hnsw.buildHierarchyQuantized(SparkT.spark, idxQ,
+    assert(eq.getMessage.contains("buildHierarchy"))
+    graft.vector.Hnsw.buildHierarchy(SparkT.spark, idxQ,
       graft.vector.Hnsw.Params(m = 8, efC = 32))
     AnnRouting.registerGraphQuantized(SparkT.spark, baseG, idxQ,
       vecCol = "embedding", idCol = "vec_id", hierarchy = true)

@@ -488,7 +488,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = in.toDF().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         if (!batch.isEmpty)
-          Hnsw.appendSegmentQuantized(batch, "embedding", "vec_id", d)
+          Hnsw.appendSegment(batch, "embedding", "vec_id", d)
       }
       .start()
     try {

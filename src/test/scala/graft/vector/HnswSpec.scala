@@ -61,8 +61,8 @@ class HnswSpec extends AnyFunSuite {
     // generation (the compactClustered survival contract): the descent
     // runs and stays exact
     val d0 = Hnsw.descents.get()
-    val (hier, _) = Hnsw.searchRoutedHier(SparkT.spark, d, "vec_id",
-      queryVec, 10, ef = 1 << 20, hierMin = 0)
+    val (hier, _) = Hnsw.searchRouted(SparkT.spark, d, "vec_id",
+      queryVec, 10, ef = 1 << 20, hierMin = 0, hier = true)
     assert(hier.as[(Long, Double)].collect().toSeq === exact)
     assert(Hnsw.descents.get() > d0, "post-delete hier walk never descended")
   }
@@ -252,7 +252,7 @@ class HnswSpec extends AnyFunSuite {
     val d = Files.createTempDirectory("graft-hnswq-seg").resolve("g").toString
     val (_, qm) = Hnsw.buildIndexClusteredQuantized(build, "embedding",
       "vec_id", d, Hnsw.Params(m = 8, efC = 64, partitions = 4))
-    Hnsw.appendSegmentQuantized(append, "embedding", "vec_id", d)
+    Hnsw.appendSegment(append, "embedding", "vec_id", d)
     // the observed slack is on record and exceeds what the model bound
     // alone would claim for the drifted batch
     val qerr = SparkT.spark.read.parquet(Hnsw.qerrPath(d))
@@ -299,7 +299,7 @@ class HnswSpec extends AnyFunSuite {
     // post-compact append goes into the GENERATION's dirs and stays exact
     val extra = Seq((9000L, Array.fill(dim)(0.5f)))
       .toDF("vec_id", "embedding")
-    Hnsw.appendSegmentQuantized(extra, "embedding", "vec_id", d)
+    Hnsw.appendSegment(extra, "embedding", "vec_id", d)
     assert(new java.io.File(gen1, "qerr").isDirectory,
       "append must write the generation's qerr, not the superseded base")
     val all2 = whole.unionByName(extra)
@@ -602,8 +602,8 @@ class HnswSpec extends AnyFunSuite {
     Hnsw.buildHierarchy(SparkT.spark, d, p)
     val exact = Knn.knn(emb, "embedding", "vec_id", queryVec, 10, Knn.IP)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
-    val (res, _) = Hnsw.searchRoutedHier(SparkT.spark, d, "vec_id",
-      queryVec, 10, ef = 1 << 20, hierMin = 0)
+    val (res, _) = Hnsw.searchRouted(SparkT.spark, d, "vec_id",
+      queryVec, 10, ef = 1 << 20, hierMin = 0, hier = true)
     assert(res.as[(Long, Double)].collect().toSeq === exact)
   }
 
@@ -767,8 +767,8 @@ class HnswSpec extends AnyFunSuite {
       val q = rows(qid.toInt)._2
       val exact = Knn.knn(df, "embedding", "vec_id", q, 10)
         .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
-      val (res, _) = Hnsw.searchRoutedHier(SparkT.spark, d, "vec_id",
-        q, 10, ef = 1 << 20)
+      val (res, _) = Hnsw.searchRouted(SparkT.spark, d, "vec_id",
+        q, 10, ef = 1 << 20, hier = true)
       assert(res.as[(Long, Double)].collect().toSeq === exact, s"query $qid")
     }
     // small-ef recall through the descent entry
@@ -776,8 +776,8 @@ class HnswSpec extends AnyFunSuite {
       val q = rows(qid.toInt)._2
       val exact = Knn.knn(df, "embedding", "vec_id", q, 10)
         .select("vec_id").as[Long].collect().toSet
-      val (res, _) = Hnsw.searchRoutedHier(SparkT.spark, d, "vec_id",
-        q, 10, ef = 32)
+      val (res, _) = Hnsw.searchRouted(SparkT.spark, d, "vec_id",
+        q, 10, ef = 32, hier = true)
       val got = res.select("vec_id").as[Long].collect().toSet
       exact.intersect(got).size.toDouble / exact.size
     }
@@ -788,7 +788,7 @@ class HnswSpec extends AnyFunSuite {
     // not raw-count savings, until sub-graphs grow much larger)
     val q = rows(3)._2
     val flat = Hnsw.walkStats(SparkT.spark, d, q, 10, 32)
-    val hier = Hnsw.walkStatsHier(SparkT.spark, d, q, 10, 32)
+    val hier = Hnsw.walkStats(SparkT.spark, d, q, 10, 32, hier = true)
     val flatScored = flat.map(_._4).sum
     val hierScored = hier.map(_._4).sum
     assert(hierScored <= flatScored * 2,
@@ -798,7 +798,7 @@ class HnswSpec extends AnyFunSuite {
     Hnsw.buildIndexClustered(df, "embedding", "vec_id", d, p)
     assert(!Hnsw.hasHierarchy(SparkT.spark, d))
     intercept[IllegalArgumentException] {
-      Hnsw.searchRoutedHier(SparkT.spark, d, "vec_id", q, 10, ef = 1 << 20)
+      Hnsw.searchRouted(SparkT.spark, d, "vec_id", q, 10, ef = 1 << 20, hier = true)
     }
   }
 
@@ -834,7 +834,7 @@ class HnswSpec extends AnyFunSuite {
         queryVec, 10, ef = 1 << 20, hier = true)._1.collect()
     }
     assert(e.getMessage.contains("buildHierarchy"))
-    Hnsw.buildHierarchyQuantized(SparkT.spark, d, p)
+    Hnsw.buildHierarchy(SparkT.spark, d, p)
     val exact = Knn.knn(emb, "embedding", "vec_id", queryVec, 10)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
     val (res, _) = Hnsw.searchQuantized(SparkT.spark, d, emb,
@@ -859,8 +859,8 @@ class HnswSpec extends AnyFunSuite {
     Hnsw.buildHierarchy(SparkT.spark, d, p)
     val exactB = Knn.knn(build, "embedding", "vec_id", queryVec, 10, Knn.Cosine)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
-    val (res, _) = Hnsw.searchRoutedHier(SparkT.spark, d, "vec_id",
-      queryVec, 10, ef = 1 << 20)
+    val (res, _) = Hnsw.searchRouted(SparkT.spark, d, "vec_id",
+      queryVec, 10, ef = 1 << 20, hier = true)
     assert(res.as[(Long, Double)].collect().toSeq === exactB)
     // append a segment: the HIERARCHY FOLLOWS INGEST (r16) — the new pids
     // get their own layer rows in the same append, so the descent covers
@@ -875,8 +875,8 @@ class HnswSpec extends AnyFunSuite {
       s"segment append did not extend the layers sidecar ($pidsBefore)")
     val exactAll = Knn.knn(emb, "embedding", "vec_id", queryVec, 10, Knn.Cosine)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
-    val (mid, _) = Hnsw.searchRoutedHier(SparkT.spark, d, "vec_id",
-      queryVec, 10, ef = 1 << 20)
+    val (mid, _) = Hnsw.searchRouted(SparkT.spark, d, "vec_id",
+      queryVec, 10, ef = 1 << 20, hier = true)
     assert(mid.as[(Long, Double)].collect().toSeq === exactAll)
     // compact: the hierarchy registration SURVIVES OPTIMIZE (r15 VERDICT
     // #7) — the layers rebuild over the new graph inside the same
@@ -884,8 +884,8 @@ class HnswSpec extends AnyFunSuite {
     // buildHierarchy step
     Hnsw.compactClustered(SparkT.spark, d, p)
     assert(Hnsw.hasHierarchy(SparkT.spark, d))
-    val (post, _) = Hnsw.searchRoutedHier(SparkT.spark, d, "vec_id",
-      queryVec, 10, ef = 1 << 20)
+    val (post, _) = Hnsw.searchRouted(SparkT.spark, d, "vec_id",
+      queryVec, 10, ef = 1 << 20, hier = true)
     assert(post.as[(Long, Double)].collect().toSeq === exactAll)
     // and the swept legacy sidecar is gone (commitGeneration bookkeeping)
     assert(Hnsw.resolveDirs(SparkT.spark, d)._1.endsWith("__g1/graph"))
@@ -899,8 +899,8 @@ class HnswSpec extends AnyFunSuite {
     Hnsw.compactClustered(SparkT.spark, d, p)
     assert(!Hnsw.hasHierarchy(SparkT.spark, d))
     val e = intercept[IllegalArgumentException] {
-      Hnsw.searchRoutedHier(SparkT.spark, d, "vec_id", queryVec, 10,
-        ef = 1 << 20)
+      Hnsw.searchRouted(SparkT.spark, d, "vec_id", queryVec, 10,
+        ef = 1 << 20, hier = true)
     }
     assert(e.getMessage.contains("buildHierarchy"))
   }
@@ -910,11 +910,11 @@ class HnswSpec extends AnyFunSuite {
     val d = tmp.resolve("g").toString
     val p = Hnsw.Params(m = 8, efC = 64, partitions = 4)
     Hnsw.buildIndexClusteredQuantized(emb, "embedding", "vec_id", d, p)
-    Hnsw.buildHierarchyQuantized(SparkT.spark, d, p)
+    Hnsw.buildHierarchy(SparkT.spark, d, p)
     val exact = Knn.knn(emb, "embedding", "vec_id", queryVec, 10)
       .select("vec_id", "dist").as[(Long, Double)].collect().toSeq
     // compact retrains the model and rebuilds the code-space layers inside
-    // the committed generation — NO manual buildHierarchyQuantized step
+    // the committed generation — NO manual buildHierarchy step
     Hnsw.compactQuantized(emb, "embedding", "vec_id", d, p)
     assert(Hnsw.hasHierarchy(SparkT.spark, d))
     assert(Hnsw.resolveDirs(SparkT.spark, d)._1.endsWith("__g1/graph"))
@@ -924,12 +924,12 @@ class HnswSpec extends AnyFunSuite {
       === exact)
     // and the hierarchy FOLLOWS a quantized segment append too (r16):
     // fresh ids (shifted copies), new pids get code-space layer rows
-    val layersDir = Hnsw.resolveLayersDir(SparkT.spark, d)
+    val layersDir = Hnsw.sidecarDir(SparkT.spark, d, "layers")
     val pidsBefore = SparkT.spark.read.parquet(layersDir)
       .select("pid").distinct().count()
     val seg = emb.filter($"vec_id" % 5 === 0)
       .withColumn("vec_id", $"vec_id" + 100000L)
-    Hnsw.appendSegmentQuantized(seg, "embedding", "vec_id", d, p)
+    Hnsw.appendSegment(seg, "embedding", "vec_id", d, p)
     assert(SparkT.spark.read.parquet(layersDir)
       .select("pid").distinct().count() > pidsBefore,
       "quantized segment append did not extend the layers sidecar")
@@ -954,16 +954,16 @@ class HnswSpec extends AnyFunSuite {
     // fixture sub-graphs: the hier API walks
     // flat entries — NO descent — and stays exact
     val d0 = Hnsw.descents.get()
-    val (skip, _) = Hnsw.searchRoutedHier(SparkT.spark, d, "vec_id",
-      queryVec, 10, ef = 1 << 20)
+    val (skip, _) = Hnsw.searchRouted(SparkT.spark, d, "vec_id",
+      queryVec, 10, ef = 1 << 20, hier = true)
     assert(skip.as[(Long, Double)].collect().toSeq === exact)
     assert(Hnsw.descents.get() === d0,
       "descent ran below the hierMinRows threshold")
     // forcing (conf 0) engages the descent on the same index, same rows
     SparkT.spark.conf.set("spark.graft.graph.hierMinRows", "0")
     try {
-      val (forced, _) = Hnsw.searchRoutedHier(SparkT.spark, d, "vec_id",
-        queryVec, 10, ef = 1 << 20)
+      val (forced, _) = Hnsw.searchRouted(SparkT.spark, d, "vec_id",
+        queryVec, 10, ef = 1 << 20, hier = true)
       assert(forced.as[(Long, Double)].collect().toSeq === exact)
       assert(Hnsw.descents.get() > d0, "forced descent did not run")
     } finally SparkT.spark.conf.unset("spark.graft.graph.hierMinRows")
