@@ -62,7 +62,7 @@ object IndexCheck {
         // resolve: manifest-managed indexes keep live data in a generation
         // dir; plain/rename-scheme dirs resolve to themselves
         val d = spark.read.parquet(
-          SecondaryIndex.resolve(spark, indexPath))
+          Commit.resolve(spark, indexPath))
         val want = Seq("value", "chunk", "cnt", "rowids", "chunk_min", "chunk_max")
         val missing = want.filterNot(d.columns.contains)
         if (missing.nonEmpty) {

@@ -100,7 +100,8 @@ object SecondaryIndex {
     * bound no longer holds. */
   def build(df: DataFrame, valueCol: String, keyCol: String,
             path: String, files: Int = 1): Unit = {
-    requireNotManifestManaged(df.sparkSession, path)
+    Commit.requireUnmanaged(df.sparkSession, path,
+      "appendSegment + compactManifest")
     graft.tables.Writer.write(postings(df, valueCol, keyCol), path,
       sortBy = Seq("value", "chunk"), files = files)
     // an in-place REBUILD invalidates any routing entry that cached the
@@ -154,7 +155,8 @@ object SecondaryIndex {
       .sortWithinPartitions(col("value"), col("chunk"))
       // resolve: on a manifest-managed index the live data sits in the
       // current generation dir, not at the base path
-      .write.mode("append").parquet(resolve(newRows.sparkSession, indexPath))
+      .write.mode("append")
+      .parquet(Commit.resolve(newRows.sparkSession, indexPath))
     // routing entries cached an analyzed relation whose file listing
     // predates this append — drop them (re-register to resume routing)
     graft.plans.IndexRouting.onIndexMutated(newRows.sparkSession, indexPath)
@@ -163,13 +165,11 @@ object SecondaryIndex {
   /** I9: OPTIMIZE — merge all segments back to the canonical
     * one-row-per-(value, chunk) clustered layout (the reference's segment
     * merge): re-aggregate from the exploded postings into a sibling dir,
-    * then swap via rename-to-backup + rename-in. The swap is two renames,
-    * not one atomic op, but the index data exists at SOME path at every
-    * instant: a crash between the renames leaves the old index intact at
-    * `<path>_old` (manual recovery = rename it back), never a destroyed
-    * index. The backup is removed only after the new layout is in place.
-    * After compaction [[IndexCheck]]'s full invariant set (incl. (value,
-    * chunk) uniqueness and cross-file clustering) holds again. */
+    * then swap it in with [[Commit.swapInPlace]] — a crash between its two
+    * renames leaves the old index intact at `<path>_old`, never a
+    * destroyed index. After compaction [[IndexCheck]]'s full invariant set
+    * (incl. (value, chunk) uniqueness and cross-file clustering) holds
+    * again. */
   def compact(spark: SparkSession, indexPath: String, files: Int = 1): Unit =
     rewriteInPlace(spark, indexPath, files)(identity)
 
@@ -184,10 +184,9 @@ object SecondaryIndex {
     * scalar AND MVA layouts: subtraction is by KEY, so a deleted row's
     * postings vanish under every value it was posted under, and on
     * segmented indexes every segment row drops its own copies (keys are
-    * unique per layout invariant 6). Same rename-swap crash protocol as
-    * [[compact]] — a crash leaves the old index intact at `<path>_old`
-    * — and the same onIndexMutated invalidation (re-register to resume
-    * routing). The caller owns the FACT side: rewrite/filter the fact
+    * unique per layout invariant 6). Same [[Commit.swapInPlace]] as
+    * [[compact]] and the same onIndexMutated invalidation (re-register to
+    * resume routing). The caller owns the FACT side: rewrite/filter the fact
     * table first, then delete its keys here ([[IndexCheck]]'s fact
     * reconciliation catches the stale window in between).
     *
@@ -204,44 +203,19 @@ object SecondaryIndex {
   }
 
   /** Shared rewrite-and-swap body of [[compact]] and [[deleteKeys]]:
-    * explode the live postings to (value, k), apply `transform`,
-    * re-aggregate into a sibling dir, then swap via rename-to-backup +
-    * rename-in. The swap is two renames, not one atomic op, but the
-    * index data exists at SOME path at every instant: a crash between
-    * the renames leaves the old index intact at `<path>_old` (manual
-    * recovery = rename it back), never a destroyed index. */
+    * explode the live postings to (value, k), apply `transform`, and
+    * re-aggregate through [[Commit.swapInPlace]]. */
   private def rewriteInPlace(spark: SparkSession, indexPath: String,
                              files: Int)
                             (transform: DataFrame => DataFrame): Unit = {
-    val tmp = indexPath + "_compacting"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(indexPath)
-    val src = new org.apache.hadoop.fs.Path(tmp)
-    val bak = new org.apache.hadoop.fs.Path(indexPath + "_old")
-    val fs = dst.getFileSystem(conf)
-    require(manifestVersions(fs, indexPath).isEmpty,
-      s"$indexPath is manifest-managed (${manifestDir(indexPath)} exists): " +
-        "use compactManifest — mixing the rename and manifest commit " +
-        "schemes would strand readers on a stale generation")
-    // self-heal from a crash between the two renames of a prior rewrite:
-    // the index then lives at _old and dst is missing — restore first
-    if (!fs.exists(dst) && fs.exists(bak) && !fs.rename(bak, dst))
-      throw new java.io.IOException(
-        s"index missing at $indexPath and backup restore from $bak failed")
-    val exploded = spark.read.parquet(indexPath)
-      .select(col("value"), explode(col("rowids")).as("k"))
-    build(transform(exploded), "value", "k", tmp, files)
-    fs.delete(bak, true) // leftover backup from an interrupted prior swap
-    if (!fs.rename(dst, bak))
-      throw new java.io.IOException(s"could not back up $indexPath for swap")
-    if (!fs.rename(src, dst)) {
-      if (!fs.rename(bak, dst))
-        throw new java.io.IOException(
-          s"swap of $tmp into $indexPath failed AND the restore failed: " +
-            s"the index data is at $bak — rename it back manually")
-      throw new java.io.IOException(s"could not swap $tmp into $indexPath")
+    // mixing the rename and manifest commit schemes would strand readers
+    // on a stale generation
+    Commit.requireUnmanaged(spark, indexPath, "compactManifest")
+    Commit.swapInPlace(spark, indexPath) { tmp =>
+      val exploded = spark.read.parquet(indexPath)
+        .select(col("value"), explode(col("rowids")).as("k"))
+      build(transform(exploded), "value", "k", tmp, files)
     }
-    fs.delete(bak, true)
     graft.plans.IndexRouting.onIndexMutated(spark, indexPath)
   }
 
@@ -268,205 +242,34 @@ object SecondaryIndex {
       case None => base.select(explode(col("rowids")).as("key"))
     }
 
-  /** Resolve the CURRENT data directory of an index — the single read-side
-    * entry point every lookup/count path and [[IndexCheck]] go through.
-    * Resolution order:
-    *
-    *  1. manifest log (`<path>_manifest/v<N>`, highest N whose content
-    *     names an existing generation dir — [[compactManifest]]'s commit
-    *     protocol; a partially-written newest version is skipped, falling
-    *     back to the previous one);
-    *  2. `<path>` itself (plain builds and the rename-based [[compact]]);
-    *  3. `<path>_old` when `<path>` is missing — the crash window between
-    *     [[compact]]'s two renames (ADVICE r8: self-heal previously lived
-    *     only in compact(), so reads failed until another compact ran).
-    *
-    * Cost: one existence probe on the manifest dir per query build —
-    * metadata-only, no data IO. */
-  def resolve(spark: SparkSession, indexPath: String): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = dst.getFileSystem(conf)
-    val mdir = new org.apache.hadoop.fs.Path(manifestDir(indexPath))
-    if (fs.exists(mdir)) {
-      manifestVersions(fs, indexPath).foreach { case (_, vfile) =>
-        val content = readSmallFile(fs, vfile)
-        if (content.nonEmpty) {
-          val gen = new org.apache.hadoop.fs.Path(dst.getParent, content)
-          if (fs.exists(gen)) return gen.toString
-        }
-      }
-    }
-    // The fallbacks below serve the RENAME scheme's crash window only. A
-    // dir carrying the SUPERSEDED marker is a manifest compact's retained
-    // previous generation: reachable by in-flight readers that already
-    // resolved it, but never a valid fallback — if the manifest dir is
-    // lost, serving it would be silent stale data (review r10); fail
-    // loudly instead.
-    def superseded(p: org.apache.hadoop.fs.Path): Boolean =
-      try fs.exists(new org.apache.hadoop.fs.Path(p, SupersededMarker))
-      catch { case _: java.io.IOException => false }
-    val old = new org.apache.hadoop.fs.Path(indexPath + "_old")
-    if (!fs.exists(dst) && fs.exists(old) && !superseded(old))
-      return indexPath + "_old"
-    if (fs.exists(dst) && superseded(dst))
-      throw new IllegalStateException(
-        s"$indexPath is a superseded generation of a manifest-managed " +
-          s"index but no valid manifest version exists under " +
-          s"${manifestDir(indexPath)} — the manifest dir was lost; " +
-          "restore it or rebuild the index")
-    indexPath
-  }
-
-  /** Marker written into a RETAINED superseded generation so
-    * [[resolve]]'s rename-scheme fallbacks never serve it as live data. */
-  private[graft] val SupersededMarker = "_GRAFT_SUPERSEDED"
-
-  private def manifestDir(indexPath: String): String = indexPath + "_manifest"
-
-  /** Fail-fast guard for in-place REBUILDS: once an index is
-    * manifest-managed, its base dir is dead — [[resolve]] serves the
-    * committed generation, so a fresh build written at the base path would
-    * be silently INVISIBLE to every reader (worse than an error: queries
-    * keep answering from the pre-rebuild data). Shared by the secondary,
-    * IVF and clustered-graph builders. */
-  private[graft] def requireNotManifestManaged(
-      spark: SparkSession, indexPath: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(manifestVersions(fs, indexPath).isEmpty,
-      s"$indexPath is manifest-managed (committed generations exist): an " +
-        "in-place rebuild at the base path would be invisible to readers. " +
-        "Use the family's compact (appendSegment/appendToIndex + compact) " +
-        "or build under a new path.")
-  }
-
-  /** Manifest versions, newest first. */
-  private[graft] def manifestVersions(fs: org.apache.hadoop.fs.FileSystem,
-                                      indexPath: String)
-      : Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val mdir = new org.apache.hadoop.fs.Path(manifestDir(indexPath))
-    if (!fs.exists(mdir)) Nil
-    else fs.listStatus(mdir).toSeq.map(_.getPath)
-      .flatMap { p =>
-        val n = p.getName
-        if (n.startsWith("v")) n.drop(1).toLongOption.map(_ -> p) else None
-      }
-      .sortBy(-_._1)
-  }
-
-  private[graft] def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-                            p: org.apache.hadoop.fs.Path): String =
-    try {
-      val in = fs.open(p)
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-    } catch { case _: java.io.IOException => "" }
-
-  private[graft] def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-                                   indexPath: String, version: Long,
-                                   genDirName: String): Unit = {
-    val vfile = new org.apache.hadoop.fs.Path(manifestDir(indexPath),
-      s"v$version")
-    val out = fs.create(vfile, false) // no overwrite: versions are immutable
-    try out.write((genDirName + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
   /** I9 OPTIMIZE with an OBJECT-STORE-SAFE commit (VERDICT r8 #7): the
     * rename-based [[compact]] is correct where rename is atomic (HDFS,
     * local FS), but on object stores a directory rename is a per-file
     * copy+delete — a crash mid-rename leaves PARTIAL directories at both
-    * paths. This variant never renames data: it re-aggregates the current
-    * generation into a NEW immutable generation dir `<path>__g<N>` and
-    * commits by writing ONE new manifest object `<path>_manifest/v<N>`
-    * naming it — a single small-object PUT, the only atomicity an object
-    * store guarantees (the Delta/Iceberg commit shape). [[resolve]] reads
-    * the highest valid manifest version, so every crash interleaving
-    * leaves a readable, checkable index:
-    *
-    *  - crash while writing the new generation: manifest untouched,
-    *    readers stay on the old generation; the half-written dir is
-    *    garbage that the next compact deletes first;
-    *  - crash while writing `v<N>` (partial/empty object): resolve skips
-    *    invalid versions and falls back to `v<N-1>` / the base dir;
-    *  - crash after commit, before cleanup: both generations exist,
-    *    readers already see the new one; cleanup re-runs next compact.
+    * paths. This variant never renames data: it re-aggregates the live
+    * generation into a new one committed by [[Commit.commitGeneration]]
+    * (one manifest object per commit; every crash interleaving leaves a
+    * readable, checkable index; the previous generation is retained one
+    * cycle).
     *
     * First call migrates a legacy (rename-scheme or plain-build) dir:
     * the base dir keeps the gen-0 data until the commit lands, then is
-    * superseded ([[resolve]] prefers the manifest). The superseded
-    * generation is RETAINED for one compaction cycle so concurrent
-    * readers that resolved it pre-commit finish on a consistent snapshot
-    * (ADVICE r9 — the Delta/Iceberg retention shape); the next compact
-    * sweeps it. Mixing schemes afterwards is rejected by [[compact]].
-    * [[appendSegment]] composes: it writes into the RESOLVED generation. */
+    * superseded ([[Commit.resolve]] prefers the manifest). Mixing schemes
+    * afterwards is rejected by [[compact]]. [[appendSegment]] composes:
+    * it writes into the RESOLVED generation. */
   def compactManifest(spark: SparkSession, indexPath: String,
                       files: Int = 1): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val base = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = base.getFileSystem(conf)
-    val cur = resolve(spark, indexPath)
-    val curVersion = manifestVersions(fs, indexPath).headOption.map(_._1).getOrElse(0L)
-    val nextVersion = curVersion + 1
-    val next = s"${indexPath}__g$nextVersion"
-    fs.delete(new org.apache.hadoop.fs.Path(next), true) // crashed attempt
-    val exploded = spark.read.parquet(cur)
-      .select(col("value"), explode(col("rowids")).as("k"))
-    build(exploded, "value", "k", next, files)
-    // COMMIT: one new immutable manifest object
-    writeManifest(fs, indexPath, nextVersion,
-      new org.apache.hadoop.fs.Path(next).getName)
-    // cleanup: EVERY stale data dir — all generations but the committed
-    // one plus the legacy base dir. A crash between a past commit and its
-    // cleanup leaves orphans that `cur` alone would never revisit (review
-    // r9), so sweep by name; crash-safe because resolve() already prefers
-    // v<nextVersion>, and a re-run sweeps again. The generation that was
-    // live UNTIL this commit (`cur` — a __g dir, the legacy base, or a
-    // crashed rename's _old) is RETAINED for one compaction cycle
-    // (ADVICE r9): a reader that resolved it just before the commit keeps
-    // a consistent snapshot instead of dangling-file reads mid-query —
-    // the Delta/Iceberg snapshot-retention shape. The NEXT compact sweeps
-    // it (by then `cur` has moved on).
-    val baseName = base.getName
-    val retained = new org.apache.hadoop.fs.Path(cur).getName
-    if (fs.exists(base.getParent)) {
-      fs.listStatus(base.getParent).foreach { st =>
-        val n = st.getPath.getName
-        val stale = n != retained && (
-          n == baseName ||
-            // rename-scheme leftovers a manifest migration supersedes
-            // (keeping them past their retention cycle would let a later
-            // manifest-dir loss silently serve a stale copy through
-            // resolve()'s fallback)
-            n == baseName + "_old" || n == baseName + "_compacting" ||
-            (n.startsWith(baseName + "__g") &&
-              n.stripPrefix(baseName + "__g").toLongOption
-                .exists(_ != nextVersion)))
-        if (stale) fs.delete(st.getPath, true)
-      }
-    }
-    // The retained base/_old dir is also a resolve() FALLBACK target: mark
-    // it superseded so a later manifest-dir loss fails loudly instead of
-    // silently serving the stale copy (review r10). Retained __g dirs are
-    // reachable only through manifest versions, which a lost manifest
-    // cannot name — no marker needed there.
-    if (retained == baseName || retained == baseName + "_old") {
-      val mk = fs.create(new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(base.getParent, retained),
-        SupersededMarker), true)
-      try mk.write("superseded by manifest commit\n"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally mk.close()
+    Commit.commitGeneration(spark, indexPath) { (live, next) =>
+      val exploded = spark.read.parquet(live)
+        .select(col("value"), explode(col("rowids")).as("k"))
+      build(exploded, "value", "k", next, files)
     }
     graft.plans.IndexRouting.onIndexMutated(spark, indexPath)
   }
 
-  /** Open the index table for reading through [[resolve]]. */
+  /** Open the index table for reading through [[Commit.resolve]]. */
   private def openIndex(spark: SparkSession, indexPath: String): DataFrame =
-    graft.engine.Graft.cachedRead(spark, resolve(spark, indexPath))
+    graft.engine.Graft.cachedRead(spark, Commit.resolve(spark, indexPath))
 
   /** Index-table predicate for a value interval; None = open bound (the
     * reference's half-open RANGE forms, common/filter.h LeftUnbounded /

@@ -144,9 +144,12 @@ object AnnRouting {
   /** Analyze the index table ONCE at registration (file listing +
     * schema inference) — plan time then touches no storage
     * (review r18-9: the flat families re-listed the index per
-    * optimization pass, contradicting the file's own 100 TB note). */
+    * optimization pass, contradicting the file's own 100 TB note). Reads
+    * the LIVE dir ([[graft.index.Commit.resolve]]): a committed generation,
+    * or the backup inside a rename swap's crash window. */
   private def analyzedPlan(spark: SparkSession, path: String): LogicalPlan =
-    spark.read.parquet(path).queryExecution.analyzed
+    spark.read.parquet(graft.index.Commit.resolve(spark, path))
+      .queryExecution.analyzed
 
   private def qualify(spark: SparkSession, p: String): String = {
     val path = new org.apache.hadoop.fs.Path(p)
@@ -166,17 +169,14 @@ object AnnRouting {
   def register(spark: SparkSession, basePath: String, indexPath: String,
                model: Ivf.Model, vecCol: String, nprobe: Int,
                ef: Int = 64): Unit = {
+    require(nprobe >= 1 && nprobe <= model.nlist,
+      s"nprobe $nprobe out of [1, ${model.nlist}]")
     val q = qualify(spark, basePath)
     val epoch0 = epochOf(spark, indexPath)
     val rows = -1L // filled by putUnlessMutated's single footer sweep
-    // resolve: a compact-managed index's live data sits in the committed
-    // generation dir — register must analyze THAT listing
-    val idxPlan = spark.read.parquet(
-      graft.index.SecondaryIndex.resolve(spark, indexPath))
-      .queryExecution.analyzed
     putUnlessMutated(spark, indexPath, epoch0, q,
       Registered(q, indexPath, vecCol, rows,
-        IvfFamily(model, nprobe, ef, idxPlan)))
+        IvfFamily(model, nprobe, ef, analyzedPlan(spark, indexPath))))
   }
 
   /** Register a CLUSTERED GRAPH index — float
@@ -288,8 +288,7 @@ object AnnRouting {
     putUnlessMutated(spark, indexPath, epoch0, q,
       Registered(q, indexPath, vecCol, rows,
         IvfPqFamily(model, pq, idCol, nprobe, refine, metric,
-          analyzedPlan(spark,
-            graft.index.SecondaryIndex.resolve(spark, indexPath)))))
+          analyzedPlan(spark, indexPath))))
   }
 
   def unregister(spark: SparkSession, basePath: String): Unit =
@@ -342,7 +341,8 @@ object AnnRouting {
             r.vecCol, queries, qIdCol, qVecCol, cIdCol, k, g.ef, g.refine,
             hier = g.hier, hierMin = g.hierMin)
         case f: FlatFamily =>
-          Quantize.knnJoin(graft.engine.Graft.cachedRead(spark, r.indexPath),
+          Quantize.knnJoin(graft.engine.Graft.cachedRead(spark,
+              graft.index.Commit.resolve(spark, r.indexPath)),
             r.vecCol, f.codeCol, f.idCol, f.codec, queries, qIdCol, qVecCol,
             cIdCol, k, metric, f.refine)
         case f: IvfPqFamily =>

@@ -170,7 +170,7 @@ object IndexRouting {
     // the live data of a manifest-managed (or mid-compact) index sits in a
     // generation dir — read through the same resolution every lookup uses
     val idx = spark.read.parquet(
-      graft.index.SecondaryIndex.resolve(spark, indexPath))
+      graft.index.Commit.resolve(spark, indexPath))
     import org.apache.spark.sql.functions._
     // the (value, chunk)-uniqueness probe rides the same aggregation: it
     // classifies the layout as canonical vs segmented for the sorted-

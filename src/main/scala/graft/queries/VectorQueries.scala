@@ -1891,7 +1891,7 @@ object VectorQueries {
         if (marker.isFile) {
           // deterministic re-derivation: same corpus, same training path
           val corpus = graft.engine.Graft.cachedRead(s,
-            graft.index.SecondaryIndex.resolve(s, path)).drop("ivf_cluster")
+            graft.index.Commit.resolve(s, path)).drop("ivf_cluster")
           Ivf.train(corpus, "embedding", nlist = 16)
         } else {
           fsDelete(s, parent)

@@ -1,6 +1,7 @@
 package graft.vector
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.index.Commit
+import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
@@ -439,11 +440,8 @@ object Hnsw {
     * new graph paired with the old build's centroids/radii (review r15-5,
     * r18-9). */
   private def sweepForBuild(spark: SparkSession, path: String): Unit = {
+    Commit.requireUnmanaged(spark, path, "compactClustered / compactQuantized")
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(graft.index.SecondaryIndex.manifestVersions(fs, path).isEmpty,
-      s"$path is manifest-managed: readers resolve through the manifest, so " +
-        "a rebuild at the base path would be silently ignored — use " +
-        "compactClustered / compactQuantized")
     Sidecars.foreach(s => fs.delete(new Path(baseDir(path, s)), true))
   }
 
@@ -597,46 +595,25 @@ object Hnsw {
 
   /** Current (graph dir, route dir) of a clustered index — the single
     * read-side entry point ([[loadGraph]]/[[index]]/[[appendSegment]] go
-    * through it; the same role as
-    * [[graft.index.SecondaryIndex.resolve]]). Resolution order: highest
-    * valid manifest version (`<path>_manifest/v<N>` naming an existing
-    * generation dir, which holds `graph/` + `route/` subdirs —
-    * [[compactClustered]]'s commit protocol); else the legacy base pair
-    * `(<path>, <path>_route)` — refusing a SUPERSEDED base loudly, because
-    * serving it after a manifest-dir loss would be silent stale data. */
+    * through it): [[Commit.resolve]]'s live dir, mapped to the layout by
+    * [[partDir]]. */
   def resolveDirs(spark: SparkSession, indexPath: String): (String, String) = {
-    import graft.index.SecondaryIndex.{manifestVersions, readSmallFile, SupersededMarker}
-    val base = new Path(indexPath)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    manifestVersions(fs, indexPath).foreach { case (_, vfile) =>
-      val content = readSmallFile(fs, vfile)
-      if (content.nonEmpty) {
-        val gen = new Path(base.getParent, content)
-        if (fs.exists(gen))
-          return (new Path(gen, "graph").toString, new Path(gen, "route").toString)
-      }
-    }
-    val superseded =
-      try fs.exists(new Path(base, SupersededMarker))
-      catch { case _: java.io.IOException => false }
-    if (superseded)
-      throw new IllegalStateException(
-        s"$indexPath is a superseded generation of a manifest-managed " +
-          s"graph index but no valid manifest version exists under " +
-          s"${indexPath}_manifest — the manifest dir was lost; restore " +
-          "it or rebuild the index")
-    (indexPath, routePath(indexPath))
+    val live = Commit.resolve(spark, indexPath)
+    (partDir(indexPath, live, "graph"), partDir(indexPath, live, "route"))
   }
 
-  /** Current dir of sidecar `name` (layers, qmodel, qerr): beside the
-    * graph — `<path>_<name>` in the base layout, `<name>/` inside a
-    * committed generation. */
+  /** Current dir of sidecar `name` (layers, qmodel, qerr). */
   private[vector] def sidecarDir(spark: SparkSession, indexPath: String,
-                                 name: String): String = {
-    val g = resolveDirs(spark, indexPath)._1
-    if (g == indexPath) baseDir(indexPath, name)
-    else new Path(new Path(g).getParent, name).toString
-  }
+                                 name: String): String =
+    partDir(indexPath, Commit.resolve(spark, indexPath), name)
+
+  /** Dir of part `name` (graph or a sidecar) of the index whose live dir
+    * is `live`: `<path>_<name>` in the legacy base layout (the graph at
+    * the path itself), `<name>/` inside a committed generation
+    * ([[compactClustered]]'s commit). */
+  private def partDir(indexPath: String, live: String, name: String): String =
+    if (live == indexPath) baseDir(indexPath, name)
+    else new Path(live, name).toString
 
   /** I9 for the graph family — the reference's RT per-segment KNN build
     * (each ingested segment gets its own index built under the shared
@@ -762,19 +739,14 @@ object Hnsw {
   }
 
   /** I9 OPTIMIZE for the clustered FLOAT graph, with the OBJECT-STORE-SAFE
-    * commit of [[graft.index.SecondaryIndex.compactManifest]]: re-cluster
-    * the full corpus — read from the index itself, whose (id, vec) rows
-    * ARE the dataset — into a NEW immutable generation dir `<path>__g<N>`
-    * holding `graph/` + `route/`, then commit by writing ONE manifest
-    * object naming it (the only atomicity an object store guarantees).
-    * [[resolveDirs]] prefers the manifest, so readers swap atomically and
-    * every crash interleaving leaves a readable index. The generation
-    * live until this commit is RETAINED for one compaction cycle
-    * (in-flight readers that resolved it pre-commit finish on a
-    * consistent snapshot); a retained legacy base pair gets the
-    * superseded marker so a later manifest-dir loss fails loudly instead
-    * of silently serving stale data; the next compact sweeps it. A code
-    * graph holds no floats: compact it with [[compactQuantized]]. */
+    * generation commit of [[Commit.commitGeneration]]: re-cluster the full
+    * corpus — read from the index itself, whose (id, vec) rows ARE the
+    * dataset — into a new generation dir holding `graph/` + `route/`,
+    * committed by ONE manifest object. [[resolveDirs]] prefers the
+    * manifest, so readers swap atomically and every crash interleaving
+    * leaves a readable index; the previous generation (a legacy base pair
+    * included) is retained one cycle. A code graph holds no floats:
+    * compact it with [[compactQuantized]]. */
   def compactClustered(spark: SparkSession, indexPath: String,
                        p: Params = Params()): Unit =
     rebuildClustered(spark, indexPath, p, "vec", "id")(
@@ -828,72 +800,29 @@ object Hnsw {
   /** The generation-rebuild body of every compaction and deletion:
     * re-cluster + re-link `corpus(live graph dir)` in the index's node
     * space into a new generation dir, rebuild the hierarchy there when the
-    * index had one, then manifest-commit. */
+    * index had one, then commit ([[Commit.commitGeneration]]; a legacy
+    * layout's sidecars — its `_layers` built over the OLD graph's pids —
+    * are superseded with its graph). */
   private def rebuildClustered(spark: SparkSession, indexPath: String,
                                p: Params, vecCol: String, idCol: String)
                               (corpus: String => DataFrame): Unit = {
-    val base = new Path(indexPath)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val graphDir = resolveDirs(spark, indexPath)._1
-    val ix = index(spark, indexPath)
-    val nextVersion = graft.index.SecondaryIndex.manifestVersions(fs, indexPath)
-      .headOption.map(_._1).getOrElse(0L) + 1
-    val nextPath = new Path(s"${indexPath}__g$nextVersion")
-    fs.delete(nextPath, true) // a crashed prior attempt at this version
-    val dir = (name: String) => new Path(nextPath, name).toString
-    val (_, qm) = buildClusteredTo(corpus(graphDir), vecCol, idCol, dir, p,
-      ix.metric, ix.space.bound)
-    // a hierarchy registration survives OPTIMIZE (r15 VERDICT #7): when
-    // the superseded generation carried layers, rebuild them over the NEW
-    // graph (codes: with the RETRAINED model) INSIDE the same uncommitted
-    // generation dir — the manifest commit below swaps graph + layers
-    // atomically, so hier search never sees a generation without its
-    // sidecar
-    if (hasHierarchy(spark, indexPath))
-      buildLayersTo(spark, dir("graph"), spaceOf(ix.metric, qm),
-        dir("layers"), p)
-    commitGeneration(fs, base, indexPath, graphDir, nextVersion, nextPath)
+    Commit.commitGeneration(spark, indexPath, Sidecars) { (live, next) =>
+      val ix = index(spark, indexPath)
+      val dir = (name: String) => new Path(next, name).toString
+      val (_, qm) = buildClusteredTo(corpus(partDir(indexPath, live, "graph")),
+        vecCol, idCol, dir, p, ix.metric, ix.space.bound)
+      // a hierarchy registration survives OPTIMIZE (r15 VERDICT #7): when
+      // the superseded generation carried layers, rebuild them over the NEW
+      // graph (codes: with the RETRAINED model) INSIDE the same uncommitted
+      // generation dir — the manifest commit swaps graph + layers
+      // atomically, so hier search never sees a generation without its
+      // sidecar
+      if (hasHierarchy(spark, indexPath))
+        buildLayersTo(spark, dir("graph"), spaceOf(ix.metric, qm),
+          dir("layers"), p)
+    }
     invalidate(indexPath)
     graft.plans.AnnRouting.onIndexMutated(spark, indexPath)
-  }
-
-  /** The generation-commit tail of [[rebuildClustered]] (one definition of
-    * the crash-safety protocol — review r15-2): write ONE manifest object
-    * naming the new generation, sweep stale dirs by name (base layout +
-    * its sidecars + other `__gN` generations) while RETAINING the
-    * generation that was live until this commit for one cycle, and mark a
-    * retained legacy base superseded so a lost manifest fails loudly
-    * instead of silently serving stale data. A legacy-layout `_layers`
-    * sidecar is built over the OLD graph's pids, stale once the generation
-    * commits. */
-  private def commitGeneration(fs: FileSystem, base: Path, indexPath: String,
-                               graphDir: String, nextVersion: Long,
-                               nextPath: Path): Unit = {
-    graft.index.SecondaryIndex.writeManifest(fs, indexPath, nextVersion,
-      nextPath.getName)
-    val baseName = base.getName
-    val baseNames: Set[String] = Set(baseName) ++ Sidecars.map(baseDir(baseName, _))
-    val retained: Set[String] =
-      if (graphDir == indexPath) baseNames
-      else Set(new Path(graphDir).getParent.getName)
-    if (fs.exists(base.getParent)) {
-      fs.listStatus(base.getParent).foreach { st =>
-        val n = st.getPath.getName
-        val stale = !retained.contains(n) && (
-          baseNames.contains(n) ||
-            (n.startsWith(baseName + "__g") &&
-              n.stripPrefix(baseName + "__g").toLongOption
-                .exists(_ != nextVersion)))
-        if (stale) fs.delete(st.getPath, true)
-      }
-    }
-    if (retained.contains(baseName)) {
-      val mk = fs.create(new Path(base,
-        graft.index.SecondaryIndex.SupersededMarker), true)
-      try mk.write("superseded by manifest commit\n"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally mk.close()
-    }
   }
 
   // Resident graphs (the reference keeps its HNSW mmap'd for the life of

@@ -2,6 +2,8 @@ package graft.vector
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.index.Commit
+import graft.index.Commit.resolve
 
 /** IVF (inverted-file) ANN index — the partitioned scale path behind the
   * exact scoreAndTopK (SURVEY §2.5 K1/K6 design space; the reference ships
@@ -50,8 +52,11 @@ object Ivf {
       * filters take: two queries that probe the same set then plan the
       * same literal list and reuse one compiled filter, where probe order
       * would compile a new class per query. */
-    def probeSet(q: Array[Float], nprobe: Int): Seq[Long] =
+    def probeSet(q: Array[Float], nprobe: Int): Seq[Long] = {
+      // an empty probe set would silently answer every top-k with 0 rows
+      require(nprobe >= 1, s"nprobe $nprobe < 1")
       probeOrder(q).take(nprobe).sorted.map(_.toLong)
+    }
   }
 
   private[graft] def scalarDist(metric: Knn.Metric, a: Array[Float],
@@ -167,20 +172,13 @@ object Ivf {
     m
   }
 
-  /** Manifest resolution shared with the secondary index and the graph
-    * family: the live data of a [[compact]]-managed index sits in the
-    * committed generation dir, not at the base path. Every reader and the
-    * segment append go through this. */
-  private def resolve(spark: SparkSession, indexPath: String): String =
-    graft.index.SecondaryIndex.resolve(spark, indexPath)
-
   /** Write the index: assigned rows range-clustered by list id, so probes
     * prune files. */
   def buildIndex(df: DataFrame, vecCol: String, m: Model, path: String,
                  files: Int = 4): Unit = {
     // a rebuild at the base path of a [[compact]]-managed index would be
     // invisible to readers (they resolve to the committed generation)
-    graft.index.SecondaryIndex.requireNotManifestManaged(df.sparkSession, path)
+    Commit.requireUnmanaged(df.sparkSession, path, "Ivf.compact")
     graft.tables.Writer.write(assign(df, vecCol, m), path,
       sortBy = Seq("ivf_cluster"), files = files)
     // a REBUILT index invalidates any routing entry that cached the old
@@ -210,52 +208,37 @@ object Ivf {
     graft.plans.AnnRouting.onIndexMutated(df.sparkSession, path)
   }
 
-  /** I9 OPTIMIZE for the IVF index, with the OBJECT-STORE-SAFE manifest
-    * commit the secondary index ([[graft.index.SecondaryIndex
-    * .compactManifest]]) and the graph family ([[Hnsw.compactClustered]])
-    * already use — closing the one family whose maintenance predated the
-    * protocol (an interrupted retrain + in-place rebuild could leave a
-    * mixed directory): re-assign the FULL corpus — read from the index
-    * itself, whose rows are the dataset — into a NEW immutable generation
-    * dir `<path>__gN`, optionally retraining the coarse model first
-    * (appended batches that drifted from every centroid degrade pruning
-    * economy until a retrain), then COMMIT by writing one manifest object
-    * naming the generation. Readers resolve through the manifest, so the
-    * swap is atomic and every crash interleaving leaves a readable index;
-    * the generation live until this commit is retained for one cycle, and
-    * a retained legacy base dir gets the superseded marker so a later
-    * manifest loss fails loudly instead of silently serving stale data.
+  /** I9 OPTIMIZE for the IVF index through the object-store-safe
+    * generation commit every index family shares
+    * ([[Commit.commitGeneration]] — an interrupted retrain + in-place
+    * rebuild could otherwise leave a mixed directory): re-assign the FULL corpus — read from the index
+    * itself, whose rows are the dataset — into a new generation,
+    * optionally retraining the coarse model first (appended batches that
+    * drifted from every centroid degrade pruning economy until a
+    * retrain). Readers resolve through the manifest, so the swap is atomic
+    * and every crash interleaving leaves a readable index; the previous
+    * generation is retained one cycle.
     *
     * Returns the serving model — the caller re-registers the automatic
     * route with it (the epoch bump already dropped the old entry), and
     * derives fresh [[listRadii]] if the adaptive bound is in use. */
   def compact(spark: SparkSession, indexPath: String, vecCol: String,
               m: Model, retrain: Boolean = false, files: Int = 4): Model = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val base = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = base.getFileSystem(conf)
-    val cur = resolve(spark, indexPath)
-    val curVersion = graft.index.SecondaryIndex.manifestVersions(fs, indexPath)
-      .headOption.map(_._1).getOrElse(0L)
-    val nextVersion = curVersion + 1
-    val next = s"${indexPath}__g$nextVersion"
-    fs.delete(new org.apache.hadoop.fs.Path(next), true) // crashed attempt
-    val corpus = spark.read.parquet(cur).drop("ivf_cluster")
-    // an IVF-ADC table must compact through [[compactPq]]: this path
-    // would carry the ivf_pq column VERBATIM through a retrain, leaving
-    // codes that are residuals of the SUPERSEDED centroids — silently
-    // wrong screens (r17 audit)
-    require(!corpus.columns.contains("ivf_pq"),
-      s"$indexPath carries IVF-ADC codes (ivf_pq): compact it with " +
-        "Ivf.compactPq, which re-encodes the residual codes in-generation")
-    val m2 = if (retrain) train(corpus, vecCol, m.nlist, metric = m.metric)
-             else m
-    graft.tables.Writer.write(assign(corpus, vecCol, m2), next,
-      sortBy = Seq("ivf_cluster"), files = files)
-    // COMMIT: one new immutable manifest object
-    graft.index.SecondaryIndex.writeManifest(fs, indexPath, nextVersion,
-      new org.apache.hadoop.fs.Path(next).getName)
-    sweepGenerations(spark, indexPath, nextVersion, cur)
+    val m2 = Commit.commitGeneration(spark, indexPath) { (live, next) =>
+      val corpus = spark.read.parquet(live).drop("ivf_cluster")
+      // an IVF-ADC table must compact through [[compactPq]]: this path
+      // would carry the ivf_pq column VERBATIM through a retrain, leaving
+      // codes that are residuals of the SUPERSEDED centroids — silently
+      // wrong screens (r17 audit)
+      require(!corpus.columns.contains("ivf_pq"),
+        s"$indexPath carries IVF-ADC codes (ivf_pq): compact it with " +
+          "Ivf.compactPq, which re-encodes the residual codes in-generation")
+      val m2 = if (retrain) train(corpus, vecCol, m.nlist, metric = m.metric)
+               else m
+      graft.tables.Writer.write(assign(corpus, vecCol, m2), next,
+        sortBy = Seq("ivf_cluster"), files = files)
+      m2
+    }
     graft.plans.AnnRouting.onIndexMutated(spark, indexPath)
     m2
   }
@@ -272,73 +255,26 @@ object Ivf {
     * side is the caller's (delete there first — [[VectorIndexCheck]]'s
     * reconciliation catches the stale window). Probe order and
     * exactness are unaffected: probes simply see fewer rows. The commit
-    * + generation sweep mirror [[compact]]'s, so readers never observe
-    * a half-deleted index; on an ADC table the serving-metric marker
-    * rides into the new generation. */
+    * is [[compact]]'s ([[Commit.commitGeneration]]), so readers never
+    * observe a half-deleted index; on an ADC table the serving-metric
+    * marker rides into the new generation. */
   def deleteFromIndex(spark: SparkSession, indexPath: String,
                       pred: org.apache.spark.sql.Column,
                       files: Int = 4): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val base = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = base.getFileSystem(conf)
-    val cur = resolve(spark, indexPath)
-    val curVersion = graft.index.SecondaryIndex.manifestVersions(fs, indexPath)
-      .headOption.map(_._1).getOrElse(0L)
-    val nextVersion = curVersion + 1
-    val next = s"${indexPath}__g$nextVersion"
-    fs.delete(new org.apache.hadoop.fs.Path(next), true) // crashed attempt
-    graft.tables.Writer.write(
-      spark.read.parquet(cur).filter(!pred), next,
-      sortBy = Seq("ivf_cluster"), files = files)
-    // an ADC generation carries its serving-metric marker (searchPq and
-    // appends check it at the RESOLVED dir — a markerless IP generation
-    // would fail requireStoredMaxNorm loudly)
-    val mk = new org.apache.hadoop.fs.Path(cur, PqMetricMarker)
-    if (fs.exists(mk)) {
-      val in = fs.open(mk)
-      val body = try in.readAllBytes() finally in.close()
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(next, PqMetricMarker), true)
-      try out.write(body) finally out.close()
+    Commit.commitGeneration(spark, indexPath) { (live, next) =>
+      graft.tables.Writer.write(
+        spark.read.parquet(live).filter(!pred), next,
+        sortBy = Seq("ivf_cluster"), files = files)
+      // an ADC generation carries its serving-metric marker (searchPq and
+      // appends check it at the RESOLVED dir — a markerless IP generation
+      // would fail requireStoredMaxNorm loudly)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val mk = new org.apache.hadoop.fs.Path(live, PqMetricMarker)
+      val fs = mk.getFileSystem(conf)
+      if (fs.exists(mk)) org.apache.hadoop.fs.FileUtil.copy(fs, mk, fs,
+        new org.apache.hadoop.fs.Path(next, PqMetricMarker), false, conf)
     }
-    graft.index.SecondaryIndex.writeManifest(fs, indexPath, nextVersion,
-      new org.apache.hadoop.fs.Path(next).getName)
-    sweepGenerations(spark, indexPath, nextVersion, cur)
     graft.plans.AnnRouting.onIndexMutated(spark, indexPath)
-  }
-
-  /** The post-commit generation sweep shared by [[compact]] and
-    * [[compactPq]]: delete stale dirs by name (orphans from a crash
-    * between a past commit and its cleanup included), RETAINING the
-    * generation that was live until this commit for one cycle
-    * (in-flight readers that resolved it pre-commit finish on a
-    * consistent snapshot), and mark a retained legacy base dir
-    * superseded so a later manifest loss fails loudly. */
-  private def sweepGenerations(spark: SparkSession, indexPath: String,
-                               nextVersion: Long, cur: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val base = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = base.getFileSystem(conf)
-    val baseName = base.getName
-    val retained = new org.apache.hadoop.fs.Path(cur).getName
-    if (fs.exists(base.getParent)) {
-      fs.listStatus(base.getParent).foreach { st =>
-        val n = st.getPath.getName
-        val stale = n != retained && (
-          n == baseName ||
-            (n.startsWith(baseName + "__g") &&
-              n.stripPrefix(baseName + "__g").toLongOption
-                .exists(_ != nextVersion)))
-        if (stale) fs.delete(st.getPath, true)
-      }
-    }
-    if (retained == baseName) {
-      val mk = fs.create(new org.apache.hadoop.fs.Path(base,
-        graft.index.SecondaryIndex.SupersededMarker), true)
-      try mk.write("superseded by manifest commit\n"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally mk.close()
-    }
   }
 
   /** Top-k search probing the `nprobe` lists closest to the query.
@@ -401,7 +337,7 @@ object Ivf {
                    files: Int = 4,
                    metric: Knn.Metric = Knn.L2): Quantize.PqModel = {
     requirePqMetric(m, metric)
-    graft.index.SecondaryIndex.requireNotManifestManaged(df.sparkSession, path)
+    Commit.requireUnmanaged(df.sparkSession, path, "Ivf.compactPq")
     val ipM2 = if (metric == Knn.IP) maxSumsq(df, vecCol) else 0.0
     val (bound, bcol) = boundSide(df, vecCol, metric, ipM2)
     val assigned = assign(bound, bcol, m)
@@ -604,13 +540,14 @@ object Ivf {
   }
 
   /** I9 OPTIMIZE for the IVF-ADC index (r17 — completes the family's
-    * lifecycle beside [[appendToIndexPq]]): the manifest-commit shape of
-    * [[compact]], with the codes RE-ENCODED in-generation — coarse
-    * re-assignment (optionally retraining the coarse model on the full
-    * corpus) followed by residual re-encoding (optionally retraining the
-    * codebooks), so the committed generation's ivf_pq codes are always
-    * residuals of ITS centroids. The serving-metric marker rides into
-    * the new generation (appends and searches keep checking it).
+    * lifecycle beside [[appendToIndexPq]]): [[compact]]'s generation
+    * commit ([[Commit.commitGeneration]]), with the codes RE-ENCODED
+    * in-generation — coarse re-assignment (optionally retraining the
+    * coarse model on the full corpus) followed by residual re-encoding
+    * (optionally retraining the codebooks), so the committed generation's
+    * ivf_pq codes are always residuals of ITS centroids. A fresh
+    * serving-metric marker is written into the new generation (appends
+    * and searches keep checking it).
     * Returns the serving (coarse model, codebooks) — the caller
     * re-registers the automatic route with them. */
   def compactPq(spark: SparkSession, indexPath: String, vecCol: String,
@@ -620,49 +557,39 @@ object Ivf {
                 metric: Knn.Metric = Knn.L2): (Model, Quantize.PqModel) = {
     requirePqMetric(m, metric)
     checkPqMetric(spark, indexPath, metric)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val base = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = base.getFileSystem(conf)
-    val cur = resolve(spark, indexPath)
-    val curVersion = graft.index.SecondaryIndex.manifestVersions(fs, indexPath)
-      .headOption.map(_._1).getOrElse(0L)
-    val nextVersion = curVersion + 1
-    val next = s"${indexPath}__g$nextVersion"
-    fs.delete(new org.apache.hadoop.fs.Path(next), true) // crashed attempt
-    val coded0 = spark.read.parquet(cur)
-    // refuse a PLAIN IVF index: compactPq would silently "upgrade" it to
-    // the ADC layout — the caller almost certainly passed the wrong path
-    require(coded0.columns.contains("ivf_pq"),
-      s"$indexPath carries no IVF-ADC codes (ivf_pq): compact it with " +
-        "Ivf.compact, or build the ADC layout with buildIndexPq first")
-    val corpus = coded0.drop("ivf_cluster", "ivf_pq")
-    // IP: a retrain refreshes the augmentation bound from the full
-    // corpus (drifted appends regain their exact screen order); a
-    // frozen-model compact keeps the stored M (its codes re-cluster but
-    // stay in the same space)
-    val ipM2 = if (metric != Knn.IP) 0.0
-      else if (retrain) maxSumsq(corpus, vecCol)
-      else { val mn = requireStoredMaxNorm(spark, indexPath); mn * mn }
-    val (bound, bcol) = boundSide(corpus, vecCol, metric, ipM2)
-    val m2 = if (retrain) train(bound, bcol, m.nlist, metric = Knn.L2)
-             else m
-    val assigned = assign(bound, bcol, m2)
-      .withColumn("ivf_res", residualCol(col(bcol), col("ivf_cluster"), m2))
-    // the residual space moved with the centroids, so a coarse retrain
-    // implies fresh codebooks even when `retrain` asked only for the
-    // coarse model — stale codebooks would decode against the old space
-    val pq2 = if (retrain) Quantize.trainPq(assigned, "ivf_res",
-                idCol, subM, codeK)
-              else pq
-    val coded = Quantize.encodeTable(assigned, "ivf_res", "ivf_pq", pq2)
-      .drop("ivf_res", BoundCol)
-    graft.tables.Writer.write(coded, next,
-      sortBy = Seq("ivf_cluster"), files = files)
-    writePqMetric(spark, next, metric, math.sqrt(ipM2))
-    // COMMIT: one new immutable manifest object (the [[compact]] scheme)
-    graft.index.SecondaryIndex.writeManifest(fs, indexPath, nextVersion,
-      new org.apache.hadoop.fs.Path(next).getName)
-    sweepGenerations(spark, indexPath, nextVersion, cur)
+    val (m2, pq2) = Commit.commitGeneration(spark, indexPath) { (live, next) =>
+      val coded0 = spark.read.parquet(live)
+      // refuse a PLAIN IVF index: compactPq would silently "upgrade" it to
+      // the ADC layout — the caller almost certainly passed the wrong path
+      require(coded0.columns.contains("ivf_pq"),
+        s"$indexPath carries no IVF-ADC codes (ivf_pq): compact it with " +
+          "Ivf.compact, or build the ADC layout with buildIndexPq first")
+      val corpus = coded0.drop("ivf_cluster", "ivf_pq")
+      // IP: a retrain refreshes the augmentation bound from the full
+      // corpus (drifted appends regain their exact screen order); a
+      // frozen-model compact keeps the stored M (its codes re-cluster but
+      // stay in the same space)
+      val ipM2 = if (metric != Knn.IP) 0.0
+        else if (retrain) maxSumsq(corpus, vecCol)
+        else { val mn = requireStoredMaxNorm(spark, indexPath); mn * mn }
+      val (bound, bcol) = boundSide(corpus, vecCol, metric, ipM2)
+      val m2 = if (retrain) train(bound, bcol, m.nlist, metric = Knn.L2)
+               else m
+      val assigned = assign(bound, bcol, m2)
+        .withColumn("ivf_res", residualCol(col(bcol), col("ivf_cluster"), m2))
+      // the residual space moved with the centroids, so a coarse retrain
+      // implies fresh codebooks even when `retrain` asked only for the
+      // coarse model — stale codebooks would decode against the old space
+      val pq2 = if (retrain) Quantize.trainPq(assigned, "ivf_res",
+                  idCol, subM, codeK)
+                else pq
+      val coded = Quantize.encodeTable(assigned, "ivf_res", "ivf_pq", pq2)
+        .drop("ivf_res", BoundCol)
+      graft.tables.Writer.write(coded, next,
+        sortBy = Seq("ivf_cluster"), files = files)
+      writePqMetric(spark, next, metric, math.sqrt(ipM2))
+      (m2, pq2)
+    }
     graft.plans.AnnRouting.onIndexMutated(spark, indexPath)
     (m2, pq2)
   }

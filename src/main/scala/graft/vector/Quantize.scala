@@ -763,11 +763,13 @@ object Quantize {
   // plan's cached relation is invalidated via the AnnRouting epoch.
 
   /** Append `newRows` (base columns WITHOUT the code columns, same order
-    * as the coded table) encoded with the EXISTING codec. */
+    * as the coded table) encoded with the EXISTING codec, into the table's
+    * live dir — inside [[compact]]'s rename window that is the backup, so
+    * the append extends the table instead of starting a batch-only one. */
   def appendSegment(newRows: DataFrame, vecCol: String, codeCol: String,
                     quantPath: String, c: FlatCodec): Unit = {
-    encodeTable(newRows, vecCol, codeCol, c)
-      .write.mode("append").parquet(quantPath)
+    encodeTable(newRows, vecCol, codeCol, c).write.mode("append")
+      .parquet(graft.index.Commit.resolve(newRows.sparkSession, quantPath))
     graft.plans.AnnRouting.onIndexMutated(newRows.sparkSession, quantPath)
   }
 
@@ -776,42 +778,25 @@ object Quantize {
     * to the FULL corpus and re-encode (appended batches that drifted
     * outside the trained min/max or thresholds screen worse until then —
     * retraining restores the per-dim error bound and the sign-threshold
-    * selectivity; the serving metric is preserved). The swap is the
-    * rename-to-backup scheme of [[graft.index.SecondaryIndex.compact]]:
-    * the table exists at SOME path at every instant, and a crash between
-    * the renames leaves it intact at `<path>_old`. Returns the serving
+    * selectivity; the serving metric is preserved). The swap is
+    * [[graft.index.Commit.swapInPlace]]: the table exists at SOME path at
+    * every instant, and a crash between the renames leaves it intact at
+    * `<path>_old`. Returns the serving
     * codec — the caller re-registers the automatic route with it (the
     * epoch bump already dropped the old entry). */
   def compact[C <: FlatCodec](spark: SparkSession, quantPath: String,
                               vecCol: String, codeCol: String, idCol: String,
                               c: C, retrain: Boolean = false): C = {
-    val tmp = quantPath + "_compacting"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(quantPath)
-    val src = new org.apache.hadoop.fs.Path(tmp)
-    val bak = new org.apache.hadoop.fs.Path(quantPath + "_old")
-    val fs = dst.getFileSystem(conf)
-    // self-heal from a crash between a prior compact's two renames
-    if (!fs.exists(dst) && fs.exists(bak) && !fs.rename(bak, dst))
-      throw new java.io.IOException(
-        s"table missing at $quantPath and backup restore from $bak failed")
-    val base = spark.read.parquet(quantPath)
-      .drop(c.fields(codeCol).map(_.name): _*)
-    // every codec's retrain returns its own type
-    val c2 = if (retrain) c.retrain(base, vecCol, idCol).asInstanceOf[C] else c
-    graft.tables.Writer.write(encodeTable(base, vecCol, codeCol, c2), tmp,
-      sortBy = Seq(idCol))
-    fs.delete(bak, true)
-    if (!fs.rename(dst, bak))
-      throw new java.io.IOException(s"could not back up $quantPath for swap")
-    if (!fs.rename(src, dst)) {
-      if (!fs.rename(bak, dst))
-        throw new java.io.IOException(
-          s"swap of $tmp into $quantPath failed AND the restore failed: " +
-            s"the table data is at $bak — rename it back manually")
-      throw new java.io.IOException(s"could not swap $tmp into $quantPath")
+    val c2 = graft.index.Commit.swapInPlace(spark, quantPath) { tmp =>
+      val base = spark.read.parquet(quantPath)
+        .drop(c.fields(codeCol).map(_.name): _*)
+      // every codec's retrain returns its own type
+      val c2 = if (retrain) c.retrain(base, vecCol, idCol).asInstanceOf[C]
+               else c
+      graft.tables.Writer.write(encodeTable(base, vecCol, codeCol, c2), tmp,
+        sortBy = Seq(idCol))
+      c2
     }
-    fs.delete(bak, true)
     graft.plans.AnnRouting.onIndexMutated(spark, quantPath)
     c2
   }

@@ -371,7 +371,7 @@ object VectorIndexCheck {
                fact: Option[(DataFrame, String)] = None): Report = {
     import spark.implicits._
     val issues = scala.collection.mutable.ArrayBuffer.empty[String]
-    val live = graft.index.SecondaryIndex.resolve(spark, indexPath)
+    val live = graft.index.Commit.resolve(spark, indexPath)
     val t = spark.read.parquet(live)
     val rows = t.count()
     val oob = t.filter(col("ivf_cluster") < 0 ||

@@ -1270,4 +1270,71 @@ class AnnRoutingSpec extends AnyFunSuite {
         k = 0, ef = 16))
     assert(e.getMessage.contains("k >= 1"))
   }
+
+  test("a flat table appended inside compact's rename window keeps every row; routed reads follow the backup") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val tmp = Files.createTempDirectory("graft-annroute-qwin")
+    val base = tmp.resolve("base").toString
+    val qt = tmp.resolve("qt").toString
+    val df = vectors.toDF("vec_id", "embedding", "label")
+    Writer.write(df, base, sortBy = Seq("vec_id"))
+    val first = df.filter($"vec_id" % 10 =!= 7)
+    val m = graft.vector.Quantize.train(first, "embedding")
+    Writer.write(graft.vector.Quantize.encodeTable(first, "embedding", "qvec",
+      m), qt, sortBy = Seq("vec_id"))
+    // a crash between compact's two renames leaves the table at <qt>_old;
+    // an append in that window must extend it, not start a new table
+    val fs = new Path(qt).getFileSystem(SparkT.spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new Path(qt), new Path(qt + "_old")))
+    graft.vector.Quantize.appendSegment(df.filter($"vec_id" % 10 === 7),
+      "embedding", "qvec", qt, m)
+    AnnRouting.registerFlat(SparkT.spark, base, qt, m, vecCol = "embedding",
+      idCol = "vec_id", codeCol = "qvec", refine = 16)
+    try {
+      val routed = Knn.knn(SparkT.spark.read.parquet(base), "embedding",
+        "vec_id", query, 10)
+      assert(routed.queryExecution.optimizedPlan.collect { case j: Join => j }
+        .nonEmpty, routed.queryExecution.optimizedPlan.toString)
+      assert(routed.select("vec_id").as[Long].collect().toSeq === exactTop10)
+      val queries = df.filter($"vec_id" < 5)
+        .select($"vec_id".as("qid"), $"embedding".as("qvec"))
+      def pairs(j: DataFrame) =
+        j.select("qid", "cid", "rn").as[(Long, Long, Int)].collect().toSet
+      val joined = AnnRouting.knnJoin(SparkT.spark, base, "embedding",
+        "vec_id", queries, "qid", "qvec", "cid", 10)
+      assert(pairs(joined) === pairs(Knn.knnJoin(queries,
+        df.select($"vec_id".as("cid"), $"embedding"), "qid", "qvec", "cid",
+        "embedding", 10)))
+    } finally AnnRouting.unregister(SparkT.spark, base)
+    graft.vector.Quantize.compact(SparkT.spark, qt, "embedding", "qvec",
+      "vec_id", m)
+    assert(!fs.exists(new Path(qt + "_old")))
+    assert(SparkT.spark.read.parquet(qt).select("vec_id").as[Long].collect()
+      .sorted.toSeq === vectors.map(_._1).sorted)
+  }
+
+  test("nprobe outside [1, nlist] is refused, never an empty probe set") {
+    val base = Files.createTempDirectory("graft-annroute-np0")
+      .resolve("base").toString
+    Writer.write(vectors.toDF("vec_id", "embedding", "label"), base,
+      sortBy = Seq("vec_id"))
+    // k rows or a loud refusal: the one unacceptable answer is 0 rows
+    def rowsOrRefused(topK: => DataFrame): Unit =
+      try assert(topK.count() === 10L, "nprobe = 0 silently returned no rows")
+      catch { case _: IllegalArgumentException => }
+    try {
+      rowsOrRefused {
+        AnnRouting.register(SparkT.spark, base, idxDir, model,
+          vecCol = "embedding", nprobe = 0)
+        Knn.knn(SparkT.spark.read.parquet(base), "embedding", "vec_id",
+          query, 10)
+      }
+      rowsOrRefused(Ivf.search(SparkT.spark, idxDir, model, "vec_id",
+        "embedding", query, 10, nprobe = 0))
+      intercept[IllegalArgumentException](
+        AnnRouting.register(SparkT.spark, base, idxDir, model,
+          vecCol = "embedding", nprobe = model.nlist + 1))
+    } finally AnnRouting.unregister(SparkT.spark, base)
+  }
 }

@@ -44,7 +44,7 @@ class HnswSpec extends AnyFunSuite {
     // maintain: the manifest-committed generation rebuild
     Hnsw.deleteFromClustered(SparkT.spark, d,
       emb.filter(pred).select($"vec_id"), "vec_id", p)
-    assert(graft.index.SecondaryIndex.manifestVersions(
+    assert(graft.index.Commit.manifestVersions(
       new org.apache.hadoop.fs.Path(d).getFileSystem(
         SparkT.spark.sparkContext.hadoopConfiguration), d).nonEmpty,
       "delete did not commit a generation")
@@ -639,7 +639,7 @@ class HnswSpec extends AnyFunSuite {
     // superseded so a manifest-dir loss fails loudly instead of serving it
     assert(new java.io.File(d).isDirectory)
     assert(new java.io.File(d,
-      graft.index.SecondaryIndex.SupersededMarker).isFile)
+      graft.index.Commit.SupersededMarker).isFile)
     // a rebuild at the base path is refused now — the manifest is the truth
     intercept[IllegalArgumentException] {
       Hnsw.buildIndexClustered(build, "embedding", "vec_id", d, p)

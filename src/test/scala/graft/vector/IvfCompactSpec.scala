@@ -1,17 +1,17 @@
 package graft.vector
 
 import graft.SparkT
-import graft.index.SecondaryIndex
+import graft.index.Commit
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
-/** IVF manifest parity (VERDICT r11 #7): [[Ivf.compact]] uses the same
-  * generation-dir + single-manifest-object commit as
-  * [[SecondaryIndex.compactManifest]] and [[Hnsw.compactClustered]], so an
-  * interrupted retrain can never leave a mixed directory. Every crash
-  * interleaving (half-written generation, empty manifest version) must
-  * leave the index readable and EXACT through every search path. */
+/** IVF manifest parity (VERDICT r11 #7): [[Ivf.compact]] commits through
+  * [[Commit.commitGeneration]], the generation-dir + single-manifest-object
+  * commit every index family shares, so an interrupted retrain can never
+  * leave a mixed directory. Every crash interleaving (half-written
+  * generation, empty manifest version) must leave the index readable and
+  * EXACT through every search path. */
 class IvfCompactSpec extends AnyFunSuite {
 
   private val spark = SparkT.spark
@@ -41,21 +41,21 @@ class IvfCompactSpec extends AnyFunSuite {
     val f = fs(d)
     val m0 = Ivf.train(base.toDF("vec_id", "embedding"), "embedding", nlist = 8)
     Ivf.buildIndex(base.toDF("vec_id", "embedding"), "embedding", m0, d)
-    assert(SecondaryIndex.resolve(spark, d) === d)
+    assert(Commit.resolve(spark, d) === d)
     assert(served(d, m0) === brute(base))
 
     // crash A: a half-written generation dir, no manifest — readers stay
     // on the base dir and the next compact clobbers the garbage
     val stray = new org.apache.hadoop.fs.Path(d + "__g1/part-junk")
     val out = f.create(stray, true); out.write(Array[Byte](1, 2, 3)); out.close()
-    assert(SecondaryIndex.resolve(spark, d) === d)
+    assert(Commit.resolve(spark, d) === d)
     assert(served(d, m0) === brute(base))
 
     // first compact (no retrain): migrates into generation 1; the
     // superseded base dir is retained one cycle and marked
     val m1 = Ivf.compact(spark, d, "embedding", m0)
     assert(m1.centroids === m0.centroids)
-    assert(SecondaryIndex.resolve(spark, d).endsWith("__g1"))
+    assert(Commit.resolve(spark, d).endsWith("__g1"))
     assert(f.exists(new org.apache.hadoop.fs.Path(d)),
       "previous live generation (legacy base) swept too early")
     assert(f.exists(new org.apache.hadoop.fs.Path(d + "/_GRAFT_SUPERSEDED")),
@@ -68,13 +68,13 @@ class IvfCompactSpec extends AnyFunSuite {
 
     // crash B: empty newest manifest version — resolve skips it
     f.create(new org.apache.hadoop.fs.Path(d + "_manifest/v2"), true).close()
-    assert(SecondaryIndex.resolve(spark, d).endsWith("__g1"))
+    assert(Commit.resolve(spark, d).endsWith("__g1"))
     assert(served(d, m1) === brute(base ++ extra))
 
     // retraining compact: new generation serves the appended corpus with
     // a model re-fit to it; g1 is retained one cycle
     val m2 = Ivf.compact(spark, d, "embedding", m1, retrain = true)
-    val gen2 = SecondaryIndex.resolve(spark, d)
+    val gen2 = Commit.resolve(spark, d)
     assert(!gen2.endsWith("__g1") && gen2 != d, gen2)
     assert(f.exists(new org.apache.hadoop.fs.Path(d + "__g1")),
       "previous live generation swept too early")
@@ -127,7 +127,7 @@ class IvfCompactSpec extends AnyFunSuite {
       m0, pq0, d)
     val (m1, pq1) = Ivf.compactPq(spark, d, "embedding", "vec_id", m0, pq0,
       retrain = true)
-    assert(SecondaryIndex.resolve(spark, d) !== d) // generation committed
+    assert(Commit.resolve(spark, d) !== d) // generation committed
     assert(servedPq(m1, pq1) === brute(base ++ extra))
     // the metric marker rode into the new generation: an L2-default call
     // still passes, and the guard machinery still sees the marker

@@ -55,7 +55,7 @@ class IvfTopKSpec extends AnyFunSuite {
       stale.issues)
     // maintain: the manifest-committed survivors-only rewrite
     Ivf.deleteFromIndex(SparkT.spark, dir, pred)
-    assert(graft.index.SecondaryIndex.resolve(SparkT.spark, dir)
+    assert(graft.index.Commit.resolve(SparkT.spark, dir)
       .contains("__g"), "delete did not commit a new generation")
     val after = VectorIndexCheck.checkIvf(SparkT.spark, dir, "embedding",
       "vec_id", m, fact = Some((kept, "vec_id")))
