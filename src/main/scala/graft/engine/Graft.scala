@@ -105,12 +105,16 @@ object Graft {
       sb.toString
     } catch { case _: Exception => "" } // unreadable → never cache
 
-  /** Read an engine-written parquet/orc dir through the signature cache. */
+  /** Read an engine-written parquet/orc dir through the signature cache.
+    * The dir read is the path's LIVE data ([[graft.index.Commit.resolve]]):
+    * a manifest-committed generation, or the backup inside a rename swap's
+    * crash window. */
   def cachedRead(spark: SparkSession, path: String,
                  format: String = "parquet"): DataFrame = {
-    val sig = dirSignature(spark, path)
-    if (sig.isEmpty) return spark.read.format(format).load(path)
-    val key = (spark, path, format)
+    val live = graft.index.Commit.resolve(spark, path)
+    val sig = dirSignature(spark, live)
+    if (sig.isEmpty) return spark.read.format(format).load(live)
+    val key = (spark, live, format)
     dirCache.get(key) match {
       case Some((s, df)) if s == sig => df
       case _ =>
@@ -120,7 +124,7 @@ object Graft {
         // limit. Eviction is a full clear past the cap: the cache is a
         // metadata memo, so a clear only costs one re-listing per live dir.
         if (dirCache.size >= 512) dirCache.clear()
-        val df = spark.read.format(format).load(path)
+        val df = spark.read.format(format).load(live)
         dirCache(key) = (sig, df)
         df
     }

@@ -48,7 +48,10 @@ object Commit {
     *     ran).
     *
     * Cost: one existence probe on the manifest dir per query build —
-    * metadata-only, no data IO. */
+    * metadata-only, no data IO. [[graft.engine.Graft.cachedRead]] reads
+    * through this resolution; a raw `spark.read.parquet(path)` still
+    * reads the base dir, which a committed generation has superseded
+    * (and a later commit sweeps). */
   def resolve(spark: SparkSession, indexPath: String): String = {
     val dst = new Path(indexPath)
     val fs = fsOf(spark, dst)
@@ -123,6 +126,18 @@ object Commit {
     finally out.close()
   }
 
+  /** `<path>__g<N>`: the dir of generation N of the index at `path`. */
+  private val Generation = "(.+)__g(\\d+)".r
+
+  /** The index path a generation dir belongs to — the inverse of
+    * [[commitGeneration]]'s `<path>__g<N>` naming; any other path maps to
+    * itself. A table read through its live generation is keyed (routing
+    * registries) under its own path again. */
+  private[graft] def indexPathOf(dir: String): String = dir match {
+    case Generation(path, _) => path
+    case _ => dir
+  }
+
   /** Commit one rewrite of the index at `indexPath` as a new generation.
     * `write(live, next)` reads the live data dir ([[resolve]]) and writes
     * the complete new generation into the dir `next`; its result is
@@ -167,8 +182,10 @@ object Commit {
         val n = st.getPath.getName
         val stale = !retained(n) && (legacy(n) ||
           n == baseName + "_old" || n == baseName + "_compacting" ||
-          (n.startsWith(baseName + "__g") &&
-            n.stripPrefix(baseName + "__g").toLongOption.exists(_ != version)))
+          (n match {
+            case Generation(`baseName`, v) => v.toLongOption.exists(_ != version)
+            case _ => false
+          }))
         if (stale) fs.delete(st.getPath, true)
       }
     }

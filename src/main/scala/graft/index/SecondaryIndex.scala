@@ -1,5 +1,6 @@
 package graft.index
 
+import graft.engine.Graft.cachedRead
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -267,10 +268,6 @@ object SecondaryIndex {
     graft.plans.IndexRouting.onIndexMutated(spark, indexPath)
   }
 
-  /** Open the index table for reading through [[Commit.resolve]]. */
-  private def openIndex(spark: SparkSession, indexPath: String): DataFrame =
-    graft.engine.Graft.cachedRead(spark, Commit.resolve(spark, indexPath))
-
   /** Index-table predicate for a value interval; None = open bound (the
     * reference's half-open RANGE forms, common/filter.h LeftUnbounded /
     * RightUnbounded). A RANGE matches VALUES, so the NULL posting group is
@@ -291,7 +288,7 @@ object SecondaryIndex {
   def lookupKeys(spark: SparkSession, indexPath: String, values: Seq[Any],
                  keyRange: Option[(Long, Long)] = None): DataFrame =
     postingsToKeys(
-      openIndex(spark, indexPath).filter(col("value").isin(values: _*)),
+      cachedRead(spark, indexPath).filter(col("value").isin(values: _*)),
       keyRange)
 
   /** I3: VALUE-range lookup — RANGE/FLOATRANGE filters served from the
@@ -308,7 +305,7 @@ object SecondaryIndex {
                       loInclusive: Boolean = true, hiInclusive: Boolean = true,
                       keyRange: Option[(Long, Long)] = None): DataFrame =
     postingsToKeys(
-      openIndex(spark, indexPath)
+      cachedRead(spark, indexPath)
         .filter(valueRangePred(lo, hi, loInclusive, hiInclusive)),
       keyRange)
 
@@ -320,12 +317,12 @@ object SecondaryIndex {
   def lookupNotNullKeys(spark: SparkSession, indexPath: String,
                         keyRange: Option[(Long, Long)] = None): DataFrame =
     postingsToKeys(
-      openIndex(spark, indexPath).filter(col("value").isNotNull), keyRange)
+      cachedRead(spark, indexPath).filter(col("value").isNotNull), keyRange)
 
   /** I6 for NOTNULL: count rows with a non-null indexed value from stored
     * per-chunk counts — index-only. */
   def calcCountNotNull(spark: SparkSession, indexPath: String): Long =
-    openIndex(spark, indexPath)
+    cachedRead(spark, indexPath)
       .filter(col("value").isNotNull)
       .agg(coalesce(sum(col("cnt")), lit(0L))).head.getLong(0)
 
@@ -338,7 +335,7 @@ object SecondaryIndex {
   /** I6 CalcCount from stored per-chunk counts — index-only, no fact scan. */
   def calcCount(spark: SparkSession, indexPath: String,
                 values: Seq[Any]): Long =
-    openIndex(spark, indexPath)
+    cachedRead(spark, indexPath)
       .filter(col("value").isin(values: _*))
       .agg(coalesce(sum(col("cnt")), lit(0L))).head.getLong(0)
 
@@ -350,7 +347,7 @@ object SecondaryIndex {
                      lo: Option[Any], hi: Option[Any],
                      loInclusive: Boolean = true,
                      hiInclusive: Boolean = true): Long =
-    openIndex(spark, indexPath)
+    cachedRead(spark, indexPath)
       .filter(valueRangePred(lo, hi, loInclusive, hiInclusive))
       .agg(coalesce(sum(col("cnt")), lit(0L))).head.getLong(0)
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, In, Literal, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, In, Literal, PredicateHelper, XxHash64}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{LongType, StringType}
@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.{LongType, StringType}
   * as the reference keeping the analyzer as final verifier. Registered via
   * [[GraftExtensions]]: `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
-object HashCompanionRule extends Rule[LogicalPlan] {
+object HashCompanionRule extends Rule[LogicalPlan] with PredicateHelper {
 
   private def companionOf(a: Attribute, plan: LogicalPlan): Option[Attribute] = {
     // the companion must come from the SAME relation as the filtered
@@ -72,16 +72,11 @@ object HashCompanionRule extends Rule[LogicalPlan] {
       // only if not already semantically present — so a filter mixing an
       // already-rewritten predicate with a NEW string predicate still gets
       // the new rewrite, while repeated optimizer passes reach a fixpoint.
-      val conjuncts = splitConjuncts(cond)
+      val conjuncts = splitConjunctivePredicates(cond)
       val additions = conjuncts.flatMap(c => hashPredFor(c, child))
         .filterNot(p => conjuncts.exists(_.semanticEquals(p)))
       if (additions.isEmpty) f
       else Filter((additions ++ conjuncts).reduceLeft(And), child)
-  }
-
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
-    case other => Seq(other)
   }
 }
 

@@ -1337,4 +1337,48 @@ class AnnRoutingSpec extends AnyFunSuite {
           vecCol = "embedding", nprobe = model.nlist + 1))
     } finally AnnRouting.unregister(SparkT.spark, base)
   }
+
+  test("an IVF-ADC table registered as its own base serves its live " +
+      "generation through Graft.cachedRead and keeps routing after a " +
+      "delete and a compact") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val tmp = Files.createTempDirectory("graft-annroute-ownbase")
+    val idx = tmp.resolve("own").toString
+    val rnd = new scala.util.Random(17)
+    val rows = (0L until 200L).map(i =>
+      (i, Array.fill(dim)(rnd.nextGaussian().toFloat), (i % 4).toInt))
+    val df = rows.toDF("vec_id", "embedding", "label")
+    val m = Ivf.train(df, "embedding", nlist = 4)
+    val pq = Ivf.buildIndexPq(df, "embedding", "vec_id", m, idx,
+      subM = 4, codeK = 16)
+    // refine past the row count: the routed answer is exact by structure
+    def register(mm: Ivf.Model, p: graft.vector.Quantize.PqModel): Unit =
+      AnnRouting.registerIvfPq(SparkT.spark, idx, idx, mm, p,
+        vecCol = "embedding", idCol = "vec_id", nprobe = mm.nlist,
+        refine = 40)
+    val live = rows.filter(_._1 >= 100)
+    // the query is a DELETED row's vector: a stale read ranks it first
+    val q = rows(3)._2
+    val want = live.map { case (id, v, _) => (l2(v, q), id) }
+      .sorted.take(5).map(_._2)
+    def check(): Unit = {
+      val read = graft.engine.Graft.cachedRead(SparkT.spark, idx)
+      assert(read.count() === 100L, "cachedRead served the superseded base")
+      val top = Knn.knn(read, "embedding", "vec_id", q, 5)
+      assert(top.queryExecution.optimizedPlan.collect { case j: Join => j }
+        .nonEmpty, top.queryExecution.optimizedPlan.toString)
+      assert(top.select("vec_id").as[Long].collect().toSeq === want)
+    }
+    register(m, pq)
+    try {
+      Ivf.deleteFromIndex(SparkT.spark, idx, col("vec_id") < 100)
+      register(m, pq)
+      check()
+      // the compact sweeps the base dir: reads must follow the manifest
+      val (m2, pq2) = Ivf.compactPq(SparkT.spark, idx, "embedding", "vec_id",
+        m, pq)
+      register(m2, pq2)
+      check()
+    } finally AnnRouting.unregister(SparkT.spark, idx)
+  }
 }

@@ -1225,12 +1225,18 @@ class IndexRoutingSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-idxroute-drift")
     val db = tmp.resolve("db").toString
     val di = tmp.resolve("di").toString
-    val df = (0L until 1000L).map(i => (i, (i % 50).toInt)).toDF("id", "v")
+    val dw = tmp.resolve("dw").toString
+    val df = (0L until 1000L).map(i => (i, (i % 50).toInt, i % 100))
+      .toDF("id", "v", "w")
     Writer.write(df, db, sortBy = Seq("id"))
     // index built from a WIDENED copy (long) of the int fact column --
     // the mis-registration shape the type guard exists for
     SecondaryIndex.build(df.withColumn("v", $"v".cast("long")), "v", "id", di)
     IndexRouting.register(SparkT.spark, db, di, "v", "id")
+    // a correctly typed index on w: the cross-index OR below would route
+    // through both if the drifted v index were still eligible
+    SecondaryIndex.build(df, "w", "id", dw)
+    IndexRouting.register(SparkT.spark, db, dw, "w", "id")
     try {
       val facet = SparkT.spark.read.parquet(db).groupBy($"v").count()
       assert(scanPaths(facet).exists(_.contains("db")),
@@ -1239,6 +1245,231 @@ class IndexRoutingSpec extends AnyFunSuite {
       val agg = SparkT.spark.read.parquet(db)
         .agg(sum($"v").as("s")).as[Long].head()
       assert(agg === (0 until 1000).map(_ % 50).sum.toLong)
+      // every route picks its registrations through one type-guarded
+      // choice: CalcCount, the filter semi-join, the OR union and sorted
+      // retrieval stand down to the fact scan too, never abort the query
+      val ids = 0L until 1000L
+      def noDrifted(q: DataFrame): Unit = assert(
+        !scanPaths(q).map(p => new org.apache.hadoop.fs.Path(p).getName)
+          .contains("di"), q.queryExecution.optimizedPlan.toString)
+      def rd = SparkT.spark.read.parquet(db)
+      Seq[(org.apache.spark.sql.Column, Long => Boolean)](
+        ($"v" === 10, i => i % 50 == 10),
+        ($"v" < 3, i => i % 50 < 3),
+        ($"v".isin(1, 2), i => i % 50 == 1 || i % 50 == 2),
+        ($"v" === 10 && $"w" > 50L, i => i % 50 == 10 && i % 100 > 50),
+        ($"v" === 10 || $"w" === 7L, i => i % 50 == 10 || i % 100 == 7)
+      ).foreach { case (pred, want) =>
+        val cnt = rd.filter(pred).agg(count(lit(1)).as("n"))
+        noDrifted(cnt)
+        assert(cnt.as[Long].head() === ids.count(want).toLong, pred.toString)
+        val rows = rd.filter(pred).select($"id")
+        noDrifted(rows)
+        assert(rows.as[Long].collect().toSet === ids.filter(want).toSet,
+          pred.toString)
+      }
+      val top = rd.orderBy($"v", $"id").limit(5).select($"id")
+      noDrifted(top)
+      assert(top.as[Long].collect().toSeq === Seq(0L, 50L, 100L, 150L, 200L))
     } finally IndexRouting.unregister(SparkT.spark, db)
   }
+
+  test("pin table: index-only aggregates over scalar, MVA and double " +
+      "indexes, unfiltered / servable filter / servable + residual") {
+    val tmp = Files.createTempDirectory("graft-idxroute-pins")
+    def dir(n: String) = tmp.resolve(n).toString
+    val df = (0L until 1000L).map { i =>
+      val v = if (i % 97 == 5) None else Some(i / 2)
+      (i, v, (i % 50).toString, i % 100, v.map(_ * 0.5), Seq(i / 2, i / 2 + 600))
+    }.toDF("id", "v", "w", "x", "d", "arr")
+    Writer.write(df, dir("pinbase"), sortBy = Seq("id"))
+    // the same rows at an unregistered path: the unrouted answer
+    Writer.write(df, dir("pinplain"), sortBy = Seq("id"))
+    val rd = SparkT.spark.read.parquet(dir("pinbase"))
+    Seq("v" -> "piv", "w" -> "piw", "d" -> "pid").foreach { case (c, i) =>
+      SecondaryIndex.build(rd, c, "id", dir(i))
+      IndexRouting.register(SparkT.spark, dir("pinbase"), dir(i), c, "id")
+    }
+    SecondaryIndex.buildMva(rd, "arr", "id", dir("pia"))
+    IndexRouting.register(SparkT.spark, dir("pinbase"), dir("pia"), "arr",
+      "id", mva = true)
+    type Shape = (DataFrame, String) => DataFrame
+    val pct = (c: String) => expr(s"percentile($c, 0.5)")
+    // (name, numeric-only, shape)
+    val shapes: Seq[(String, Boolean, Shape)] = Seq(
+      ("count(*)", false, (t, _) => t.agg(count(lit(1)).as("n"))),
+      ("group", false, (t, c) => t.select(col(c)).distinct()),
+      ("group+count(*)", false,
+        (t, c) => t.groupBy(col(c)).agg(count(lit(1)).as("n"))),
+      ("group+sum", true, (t, c) => t.groupBy(col(c)).agg(sum(col(c)).as("s"))),
+      ("count(distinct)", false, (t, c) => t.agg(count_distinct(col(c)).as("n"))),
+      ("count(distinct)+max", false,
+        (t, c) => t.agg(count_distinct(col(c)).as("n"), max(col(c)).as("m"))),
+      ("min", false, (t, c) => t.agg(min(col(c)).as("m"))),
+      ("max", false, (t, c) => t.agg(max(col(c)).as("m"))),
+      ("sum", true, (t, c) => t.agg(sum(col(c)).as("s"))),
+      ("count(col)", false, (t, c) => t.agg(count(col(c)).as("n"))),
+      ("percentile", true, (t, c) => t.agg(pct(c).as("p"))),
+      ("round(percentile)", true, (t, c) => t.agg(round(pct(c), 2).as("p"))),
+      ("max-min", true, (t, c) => t.agg((max(col(c)) - min(col(c))).as("r"))),
+      ("count(*)+min", false,
+        (t, c) => t.agg(count(lit(1)).as("n"), min(col(c)).as("m"))))
+    val resid = $"x" > 20L
+    // (kind, column, servable filter)
+    val kinds = Seq(("long", "v", $"v" < 10L), ("double", "d", $"d" < 5.0),
+      ("mva", "arr", array_contains($"arr", 10L)))
+    val cases: Seq[(String, Option[org.apache.spark.sql.Column],
+        DataFrame => DataFrame)] = kinds.flatMap { case (kind, c, serv) =>
+      shapes.filter(s => kind != "mva" || !s._2).flatMap { case (n, _, f) =>
+        Seq("none" -> None, "servable" -> Some(serv),
+          "residual" -> Some(serv && resid)).map { case (fn, p) =>
+          (s"$kind $n $fn", p, (t: DataFrame) => f(t, c))
+        }
+      }
+    } ++ {
+      val or = $"v" === 3L || $"w" === "7"
+      Seq("none" -> None, "servable" -> Some(or),
+        "residual" -> Some(or && resid)).map { case (fn, p) =>
+        (s"long or-count(*) $fn", p,
+          (t: DataFrame) => t.agg(count(lit(1)).as("n")))
+      }
+    }
+    def scans(q: DataFrame): String = scanPaths(q)
+      .map(p => new org.apache.hadoop.fs.Path(p).getName)
+      .map(n => if (n == "pinbase") "base" else n).distinct.sorted.mkString("+")
+    def rows(q: DataFrame): Seq[String] = q.collect().map(_.toString).sorted.toSeq
+    try {
+      val observed = cases.map { case (name, p, f) =>
+        def run(path: String) = {
+          val t = SparkT.spark.read.parquet(dir(path))
+          f(p.fold(t)(t.filter))
+        }
+        val routed = run("pinbase")
+        assert(rows(routed) === rows(run("pinplain")), name)
+        name -> scans(routed)
+      }
+      val table = observed.map { case (n, s) => s"$n $s" }.mkString("\n")
+      assert(table === pinnedRoutes, s"observed table:\n$table")
+    } finally IndexRouting.unregister(SparkT.spark, dir("pinbase"))
+  }
+
+  /** Routed-or-not per pin-table row (`kind shape filter scanned-dirs`):
+    * `base` = the fact table, `piv`/`pid`/`pia`/`piw` = the v, d, arr
+    * (MVA) and w indexes. The rows were recorded with the rule's four
+    * separate aggregate rewrites, before they became one route. */
+  private val pinnedRoutes = """
+    |long count(*) none base
+    |long count(*) servable piv
+    |long count(*) residual base+piv
+    |long group none piv
+    |long group servable piv
+    |long group residual base+piv
+    |long group+count(*) none piv
+    |long group+count(*) servable piv
+    |long group+count(*) residual base+piv
+    |long group+sum none base
+    |long group+sum servable base+piv
+    |long group+sum residual base+piv
+    |long count(distinct) none piv
+    |long count(distinct) servable piv
+    |long count(distinct) residual base+piv
+    |long count(distinct)+max none base
+    |long count(distinct)+max servable base+piv
+    |long count(distinct)+max residual base+piv
+    |long min none piv
+    |long min servable piv
+    |long min residual base+piv
+    |long max none piv
+    |long max servable piv
+    |long max residual base+piv
+    |long sum none piv
+    |long sum servable piv
+    |long sum residual base+piv
+    |long count(col) none piv
+    |long count(col) servable piv
+    |long count(col) residual base+piv
+    |long percentile none piv
+    |long percentile servable piv
+    |long percentile residual base+piv
+    |long round(percentile) none piv
+    |long round(percentile) servable piv
+    |long round(percentile) residual base+piv
+    |long max-min none piv
+    |long max-min servable piv
+    |long max-min residual base+piv
+    |long count(*)+min none piv
+    |long count(*)+min servable piv
+    |long count(*)+min residual base+piv
+    |double count(*) none base
+    |double count(*) servable pid
+    |double count(*) residual base+pid
+    |double group none pid
+    |double group servable pid
+    |double group residual base+pid
+    |double group+count(*) none pid
+    |double group+count(*) servable pid
+    |double group+count(*) residual base+pid
+    |double group+sum none base
+    |double group+sum servable base+pid
+    |double group+sum residual base+pid
+    |double count(distinct) none pid
+    |double count(distinct) servable pid
+    |double count(distinct) residual base+pid
+    |double count(distinct)+max none base
+    |double count(distinct)+max servable base+pid
+    |double count(distinct)+max residual base+pid
+    |double min none pid
+    |double min servable pid
+    |double min residual base+pid
+    |double max none pid
+    |double max servable pid
+    |double max residual base+pid
+    |double sum none base
+    |double sum servable base+pid
+    |double sum residual base+pid
+    |double count(col) none pid
+    |double count(col) servable pid
+    |double count(col) residual base+pid
+    |double percentile none pid
+    |double percentile servable pid
+    |double percentile residual base+pid
+    |double round(percentile) none pid
+    |double round(percentile) servable pid
+    |double round(percentile) residual base+pid
+    |double max-min none pid
+    |double max-min servable pid
+    |double max-min residual base+pid
+    |double count(*)+min none pid
+    |double count(*)+min servable pid
+    |double count(*)+min residual base+pid
+    |mva count(*) none base
+    |mva count(*) servable base+pia
+    |mva count(*) residual base+pia
+    |mva group none base
+    |mva group servable base+pia
+    |mva group residual base+pia
+    |mva group+count(*) none base
+    |mva group+count(*) servable base+pia
+    |mva group+count(*) residual base+pia
+    |mva count(distinct) none base
+    |mva count(distinct) servable base+pia
+    |mva count(distinct) residual base+pia
+    |mva count(distinct)+max none base
+    |mva count(distinct)+max servable base+pia
+    |mva count(distinct)+max residual base+pia
+    |mva min none base
+    |mva min servable base+pia
+    |mva min residual base+pia
+    |mva max none base
+    |mva max servable base+pia
+    |mva max residual base+pia
+    |mva count(col) none base
+    |mva count(col) servable base+pia
+    |mva count(col) residual base+pia
+    |mva count(*)+min none base
+    |mva count(*)+min servable base+pia
+    |mva count(*)+min residual base+pia
+    |long or-count(*) none base
+    |long or-count(*) servable piv+piw
+    |long or-count(*) residual base+piv+piw""".stripMargin.trim
 }
