@@ -743,17 +743,16 @@ object BenchScale {
       val k = 10
       var recSum = 0.0
       var probedSum = 0L
-      // r20 (VERDICT r19): JOBS-PER-ROUTED-SEARCH — each round of the
-      // doubling probe schedule is one driver job launch (~100 ms of
-      // scheduling on a real cluster); at the default probeBatch=1 the
-      // round count is bounded by log2(probed)+1, and a deployment sizes
-      // spark.graft.graph.probeBatch toward its expected probe count to
-      // collapse rounds toward 1 (HnswSpec pins identical rows in fewer
-      // jobs). The pin here records the bound holds per search.
+      // r20 (VERDICT r19): JOBS-PER-ROUTED-SEARCH — each walk job is one
+      // driver job launch (~100 ms of scheduling on a real cluster). The
+      // schedule runs at most two (the nearest sub-graph, then every
+      // sub-graph its kth cannot prune; later rounds replay over those
+      // results): one job exactly when one sub-graph is probed. The pin
+      // here records that per search; the walked count beside the probed
+      // one is the walk work the second job pays for it.
       var roundsSum = 0L
+      var walkedSum = 0L
       var roundsBoundOk = true
-      def log2floor(x: Long): Long =
-        63L - java.lang.Long.numberOfLeadingZeros(math.max(x, 1L))
       qs.foreach { case (_, qv) =>
         val q = qv.toArray
         // tie-inclusive exact IP top-k (replica jitter ⇒ near-ties)
@@ -762,11 +761,13 @@ object BenchScale {
         val dk = nn(k - 1)._2
         val tieSet = nn.iterator.filter(_._2 <= dk + 1e-9).map(_._1).toSet
         val r0 = Hnsw.probeRounds.get()
+        val w0 = Hnsw.walkedSubgraphs.get()
         val (routedDf, probed) = Hnsw.searchRouted(spark, gIdx,
           "vec_id", q, k, ef = 64)
         val rounds = Hnsw.probeRounds.get() - r0
         roundsSum += rounds
-        roundsBoundOk &&= rounds <= log2floor(probed) + 1
+        walkedSum += Hnsw.walkedSubgraphs.get() - w0
+        roundsBoundOk &&= rounds == math.min(probed, 2)
         val got = routedDf.select(col("vec_id")).as[Long].collect().toSet
         recSum += got.count(tieSet.contains).toDouble / k
         probedSum += probed
@@ -782,11 +783,12 @@ object BenchScale {
       ipBlock.put("graph_mean_recall", math.round(meanRecall * 1e4) / 1e4)
       ipBlock.put("graph_mean_probed_subgraphs",
         math.round(meanProbed * 100) / 100.0)
+      ipBlock.put("graph_mean_walked_subgraphs",
+        math.round(walkedSum * 100.0 / qs.length) / 100.0)
       ipBlock.put("graph_total_subgraphs", subGraphs)
       ipBlock.put("graph_floor_ok", floorOk)
       ipBlock.put("mean_probe_rounds",
         math.round(roundsSum * 100.0 / qs.length) / 100.0)
-      ipBlock.put("probe_batch", 1)
       ipBlock.put("probe_rounds_bound_ok", roundsBoundOk)
       println(f"IP graph recall@10 ef=64: $meanRecall%.4f  " +
         f"probed $meanProbed%.1f/$subGraphs sub-graphs  " +
@@ -971,9 +973,8 @@ object BenchScale {
         var recSum = 0.0
         var probedSum = 0L
         var roundsSum = 0L
+        var walkedSum = 0L
         var roundsBoundOk = true
-        def log2floor(x: Long): Long =
-          63L - java.lang.Long.numberOfLeadingZeros(math.max(x, 1L))
         qs.foreach { case (_, qv) =>
           val q = qv.toArray
           val nn = Knn.knn(emb, "embedding", "vec_id", q, 20 * k, Knn.IP)
@@ -981,11 +982,13 @@ object BenchScale {
           val dk = nn(k - 1)._2
           val tieSet = nn.iterator.filter(_._2 <= dk + 1e-9).map(_._1).toSet
           val r0 = Hnsw.probeRounds.get()
+          val w0 = Hnsw.walkedSubgraphs.get()
           val (routedDf, probed) = Hnsw.searchRouted(spark, idxPath,
             "vec_id", q, k, ef = 64)
           val rounds = Hnsw.probeRounds.get() - r0
           roundsSum += rounds
-          roundsBoundOk &&= rounds <= log2floor(probed) + 1
+          walkedSum += Hnsw.walkedSubgraphs.get() - w0
+          roundsBoundOk &&= rounds == math.min(probed, 2)
           val got = routedDf.select(col("vec_id")).as[Long].collect().toSet
           recSum += got.count(tieSet.contains).toDouble / k
           probedSum += probed
@@ -1001,6 +1004,8 @@ object BenchScale {
         g.put("ef", 64); g.put("k", k); g.put("queries", qs.length)
         g.put("mean_recall", math.round(meanRecall * 1e4) / 1e4)
         g.put("mean_probed_subgraphs", math.round(meanProbed * 100) / 100.0)
+        g.put("mean_walked_subgraphs",
+          math.round(walkedSum * 100.0 / qs.length) / 100.0)
         g.put("total_subgraphs", subGraphs)
         g.put("floor_ok", floorOk)
         g.put("mean_probe_rounds",

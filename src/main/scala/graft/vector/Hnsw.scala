@@ -1128,8 +1128,8 @@ object Hnsw {
     *
     * Scale shape: selected sub-graphs run as tasks of a
     * PartitionPruningRDD over the resident graph — unprobed partitions are
-    * never scheduled (0 tasks, not "tasks that return nothing"), and each
-    * probe round ships k rows per sub-graph to the driver.
+    * never scheduled (0 tasks, not "tasks that return nothing"), and at
+    * most two walk jobs ship k rows per walked sub-graph to the driver.
     *
     * Returns (top-k DataFrame, sub-graphs probed). */
   def searchRouted(spark: SparkSession, indexPath: String, idCol: String,
@@ -1164,7 +1164,7 @@ object Hnsw {
     * under the original Sort/Limit (which recomputes exact distances from
     * the vectors, keeping the routed plan's results identical to the
     * explicit API's). `scoredAcc`, when non-null, accumulates distances
-    * scored across the probed sub-graphs' walks — the probe-savings
+    * scored across every sub-graph the walk jobs walked — the probe-savings
     * measurement behind the adaptive-termination knob (BenchScale reports
     * adaptive vs exact). Float graphs only: a code graph is served by
     * [[searchQuantized]]. */
@@ -1218,43 +1218,58 @@ object Hnsw {
     val f = allowed.getOrElse((_: Long) => true)
     val hmin = if (hierMin >= 0) hierMin else hierMinRows(spark)
     val qB = spark.sparkContext.broadcast(walkQuery(ix, query))
-    try routedSchedule(spark, ix, query, k, keep, eps, probes =>
+    try routedSchedule(ix, query, k, keep, eps, probes =>
       prunedWalk(graph, layers, probes.contains) { (git, lt) =>
-        walkPart(git, lt, hmin, space, qB.value, keep, ef, f, adaptive, acc)
+        val rows = git.buffered
+        rows.headOption.iterator.map { case (pid, _) =>
+          (pid, walkPart(rows, lt, hmin, space, qB.value, keep, ef, f,
+            adaptive, acc).toArray)
+        }
       }.collect())
     finally qB.destroy()
   }
 
-  /** Driver-side PROBE-ROUND counter across the routed schedules (r20
-    * telemetry, VERDICT r19: each round of the doubling schedule is one
-    * driver job launch — ~1 ms locally, ~100 ms of scheduling on a real
-    * cluster. BENCH_SF1's `probe_rounds` block pins rounds ≤
-    * log₂(probed)+1 per search at the default probeBatch=1; a deployment
-    * sizes `spark.graft.graph.probeBatch` toward its expected probe count
-    * to collapse the rounds toward 1 — exactness is unaffected,
-    * over-probing only wastes walk work the triangle-bound stop rule
-    * tolerates). */
+  /** Driver-side WALK-JOB counter across the routed schedules (r20
+    * telemetry, VERDICT r19): each count is one job launch of sub-graph
+    * walks — ~12 ms locally, ~100 ms of scheduling on a real cluster. A
+    * routed search runs at most two ([[routedSchedule]]); BENCH_SF1's
+    * `probe_rounds` blocks pin them per search. */
   val probeRounds = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Driver-side count of sub-graphs the routed walk jobs actually walked.
+    * It is at least the `probed` count a routed search returns: the second
+    * job walks every sub-graph round 1's kth leaves standing, some of
+    * which the schedule's later, tighter kth prunes — the walk work the
+    * two-job schedule trades for fewer job launches. */
+  val walkedSubgraphs = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** The centroid-ordered, triangle-bounded probe schedule of every routed
     * walk: probe sub-graphs in centroid-distance order with a doubling
-    * batch, keep the best `keep` candidates, drop sub-graphs whose lower
-    * bound exceeds the kth-best + the index's prune slack once k hits are
-    * held (they can never re-enter — the kth best only improves), stop
-    * when none remain. Floats bound under the index metric with no slack;
-    * codes bound in L2 in the bound space with the quantization-error
-    * slack: true-kth ≤ coarse-kth + slack, and every node in a pruned
-    * sub-graph has true distance > that, so no true top-k member is lost
-    * to routing. `probeFn` runs one probe round over a pid set and returns
-    * its (id, dist, vec) candidates. */
+    * batch (1, 2, 4, …), keep the best `keep` candidates, drop sub-graphs
+    * whose lower bound exceeds the kth-best + the index's prune slack once
+    * k hits are held (they can never re-enter — the kth best only
+    * improves), stop when none remain. Floats bound under the index
+    * metric with no slack; codes bound in L2 in the bound space with the
+    * quantization-error slack: true-kth ≤ coarse-kth + slack, and every
+    * node in a pruned sub-graph has true distance > that, so no true top-k
+    * member is lost to routing.
+    *
+    * At most TWO walk jobs serve the schedule: round 1 walks the nearest
+    * sub-graph, and round 2 walks, in one job, every sub-graph that round
+    * 1's kth + slack cannot prune. The kth only improves, so every later
+    * round probes a subset of those; its prune decisions replay over the
+    * cached per-sub-graph results, so the rows and the `probed` count are
+    * those of one job per round (a sub-graph's walk does not depend on
+    * the round it runs in). The walk work is not: [[walkedSubgraphs]]
+    * counts the sub-graphs the two jobs walked. `probeFn` walks a pid set
+    * and returns each walked sub-graph's (pid, best (id, dist, vec) rows). */
   // k >= 1 at the schedule head (review r18-9): k = 0 reached
   // bestK.last on an empty Seq (and cands(k-1) = cands(-1) in the coarse
   // screen) — crash instead of an empty result; SQL LIMIT 0 never gets
   // here only because OptimizeLimitZero removes the plan first.
-  private def routedSchedule(spark: SparkSession, ix: Index[_],
-                             query: Array[Float], k: Int, keep: Int,
-                             eps: Double,
-                             probeFn: Set[Int] => Array[(Long, Double, Array[Float])])
+  private def routedSchedule(
+      ix: Index[_], query: Array[Float], k: Int, keep: Int, eps: Double,
+      probeFn: Set[Int] => Array[(Int, Array[(Long, Double, Array[Float])])])
       : (Array[(Long, Double, Array[Float])], Int) = {
     require(k >= 1, s"top-k needs k >= 1, got $k")
     val rts = ix.rts
@@ -1293,15 +1308,9 @@ object Hnsw {
     }
     var remaining: Seq[Int] = order.toSeq
     var probed = 0
-    // Initial probe batch (doubles each round). Locally a round costs
-    // ~1 ms, but on a real cluster every round is one job launch
-    // (~100 ms of scheduling), so a deployment can start at 2 or 4 and
-    // halve the round count. Exactness is unaffected: a larger batch only
-    // ever probes MORE sub-graphs per round than the schedule strictly
-    // needs, and the triangle-bound stop rule tolerates over-probing
-    // (HnswSpec pins identical exact results with fewer jobs).
-    var batch = spark.conf.getOption("spark.graft.graph.probeBatch")
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
+    var batch = 1
+    // pid → best rows of every sub-graph walked so far
+    val walked = scala.collection.mutable.HashMap.empty[Int, Array[(Long, Double, Array[Float])]]
     var best: Seq[(Double, Long, Array[Float])] = Nil // (dist, id, vec) asc
     // Once k hits are held, sub-graphs whose lower bound exceeds the kth
     // best are dropped from the schedule permanently (ADVICE r8: the kth
@@ -1315,12 +1324,18 @@ object Hnsw {
       }
       remaining.nonEmpty
     }) {
-      val probes = remaining.take(batch).toSet
-      val rows = probeFn(probes).map { case (id, d, vec) => (d, id, vec) }
+      val probes = remaining.take(batch).sorted // pid order, as a job returns
+      if (!probes.forall(walked.contains)) {
+        val pids = if (walked.isEmpty) probes else remaining
+        walked ++= pids.map(_ -> Array.empty[(Long, Double, Array[Float])]) // empty partitions
+        walked ++= probeFn(pids.toSet)
+        probeRounds.incrementAndGet()
+        walkedSubgraphs.addAndGet(pids.size)
+      }
+      val rows = probes.flatMap(walked(_).map { case (id, d, vec) => (d, id, vec) })
       // sortBy (dist, id): the vector slot has no ordering
       best = (best ++ rows).sortBy(t => (t._1, t._2)).take(keep)
       probed += probes.size
-      probeRounds.incrementAndGet()
       remaining = remaining.drop(batch)
       batch *= 2
     }

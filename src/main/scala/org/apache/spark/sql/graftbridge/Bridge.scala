@@ -4,11 +4,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Minimal bridge into `private[sql]` surface: Spark 4 removed the public
-  * `Column(expr)` constructor, so custom Catalyst expressions (our distance
-  * kernels) need `classic.ExpressionUtils` to become user-facing Columns.
-  * This is the narrow, sanctioned-by-convention seam — nothing else from
-  * the private surface is exposed.
+/** Minimal bridge into `private[sql]`/`private[spark]` surface: Spark 4
+  * removed the public `Column(expr)` constructor, so custom Catalyst
+  * expressions (our distance kernels) need `classic.ExpressionUtils` to
+  * become user-facing Columns. This is the narrow, sanctioned-by-convention
+  * seam — nothing beyond the members below is exposed.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -21,4 +21,11 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+  /** The `num` least of `input` under `ord`, in order — the per-partition
+    * top-k of `RDD.takeOrdered`, and its whole answer over one partition
+    * (`util.collection.Utils` is private[spark]), so a driver-side top-k
+    * picks and orders tied rows as it does. */
+  def takeOrdered[T](input: Iterator[T], num: Int)(ord: Ordering[T])
+      : Iterator[T] =
+    org.apache.spark.util.collection.Utils.takeOrdered(input, num)(ord)
 }

@@ -520,8 +520,7 @@ class AnnRoutingSpec extends AnyFunSuite {
     AnnRouting.unregister(SparkT.spark, pq)
   }
 
-  test("routed graph search plans a TakeOrderedAndProject, no Exchange: probe rounds + 1 jobs") {
-    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+  test("routed graph search plans the driver top-k exec, no Exchange: walk jobs only") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.Exchange
     object Aqe extends AdaptiveSparkPlanHelper
@@ -544,14 +543,157 @@ class AnnRoutingSpec extends AnyFunSuite {
     val rounds = graft.vector.Hnsw.probeRounds.get() - rounds0
     assert(rows.map(_.getLong(0)).toSeq === exactTop10)
     val plan = df.queryExecution.executedPlan
-    assert(Aqe.collect(plan) { case t: TakeOrderedAndProjectExec => t }
-      .nonEmpty, plan.toString)
+    assert(Aqe.collect(plan) { case t: GraphTopKExec => t }.nonEmpty,
+      plan.toString)
     assert(Aqe.collect(plan) { case e: Exchange => e }.isEmpty,
       plan.toString)
-    // one job per probe round, then the collect of the k candidates
-    assert(rounds >= 1 && work.jobs === rounds + 1,
-      s"$work over $rounds probe rounds")
+    // the walk jobs are the only jobs: the top-k is taken on the driver
+    assert(rounds >= 1 && rounds <= 2 && work.jobs === rounds,
+      s"$work over $rounds walk jobs")
     AnnRouting.unregister(SparkT.spark, baseG)
+  }
+
+  /** (result, jobs, SQL executions) of `thunk`. */
+  private def executions[A](thunk: => A): (A, Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = SparkT.spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => n.incrementAndGet()
+        case _ =>
+      }
+    }
+    org.apache.spark.GraftTestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val (out, work) = graft.WorkCount(SparkT.spark)(thunk)
+      org.apache.spark.GraftTestBus.drain(sc)
+      (out, work.jobs, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("work per routed search: one SQL execution, ≤ 2 walk jobs, one fetch job for codes, one id job per consumed filter") {
+    SparkT.spark.conf.set("spark.graft.graph.hierMinRows", "0")
+    val tmp = Files.createTempDirectory("graft-annroute-work")
+    val p = graft.vector.Hnsw.Params(m = 8, efC = 32, partitions = 4)
+    val wantFilt = vectors.filter(_._3 == 2)
+      .map { case (id, v, _) => (l2(v, query), id) }.sorted.take(10).map(_._2)
+    try for ((codes, hier) <- Seq((false, false), (true, false),
+        (false, true), (true, true))) {
+      val base = tmp.resolve(s"base_${codes}_$hier").toString
+      val idx = tmp.resolve(s"idx_${codes}_$hier").toString
+      Writer.write(vectors.toDF("vec_id", "embedding", "label"), base,
+        sortBy = Seq("vec_id"))
+      val raw = SparkT.spark.read.parquet(base)
+      if (codes) graft.vector.Hnsw.buildIndexClusteredQuantized(raw,
+        "embedding", "vec_id", idx, p)
+      else graft.vector.Hnsw.buildIndexClustered(raw, "embedding", "vec_id",
+        idx, p)
+      if (hier) graft.vector.Hnsw.buildHierarchy(SparkT.spark, idx, p)
+      if (codes) AnnRouting.registerGraphQuantized(SparkT.spark, base, idx,
+        vecCol = "embedding", idCol = "vec_id", hierarchy = hier)
+      else AnnRouting.registerGraph(SparkT.spark, base, idx,
+        vecCol = "embedding", idCol = "vec_id", hierarchy = hier)
+      def search(filtered: Boolean) = {
+        val in = SparkT.spark.read.parquet(base)
+        Knn.knn(if (filtered) in.filter($"label" === 2) else in,
+          "embedding", "vec_id", query, 10)
+      }
+      // loads the resident graph and lists the base table once
+      search(false).collect(); search(true).collect()
+      for (filtered <- Seq(false, true)) {
+        val df = search(filtered)
+        assert(df.queryExecution.optimizedPlan.collect {
+          case g: GraphCandidates => g.filterSql.isDefined
+        } === Seq(filtered))
+        val (rows, jobs, execs) = executions(df.collect())
+        val what = s"codes=$codes hier=$hier filtered=$filtered"
+        assert(rows.map(_.getLong(0)).toSeq ===
+          (if (filtered) wantFilt else exactTop10), what)
+        assert(execs === 1, s"$what: $execs SQL executions")
+        val bound = 2 + (if (codes) 1 else 0) + (if (filtered) 1 else 0)
+        assert(jobs >= 1 && jobs <= bound, s"$what: $jobs jobs > $bound")
+      }
+      AnnRouting.unregister(SparkT.spark, base)
+    } finally SparkT.spark.conf.unset("spark.graft.graph.hierMinRows")
+  }
+
+  test("the driver top-k is the planner's top-k: tie order, sort keys and non-root uses") {
+    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+    val tmp = Files.createTempDirectory("graft-annroute-ties")
+    val base = tmp.resolve("base").toString
+    // every vector four times: each distance is a four-way tie
+    val dup = vectors.flatMap { case (id, v, l) =>
+      (0 until 4).map(j => (id * 4 + j, v, l)) }
+    Writer.write(dup.toDF("vec_id", "embedding", "label"), base,
+      sortBy = Seq("vec_id"))
+    val dist = Knn.distCol(Knn.L2, col("embedding"), typedLit(query))
+    val shapes = Seq[DataFrame => DataFrame](
+      _.select(col("vec_id"), dist.as("dist")).orderBy(col("dist")).limit(10),
+      _.select(col("vec_id"), dist.as("dist"))
+        .orderBy(col("dist"), col("vec_id")).limit(10),
+      Knn.knn(_, "embedding", "vec_id", query, 10))
+    def read = SparkT.spark.read.parquet(base)
+    def pairs(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    def topK(df: DataFrame) = df.queryExecution.executedPlan.collect {
+      case t: GraphTopKExec => t }
+    val unrouted = shapes.map(f => pairs(f(read).collect()))
+    assert(unrouted.head.map(_._2).distinct.size < 10, "no ties")
+    // a float graph hands the top-k exactly k rows; a code graph hands it
+    // k·refine rows in scan order, from which the selection itself picks
+    for (codes <- Seq(false, true)) {
+      val idx = tmp.resolve(s"idx_$codes").toString
+      val p = graft.vector.Hnsw.Params(m = 8, efC = 64, partitions = 4)
+      if (codes) {
+        graft.vector.Hnsw.buildIndexClusteredQuantized(read, "embedding",
+          "vec_id", idx, p)
+        AnnRouting.registerGraphQuantized(SparkT.spark, base, idx,
+          vecCol = "embedding", idCol = "vec_id")
+      } else {
+        graft.vector.Hnsw.buildIndexClustered(read, "embedding", "vec_id",
+          idx, p)
+        AnnRouting.registerGraph(SparkT.spark, base, idx,
+          vecCol = "embedding", idCol = "vec_id")
+      }
+      try {
+        for ((f, want) <- shapes.zip(unrouted)) {
+          val routed = f(read)
+          val t = topK(routed)
+          assert(t.size === 1, routed.queryExecution.executedPlan.toString)
+          val got = pairs(routed.collect())
+          // the plan the built-in planner picks for the same routed query:
+          // TakeOrderedAndProject over the leaf's one-partition RDD
+          val planner = TakeOrderedAndProjectExec(t.head.limit,
+            t.head.sortOrder, t.head.projectList, t.head.child).executeCollect()
+            .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+          assert(got === planner)
+          // ORDER BY dist alone leaves tied rows in either order: the
+          // unrouted scan agrees on the distances, (dist, id) on the rows
+          assert(got.map(_._2) === want.map(_._2))
+          if (f ne shapes.head) assert(got === want)
+        }
+        val routedKnn = Knn.knn(read, "embedding", "vec_id", query, 10)
+        val want = unrouted.last
+        // execute() instead of executeCollect(): the planner's exec runs
+        assert(pairs(routedKnn.rdd.collect()) === want)
+        // non-root uses keep the leaf's RDD and return the same rows
+        val counted = routedKnn.groupBy().count()
+        assert(topK(counted).isEmpty)
+        assert(counted.head().getLong(0) === 10L)
+        val joined = routedKnn.join(
+          dup.map(t => (t._1, t._3)).toDF("vec_id", "label"), "vec_id")
+        assert(topK(joined).isEmpty)
+        assert(pairs(joined.select("vec_id", "dist").collect()).toSet ===
+          want.toSet)
+        val out = tmp.resolve(s"out_$codes").toString
+        routedKnn.write.parquet(out)
+        assert(pairs(SparkT.spark.read.parquet(out).select("vec_id", "dist")
+          .collect()).toSet === want.toSet)
+      } finally AnnRouting.unregister(SparkT.spark, base)
+    }
   }
 
   test("IVF probe lists plan sorted: a search with a different query compiles no new class") {

@@ -208,6 +208,7 @@ class HnswSpec extends AnyFunSuite {
     assert(oneCode.length === dim)
     // exact at full ef (k·refine coarse contract + error-slack routing)
     var probedTot = 0
+    val w0 = Hnsw.walkedSubgraphs.get()
     Seq(3L, 117L, 284L, 351L).foreach { qid =>
       val q = rows(qid.toInt)._2
       val exact = Knn.knn(df, "embedding", "vec_id", q, 10)
@@ -218,8 +219,11 @@ class HnswSpec extends AnyFunSuite {
       assert(got === exact, s"query $qid")
       probedTot += probed
     }
-    // clustered data: the error-slack triangle bound still prunes
+    // clustered data: the error-slack triangle bound still prunes, in
+    // the sub-graphs the walk jobs walk as in the ones the schedule probes
+    val walkedTot = Hnsw.walkedSubgraphs.get() - w0
     assert(probedTot < 4 * 8, s"no pruning happened: $probedTot probes")
+    assert(walkedTot < 4 * 8, s"no pruning happened: $walkedTot walked")
     // small-ef walk in code space still navigates (recall, not exactness)
     val q = rows(3)._2
     val exactIds = Knn.knn(df, "embedding", "vec_id", q, 10)
@@ -328,6 +332,7 @@ class HnswSpec extends AnyFunSuite {
     Hnsw.buildIndexClusteredQuantized(df, "embedding", "vec_id", d,
       Hnsw.Params(m = 8, efC = 64, partitions = 8), Knn.Cosine)
     var probedTot = 0
+    val w0 = Hnsw.walkedSubgraphs.get()
     Seq(3L, 117L, 284L, 351L).foreach { qid =>
       val q = rows(qid.toInt)._2
       val exact = Knn.knn(df, "embedding", "vec_id", q, 10, Knn.Cosine)
@@ -338,7 +343,9 @@ class HnswSpec extends AnyFunSuite {
       assert(got === exact, s"query $qid")
       probedTot += probed
     }
+    val walkedTot = Hnsw.walkedSubgraphs.get() - w0
     assert(probedTot < 4 * 8, s"no pruning happened: $probedTot probes")
+    assert(walkedTot < 4 * 8, s"no pruning happened: $walkedTot walked")
     val q = rows(3)._2
     val exactIds = Knn.knn(df, "embedding", "vec_id", q, 10, Knn.Cosine)
       .select("vec_id").as[Long].collect().toSet
@@ -436,6 +443,7 @@ class HnswSpec extends AnyFunSuite {
       Hnsw.Params(m = 8, efC = 64, partitions = 8))
     val queries = Seq(3L, 117L, 284L, 399L)
     var probedTotal = 0
+    val w0 = Hnsw.walkedSubgraphs.get()
     queries.foreach { qid =>
       val q = rows(qid.toInt)._2
       val exact = Knn.knn(df, "embedding", "vec_id", q, 10)
@@ -450,6 +458,9 @@ class HnswSpec extends AnyFunSuite {
     assert(probedTotal < queries.size * 8,
       s"routing probed $probedTotal of ${queries.size * 8} sub-graphs")
     assert(probedTotal <= queries.size * 3, s"probed $probedTotal")
+    // the walk jobs walk no sub-graph the schedule would not probe here
+    val walkedTotal = Hnsw.walkedSubgraphs.get() - w0
+    assert(walkedTotal <= queries.size * 3, s"walked $walkedTotal")
   }
 
   test("routed search under the COSINE metric is exact and prunes sub-graphs") {
@@ -467,6 +478,7 @@ class HnswSpec extends AnyFunSuite {
     Hnsw.buildIndexClustered(df, "embedding", "vec_id", d,
       Hnsw.Params(m = 8, efC = 64, partitions = 8), Knn.Cosine)
     var probedTotal = 0
+    val w0 = Hnsw.walkedSubgraphs.get()
     Seq(7L, 152L, 333L).foreach { qid =>
       val q = rows(qid.toInt)._2
       val exact = Knn.knn(df, "embedding", "vec_id", q, 10, Knn.Cosine)
@@ -477,6 +489,8 @@ class HnswSpec extends AnyFunSuite {
       probedTotal += probed
     }
     assert(probedTotal <= 3 * 3, s"probed $probedTotal of 24 sub-graphs")
+    val walkedTotal = Hnsw.walkedSubgraphs.get() - w0
+    assert(walkedTotal <= 3 * 3, s"walked $walkedTotal of 24 sub-graphs")
   }
 
   test("routed search under the INNER-PRODUCT metric is exact, prunes, and returns exact 1-dot (r19)") {
@@ -495,6 +509,7 @@ class HnswSpec extends AnyFunSuite {
     Hnsw.buildIndexClustered(df, "embedding", "vec_id", d,
       Hnsw.Params(m = 8, efC = 64, partitions = 8), Knn.IP)
     var probedTotal = 0
+    val w0 = Hnsw.walkedSubgraphs.get()
     Seq(7L, 152L, 333L).foreach { qid =>
       val q = rows(qid.toInt)._2
       val exact = Knn.knn(df, "embedding", "vec_id", q, 10, Knn.IP)
@@ -516,6 +531,9 @@ class HnswSpec extends AnyFunSuite {
     // the ipLowerBound prune must engage on scale-separated clusters
     assert(probedTotal < 3 * 8,
       s"IP routing probed $probedTotal of 24 sub-graphs — no pruning")
+    val walkedTotal = Hnsw.walkedSubgraphs.get() - w0
+    assert(walkedTotal < 3 * 8,
+      s"IP routing walked $walkedTotal of 24 sub-graphs — no pruning")
   }
 
   test("quantized-space graph under INNER PRODUCT: exact at full ef (r19)") {
@@ -669,11 +687,11 @@ class HnswSpec extends AnyFunSuite {
     assert(mid.as[(Long, Double)].collect().toSeq === exact)
   }
 
-  test("probe batching: a larger initial batch gives identical exact results in fewer jobs (r11)") {
+  test("probe schedule: at most two walk jobs, rows equal the exhaustive walk's at full ef (r11)") {
     // UNIFORM vectors: every sub-graph's radius overlaps the query, so the
-    // schedule must probe all of them — the round structure is
-    // deterministic (default: 1+2+4+1 = 4 jobs over 8 sub-graphs;
-    // probeBatch=4: 4+4 = 2 jobs) and both configurations are exact.
+    // schedule must probe all 8 — one round per doubling (1+2+4+1) would
+    // be 4 jobs; the nearest sub-graph's walk, then one job over every
+    // sub-graph its kth cannot prune, is 2
     val rnd = new scala.util.Random(29)
     val dim = 16
     val rows = (0L until 400L).map(i =>
@@ -684,7 +702,7 @@ class HnswSpec extends AnyFunSuite {
       Hnsw.Params(m = 8, efC = 64, partitions = 8))
     val q = rows(3)._2
     val sc = SparkT.spark.sparkContext
-    // warm the resident graph + route sidecar outside either measurement
+    // warm the resident graph + route sidecar outside the measurement
     Hnsw.searchRoutedRaw(SparkT.spark, d, q, 5, ef = 1 << 20)
     // the status tracker is fed by the async listener bus: poll to stability
     def jobsOf(group: String)(body: => Unit): Int = {
@@ -699,18 +717,19 @@ class HnswSpec extends AnyFunSuite {
       }
       cur
     }
-    var r1: Array[(Long, Double, Array[Float])] = null
-    var r2: Array[(Long, Double, Array[Float])] = null
-    val n1 = jobsOf("graft-probe-default") {
-      r1 = Hnsw.searchRoutedRaw(SparkT.spark, d, q, 5, ef = 1 << 20)._1
+    var routed: (Array[(Long, Double, Array[Float])], Int) = null
+    val r0 = Hnsw.probeRounds.get()
+    val w0 = Hnsw.walkedSubgraphs.get()
+    val jobs = jobsOf("graft-probe-schedule") {
+      routed = Hnsw.searchRoutedRaw(SparkT.spark, d, q, 5, ef = 1 << 20)
     }
-    SparkT.spark.conf.set("spark.graft.graph.probeBatch", "4")
-    val n2 =
-      try jobsOf("graft-probe-batched") {
-        r2 = Hnsw.searchRoutedRaw(SparkT.spark, d, q, 5, ef = 1 << 20)._1
-      } finally SparkT.spark.conf.unset("spark.graft.graph.probeBatch")
-    assert(r1.map(t => (t._1, t._2)).toSeq === r2.map(t => (t._1, t._2)).toSeq)
-    assert(n2 < n1, s"batched rounds $n2 !< default rounds $n1")
+    assert(routed._2 === 8, "uniform corpus must probe every sub-graph")
+    assert(Hnsw.walkedSubgraphs.get() - w0 === 8, "each walked once")
+    assert(jobs === 2 && Hnsw.probeRounds.get() - r0 === 2,
+      s"$jobs jobs, ${Hnsw.probeRounds.get() - r0} walk jobs")
+    val exhaustive = Hnsw.search(SparkT.spark, d, "vec_id", q, 5,
+      ef = 1 << 20).as[(Long, Double)].collect().toSeq
+    assert(routed._1.map(t => (t._1, t._2)).toSeq === exhaustive)
   }
 
   test("search result keeps the (dist asc, id asc) contract") {
