@@ -1,6 +1,11 @@
 package graft.engine
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Session factory + table catalog for the engine.
   *
@@ -85,8 +90,25 @@ object Graft {
   // recursive listing + footer schema inference spark.read repeats per
   // call, a miss reads fresh. Generation-managed dirs are additionally
   // safe by construction: a commit changes the RESOLVED dir path itself.
-  private val dirCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), (String, DataFrame)]
+  // Each entry also holds the executed scans planned over its DataFrame
+  // ([[cachedScan]]), so they share its signature check and its eviction.
+  private final class DirEntry(val sig: String, val df: DataFrame) {
+    val scans = lru[Seq[String], RDD[InternalRow]](64)
+  }
+
+  /** A map evicting its least recently used entry past `cap`; callers
+    * hold its monitor (a read reorders it). */
+  private def lru[K, V](cap: Int): java.util.LinkedHashMap[K, V] =
+    new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+        size() > cap
+    }
+
+  // Least-recently-used past the cap (r22, VERDICT r21 #6: a long-lived
+  // session touching many store generations would otherwise accumulate
+  // entries without limit): an eviction drops only the coldest dir's
+  // plans and scans, never every hot one at once.
+  private val dirCache = lru[(SparkSession, String, String), DirEntry](512)
 
   private def dirSignature(spark: SparkSession, path: String): String =
     try {
@@ -105,30 +127,71 @@ object Graft {
       sb.toString
     } catch { case _: Exception => "" } // unreadable → never cache
 
+  /** The live dir's cache entry, re-read when its signature moved; an
+    * unreadable dir gets a fresh entry that is never cached. */
+  private def entry(spark: SparkSession, path: String,
+                    format: String): DirEntry = {
+    val live = graft.index.Commit.resolve(spark, path)
+    val sig = dirSignature(spark, live)
+    def read() = new DirEntry(sig, spark.read.format(format).load(live))
+    if (sig.isEmpty) return read()
+    val key = (spark, live, format)
+    dirCache.synchronized(Option(dirCache.get(key))) match {
+      case Some(e) if e.sig == sig => e
+      case _ =>
+        val e = read()
+        dirCache.synchronized(dirCache.put(key, e))
+        e
+    }
+  }
+
   /** Read an engine-written parquet/orc dir through the signature cache.
     * The dir read is the path's LIVE data ([[graft.index.Commit.resolve]]):
     * a manifest-committed generation, or the backup inside a rename swap's
     * crash window. */
   def cachedRead(spark: SparkSession, path: String,
-                 format: String = "parquet"): DataFrame = {
-    val live = graft.index.Commit.resolve(spark, path)
-    val sig = dirSignature(spark, live)
-    if (sig.isEmpty) return spark.read.format(format).load(live)
-    val key = (spark, live, format)
-    dirCache.get(key) match {
-      case Some((s, df)) if s == sig => df
-      case _ =>
-        // bound the cache (r22, VERDICT r21 #6): entries hold a logical
-        // plan + InMemoryFileIndex each — small, but a long-lived session
-        // touching many store generations would accumulate them without
-        // limit. Eviction is a full clear past the cap: the cache is a
-        // metadata memo, so a clear only costs one re-listing per live dir.
-        if (dirCache.size >= 512) dirCache.clear()
-        val df = spark.read.format(format).load(live)
-        dirCache(key) = (sig, df)
-        df
+                 format: String = "parquet"): DataFrame =
+    entry(spark, path, format).df
+
+  /** The executed scan of `columns` of [[cachedRead]]`(path)` — its
+    * `queryExecution.toRdd`, planned once per live dir and column set.
+    * The memo key holds no per-query value, so every search over a live
+    * table reuses one plan: a per-query predicate is evaluated by the
+    * caller's tasks, or rides a [[prunedScan]], which is never kept.
+    * Every run of the RDD re-reads the files and caches no row, so results
+    * and staleness are those of [[cachedRead]]: the same signature check
+    * and [[invalidate]] drop the scan with its DataFrame. */
+  def cachedScan(spark: SparkSession, path: String,
+                 columns: Seq[String]): RDD[InternalRow] = {
+    val e = entry(spark, path, "parquet")
+    e.scans.synchronized(Option(e.scans.get(columns))).getOrElse {
+      val rdd = e.df.select(columns.map(col): _*).queryExecution.toRdd
+      e.scans.synchronized(e.scans.put(columns, rdd))
+      rdd
     }
   }
+
+  /** [[cachedScan]] of the rows passing `filter`, pushed into the read so
+    * it skips files and row groups. `filter` names the dir's columns (it
+    * is rebound by name to the cached relation); being per query, the
+    * scan is planned afresh on every call and never kept. */
+  def prunedScan(spark: SparkSession, path: String, columns: Seq[String],
+                 filter: Expression): RDD[InternalRow] = {
+    val df = cachedRead(spark, path)
+    val byName = df.queryExecution.analyzed.output.map(a => a.name -> a).toMap
+    val bound = filter.transform {
+      case a: AttributeReference => byName.getOrElse(a.name,
+        throw new IllegalArgumentException(s"no column ${a.name} in $path"))
+    }
+    df.filter(Bridge.column(bound)).select(columns.map(col): _*)
+      .queryExecution.toRdd
+  }
+
+  /** How many scans [[cachedScan]] keeps for `path`'s live dir. */
+  private[graft] def cachedScanCount(spark: SparkSession, path: String): Int =
+    dirCache.synchronized(Option(dirCache.get(
+      (spark, graft.index.Commit.resolve(spark, path), "parquet"))))
+      .fold(0)(e => e.scans.synchronized(e.scans.size))
 
   /** Drop every cached analyzed plan for `path` — called by the engine's
     * write paths after committing files there (r22, VERDICT r21 #5). The
@@ -144,5 +207,5 @@ object Graft {
     // prefix match: one invalidate at an index's base path also drops its
     // generation subdirs and sidecar dirs (`<path>/gen-*`, `<path>_route`,
     // `<path>_layers`, …) — over-invalidation only ever costs a re-listing
-    dirCache.keys.filter(_._2.startsWith(path)).foreach(dirCache.remove)
+    dirCache.synchronized(dirCache.keySet.removeIf(_._2.startsWith(path)))
 }

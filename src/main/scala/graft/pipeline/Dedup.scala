@@ -325,7 +325,7 @@ object Dedup {
     * [[clusters]]: below it the whole pair set is ~MBs and exact
     * union-find on the driver replaces O(diameter) tiny Spark jobs with
     * one collect (the same bounded-collect-with-distributed-fallback
-    * contract the ANN side's GraphCandidates uses). Var as a test seam —
+    * contract the ANN side's AnnCandidates leaf uses). Var as a test seam —
     * DedupSpec forces the distributed path and pins both paths equal. */
   @volatile private[pipeline] var clusterDriverCap: Long = 100000L
 

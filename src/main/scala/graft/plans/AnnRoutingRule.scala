@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.types.{ArrayType, FloatType}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, FloatType, IntegerType, LongType, ShortType, StructType}
 
 import graft.vector.{CosineSimilarity, Hnsw, InnerProduct, Ivf, Knn, L2Distance, Quantize}
 import Routing.qualify
@@ -68,8 +69,9 @@ object AnnRouting {
     def leafIdCol: Option[String] = None
   }
   /** Clustered/routed graph ([[graft.vector.Hnsw.buildIndexClustered]]):
-    * the routed plan swaps the scan for [[GraphCandidates]] (the
-    * centroid-ordered triangle-bounded walk, exact at full ef).
+    * the routed plan swaps the scan for an [[AnnCandidates]] leaf walking
+    * the graph ([[GraphWalk]]: the centroid-ordered triangle-bounded walk,
+    * exact at full ef).
     *  - `maxFilterIds` gates the FILTERED route: an attribute filter is
     *    consumed into the walk's allowed-id callback only when footer
     *    stats bound its survivors by this many ids (the broadcast-set
@@ -109,20 +111,22 @@ object AnnRouting {
     def leafIdCol: Option[String] = Some(idCol)
   }
   /** Flat coded table ([[graft.vector.Quantize.encodeTable]] with any
-    * [[Quantize.FlatCodec]]): the routed plan splices the codec's coarse
-    * screen (top k·refine by code distance) + self-join under the original
-    * Sort/Limit — the exact rescore IS the untouched Sort recomputing
-    * float distances. Pure logical composition, no custom exec. */
+    * [[Quantize.FlatCodec]]): the routed plan swaps the scan for an
+    * [[AnnCandidates]] leaf running the codec's coarse screen
+    * ([[CodeScreen]]: one job keeping the top k·refine rows by code
+    * distance) under the original Sort/Limit — the exact rescore IS the
+    * untouched Sort recomputing float distances. `indexSchema` is the
+    * coded table's, read at registration. */
   final case class FlatFamily(codec: Quantize.FlatCodec, codeCol: String,
                               idCol: String, refine: Int,
-                              indexPlan: LogicalPlan) extends Family {
+                              indexSchema: StructType) extends Family {
     def metric: Knn.Metric = codec.metric
     def leafIdCol: Option[String] = Some(idCol)
   }
   /** Composite IVF-ADC index ([[graft.vector.Ivf.buildIndexPq]] — coarse
-    * lists + residual PQ codes, r16): same splice as the flat family,
-    * with the PROBE-PRUNED per-list ADC screen
-    * ([[graft.vector.Ivf.coarseIdsPq]]) — the scan touches only the
+    * lists + residual PQ codes, r16): the same screen leaf as the flat
+    * family, with the PROBE-PRUNED per-list ADC screen
+    * ([[graft.vector.Ivf.pqScreen]]) — the scan touches only the
     * `nprobe` nearest lists' files. Even at nprobe = nlist the result is
     * exact only when the true top-k lands inside the k·refine ADC coarse
     * set — a survivor margin, not a bound (IVF-PQ cosine at nprobe =
@@ -133,7 +137,7 @@ object AnnRouting {
                                idCol: String, nprobe: Int,
                                refine: Int,
                                metric: Knn.Metric = Knn.L2,
-                               indexPlan: LogicalPlan) extends Family {
+                               indexSchema: StructType) extends Family {
     def leafIdCol: Option[String] = Some(idCol)
   }
 
@@ -253,7 +257,7 @@ object AnnRouting {
     putUnlessMutated(spark, quantPath, epoch0, q,
       Registered(q, quantPath, vecCol, rows,
         FlatFamily(codec, codeCol, idCol, codec.refineOr(refine),
-          analyzedPlan(spark, quantPath))))
+          analyzedPlan(spark, quantPath).schema)))
   }
 
   /** Register a composite IVF-ADC index
@@ -285,7 +289,7 @@ object AnnRouting {
     putUnlessMutated(spark, indexPath, epoch0, q,
       Registered(q, indexPath, vecCol, rows,
         IvfPqFamily(model, pq, idCol, nprobe, refine, metric,
-          analyzedPlan(spark, indexPath))))
+          analyzedPlan(spark, indexPath).schema)))
   }
 
   def unregister(spark: SparkSession, basePath: String): Unit =
@@ -642,18 +646,18 @@ class AnnRoutingRule(session: SparkSession) extends Rule[LogicalPlan]
             // columns), so the k·refine contract applies to the filtered
             // corpus
             case flat: AnnRouting.FlatFamily =>
-              buildQuantRouted(gl, lr, r, flat.idCol, flat.refine,
-                (df, n) => Quantize.coarseIds(df, flat.codeCol, flat.idCol,
-                  flat.codec, qvec, n),
-                k, child.collect { case f: Filter => f }, flat.indexPlan)
+              buildScreenRouted(gl, lr, r, flat.idCol, flat.refine,
+                Quantize.FlatScreen(flat.codec, flat.codeCol, qvec.toSeq),
+                flat.indexSchema, qvec, k,
+                child.collect { case f: Filter => f })
             // composite IVF-ADC (r16): the probe-pruned per-list ADC
             // screen — consumed filters ride inside it, so its survivors
             // come from the filtered corpus like the flat families'
             case qf: AnnRouting.IvfPqFamily =>
-              buildQuantRouted(gl, lr, r, qf.idCol, qf.refine,
-                (df, n) => Ivf.coarseIdsPq(df, qf.model, qf.pq, qf.idCol,
-                  qvec, qf.nprobe, n, qf.metric),
-                k, child.collect { case f: Filter => f }, qf.indexPlan)
+              buildScreenRouted(gl, lr, r, qf.idCol, qf.refine,
+                Ivf.pqScreen(qf.model, qf.pq, qvec, qf.nprobe, qf.metric),
+                qf.indexSchema, qvec, k,
+                child.collect { case f: Filter => f })
             case _ => None // IVF whose bypass gate chose the fullscan
           }
         case _ => None
@@ -695,7 +699,7 @@ class AnnRoutingRule(session: SparkSession) extends Rule[LogicalPlan]
   }
 
   /** (column, lo, hi) of a range-shaped comparison against a numeric
-    * literal — the footer-estimable (and `.sql`-round-trippable) shapes. */
+    * literal — the footer-estimable shapes. */
   private def rangeShape(e: Expression): Option[(String, Double, Double)] = {
     def num(l: Literal): Option[Double] = l.value match {
       case n: java.lang.Number => Some(n.doubleValue())
@@ -790,18 +794,17 @@ class AnnRoutingRule(session: SparkSession) extends Rule[LogicalPlan]
     })
   }
 
-  /** Is `l` a literal whose `.sql` provably round-trips through the
-    * parser — non-null numeric (incl. date/timestamp internals, rendered
-    * as typed literals) or string (rendered single-quote-escaped)? */
+  /** A non-null numeric (incl. date/timestamp internals) or string
+    * literal. */
   private def simpleLit(l: Literal): Boolean =
     l.value != null && (l.value.isInstanceOf[java.lang.Number] ||
       l.dataType == org.apache.spark.sql.types.StringType)
 
-  /** Conjunct shapes whose `.sql` round-trips onto a fresh base read:
-    * numeric range shapes, plus string/typed-literal comparisons and
-    * literal IN lists (r10-2 — with the index-registration estimate
-    * fallback these are estimable too, so string-filtered ANN routes). */
-  private def sqlSafeShape(e: Expression): Boolean = e match {
+  /** Conjunct shapes a candidate leaf consumes: numeric range shapes,
+    * plus string/typed-literal comparisons and literal IN lists (r10-2 —
+    * with the index-registration estimate fallback these are estimable
+    * too, so string-filtered ANN routes). */
+  private def consumableShape(e: Expression): Boolean = e match {
     case _ if rangeShape(e).isDefined => true
     case EqualTo(_: AttributeReference, l: Literal) => simpleLit(l)
     case EqualTo(l: Literal, _: AttributeReference) => simpleLit(l)
@@ -820,57 +823,45 @@ class AnnRoutingRule(session: SparkSession) extends Rule[LogicalPlan]
     case _ => false
   }
 
-  /** The CONSUMABLE-filter check shared by the graph and quant filtered
-    * routes: every conjunct an estimable SQL-safe shape or IsNotNull
-    * over a base column, all deterministic. Returns the combined condition
-    * with attribute QUALIFIERS STRIPPED — its `.sql` is re-parsed against a
-    * fresh unqualified `read.parquet(...)`, where a qualified rendering
-    * like ``t.`label` `` would not resolve (review r10-2: a temp view or
-    * `.alias("t")` plan would abort instead of staying on the fullscan). */
+  /** The CONSUMABLE-filter check shared by the graph and screen filtered
+    * routes: every conjunct a consumable shape or IsNotNull over a base
+    * column, all deterministic. Returns the combined condition, which the
+    * leaf's scans evaluate as it stands (rebound by column name). */
   private def consumableCond(filters: Seq[Filter],
                              lr: LogicalRelation): Option[Expression] = {
     val conds = filters.map(_.condition)
     val servable = conds.flatMap(splitConjunctivePredicates).forall {
       case IsNotNull(a: AttributeReference) => lr.outputSet.contains(a)
-      case e => sqlSafeShape(e) &&
+      case e => consumableShape(e) &&
         e.references.forall(lr.outputSet.contains)
     }
-    // legacy escaped-string parsing changes what a rendered string literal
-    // re-parses to (backslashes stay literal): a consumed condition would
-    // silently evaluate a DIFFERENT predicate, so string shapes refuse
-    // under that conf instead of risking wrong top-k rows (review r10-3)
-    val legacyEscapes = session.conf
-      .getOption("spark.sql.parser.escapedStringLiterals")
-      .exists(_.equalsIgnoreCase("true"))
-    val hasString = conds.exists(_.exists {
-      case l: Literal =>
-        l.dataType == org.apache.spark.sql.types.StringType && l.value != null
-      case _ => false
-    })
-    if (!servable || !conds.forall(_.deterministic) ||
-        (hasString && legacyEscapes)) None
-    else Some(conds.reduce(And).transform {
-      case a: AttributeReference => a.withQualifier(Nil)
-    })
+    if (!servable || !conds.forall(_.deterministic)) None
+    else Some(conds.reduce(And))
   }
 
-  /** The graph leaf-swap gate, shared by the unfiltered and filtered
-    * routes: a base column is REQUIRED if any expression inside the
-    * matched subtree consumes it — except inside `excluded` (consumed
-    * Filter nodes, satisfied by the id job) — OR it escapes through the
-    * subtree's output (a bare orderBy().limit() with no pruning Project
-    * delivers every column to the user; null-filling those would be a
-    * visible wrong result, review r10). Only (id, vector) may be
-    * required, the id must be a long, the vector a float array, and every
-    * other column nullable. */
-  private def graphGateOk(gl: LogicalPlan, lr: LogicalRelation,
-                          r: Registered, idCol: String,
-                          excluded: Seq[Filter]): Boolean = {
+  /** The base columns a candidate leaf must supply: those any expression
+    * inside the matched subtree consumes — except inside `excluded`
+    * (consumed Filter nodes, satisfied by the leaf's own scan) — and those
+    * escaping through the subtree's output (a bare orderBy().limit() with
+    * no pruning Project delivers every column to the user; null-filling
+    * those would be a visible wrong result, review r10). */
+  private def referencedCols(gl: LogicalPlan, lr: LogicalRelation,
+                             excluded: Seq[Filter]): Seq[Attribute] = {
     val referenced = AttributeSet(
       gl.collect {
         case n if !(n eq lr) && !excluded.exists(_ eq n) => n.expressions
       }.flatten.flatMap(_.references)) ++ gl.outputSet
-    val requiredNames = lr.output.filter(referenced.contains).map(_.name).toSet
+    lr.output.filter(referenced.contains)
+  }
+
+  /** The graph leaf-swap gate, shared by the unfiltered and filtered
+    * routes: only (id, vector) may be required ([[referencedCols]]), the
+    * id must be a long, the vector a float array, and every other column
+    * nullable. */
+  private def graphGateOk(gl: LogicalPlan, lr: LogicalRelation,
+                          r: Registered, idCol: String,
+                          excluded: Seq[Filter]): Boolean = {
+    val requiredNames = referencedCols(gl, lr, excluded).map(_.name).toSet
     val idOk = lr.output.find(_.name == idCol)
       .exists(_.dataType == org.apache.spark.sql.types.LongType)
     val vecOk = lr.output.find(_.name == r.vecCol).exists(_.dataType match {
@@ -889,16 +880,15 @@ class AnnRoutingRule(session: SparkSession) extends Rule[LogicalPlan]
     * column; unreferenced base columns ride along as nulls (they must be
     * nullable — never read, but the schema contract stays honest). A
     * quantized leaf runs the code-space walk and fetches the k·refine
-    * coarse survivors' raw vectors from the base table, so its base path
-    * always rides along.
+    * coarse survivors' raw vectors from the base table.
     *
     * K3 automatic: a `Filter` is CONSUMED into the routed walk's allowed-id
     * callback (the reference host computes the filter bitmap and hands it
     * to the KNN iterator, knn/knn.h:87-94; HNSWFilterWrapper_c
     * knn.cpp:90-97 — traversal crosses disallowed nodes, only allowed
     * enter the beam, over-probing keeps k survivors). Route only when
-    *  - every conjunct is an SQL-safe estimable shape (numeric ranges from
-    *    footer stats; string/typed comparisons and IN lists from the
+    *  - every conjunct is a consumable estimable shape (numeric ranges
+    *    from footer stats; string/typed comparisons and IN lists from the
     *    column's registered secondary-index stats) or an inferred
     *    IsNotNull over a base column — the whole condition is then
     *    re-evaluated DISTRIBUTED by the leaf's id job, so consuming all
@@ -927,13 +917,12 @@ class AnnRoutingRule(session: SparkSession) extends Rule[LogicalPlan]
     if (cond.isDefined && !estimateSelectivity(conds, r)
         .exists(_ * r.rows.toDouble <= g.maxFilterIds.toDouble)) return None
     if (!graphGateOk(gl, lr, r, g.idCol, excluded = filters)) return None
-    val leaf = GraphCandidates(r.indexPath, g.idCol, r.vecCol,
-      qvec.toSeq, k, g.ef, lr.output,
-      basePath = if (cond.isDefined || g.quantized) Some(r.basePath) else None,
-      filterSql = cond.map(_.sql),
+    val walk = GraphWalk(r.indexPath, r.basePath, g.ef,
       maxIds = if (cond.isDefined) g.maxFilterIds else Long.MaxValue,
       adaptive = g.adaptive, quantized = g.quantized, refine = g.refine,
       hier = g.hier, hierMin = g.hierMin)
+    val leaf = AnnCandidates(walk, g.idCol, r.vecCol, qvec.toSeq, k,
+      lr.output, cond)
     // transformUp rebuilds parents after the leaf swap, so the consumed
     // Filter nodes are copies — match them by their (unchanged)
     // condition, not by reference
@@ -943,56 +932,44 @@ class AnnRoutingRule(session: SparkSession) extends Rule[LogicalPlan]
     })
   }
 
-  /** Swap the base relation for the quantized coarse-screen survivors:
-    * quantTable ⋈ coarse-top-(k·refine)(code L2), aliased back to the
-    * original exprIds — the untouched Sort/Limit above IS the exact
-    * rescore. The candidate sub-plan is built through the DataFrame API
-    * at plan time (analysis only, no jobs; a fresh read per injection
-    * keeps exprIds unique). Refuses when the scan needs a column the
-    * quant table lacks.
+  /** Swap the base relation for the code-screen candidate leaf (same
+    * exprIds — the untouched Sort/Limit above IS the exact rescore of the
+    * k·refine survivors' carried vectors). The leaf reads, from the coded
+    * table, every base column the plan references plus any non-nullable
+    * one; it refuses when the table lacks one of them (or holds it under
+    * another type), or when the id is not integral (the screen's
+    * tiebreak, as the explicit screens cast it).
     *
-    * FILTERED (K3): the quant table carries the base attribute columns, so
-    * an attribute filter rides INSIDE the coarse screen (`filter → code
+    * FILTERED (K3): the coded table carries the base attribute columns, so
+    * an attribute filter rides INSIDE the screen's scan (`filter → code
     * distance → top k·refine`) — the k·refine serving contract then holds
     * over the FILTERED corpus, the in-traversal semantics (never a
     * post-screen filter that could under-return). The original Filter
-    * nodes stay in the plan (they re-verify survivors — exact and free),
-    * only the screen input changes. Refused for non-range filter shapes
-    * (the condition must `.sql`-round-trip onto the fresh quant read). */
-  private def buildQuantRouted(gl: LogicalPlan, lr: LogicalRelation,
-                               r: Registered, idCol: String, refine: Int,
-                               coarse: (org.apache.spark.sql.DataFrame, Int) =>
-                                 org.apache.spark.sql.DataFrame,
-                               k: Int,
-                               filters: Seq[Filter],
-                               cachedPlan: LogicalPlan): Option[LogicalPlan] = {
-    val screenCond = if (filters.isEmpty) None else {
-      consumableCond(filters, lr) match {
-        case Some(c) => Some(c)
-        case None => return None
-      }
+    * nodes stay in the plan (they re-verify survivors — exact and free).
+    * Refused for non-consumable filter shapes. */
+  private def buildScreenRouted(gl: LogicalPlan, lr: LogicalRelation,
+                                r: Registered, idCol: String, refine: Int,
+                                screen: Quantize.Screen, schema: StructType,
+                                qvec: Array[Float], k: Int,
+                                filters: Seq[Filter]): Option[LogicalPlan] = {
+    val cond = if (filters.isEmpty) None else consumableCond(filters, lr) match {
+      case None => return None
+      case c => c
     }
-    // the index plan was analyzed at registration — plan time touches no
-    // storage; fresh exprIds per injection (the IvfFamily pattern)
-    val qdf = try org.apache.spark.sql.graftbridge.Bridge.ofRows(session,
-        Routing.fresh(cachedPlan))
-      catch { case _: Exception => return None }
-    val cols = qdf.columns.toSet
-    if (!lr.output.forall(a => cols.contains(a.name))) return None
-    // the Dataset analyzes eagerly, so a condition that fails to re-parse
-    // or resolve against the quant read must refuse the route (exact
-    // fullscan), never abort the query from inside the optimizer
-    val screenBase = try screenCond
-      .map(c => qdf.filter(org.apache.spark.sql.functions.expr(c.sql)))
-      .getOrElse(qdf)
-    catch { case _: Exception => return None }
-    val survivors = qdf.join(
-      coarse(screenBase, Knn.refineKeep(k, refine)), Seq(idCol))
-    val plan = survivors.queryExecution.analyzed
-    val byName = plan.output.map(a => a.name -> a).toMap
-    val mapped = Project(
-      lr.output.map(a => Alias(byName(a.name), a.name)(exprId = a.exprId)),
-      plan)
-    Some(gl.transformUp { case l: LogicalRelation if l eq lr => mapped })
+    def integral(t: DataType): Boolean = t match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
+    }
+    val types = schema.fields.map(f => f.name -> f.dataType).toMap
+    val idAttr = lr.output.find(_.name == idCol)
+    val read = (referencedCols(gl, lr, excluded = Nil) ++
+      lr.output.filterNot(_.nullable) ++ idAttr).distinct
+    val served = read.forall(a =>
+      types.get(a.name).exists(DataTypeUtils.sameType(_, a.dataType)))
+    if (!served || !idAttr.exists(a => integral(a.dataType)) ||
+        !screen.columns.forall(types.contains)) return None
+    val leaf = AnnCandidates(CodeScreen(r.indexPath, screen, refine,
+      read.map(_.name)), idCol, r.vecCol, qvec.toSeq, k, lr.output, cond)
+    Some(gl.transformUp { case l: LogicalRelation if l eq lr => leaf })
   }
 }

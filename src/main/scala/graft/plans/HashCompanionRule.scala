@@ -110,9 +110,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (review r10-3).
     ext.injectOptimizerRule(session => new IndexRoutingRule(session))
     ext.injectOptimizerRule(session => new AnnRoutingRule(session))
-    // plans the graph family's routed-candidate leaf (AnnRoutingRule's
-    // rewrite target for clustered graph indexes)
-    ext.injectPlannerStrategy(_ => new GraphCandidatesStrategy)
+    // plans the routed-candidate leaf (AnnRoutingRule's rewrite target
+    // for the graph and code-screen families)
+    ext.injectPlannerStrategy(_ => new AnnCandidatesStrategy)
     // Only the genuine catalyst Expressions register as SQL functions; the
     // text-analysis ops are Column COMPOSITIONS of SQL built-ins, so
     // spark.sql users already have their vocabulary (the oracle replays

@@ -639,7 +639,7 @@ object VectorQueries {
     // knn/knn.h:87-94 + knn.cpp:600-610 — routing and filtering compose
     // without the user choosing an API): the query is the PLAIN filtered
     // top-k; AnnRoutingRule CONSUMES the `label = 3` Filter into the
-    // GraphCandidates leaf, whose execution first runs a column-pruned id
+    // AnnCandidates leaf, whose execution first runs a column-pruned id
     // job (never reading vectors), broadcasts the sorted survivor ids, and
     // runs the routed walk with the allowed-id callback. Exact at full ef
     // over the allowed subset, so it shares q_knn_filtered's oracle; the
@@ -742,7 +742,7 @@ object VectorQueries {
     // reference serves whatever index type the column has,
     // knn/knn.cpp:600-610): the query is the PLAIN exact top-k; the
     // registered clustered-graph index makes AnnRoutingRule swap the scan
-    // for the GraphCandidates leaf (centroid-ordered, triangle-bounded
+    // for the AnnCandidates leaf (centroid-ordered, triangle-bounded
     // sub-graph walk — O(probed sub-graphs), unprobed ones schedule ZERO
     // tasks), and the untouched Sort/Limit above recomputes exact
     // distances from the carried vectors. Exact at full ef, so it shares
@@ -767,7 +767,7 @@ object VectorQueries {
     // CreateIterator serves whatever index type the column has,
     // knn/knn.cpp:600-610, including the quantized HNSW of
     // knn.cpp:105-135): registering the hnswq index makes the PLAIN exact
-    // top-k route through the GraphCandidates leaf in QUANTIZED mode —
+    // top-k route through the AnnCandidates leaf in QUANTIZED mode —
     // code-space routed walk → k·refine coarse survivor ids → one bounded
     // raw-vector fetch — and the untouched Sort/Limit above rescores
     // exactly (the searchQuantized serving contract). Shares the fullscan
@@ -1002,7 +1002,7 @@ object VectorQueries {
         s"1.0 - list_inner_product(embedding::DOUBLE[], $qSub)"))),
 
     // K4 through the hierarchy: registerGraph(hierarchy = true) makes the
-    // PLAIN exact top-k route through the GraphCandidates leaf in
+    // PLAIN exact top-k route through the AnnCandidates leaf in
     // hierarchy mode — the descent picks each probed sub-graph's beam
     // entry, the untouched Sort/Limit above recomputes exact distances.
     // Exact at full ef, shares the fullscan oracle.

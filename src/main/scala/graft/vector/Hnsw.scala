@@ -1605,8 +1605,8 @@ object Hnsw {
 
   /** Walks that actually ran a hierarchy descent (nonempty layers) —
     * spec instrumentation only, meaningful in local mode where executors
-    * share the JVM (same caveat as
-    * [[graft.plans.GraphCandidates.fallbackCount]]). */
+    * share the JVM (a routed search reports its own work as the SQLMetrics
+    * of [[graft.plans.GraphCandidatesExec]]). */
   val descents = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Schedule `body` over the probed partitions, zipping the layer RDD in

@@ -1,6 +1,9 @@
 package graft.vector
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, In, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.index.Commit
 import graft.index.Commit.resolve
@@ -615,29 +618,18 @@ object Ivf {
       metric)
   }
 
-  /** The probe-pruned ADC coarse pass as a composable id stream — shared
-    * by [[searchPq]] and the automatic route's IVF-ADC family splice
-    * (r16): prune the scan to the `nprobe` nearest lists, score each code
-    * against ITS list's ADC table (one table per probed list from the
-    * query's residual — nprobe × M × K doubles, driver-tiny), keep the
-    * top-`n` ids. A pre-filtered `qdf` composes: the survivors then come
-    * from the filtered corpus (the quant-family filtered-route
-    * contract). */
+  /** The probe-pruned ADC coarse pass as a composable id stream —
+    * [[searchPq]]'s screen: prune the scan to the `nprobe` nearest lists,
+    * score each code against ITS list's ADC table ([[pqScreen]]), keep
+    * the top-`n` ids. A pre-filtered `qdf` composes: the survivors then
+    * come from the filtered corpus. */
   def coarseIdsPq(qdf: DataFrame, m: Model, pq: Quantize.PqModel,
                   idCol: String, query: Array[Float], nprobe: Int,
                   n: Int, metric: Knn.Metric = Knn.L2): DataFrame = {
     import qdf.sparkSession.implicits._
-    // cosine: probe/screen in the normalized space the codes live in
-    // (normalized-L2 order == cosine order for the rescore's cut)
-    val bq = bindPqQuery(metric, query)
-    val probes = m.probeSet(bq, nprobe)
-    val tables: Map[Long, Array[Double]] = probes.map { l =>
-      val cent = m.centroids(l.toInt)
-      val res = Array.tabulate(bq.length)(i => bq(i) - cent(i))
-      l -> pq.adcTable(res)
-    }.toMap
-    val tB = qdf.sparkSession.sparkContext.broadcast((pq, tables))
-    qdf.filter(col("ivf_cluster").isin(probes: _*))
+    val screen = pqScreen(m, pq, query, nprobe, metric)
+    val tB = qdf.sparkSession.sparkContext.broadcast((pq, screen.tables))
+    qdf.filter(col("ivf_cluster").isin(screen.probes: _*))
       .select(col(idCol).cast("long").as("cid"), col("ivf_cluster"),
         col("ivf_pq"))
       .as[(Long, Long, Array[Byte])]
@@ -649,6 +641,34 @@ object Ivf {
       .orderBy(col("adist").asc, col("cid").asc)
       .limit(n)
       .select(col("cid").as(idCol))
+  }
+
+  /** The IVF-ADC screen of one query: the `nprobe` nearest lists, each
+    * with its ADC table over the query's residual (nprobe × M × K
+    * doubles, driver-tiny); the scan keeps only the probed lists — no
+    * pushdown when they are every list (`pruned` false), since it would
+    * skip nothing. Cosine probes and screens in the normalized space the
+    * codes live in (normalized-L2 order == cosine order for the rescore's
+    * cut). */
+  final case class PqScreen(pq: Quantize.PqModel, probes: Seq[Long],
+                            tables: Map[Long, Array[Double]],
+                            pruned: Boolean)
+      extends Quantize.Screen {
+    def columns: Seq[String] = Seq("ivf_cluster", "ivf_pq")
+    override def pushdown: Option[Expression] = if (!pruned) None else Some(In(
+      AttributeReference("ivf_cluster", LongType)(), probes.map(Literal(_))))
+    def scorer(): InternalRow => Double =
+      r => pq.adc(r.getBinary(1), tables(r.getLong(0)))
+  }
+
+  def pqScreen(m: Model, pq: Quantize.PqModel, query: Array[Float],
+               nprobe: Int, metric: Knn.Metric = Knn.L2): PqScreen = {
+    val bq = bindPqQuery(metric, query)
+    val probes = m.probeSet(bq, nprobe)
+    PqScreen(pq, probes, probes.map { l =>
+      val cent = m.centroids(l.toInt)
+      l -> pq.adcTable(Array.tabulate(bq.length)(i => bq(i) - cent(i)))
+    }.toMap, pruned = probes.size < m.nlist)
   }
 
   /** IVF-accelerated KNN JOIN — the scale path of [[Knn.knnJoin]] (batch

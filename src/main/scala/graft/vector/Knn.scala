@@ -26,7 +26,7 @@ object Knn {
 
   /** ENFORCED driver/broadcast budget for the query side of every batch
     * KNN join (r15 VERDICT #1 — the doc-comment "chunk a huge query set"
-    * contract, now enforced in code the way [[graft.plans.GraphCandidates]]
+    * contract, now enforced in code the way [[graft.plans.AnnCandidates]]
     * enforces its filter-id budget): joins whose query batch fits collect
     * or broadcast it (the fast small-batch shape); a batch over budget
     * takes each leg's scale arm — distributed pid-assignment for the
@@ -77,13 +77,13 @@ object Knn {
       .headOption.map(_.getSeq[Float](0).length).getOrElse(0)
 
   /** Joins that engaged an over-budget scale arm — spec instrumentation
-    * only (meaningful in local mode, like
-    * [[graft.plans.GraphCandidates.fallbackCount]]). */
+    * only (a single search's over-budget fallback is the `fallback`
+    * SQLMetric of [[graft.plans.GraphCandidatesExec]]). */
   val overBudgetJoins = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** ONE budget-limited job decides the arm AND supplies the in-budget
-    * batch (no separate count pass — the [[graft.plans.GraphCandidates]]
-    * construction): collect at most `max`+1 (id, vector) rows; a full
+    * batch (no separate count pass — the [[graft.plans.AnnCandidates]]
+    * filter-id construction): collect at most `max`+1 (id, vector) rows; a full
     * result means over budget → None, and the caller's scale arm re-reads
     * `queries` distributed. */
   private[graft] def boundedQueryBatch(queries: DataFrame, qIdCol: String,

@@ -1,5 +1,7 @@
 package graft.vector
 
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, FloatType, LongType, StructField, StructType}
@@ -144,9 +146,9 @@ object Quantize {
     /** One corpus vector's values for [[fields]]. */
     private[vector] def encodeRow(v: Array[Float]): Seq[Any]
     /** The screen's input columns; [[readCode]] reads them from `at`. */
-    private[vector] def screenCols(codeCol: String): Seq[Column] =
-      Seq(col(codeCol))
-    private[vector] def readCode(r: Row, at: Int): Code
+    private[vector] def screenCols(codeCol: String): Seq[String] =
+      Seq(codeCol)
+    private[vector] def readCode(r: InternalRow, at: Int): Code
     /** A RAW query bound into the screen space, ready for [[score]]. */
     private[vector] def prepare(q: Array[Float]): Query
     /** Coarse distance, ascending = closer. */
@@ -171,8 +173,8 @@ object Quantize {
     private[vector] def fields(codeCol: String): Seq[StructField] =
       Seq(StructField(codeCol, BinaryType))
     private[vector] def encodeRow(v: Array[Float]): Seq[Any] = Seq(encode(v))
-    private[vector] def readCode(r: Row, at: Int): Array[Byte] =
-      r.getAs[Array[Byte]](at)
+    private[vector] def readCode(r: InternalRow, at: Int): Array[Byte] =
+      r.getBinary(at)
   }
 
   final case class QModel(mins: Array[Float], maxs: Array[Float],
@@ -448,8 +450,8 @@ object Quantize {
       Seq(StructField(codeCol, ArrayType(LongType)))
     private[vector] def encodeRow(v: Array[Float]): Seq[Any] =
       Seq(binarize(v).toSeq)
-    private[vector] def readCode(r: Row, at: Int): Array[Long] =
-      r.getSeq[Long](at).toArray
+    private[vector] def readCode(r: InternalRow, at: Int): Array[Long] =
+      r.getArray(at).toLongArray()
     // binarizeQuery binds (normalizes for cosine, augments for IP) internally
     private[vector] def prepare(q: Array[Float]): Array[Long] = binarizeQuery(q)
     private[vector] def score(c: Array[Long], p: Array[Long]): Double =
@@ -520,10 +522,12 @@ object Quantize {
       val (rn, rs) = bits.residualFactorsBound(bv)
       Seq(bits.binarizeBound(bv).toSeq, Row(rn, rs))
     }
-    override private[vector] def screenCols(codeCol: String): Seq[Column] =
-      Seq(col(codeCol), col(s"$rCol.norm"), col(s"$rCol.scale"))
-    private[vector] def readCode(r: Row, at: Int): Code =
-      (r.getSeq[Long](at).toArray, r.getFloat(at + 1), r.getFloat(at + 2))
+    override private[vector] def screenCols(codeCol: String): Seq[String] =
+      Seq(codeCol, rCol)
+    private[vector] def readCode(r: InternalRow, at: Int): Code = {
+      val f = r.getStruct(at + 1, 2) // (norm, scale), as [[fields]] writes it
+      (r.getArray(at).toLongArray(), f.getFloat(0), f.getFloat(1))
+    }
     private[vector] def prepare(q0: Array[Float]): Query = {
       val q = bindQuery(q0)
       val qr = new Array[Double](dim)
@@ -714,21 +718,55 @@ object Quantize {
     }(Encoders.row(schema))
   }
 
+  /** One query's coarse screen over the rows of a coded table: the
+    * columns it scores, leading each scanned row, and the scan predicate
+    * outside which no row scores. [[coarseIds]] runs it as a sub-plan;
+    * [[graft.plans.AnnRoutingRule]]'s candidate leaf runs it as one job
+    * that keeps each task's top k·refine rows whole. */
+  trait Screen extends Serializable {
+    def columns: Seq[String]
+    /** Over column names; None = every row scores. */
+    def pushdown: Option[Expression] = None
+    /** One task's scorer (any per-query table is built once here) of a
+      * row whose first [[columns]] are the screen's, none of them null;
+      * ascending = closer. */
+    def scorer(): InternalRow => Double
+  }
+
+  /** The flat codecs' screen: `query` RAW, bound into the codec's screen
+    * space once per task (for PQ that builds the M×K ADC table). */
+  final case class FlatScreen(c: FlatCodec, codeCol: String,
+                              query: Seq[Float]) extends Screen {
+    def columns: Seq[String] = c.screenCols(codeCol)
+    def scorer(): InternalRow => Double = {
+      val p = c.prepare(query.toArray)
+      r => c.score(c.readCode(r, 0), p)
+    }
+  }
+
+  /** Are the first `n` columns of `r` all set? A screen scores only rows
+    * whose id and code columns are — as the routed candidate leaf does. */
+  private def noNulls(r: InternalRow, n: Int): Boolean = {
+    var i = 0
+    while (i < n && !r.isNullAt(i)) i += 1
+    i == n
+  }
+
   /** The coarse-screen candidate ids: top-`n` by code distance, ties by id
-    * — a declarative sub-plan (mapPartitions + TakeOrdered), shared by
-    * [[searchRescore]] and [[graft.plans.AnnRoutingRule]]'s automatic
-    * flat route (which splices it under the original Sort/Limit). `query`
-    * is RAW; the codec binds it into its screen space once per partition
-    * (for PQ that builds the M×K ADC table there). */
+    * — a sub-plan (a scoring pass over the scan's rows + TakeOrdered) that
+    * [[searchRescore]] joins back to the table. `query` is RAW; the codec
+    * binds it into its screen space once per partition. */
   def coarseIds(df: DataFrame, codeCol: String, idCol: String, c: FlatCodec,
                 query: Array[Float], n: Int): DataFrame = {
-    val qB = df.sparkSession.sparkContext.broadcast((c, query))
-    df.select(col(idCol).cast("long") +: c.screenCols(codeCol): _*)
-      .mapPartitions { it =>
-        val (cc, q) = qB.value
-        val p = cc.prepare(q)
-        it.map(r => (r.getLong(0), cc.score(cc.readCode(r, 1), p)))
-      }(Encoders.product[(Long, Double)])
+    val screen = FlatScreen(c, codeCol, query.toSeq)
+    val sB = df.sparkSession.sparkContext.broadcast(screen)
+    val at = screen.columns.size
+    val scored = df.select(screen.columns.map(col) :+ col(idCol).cast("long"): _*)
+      .queryExecution.toRdd.mapPartitions { it =>
+        val score = sB.value.scorer()
+        it.filter(noNulls(_, at + 1)).map(r => (r.getLong(at), score(r)))
+      }
+    df.sparkSession.createDataset(scored)(Encoders.product[(Long, Double)])
       .toDF("cid", "adist")
       .orderBy(col("adist").asc, col("cid").asc)
       .limit(n)
@@ -835,12 +873,14 @@ object Quantize {
     val spark = df.sparkSession
     import spark.implicits._
     val keep = Knn.refineKeep(k, c.refineOr(refine))
-    val coded = df.select(col(idCol).cast("long") +: c.screenCols(codeCol): _*)
+    val coded = df.select(col(idCol).cast("long") +: c.screenCols(codeCol)
+      .map(col): _*)
+    val width = coded.schema.size
     // the one heap kernel both arms share: screen every corpus row of
     // `rows` against the query slice `qs`, emitting ≤ keep (qid, cid,
     // coarse-dist) rows per query — the per-(query, partition) bounded
     // cut; the global k·refine cut happens once over the union.
-    def screenRows(qs: Array[(Long, Array[Float])], rows: Iterator[Row])
+    def screenRows(qs: Array[(Long, Array[Float])], rows: Iterator[InternalRow])
         : Iterator[(Long, Long, Double)] =
       if (qs.isEmpty) Iterator.empty
       else {
@@ -895,8 +935,16 @@ object Quantize {
     Knn.boundedQueryBatch(queries, qIdCol, qVecCol, max) match {
       case Some(qRows) =>
         val qB = spark.sparkContext.broadcast(qRows)
-        val coarse = coded.mapPartitions(it =>
-          screenRows(qB.value, it))(Encoders.product[(Long, Long, Double)])
+        // a Dataset step (not the scan's RDD), so the code scan stays in
+        // the query's plan; its Rows convert to the InternalRows the
+        // codec reads
+        val schema = coded.schema
+        val coarse = coded.mapPartitions { it =>
+          val toCatalyst =
+            CatalystTypeConverters.createToCatalystConverter(schema)
+          screenRows(qB.value, it.map(toCatalyst(_).asInstanceOf[InternalRow])
+            .filter(noNulls(_, width)))
+        }(Encoders.product[(Long, Long, Double)])
           .toDF("__qid", "__cid", "__dist")
         val qDf = qRows.toSeq.toDF("__qid", "__qvec")
         rescored(broadcast(globalCut(coarse).join(broadcast(qDf), "__qid")))
@@ -908,7 +956,8 @@ object Quantize {
         // iterator per first-parent element, and slice partitions hold
         // exactly ONE element — so each task streams its corpus-code
         // partition exactly once
-        val coarseRdd = slices.cartesian(coded.rdd).mapPartitions { it =>
+        val coarseRdd = slices.cartesian(coded.queryExecution.toRdd
+            .mapPartitions(_.filter(noNulls(_, width)))).mapPartitions { it =>
           val buf = it.buffered
           if (!buf.hasNext) Iterator.empty
           else screenRows(buf.head._1, buf.map(_._2))

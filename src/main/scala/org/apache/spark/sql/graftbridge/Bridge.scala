@@ -13,14 +13,6 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-  /** DataFrame over a logical plan (Dataset.ofRows is private[sql]) —
-    * lets the routing rule serve a plan CACHED at registration instead
-    * of re-listing the index at every optimization pass. */
-  def ofRows(spark: org.apache.spark.sql.SparkSession,
-             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
   /** The `num` least of `input` under `ord`, in order — the per-partition
     * top-k of `RDD.takeOrdered`, and its whole answer over one partition
     * (`util.collection.Utils` is private[spark]), so a driver-side top-k

@@ -76,4 +76,51 @@ class GraftCacheSpec extends AnyFunSuite {
     assert(Graft.cachedRead(SparkT.spark, base)
       .select("v").as[Long].collect().toSeq === Seq(1L))
   }
+
+  test("cachedScan plans a dir's scan once per column set, prunedScan on every call; a dir change re-plans it") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GreaterThan, Literal}
+    import org.apache.spark.sql.types.LongType
+    val dir = Files.createTempDirectory("graft-scan").resolve("t").toString
+    Seq((1L, 10L), (2L, 20L)).toDF("k", "v").coalesce(1).write.parquet(dir)
+    // the filter names the column; each call brings its own attribute
+    def kOver(n: Long) =
+      GreaterThan(AttributeReference("k", LongType)(), Literal(n))
+    def vs(rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) =
+      rdd.map(_.getLong(0)).collect().toSeq.sorted
+    val all = Graft.cachedScan(SparkT.spark, dir, Seq("v"))
+    assert(Graft.cachedScan(SparkT.spark, dir, Seq("v")) eq all)
+    assert(!(Graft.cachedScan(SparkT.spark, dir, Seq("k", "v")) eq all))
+    // a per-query predicate is never kept: the memo holds the two column sets
+    val over1 = Graft.prunedScan(SparkT.spark, dir, Seq("v"), kOver(1L))
+    assert(!(Graft.prunedScan(SparkT.spark, dir, Seq("v"), kOver(1L)) eq over1))
+    assert(Graft.cachedScanCount(SparkT.spark, dir) === 2)
+    assert(vs(all) === Seq(10L, 20L))
+    assert(vs(over1) === Seq(20L))
+    // an append changes the dir's signature: a fresh plan reads it
+    Seq((3L, 30L)).toDF("k", "v").coalesce(1).write.mode("append").parquet(dir)
+    val after = Graft.cachedScan(SparkT.spark, dir, Seq("v"))
+    assert(!(after eq all))
+    assert(vs(after) === Seq(10L, 20L, 30L))
+    assert(vs(Graft.prunedScan(SparkT.spark, dir, Seq("v"), kOver(1L))) ===
+      Seq(20L, 30L))
+  }
+
+  test("the dir cache evicts the least recently used dir: past 512 dirs the hot one keeps its plan and scan") {
+    val root = Files.createTempDirectory("graft-lru")
+    val hot = root.resolve("d0")
+    Seq((1L, 10L)).toDF("k", "v").coalesce(1).write.parquet(hot.toString)
+    val file = onlyParquet(hot)
+    val df0 = Graft.cachedRead(SparkT.spark, hot.toString)
+    val scan0 = Graft.cachedScan(SparkT.spark, hot.toString, Seq("v"))
+    (1 to 512).foreach { i =>
+      val d = Files.createDirectories(root.resolve(s"d$i"))
+      Files.copy(file, d.resolve(file.getFileName))
+      Graft.cachedRead(SparkT.spark, d.toString)
+      Graft.cachedRead(SparkT.spark, hot.toString) // keeps d0 most recent
+    }
+    // 513 distinct dirs went through a 512-entry cache
+    assert(Graft.cachedRead(SparkT.spark, hot.toString) eq df0)
+    assert(Graft.cachedScan(SparkT.spark, hot.toString, Seq("v")) eq scan0)
+    assert(scan0.map(_.getLong(0)).collect().toSeq === Seq(10L))
+  }
 }

@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkT
+import graft.engine.Graft
 import graft.tables.Writer
 import graft.vector.{Ivf, Knn}
 import org.apache.spark.sql.DataFrame
@@ -44,6 +45,17 @@ class AnnRoutingSpec extends AnyFunSuite {
   }
 
   private def query: Array[Float] = vectors.head._2
+
+  /** The code-screen candidate leaves of a plan (flat codecs, IVF-ADC). */
+  private def screenLeaves(df: DataFrame): Seq[AnnCandidates] =
+    df.queryExecution.optimizedPlan.collect {
+      case g: AnnCandidates if g.source.isInstanceOf[CodeScreen] => g
+    }
+
+  private def walkOf(g: AnnCandidates): GraphWalk = g.source match {
+    case w: GraphWalk => w
+    case other => fail(s"not a graph walk: $other")
+  }
 
   private def scanPaths(df: DataFrame): Seq[String] =
     df.queryExecution.optimizedPlan.collect {
@@ -157,9 +169,9 @@ class AnnRoutingSpec extends AnyFunSuite {
     AnnRouting.registerGraph(SparkT.spark, baseG, idxG,
       vecCol = "embedding", idCol = "vec_id")
     def graphLeaves(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
-      case g: GraphCandidates => g
+      case g: AnnCandidates => g
     }
-    // family selection: the scan becomes the GraphCandidates leaf — no
+    // family selection: the scan becomes the graph-walk leaf — no
     // parquet relation remains anywhere in the plan
     val df = Knn.knn(SparkT.spark.read.parquet(baseG),
       "embedding", "vec_id", query, 10)
@@ -185,7 +197,7 @@ class AnnRoutingSpec extends AnyFunSuite {
     val filt = Knn.knn(
       SparkT.spark.read.parquet(baseG).filter($"label" === 2),
       "embedding", "vec_id", query, 10)
-    assert(graphLeaves(filt).exists(_.filterSql.isDefined),
+    assert(graphLeaves(filt).exists(_.filter.isDefined),
       filt.queryExecution.optimizedPlan.toString)
     assert(scanPaths(filt).isEmpty)
     val wantFilt = vectors.filter(_._3 == 2)
@@ -198,7 +210,7 @@ class AnnRoutingSpec extends AnyFunSuite {
     val aliased = Knn.knn(
       SparkT.spark.read.parquet(baseG).alias("t").filter($"label" === 2),
       "embedding", "vec_id", query, 10)
-    assert(graphLeaves(aliased).exists(_.filterSql.isDefined),
+    assert(graphLeaves(aliased).exists(_.filter.isDefined),
       aliased.queryExecution.optimizedPlan.toString)
     assert(aliased.select("vec_id").as[Long].collect().toSeq === wantFilt)
     // the maxFilterIds budget gates the filtered route (the broadcast-set
@@ -276,7 +288,7 @@ class AnnRoutingSpec extends AnyFunSuite {
     AnnRouting.registerGraph(SparkT.spark, baseS, idxG,
       vecCol = "embedding", idCol = "vec_id")
     def graphLeaves(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
-      case g: GraphCandidates => g
+      case g: AnnCandidates => g
     }
     // no index on cat: the string shape is un-estimable → exact fullscan
     val un = Knn.knn(SparkT.spark.read.parquet(baseS).filter($"cat" === "c2"),
@@ -290,7 +302,7 @@ class AnnRoutingSpec extends AnyFunSuite {
       val df = Knn.knn(
         SparkT.spark.read.parquet(baseS).filter($"cat" === "c2"),
         "embedding", "vec_id", query, 10)
-      assert(graphLeaves(df).exists(_.filterSql.isDefined),
+      assert(graphLeaves(df).exists(_.filter.isDefined),
         df.queryExecution.optimizedPlan.toString)
       val want = vectors.filter(_._3 == 2)
         .map { case (id, v, _) => (l2(v, query), id) }.sorted.take(10).map(_._2)
@@ -299,7 +311,7 @@ class AnnRoutingSpec extends AnyFunSuite {
       val in = Knn.knn(
         SparkT.spark.read.parquet(baseS).filter($"cat".isin("c2", "c9")),
         "embedding", "vec_id", query, 10)
-      assert(graphLeaves(in).exists(_.filterSql.isDefined),
+      assert(graphLeaves(in).exists(_.filter.isDefined),
         in.queryExecution.optimizedPlan.toString)
       assert(in.select("vec_id").as[Long].collect().toSeq === want)
       // a MORE selective string column (ndv 100, est 0.01 <= the filter
@@ -357,11 +369,14 @@ class AnnRoutingSpec extends AnyFunSuite {
         SparkT.spark.read.parquet(baseK).filter($"sk" === "hot"),
         "embedding", "vec_id", query, 10)
       assert(df.queryExecution.optimizedPlan.collect {
-        case g: GraphCandidates => g
-      }.exists(_.maxIds == 50L), df.queryExecution.optimizedPlan.toString)
-      val before = GraphCandidates.fallbackCount.get()
-      val got = df.select("vec_id").as[Long].collect().toSeq
-      assert(GraphCandidates.fallbackCount.get() === before + 1,
+        case g: AnnCandidates => g
+      }.exists(walkOf(_).maxIds == 50L), df.queryExecution.optimizedPlan.toString)
+      val ids = df.select("vec_id")
+      val got = ids.collect().map(_.getLong(0)).toSeq
+      val leafExecs = ids.queryExecution.executedPlan.collect {
+        case e: GraphCandidatesExec => e
+      }
+      assert(leafExecs.map(_.metrics("fallback").value) === Seq(1L),
         "expected the over-budget fallback to run exactly once")
       val want = vectors.filter(_._1 < 150)
         .map { case (id, v, _) => (l2(v, query), id) }.sorted.take(10).map(_._2)
@@ -384,41 +399,33 @@ class AnnRoutingSpec extends AnyFunSuite {
       vecCol = "embedding", idCol = "vec_id", codeCol = "qvec")
     val df = Knn.knn(SparkT.spark.read.parquet(qt),
       "embedding", "vec_id", query, 10)
-    // routed: the plan holds the coarse-screen self-join (two scans of the
-    // quant table + a join), not the single-scan fullscan
-    val joins = df.queryExecution.optimizedPlan.collect {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-    }
-    assert(joins.nonEmpty, df.queryExecution.optimizedPlan.toString)
+    // routed: the plan holds the code-screen candidate leaf, not the
+    // fullscan
+    assert(screenLeaves(df).nonEmpty, df.queryExecution.optimizedPlan.toString)
     // exact: refine=8 keeps the true top-10 inside the coarse set here
     assert(df.select("vec_id").as[Long].collect().toSeq === exactTop10)
     // filtered (r10): the filter rides INSIDE the coarse screen (the quant
     // table carries the attribute columns) — the plan still holds the
-    // screen join, and the result is the exact filtered top-k
+    // screen leaf, and the result is the exact filtered top-k
     val filt = Knn.knn(SparkT.spark.read.parquet(qt).filter($"label" === 2),
       "embedding", "vec_id", query, 10)
-    assert(filt.queryExecution.optimizedPlan.collect {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-    }.nonEmpty, filt.queryExecution.optimizedPlan.toString)
+    assert(screenLeaves(filt).exists(_.filter.isDefined),
+      filt.queryExecution.optimizedPlan.toString)
     val wantFilt = vectors.filter(_._3 == 2)
       .map { case (id, v, _) => (l2(v, query), id) }.sorted.take(10).map(_._2)
     assert(filt.select("vec_id").as[Long].collect().toSeq === wantFilt)
     // a non-range filter shape refuses (it cannot ride the screen) —
-    // single-scan exact fullscan
+    // exact fullscan
     val odd = Knn.knn(SparkT.spark.read.parquet(qt).filter($"label" % 2 === 0),
       "embedding", "vec_id", query, 10)
-    assert(odd.queryExecution.optimizedPlan.collect {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-    }.isEmpty)
+    assert(screenLeaves(odd).isEmpty)
+    assert(scanPaths(odd).exists(_.contains("qt")))
     AnnRouting.unregister(SparkT.spark, qt)
   }
 
   test("4-bit and binary quant families route; a segment append drops the entry until re-registration (r11)") {
-    import org.apache.spark.sql.catalyst.plans.logical.Join
     val tmp = Files.createTempDirectory("graft-annroute-qb")
     val df = vectors.toDF("vec_id", "embedding", "label")
-    def joins(d: DataFrame) =
-      d.queryExecution.optimizedPlan.collect { case j: Join => j }
     // refine sized past the fixture's row count: the screens pass every row
     // through, so exactness is structural here — screen ECONOMY at honest
     // refine is QuantizeSpec's subject
@@ -430,7 +437,7 @@ class AnnRoutingSpec extends AnyFunSuite {
       vecCol = "embedding", idCol = "vec_id", codeCol = "q4vec", refine = 40)
     val r4 = Knn.knn(SparkT.spark.read.parquet(q4),
       "embedding", "vec_id", query, 10)
-    assert(joins(r4).nonEmpty, r4.queryExecution.optimizedPlan.toString)
+    assert(screenLeaves(r4).nonEmpty, r4.queryExecution.optimizedPlan.toString)
     assert(r4.select("vec_id").as[Long].collect().toSeq === exactTop10)
     val qb = tmp.resolve("qb").toString
     val mb = graft.vector.Quantize.trainBinary(df, "embedding")
@@ -440,7 +447,7 @@ class AnnRoutingSpec extends AnyFunSuite {
       vecCol = "embedding", idCol = "vec_id", codeCol = "bvec", refine = 40)
     val rb = Knn.knn(SparkT.spark.read.parquet(qb),
       "embedding", "vec_id", query, 10)
-    assert(joins(rb).nonEmpty, rb.queryExecution.optimizedPlan.toString)
+    assert(screenLeaves(rb).nonEmpty, rb.queryExecution.optimizedPlan.toString)
     assert(rb.select("vec_id").as[Long].collect().toSeq === exactTop10)
     // RESIDUAL-factor binary (r13): the rCol registration must actually
     // FIRE the route (splice join present — the gate's fullscan oracle
@@ -454,7 +461,7 @@ class AnnRoutingSpec extends AnyFunSuite {
       vecCol = "embedding", idCol = "vec_id", codeCol = "bvec", refine = 40)
     val rbr = Knn.knn(SparkT.spark.read.parquet(qbr),
       "embedding", "vec_id", query, 10)
-    assert(joins(rbr).nonEmpty, rbr.queryExecution.optimizedPlan.toString)
+    assert(screenLeaves(rbr).nonEmpty, rbr.queryExecution.optimizedPlan.toString)
     assert(rbr.select("vec_id").as[Long].collect().toSeq === exactTop10)
     AnnRouting.unregister(SparkT.spark, qbr)
     // I9 epoch invalidation: an append mutates the file listing the cached
@@ -465,23 +472,20 @@ class AnnRoutingSpec extends AnyFunSuite {
     graft.vector.Quantize.appendSegment(extra, "embedding", "q4vec", q4, m4)
     val dropped = Knn.knn(SparkT.spark.read.parquet(q4),
       "embedding", "vec_id", query, 10)
-    assert(joins(dropped).isEmpty, "stale entry must drop after append")
+    assert(screenLeaves(dropped).isEmpty, "stale entry must drop after append")
     AnnRouting.registerFlat(SparkT.spark, q4, q4, m4,
       vecCol = "embedding", idCol = "vec_id", codeCol = "q4vec", refine = 41)
     val rerouted = Knn.knn(SparkT.spark.read.parquet(q4),
       "embedding", "vec_id", query, 10)
-    assert(joins(rerouted).nonEmpty)
+    assert(screenLeaves(rerouted).nonEmpty)
     assert(rerouted.select("vec_id").as[Long].collect().toSeq === exactTop10)
     AnnRouting.unregister(SparkT.spark, q4)
     AnnRouting.unregister(SparkT.spark, qb)
   }
 
   test("PQ family routes through the ADC screen; append drops the entry until re-registration (r14 #5)") {
-    import org.apache.spark.sql.catalyst.plans.logical.Join
     val tmp = Files.createTempDirectory("graft-annroute-pq")
     val df = vectors.toDF("vec_id", "embedding", "label")
-    def joins(d: DataFrame) =
-      d.queryExecution.optimizedPlan.collect { case j: Join => j }
     val pq = tmp.resolve("pq").toString
     val mpq = graft.vector.Quantize.trainPq(df, "embedding", "vec_id",
       m = 4, k = 16)
@@ -494,12 +498,12 @@ class AnnRoutingSpec extends AnyFunSuite {
       vecCol = "embedding", idCol = "vec_id", codeCol = "pqvec", refine = 40)
     val rp = Knn.knn(SparkT.spark.read.parquet(pq),
       "embedding", "vec_id", query, 10)
-    assert(joins(rp).nonEmpty, rp.queryExecution.optimizedPlan.toString)
+    assert(screenLeaves(rp).nonEmpty, rp.queryExecution.optimizedPlan.toString)
     assert(rp.select("vec_id").as[Long].collect().toSeq === exactTop10)
     // the filter rides inside the ADC screen
     val filt = Knn.knn(SparkT.spark.read.parquet(pq).filter($"label" === 2),
       "embedding", "vec_id", query, 10)
-    assert(joins(filt).nonEmpty, filt.queryExecution.optimizedPlan.toString)
+    assert(screenLeaves(filt).nonEmpty, filt.queryExecution.optimizedPlan.toString)
     val wantFilt = vectors.filter(_._3 == 2)
       .map { case (id, v, _) => (l2(v, query), id) }.sorted.take(10).map(_._2)
     assert(filt.select("vec_id").as[Long].collect().toSeq === wantFilt)
@@ -510,12 +514,12 @@ class AnnRoutingSpec extends AnyFunSuite {
     graft.vector.Quantize.appendSegment(extra, "embedding", "pqvec", pq, mpq)
     val dropped = Knn.knn(SparkT.spark.read.parquet(pq),
       "embedding", "vec_id", query, 10)
-    assert(joins(dropped).isEmpty, "stale PQ entry must drop after append")
+    assert(screenLeaves(dropped).isEmpty, "stale PQ entry must drop after append")
     AnnRouting.registerFlat(SparkT.spark, pq, pq, mpq,
       vecCol = "embedding", idCol = "vec_id", codeCol = "pqvec", refine = 41)
     val rerouted = Knn.knn(SparkT.spark.read.parquet(pq),
       "embedding", "vec_id", query, 10)
-    assert(joins(rerouted).nonEmpty)
+    assert(screenLeaves(rerouted).nonEmpty)
     assert(rerouted.select("vec_id").as[Long].collect().toSeq === exactTop10)
     AnnRouting.unregister(SparkT.spark, pq)
   }
@@ -606,7 +610,7 @@ class AnnRoutingSpec extends AnyFunSuite {
       for (filtered <- Seq(false, true)) {
         val df = search(filtered)
         assert(df.queryExecution.optimizedPlan.collect {
-          case g: GraphCandidates => g.filterSql.isDefined
+          case g: AnnCandidates => g.filter.isDefined
         } === Seq(filtered))
         val (rows, jobs, execs) = executions(df.collect())
         val what = s"codes=$codes hier=$hier filtered=$filtered"
@@ -739,11 +743,8 @@ class AnnRoutingSpec extends AnyFunSuite {
   }
 
   test("IVF-ADC family routes through the probe-pruned per-list screen; batch joins dispatch too (r16)") {
-    import org.apache.spark.sql.catalyst.plans.logical.Join
     val tmp = Files.createTempDirectory("graft-annroute-ivfpq")
     val df = vectors.toDF("vec_id", "embedding", "label")
-    def joins(d: DataFrame) =
-      d.queryExecution.optimizedPlan.collect { case j: Join => j }
     val idx = tmp.resolve("ivfpq").toString
     val m = graft.vector.Ivf.train(df, "embedding", nlist = 4)
     val pq = graft.vector.Ivf.buildIndexPq(df, "embedding", "vec_id", m, idx,
@@ -755,12 +756,12 @@ class AnnRoutingSpec extends AnyFunSuite {
       refine = 40)
     val rp = Knn.knn(SparkT.spark.read.parquet(idx),
       "embedding", "vec_id", query, 10)
-    assert(joins(rp).nonEmpty, rp.queryExecution.optimizedPlan.toString)
+    assert(screenLeaves(rp).nonEmpty, rp.queryExecution.optimizedPlan.toString)
     assert(rp.select("vec_id").as[Long].collect().toSeq === exactTop10)
     // the consumed filter rides inside the probe-pruned screen
     val filt = Knn.knn(SparkT.spark.read.parquet(idx).filter($"label" === 2),
       "embedding", "vec_id", query, 10)
-    assert(joins(filt).nonEmpty, filt.queryExecution.optimizedPlan.toString)
+    assert(screenLeaves(filt).nonEmpty, filt.queryExecution.optimizedPlan.toString)
     val wantFilt = vectors.filter(_._3 == 2)
       .map { case (id, v, _) => (l2(v, query), id) }.sorted.take(10).map(_._2)
     assert(filt.select("vec_id").as[Long].collect().toSeq === wantFilt)
@@ -781,11 +782,8 @@ class AnnRoutingSpec extends AnyFunSuite {
   }
 
   test("cosine IVF-ADC route ENGAGES: the 1-cosine_sim sort key splices the screen (r17)") {
-    import org.apache.spark.sql.catalyst.plans.logical.Join
     val tmp = Files.createTempDirectory("graft-annroute-ivfpqcos")
     val df = vectors.toDF("vec_id", "embedding", "label")
-    def joins(d: DataFrame) =
-      d.queryExecution.optimizedPlan.collect { case j: Join => j }
     val idx = tmp.resolve("ivfpqcos").toString
     val normed = df.withColumn("embn",
       graft.vector.Ivf.normalized($"embedding"))
@@ -800,7 +798,7 @@ class AnnRoutingSpec extends AnyFunSuite {
     // (review r17-2-5), so assert the splice is IN the plan
     val rp = Knn.knn(SparkT.spark.read.parquet(idx),
       "embedding", "vec_id", query, 10, Knn.Cosine)
-    assert(joins(rp).nonEmpty, rp.queryExecution.optimizedPlan.toString)
+    assert(screenLeaves(rp).nonEmpty, rp.queryExecution.optimizedPlan.toString)
     val wantCos = vectors
       .map { case (id, v, _) => (graft.vector.Ivf.scalarDist(
         Knn.Cosine, v, query), id) }
@@ -809,7 +807,7 @@ class AnnRoutingSpec extends AnyFunSuite {
     // an L2 sort key must NOT route through the cosine registration
     val l2q = Knn.knn(SparkT.spark.read.parquet(idx),
       "embedding", "vec_id", query, 10, Knn.L2)
-    assert(joins(l2q).isEmpty, l2q.queryExecution.optimizedPlan.toString)
+    assert(screenLeaves(l2q).isEmpty, l2q.queryExecution.optimizedPlan.toString)
     AnnRouting.unregister(SparkT.spark, idx)
   }
 
@@ -825,9 +823,10 @@ class AnnRoutingSpec extends AnyFunSuite {
     AnnRouting.registerGraphQuantized(SparkT.spark, baseQ, idxQ,
       vecCol = "embedding", idCol = "vec_id")
     def qLeaves(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
-      case g: GraphCandidates if g.quantized => g
+      case g: AnnCandidates if g.source.isInstanceOf[GraphWalk] &&
+        walkOf(g).quantized => g
     }
-    // family selection: the scan becomes a QUANTIZED GraphCandidates leaf
+    // family selection: the scan becomes a QUANTIZED graph-walk leaf
     val df = Knn.knn(SparkT.spark.read.parquet(baseQ),
       "embedding", "vec_id", query, 10)
     assert(qLeaves(df).nonEmpty, df.queryExecution.optimizedPlan.toString)
@@ -838,7 +837,7 @@ class AnnRoutingSpec extends AnyFunSuite {
     val filt = Knn.knn(
       SparkT.spark.read.parquet(baseQ).filter($"label" === 2),
       "embedding", "vec_id", query, 10)
-    assert(qLeaves(filt).exists(_.filterSql.isDefined),
+    assert(qLeaves(filt).exists(_.filter.isDefined),
       filt.queryExecution.optimizedPlan.toString)
     val wantFilt = vectors.filter(_._3 == 2)
       .map { case (id, v, _) => (l2(v, query), id) }.sorted.take(10).map(_._2)
@@ -872,14 +871,14 @@ class AnnRoutingSpec extends AnyFunSuite {
       SparkT.spark.read.parquet(baseG), "embedding", "vec_id", idxG,
       graft.vector.Hnsw.Params(m = 8, efC = 32, partitions = 4))
     def leafOf(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
-      case g: GraphCandidates => g
+      case g: AnnCandidates => g
     }
     // default registration: exact contract, adaptive off in the leaf
     AnnRouting.registerGraph(SparkT.spark, baseG, idxG,
       vecCol = "embedding", idCol = "vec_id")
     val exact = Knn.knn(SparkT.spark.read.parquet(baseG),
       "embedding", "vec_id", query, 10)
-    assert(leafOf(exact).exists(!_.adaptive))
+    assert(leafOf(exact).exists(!walkOf(_).adaptive))
     // opt-in: the knob lands in the leaf; at k = 10 the walk's k<=10
     // reference gating (knn.cpp:481-483) keeps the result exact, so the
     // plumbing is pinnable without loosening any contract
@@ -887,14 +886,14 @@ class AnnRoutingSpec extends AnyFunSuite {
       vecCol = "embedding", idCol = "vec_id", adaptiveTermination = true)
     val adapt = Knn.knn(SparkT.spark.read.parquet(baseG),
       "embedding", "vec_id", query, 10)
-    assert(leafOf(adapt).exists(_.adaptive),
+    assert(leafOf(adapt).exists(walkOf(_).adaptive),
       adapt.queryExecution.optimizedPlan.toString)
     assert(adapt.select("vec_id").as[Long].collect().toSeq === exactTop10)
     // the FILTERED routed leaf carries it too
     val filt = Knn.knn(
       SparkT.spark.read.parquet(baseG).filter($"label" === 2),
       "embedding", "vec_id", query, 10)
-    assert(leafOf(filt).exists(l => l.adaptive && l.filterSql.isDefined))
+    assert(leafOf(filt).exists(l => walkOf(l).adaptive && l.filter.isDefined))
     AnnRouting.unregister(SparkT.spark, baseG)
   }
 
@@ -911,7 +910,7 @@ class AnnRoutingSpec extends AnyFunSuite {
       SparkT.spark.read.parquet(baseG), "embedding", "vec_id", idxG,
       graft.vector.Hnsw.Params(m = 8, efC = 32, partitions = 4))
     def leafOf(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
-      case g: GraphCandidates => g
+      case g: AnnCandidates => g
     }
     // no layer sidecar yet: hierarchy registration fails loudly at
     // REGISTRATION, not at first query
@@ -931,7 +930,7 @@ class AnnRoutingSpec extends AnyFunSuite {
     // the results-only assertion)
     val hier = Knn.knn(SparkT.spark.read.parquet(baseG),
       "embedding", "vec_id", query, 10)
-    assert(leafOf(hier).exists(_.hier),
+    assert(leafOf(hier).exists(walkOf(_).hier),
       hier.queryExecution.optimizedPlan.toString)
     val d0 = graft.vector.Hnsw.descents.get()
     assert(hier.select("vec_id").as[Long].collect().toSeq === exactTop10)
@@ -942,7 +941,7 @@ class AnnRoutingSpec extends AnyFunSuite {
     val filt = Knn.knn(
       SparkT.spark.read.parquet(baseG).filter($"label" === 2),
       "embedding", "vec_id", query, 10)
-    assert(leafOf(filt).exists(l => l.hier && l.filterSql.isDefined))
+    assert(leafOf(filt).exists(l => walkOf(l).hier && l.filter.isDefined))
     val wantFilt = vectors.filter(_._3 == 2)
       .map { case (id, v, _) => (l2(v, query), id) }.sorted.take(10).map(_._2)
     assert(filt.select("vec_id").as[Long].collect().toSeq === wantFilt)
@@ -963,7 +962,7 @@ class AnnRoutingSpec extends AnyFunSuite {
       vecCol = "embedding", idCol = "vec_id", hierarchy = true)
     val qh = Knn.knn(SparkT.spark.read.parquet(baseG),
       "embedding", "vec_id", query, 10)
-    assert(leafOf(qh).exists(l => l.quantized && l.hier),
+    assert(leafOf(qh).exists(l => walkOf(l).quantized && walkOf(l).hier),
       qh.queryExecution.optimizedPlan.toString)
     val dq0 = graft.vector.Hnsw.descents.get()
     assert(qh.select("vec_id").as[Long].collect().toSeq === exactTop10)
@@ -1083,7 +1082,6 @@ class AnnRoutingSpec extends AnyFunSuite {
 
   test("cosine flat families route the 1-cosine_sim sort key; L2 keys refuse them (r18)") {
     import graft.vector.Quantize
-    import org.apache.spark.sql.catalyst.plans.logical.Join
     val df = vectors.toDF("vec_id", "embedding", "label")
     def cosDist(a: Array[Float], b: Array[Float]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
@@ -1095,9 +1093,6 @@ class AnnRoutingSpec extends AnyFunSuite {
     }
     val wantCos = vectors.map { case (id, v, _) => (cosDist(v, query), id) }
       .sorted.take(10).map(_._2)
-    def joins(d: DataFrame) = d.queryExecution.optimizedPlan.collect {
-      case j: Join => j
-    }
     // int8 cosine model: the cosine top-k routes through the screen splice
     val tmp = Files.createTempDirectory("graft-annroute-cos")
     val qt = tmp.resolve("qcos").toString
@@ -1108,13 +1103,13 @@ class AnnRoutingSpec extends AnyFunSuite {
       vecCol = "embedding", idCol = "vec_id", codeCol = "qvec", refine = 16)
     val routed = Knn.knn(SparkT.spark.read.parquet(qt),
       "embedding", "vec_id", query, 10, Knn.Cosine)
-    assert(joins(routed).nonEmpty,
+    assert(screenLeaves(routed).nonEmpty,
       routed.queryExecution.optimizedPlan.toString)
     assert(routed.select("vec_id").as[Long].collect().toSeq === wantCos)
     // an L2 sort key over the cosine registration must NOT route
     val l2q = Knn.knn(SparkT.spark.read.parquet(qt),
       "embedding", "vec_id", query, 10, Knn.L2)
-    assert(joins(l2q).isEmpty)
+    assert(screenLeaves(l2q).isEmpty)
     AnnRouting.unregister(SparkT.spark, qt)
     // binary residual cosine model: same dispatch contract
     val bt = tmp.resolve("bcos").toString
@@ -1126,7 +1121,7 @@ class AnnRoutingSpec extends AnyFunSuite {
       vecCol = "embedding", idCol = "vec_id", codeCol = "bvec", refine = 48)
     val routedB = Knn.knn(SparkT.spark.read.parquet(bt),
       "embedding", "vec_id", query, 10, Knn.Cosine)
-    assert(joins(routedB).nonEmpty)
+    assert(screenLeaves(routedB).nonEmpty)
     assert(routedB.select("vec_id").as[Long].collect().toSeq === wantCos)
     AnnRouting.unregister(SparkT.spark, bt)
     // the L2-model registration (the shared r10 fixture behavior) keeps
@@ -1139,13 +1134,12 @@ class AnnRoutingSpec extends AnyFunSuite {
       vecCol = "embedding", idCol = "vec_id", codeCol = "qvec")
     val cosOverL2 = Knn.knn(SparkT.spark.read.parquet(qtL2),
       "embedding", "vec_id", query, 10, Knn.Cosine)
-    assert(joins(cosOverL2).isEmpty)
+    assert(screenLeaves(cosOverL2).isEmpty)
     AnnRouting.unregister(SparkT.spark, qtL2)
   }
 
   test("IP routes: IVF (augmented k-means), routed graph, flat quant — 1-ip_score sort key; L2 keys refuse (r19)") {
     import graft.vector.{Hnsw, Quantize}
-    import org.apache.spark.sql.catalyst.plans.logical.Join
     val df = vectors.toDF("vec_id", "embedding", "label")
     def ipDist(a: Array[Float], b: Array[Float]): Double = {
       var dot = 0.0; var i = 0
@@ -1154,9 +1148,6 @@ class AnnRoutingSpec extends AnyFunSuite {
     }
     val wantIp = vectors.map { case (id, v, _) => (ipDist(v, query), id) }
       .sortBy(t => (t._1, t._2)).take(10).map(_._2)
-    def joins(d: DataFrame) = d.queryExecution.optimizedPlan.collect {
-      case j: Join => j
-    }
     val tmp = Files.createTempDirectory("graft-annroute-ip")
     // 1. plain IVF: model trained in the augmented space, route on the
     // 1-ip_score key, nprobe = nlist exact
@@ -1199,7 +1190,7 @@ class AnnRoutingSpec extends AnyFunSuite {
       vecCol = "embedding", idCol = "vec_id", codeCol = "qvec", refine = 16)
     val routedQ = Knn.knn(SparkT.spark.read.parquet(qt),
       "embedding", "vec_id", query, 10, Knn.IP)
-    assert(joins(routedQ).nonEmpty)
+    assert(screenLeaves(routedQ).nonEmpty)
     assert(routedQ.select("vec_id").as[Long].collect().toSeq === wantIp)
     AnnRouting.unregister(SparkT.spark, qt)
   }
@@ -1415,7 +1406,6 @@ class AnnRoutingSpec extends AnyFunSuite {
 
   test("a flat table appended inside compact's rename window keeps every row; routed reads follow the backup") {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.catalyst.plans.logical.Join
     val tmp = Files.createTempDirectory("graft-annroute-qwin")
     val base = tmp.resolve("base").toString
     val qt = tmp.resolve("qt").toString
@@ -1436,8 +1426,8 @@ class AnnRoutingSpec extends AnyFunSuite {
     try {
       val routed = Knn.knn(SparkT.spark.read.parquet(base), "embedding",
         "vec_id", query, 10)
-      assert(routed.queryExecution.optimizedPlan.collect { case j: Join => j }
-        .nonEmpty, routed.queryExecution.optimizedPlan.toString)
+      assert(screenLeaves(routed).nonEmpty,
+        routed.queryExecution.optimizedPlan.toString)
       assert(routed.select("vec_id").as[Long].collect().toSeq === exactTop10)
       val queries = df.filter($"vec_id" < 5)
         .select($"vec_id".as("qid"), $"embedding".as("qvec"))
@@ -1483,7 +1473,6 @@ class AnnRoutingSpec extends AnyFunSuite {
   test("an IVF-ADC table registered as its own base serves its live " +
       "generation through Graft.cachedRead and keeps routing after a " +
       "delete and a compact") {
-    import org.apache.spark.sql.catalyst.plans.logical.Join
     val tmp = Files.createTempDirectory("graft-annroute-ownbase")
     val idx = tmp.resolve("own").toString
     val rnd = new scala.util.Random(17)
@@ -1507,8 +1496,8 @@ class AnnRoutingSpec extends AnyFunSuite {
       val read = graft.engine.Graft.cachedRead(SparkT.spark, idx)
       assert(read.count() === 100L, "cachedRead served the superseded base")
       val top = Knn.knn(read, "embedding", "vec_id", q, 5)
-      assert(top.queryExecution.optimizedPlan.collect { case j: Join => j }
-        .nonEmpty, top.queryExecution.optimizedPlan.toString)
+      assert(screenLeaves(top).nonEmpty,
+        top.queryExecution.optimizedPlan.toString)
       assert(top.select("vec_id").as[Long].collect().toSeq === want)
     }
     register(m, pq)
@@ -1522,5 +1511,410 @@ class AnnRoutingSpec extends AnyFunSuite {
       register(m2, pq2)
       check()
     } finally AnnRouting.unregister(SparkT.spark, idx)
+  }
+
+  /** Input records the tasks of `thunk`'s jobs read. */
+  private def recordsRead[A](thunk: => A): (A, Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val sc = SparkT.spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          n.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    org.apache.spark.GraftTestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = thunk
+      org.apache.spark.GraftTestBus.drain(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a routed flat or IVF-ADC search is one SQL execution with one job") {
+    val tmp = Files.createTempDirectory("graft-annroute-screenwork")
+    val df = vectors.toDF("vec_id", "embedding", "label")
+    val qt = tmp.resolve("qt").toString
+    val qm = graft.vector.Quantize.train(df, "embedding")
+    Writer.write(graft.vector.Quantize.encodeTable(df, "embedding", "qvec",
+      qm), qt, sortBy = Seq("vec_id"))
+    AnnRouting.registerFlat(SparkT.spark, qt, qt, qm, vecCol = "embedding",
+      idCol = "vec_id", codeCol = "qvec")
+    val pq = tmp.resolve("pq").toString
+    val m = Ivf.train(df, "embedding", nlist = 4)
+    val pqm = Ivf.buildIndexPq(df, "embedding", "vec_id", m, pq, subM = 4,
+      codeK = 16)
+    AnnRouting.registerIvfPq(SparkT.spark, pq, pq, m, pqm,
+      vecCol = "embedding", idCol = "vec_id", nprobe = m.nlist, refine = 40)
+    val wantFilt = vectors.filter(_._3 == 2)
+      .map { case (id, v, _) => (l2(v, query), id) }.sorted.take(10).map(_._2)
+    try for ((table, refine) <- Seq((qt, 8), (pq, 40));
+             filtered <- Seq(false, true)) {
+      def search() = {
+        val in = SparkT.spark.read.parquet(table)
+        Knn.knn(if (filtered) in.filter($"label" === 2) else in,
+          "embedding", "vec_id", query, 10)
+      }
+      search().collect() // lists the table and plans its scan once
+      val routed = search()
+      assert(screenLeaves(routed).map(_.filter.isDefined) === Seq(filtered))
+      val (rows, jobs, execs) = executions(routed.collect())
+      val what = s"$table filtered=$filtered"
+      assert(rows.map(_.getLong(0)).toSeq ===
+        (if (filtered) wantFilt else exactTop10), what)
+      assert(execs === 1 && jobs === 1, s"$what: $execs SQL executions, " +
+        s"$jobs jobs")
+      // the leaf reports its work: every row passing the scan screened,
+      // the top k·refine of them returned, no walk
+      val leaf = routed.queryExecution.executedPlan.collect {
+        case e: GraphCandidatesExec => e
+      }
+      assert(leaf.size === 1, what)
+      val work = leaf.head.metrics.map { case (k, v) => k -> v.value }
+      val passing = if (filtered) vectors.count(_._3 == 2) else vectors.size
+      assert(work === Map("probed" -> 0L, "walkJobs" -> 0L,
+        "screened" -> passing.toLong,
+        "candidates" -> math.min(10L * refine, passing.toLong),
+        "filterIds" -> 0L, "fallback" -> 0L), what)
+    } finally {
+      AnnRouting.unregister(SparkT.spark, qt)
+      AnnRouting.unregister(SparkT.spark, pq)
+    }
+  }
+
+  test("the candidate leaf posts its walk, filter-id and candidate counts as SQL metrics") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerDriverAccumUpdates
+    val tmp = Files.createTempDirectory("graft-annroute-metrics")
+    val base = tmp.resolve("base").toString
+    val idx = tmp.resolve("idx").toString
+    Writer.write(vectors.toDF("vec_id", "embedding", "label"), base,
+      sortBy = Seq("vec_id"))
+    graft.vector.Hnsw.buildIndexClustered(SparkT.spark.read.parquet(base),
+      "embedding", "vec_id", idx,
+      graft.vector.Hnsw.Params(m = 8, efC = 32, partitions = 4))
+    AnnRouting.registerGraph(SparkT.spark, base, idx, vecCol = "embedding",
+      idCol = "vec_id")
+    val sc = SparkT.spark.sparkContext
+    val posted = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case u: SparkListenerDriverAccumUpdates =>
+          u.accumUpdates.foreach(a => posted.add(a._1))
+        case _ =>
+      }
+    }
+    try {
+      def search() = Knn.knn(
+        SparkT.spark.read.parquet(base).filter($"label" === 2),
+        "embedding", "vec_id", query, 10)
+      search().collect() // loads the resident graph
+      val routed = search()
+      val jobs0 = graft.vector.Hnsw.probeRounds.get()
+      org.apache.spark.GraftTestBus.drain(sc)
+      sc.addSparkListener(listener)
+      routed.collect()
+      org.apache.spark.GraftTestBus.drain(sc)
+      val leaf = routed.queryExecution.executedPlan.collect {
+        case e: GraphCandidatesExec => e
+      }
+      assert(leaf.size === 1)
+      val work = leaf.head.metrics.map { case (k, v) => k -> v.value }
+      assert(work("walkJobs") === graft.vector.Hnsw.probeRounds.get() - jobs0)
+      assert(work("walkJobs") >= 1L && work("walkJobs") <= 2L, work)
+      assert(work("probed") >= 1L && work("probed") <= 4L, work)
+      assert(work("filterIds") === vectors.count(_._3 == 2).toLong)
+      assert(work("candidates") === 10L)
+      assert(work("screened") === 0L && work("fallback") === 0L)
+      // posted to the search's SQL execution
+      assert(leaf.head.metrics.values.map(_.id).toSet
+        .subsetOf(posted.toArray.map(_.asInstanceOf[Long]).toSet))
+    } finally {
+      sc.removeSparkListener(listener)
+      AnnRouting.unregister(SparkT.spark, base)
+    }
+  }
+
+  test("the IVF-ADC screen reads only the files its probe pushdown keeps") {
+    val tmp = Files.createTempDirectory("graft-annroute-pqprune")
+    val df = vectors.toDF("vec_id", "embedding", "label")
+    val idx = tmp.resolve("pq").toString
+    val m = Ivf.train(df, "embedding", nlist = 4)
+    val pqm = Ivf.buildIndexPq(df, "embedding", "vec_id", m, idx, subM = 4,
+      codeK = 16, files = 4)
+    AnnRouting.registerIvfPq(SparkT.spark, idx, idx, m, pqm,
+      vecCol = "embedding", idCol = "vec_id", nprobe = 1, refine = 40)
+    try {
+      val probes = m.probeSet(query, 1)
+      // per data file: its rows, and whether its list range meets a probe
+      val perFile = SparkT.spark.read.parquet(idx)
+        .groupBy(input_file_name())
+        .agg(min("ivf_cluster"), max("ivf_cluster"), count(lit(1)))
+        .as[(String, Long, Long, Long)].collect()
+      val kept = perFile.filter { case (_, lo, hi, _) =>
+        probes.exists(p => lo <= p && p <= hi) }.map(_._4).sum
+      assert(kept < vectors.size, "fixture: every file holds a probed list")
+      def search() = Knn.knn(SparkT.spark.read.parquet(idx), "embedding",
+        "vec_id", query, 10)
+      search().collect()
+      val routed = search()
+      assert(screenLeaves(routed).nonEmpty)
+      val (rows, read) = recordsRead(routed.collect())
+      assert(read === kept, s"read $read rows, the probed files hold $kept")
+      val explicit = Ivf.searchPq(SparkT.spark, idx, m, pqm, "vec_id",
+        "embedding", query, 10, nprobe = 1, refine = 40)
+      assert(rows.map(r => (r.getLong(0), r.getDouble(1))).toSeq ===
+        explicit.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+    } finally AnnRouting.unregister(SparkT.spark, idx)
+  }
+
+  test("routed screen rows equal the explicit screens: ties, sort keys, consumed filters and non-root uses") {
+    import graft.vector.Quantize
+    val tmp = Files.createTempDirectory("graft-annroute-screenties")
+    // every vector four times: each code and float distance is a four-way
+    // tie, and the k·refine screen cut falls inside tie groups
+    val dup = vectors.flatMap { case (id, v, l) =>
+      (0 until 4).map(j => (id * 4 + j, v, l)) }
+    val df = dup.toDF("vec_id", "embedding", "label")
+    val qt = tmp.resolve("qt").toString
+    val qm = Quantize.train(df, "embedding")
+    Writer.write(Quantize.encodeTable(df, "embedding", "qvec", qm), qt,
+      sortBy = Seq("vec_id"))
+    AnnRouting.registerFlat(SparkT.spark, qt, qt, qm, vecCol = "embedding",
+      idCol = "vec_id", codeCol = "qvec", refine = 8)
+    val pq = tmp.resolve("pq").toString
+    val m = Ivf.train(df, "embedding", nlist = 4)
+    val pqm = Ivf.buildIndexPq(df, "embedding", "vec_id", m, pq, subM = 4,
+      codeK = 16)
+    AnnRouting.registerIvfPq(SparkT.spark, pq, pq, m, pqm,
+      vecCol = "embedding", idCol = "vec_id", nprobe = 3, refine = 8)
+    // the query's own label: its rows sit in the lists the query probes
+    def read(table: String, filtered: Boolean) = {
+      val in = SparkT.spark.read.parquet(table)
+      if (filtered) in.filter($"label" === 0) else in
+    }
+    def pairs(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    // the explicit APIs over the same rows: screen, join back, rescore
+    def explicit(table: String, filtered: Boolean) = pairs((table match {
+      case `qt` => Quantize.searchRescore(read(qt, filtered), "embedding",
+        "qvec", "vec_id", qm, query, 10, refine = 8)
+      case _ if !filtered => Ivf.searchPq(SparkT.spark, pq, m, pqm,
+        "vec_id", "embedding", query, 10, nprobe = 3, refine = 8)
+      case _ =>
+        val in = read(pq, filtered)
+        Knn.knn(in.join(Ivf.coarseIdsPq(in, m, pqm, "vec_id", query, 3, 80),
+          Seq("vec_id")), "embedding", "vec_id", query, 10)
+    }).collect())
+    val dist = Knn.distCol(Knn.L2, col("embedding"), typedLit(query))
+    try for (table <- Seq(qt, pq); filtered <- Seq(false, true)) {
+      val what = s"$table filtered=$filtered"
+      val want = explicit(table, filtered)
+      assert(want.size === 10 && want.map(_._2).distinct.size < 10,
+        s"$what: no ties")
+      val knn = Knn.knn(read(table, filtered), "embedding", "vec_id", query,
+        10)
+      val byDistId = read(table, filtered)
+        .select(col("vec_id"), dist.as("dist"))
+        .orderBy(col("dist"), col("vec_id")).limit(10)
+      val byDist = read(table, filtered)
+        .select(col("vec_id"), dist.as("dist")).orderBy(col("dist")).limit(10)
+      for (q <- Seq(knn, byDistId, byDist))
+        assert(screenLeaves(q).size === 1, q.queryExecution.optimizedPlan)
+      assert(pairs(knn.collect()) === want, what)
+      assert(pairs(byDistId.collect()) === want, what)
+      // ORDER BY dist alone leaves tied rows in either order
+      assert(pairs(byDist.collect()).map(_._2) === want.map(_._2), what)
+      // non-root uses run the leaf's RDD and return the same rows
+      assert(pairs(knn.rdd.collect()) === want, what)
+      assert(knn.groupBy().count().head().getLong(0) === 10L, what)
+      val joined = knn.join(dup.map(t => (t._1, t._3)).toDF("vec_id", "l"),
+        "vec_id")
+      assert(pairs(joined.select("vec_id", "dist").collect()).toSet ===
+        want.toSet, what)
+      val out = tmp.resolve(s"out_${table.hashCode}_$filtered").toString
+      knn.write.parquet(out)
+      assert(pairs(SparkT.spark.read.parquet(out).select("vec_id", "dist")
+        .collect()).toSet === want.toSet, what)
+    } finally {
+      AnnRouting.unregister(SparkT.spark, qt)
+      AnnRouting.unregister(SparkT.spark, pq)
+    }
+  }
+
+  test("a string filter holding quotes and backslashes routes and stays exact under both escapedStringLiterals settings") {
+    import graft.vector.Quantize
+    val tmp = Files.createTempDirectory("graft-annroute-escapes")
+    val tags = Map(0 -> "plain", 1 -> "back\\slash", 2 -> "it's \"q\" \\n",
+      3 -> "'\\'")
+    val df = vectors.map { case (id, v, l) => (id, v, tags(l)) }
+      .toDF("vec_id", "embedding", "tag")
+    val base = tmp.resolve("base").toString
+    Writer.write(df, base, sortBy = Seq("vec_id"))
+    // the graph route estimates the string filter from a secondary index
+    // (ndv 4: too coarse for the index route, within the id budget)
+    val idxG = tmp.resolve("idxg").toString
+    val idxS = tmp.resolve("idxs").toString
+    graft.vector.Hnsw.buildIndexClustered(SparkT.spark.read.parquet(base),
+      "embedding", "vec_id", idxG,
+      graft.vector.Hnsw.Params(m = 8, efC = 32, partitions = 4))
+    graft.index.SecondaryIndex.build(SparkT.spark.read.parquet(base), "tag",
+      "vec_id", idxS)
+    IndexRouting.register(SparkT.spark, base, idxS, "tag", "vec_id")
+    AnnRouting.registerGraph(SparkT.spark, base, idxG, vecCol = "embedding",
+      idCol = "vec_id")
+    val qt = tmp.resolve("qt").toString
+    val qm = Quantize.train(df, "embedding")
+    Writer.write(Quantize.encodeTable(df, "embedding", "qvec", qm), qt,
+      sortBy = Seq("vec_id"))
+    AnnRouting.registerFlat(SparkT.spark, qt, qt, qm, vecCol = "embedding",
+      idCol = "vec_id", codeCol = "qvec", refine = 40)
+    val want = vectors.filter(_._3 == 2)
+      .map { case (id, v, _) => (l2(v, query), id) }.sorted.take(10).map(_._2)
+    val key = "spark.sql.parser.escapedStringLiterals"
+    try for (legacy <- Seq("false", "true"); table <- Seq(base, qt)) {
+      SparkT.spark.conf.set(key, legacy)
+      val routed = Knn.knn(
+        SparkT.spark.read.parquet(table).filter($"tag" === tags(2)),
+        "embedding", "vec_id", query, 10)
+      val leaves = routed.queryExecution.optimizedPlan.collect {
+        case g: AnnCandidates => g
+      }
+      assert(leaves.exists(_.filter.isDefined),
+        s"$table $key=$legacy: ${routed.queryExecution.optimizedPlan}")
+      assert(routed.select("vec_id").as[Long].collect().toSeq === want,
+        s"$table $key=$legacy")
+    } finally {
+      SparkT.spark.conf.unset(key)
+      IndexRouting.unregister(SparkT.spark, base)
+      AnnRouting.unregister(SparkT.spark, base)
+      AnnRouting.unregister(SparkT.spark, qt)
+    }
+  }
+
+  test("a code screen over many partitions: past its result budget the tasks send ranks and one more job fetches the survivors' rows") {
+    import graft.vector.Quantize
+    val tmp = Files.createTempDirectory("graft-annroute-budget")
+    val df = vectors.toDF("vec_id", "embedding", "label")
+    val qt = tmp.resolve("qt").toString
+    val qm = Quantize.train(df, "embedding")
+    Writer.write(Quantize.encodeTable(df, "embedding", "qvec", qm), qt,
+      sortBy = Seq("vec_id"), files = 24)
+    AnnRouting.registerFlat(SparkT.spark, qt, qt, qm, vecCol = "embedding",
+      idCol = "vec_id", codeCol = "qvec", refine = 8)
+    val pq = tmp.resolve("pq").toString
+    val m = Ivf.train(df, "embedding", nlist = 4)
+    val pqm = Ivf.buildIndexPq(df, "embedding", "vec_id", m, pq, subM = 4,
+      codeK = 16, files = 24)
+    AnnRouting.registerIvfPq(SparkT.spark, pq, pq, m, pqm,
+      vecCol = "embedding", idCol = "vec_id", nprobe = 2, refine = 8)
+    def read(table: String, filtered: Boolean) = {
+      val in = SparkT.spark.read.parquet(table)
+      if (filtered) in.filter($"label" === 0) else in
+    }
+    def pairs(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    def explicit(table: String, filtered: Boolean) = pairs((table match {
+      case `qt` => Quantize.searchRescore(read(qt, filtered), "embedding",
+        "qvec", "vec_id", qm, query, 10, refine = 8)
+      case _ =>
+        val in = read(pq, filtered)
+        Knn.knn(in.join(Ivf.coarseIdsPq(in, m, pqm, "vec_id", query, 2, 80),
+          Seq("vec_id")), "embedding", "vec_id", query, 10)
+    }).collect())
+    // one scan partition per file
+    val openCost = SparkT.spark.conf.get("spark.sql.files.openCostInBytes")
+    SparkT.spark.conf.set("spark.sql.files.openCostInBytes", 128L << 20)
+    try for (table <- Seq(qt, pq); filtered <- Seq(false, true)) {
+      val what = s"$table filtered=$filtered"
+      // range-clustered by list id, the IVF-ADC table has a file per list
+      assert(Graft.cachedScan(SparkT.spark, table, Seq("vec_id"))
+        .getNumPartitions >= (if (table == qt) 12 else 4), what)
+      val routed = Knn.knn(read(table, filtered), "embedding", "vec_id",
+        query, 10)
+      assert(screenLeaves(routed).size === 1, what)
+      assert(pairs(routed.collect()) === explicit(table, filtered), what)
+      val exec = routed.queryExecution.executedPlan.collectFirst {
+        case e: GraphCandidatesExec => e
+      }.get
+      val idAt = exec.output.indexWhere(_.name == "vec_id")
+      def ids(rows: Array[org.apache.spark.sql.catalyst.InternalRow]) =
+        rows.map(_.getLong(idAt)).sorted.toSeq
+      val (whole, wholeWork) = graft.WorkCount(SparkT.spark)(exec.rows())
+      val (ranked, rankedWork) =
+        graft.WorkCount(SparkT.spark)(exec.rows(resultBudget = 0L))
+      assert(wholeWork.jobs === 1 && rankedWork.jobs === 2, what)
+      assert(whole.nonEmpty && ids(ranked) === ids(whole), what)
+      val Seq(vecAt, labelAt) =
+        Seq("embedding", "label").map(n => exec.output.indexWhere(_.name == n))
+      val rowsOf = (rows: Array[org.apache.spark.sql.catalyst.InternalRow]) =>
+        rows.map(r => (r.getLong(idAt), r.getArray(vecAt).toFloatArray().toSeq,
+          Option.when(!r.isNullAt(labelAt))(r.getInt(labelAt))))
+          .sortBy(_._1).toSeq
+      assert(rowsOf(ranked) === rowsOf(whole), what)
+    } finally {
+      SparkT.spark.conf.set("spark.sql.files.openCostInBytes", openCost)
+      AnnRouting.unregister(SparkT.spark, qt)
+      AnnRouting.unregister(SparkT.spark, pq)
+    }
+  }
+
+  test("the scan memo holds no per-query value: other queries, filter values and probe sets plan no new scan") {
+    import graft.vector.Quantize
+    val tmp = Files.createTempDirectory("graft-annroute-memo")
+    val df = vectors.toDF("vec_id", "embedding", "label")
+    val base = tmp.resolve("base").toString
+    val idx = tmp.resolve("idx").toString
+    Writer.write(df, base, sortBy = Seq("vec_id"))
+    graft.vector.Hnsw.buildIndexClustered(SparkT.spark.read.parquet(base),
+      "embedding", "vec_id", idx,
+      graft.vector.Hnsw.Params(m = 8, efC = 32, partitions = 4))
+    AnnRouting.registerGraph(SparkT.spark, base, idx, vecCol = "embedding",
+      idCol = "vec_id")
+    val qt = tmp.resolve("qt").toString
+    val qm = Quantize.train(df, "embedding")
+    Writer.write(Quantize.encodeTable(df, "embedding", "qvec", qm), qt,
+      sortBy = Seq("vec_id"))
+    AnnRouting.registerFlat(SparkT.spark, qt, qt, qm, vecCol = "embedding",
+      idCol = "vec_id", codeCol = "qvec")
+    val pq = tmp.resolve("pq").toString
+    val m = Ivf.train(df, "embedding", nlist = 4)
+    val pqm = Ivf.buildIndexPq(df, "embedding", "vec_id", m, pq, subM = 4,
+      codeK = 16, files = 4)
+    AnnRouting.registerIvfPq(SparkT.spark, pq, pq, m, pqm,
+      vecCol = "embedding", idCol = "vec_id", nprobe = 2, refine = 40)
+    val queries = Seq(0, 100, 200).map(i => vectors(i)._2)
+    assert(queries.map(m.probeSet(_, 2)).distinct.size > 1,
+      "fixture: every query probes the same lists")
+    /** Runs one search; the (qualified) path its leaf scans. */
+    def search(table: String, q: Array[Float], label: Int): String = {
+      val routed = Knn.knn(SparkT.spark.read.parquet(table)
+        .filter($"label" === label), "embedding", "vec_id", q, 10)
+      val leaves = routed.queryExecution.optimizedPlan.collect {
+        case g: AnnCandidates => g }
+      assert(leaves.size === 1 && leaves.head.filter.isDefined, table)
+      val got = routed.select("vec_id").as[Long].collect()
+      // two of four lists may hold no row of the label
+      assert((table == pq || got.nonEmpty) &&
+        got.forall(id => vectors.find(_._1 == id).get._3 == label), table)
+      leaves.head.source match {
+        case w: GraphWalk => w.basePath
+        case c: CodeScreen => c.tablePath
+      }
+    }
+    try for (table <- Seq(base, qt, pq)) {
+      val scanned = search(table, queries.head, 0)
+      val planned = Graft.cachedScanCount(SparkT.spark, scanned)
+      for (q <- queries; label <- 0 until 4) search(table, q, label)
+      assert(Graft.cachedScanCount(SparkT.spark, scanned) === planned, table)
+      // the pruned IVF-ADC screen is planned per search and never kept
+      if (table == pq) assert(planned === 0)
+      else assert(planned === 1, table)
+    } finally {
+      AnnRouting.unregister(SparkT.spark, base)
+      AnnRouting.unregister(SparkT.spark, qt)
+      AnnRouting.unregister(SparkT.spark, pq)
+    }
   }
 }

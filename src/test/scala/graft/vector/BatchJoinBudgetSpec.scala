@@ -14,8 +14,8 @@ import java.nio.file.Files
   * list-shuffled co-partitioned zip (IVF-ADC), no broadcast hint
   * (exact/IVF legs) — and the driver NEVER materializes the whole batch
   * or any slice of it. These specs pin (a) the scale arm actually engages
-  * ([[Knn.overBudgetJoins]], the [[graft.plans.GraphCandidates.fallbackCount]]
-  * instrumentation pattern), (b) for the screened/ADC legs the
+  * ([[Knn.overBudgetJoins]], the counterpart of the `fallback` SQLMetric
+  * of [[graft.plans.GraphCandidatesExec]]), (b) for the screened/ADC legs the
   * NEVER-COLLECTS distributed screen ran ([[Knn.distributedScreens]] —
   * the r16 arm looped driver-collected slices; that loop is gone), and
   * (c) its rows are IDENTICAL to the in-budget arm's at the exact
