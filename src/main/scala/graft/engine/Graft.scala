@@ -162,13 +162,20 @@ object Graft {
     * and staleness are those of [[cachedRead]]: the same signature check
     * and [[invalidate]] drop the scan with its DataFrame. */
   def cachedScan(spark: SparkSession, path: String,
-                 columns: Seq[String]): RDD[InternalRow] = {
+                 columns: Seq[String]): RDD[InternalRow] =
+    cachedReadAndScan(spark, path, columns)._2
+
+  /** [[cachedRead]] and [[cachedScan]] from one look at the live dir, so
+    * the scan reads the files the DataFrame lists. */
+  def cachedReadAndScan(spark: SparkSession, path: String,
+                        columns: Seq[String]): (DataFrame, RDD[InternalRow]) = {
     val e = entry(spark, path, "parquet")
-    e.scans.synchronized(Option(e.scans.get(columns))).getOrElse {
+    val scan = e.scans.synchronized(Option(e.scans.get(columns))).getOrElse {
       val rdd = e.df.select(columns.map(col): _*).queryExecution.toRdd
       e.scans.synchronized(e.scans.put(columns, rdd))
       rdd
     }
+    (e.df, scan)
   }
 
   /** [[cachedScan]] of the rows passing `filter`, pushed into the read so
@@ -176,12 +183,16 @@ object Graft {
     * is rebound by name to the cached relation); being per query, the
     * scan is planned afresh on every call and never kept. */
   def prunedScan(spark: SparkSession, path: String, columns: Seq[String],
+                 filter: Expression): RDD[InternalRow] =
+    prunedScan(cachedRead(spark, path), columns, filter)
+
+  /** [[prunedScan]] over a DataFrame [[cachedRead]] returned earlier. */
+  def prunedScan(df: DataFrame, columns: Seq[String],
                  filter: Expression): RDD[InternalRow] = {
-    val df = cachedRead(spark, path)
     val byName = df.queryExecution.analyzed.output.map(a => a.name -> a).toMap
     val bound = filter.transform {
       case a: AttributeReference => byName.getOrElse(a.name,
-        throw new IllegalArgumentException(s"no column ${a.name} in $path"))
+        throw new IllegalArgumentException(s"no column ${a.name}"))
     }
     df.filter(Bridge.column(bound)).select(columns.map(col): _*)
       .queryExecution.toRdd

@@ -40,9 +40,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    the stored per-chunk `cnt`: an index-only scan of a few rows.
   *
   * 100 TB notes: the index build is one shuffle of (value, chunk, key)
-  * triples; the semi-join is broadcast when the postings are selective (the
-  * common case for point lookups — Catalyst/AQE pick it), else a key
-  * shuffle. High-ndv columns give many short posting rows; low-ndv columns
+  * triples. A [[semiJoin]] of a fact scan with a lookup's keys is planned
+  * as one [[graft.plans.PostingsLookupExec]]: one job collects the keys
+  * to the driver within a key budget (a quarter of
+  * `spark.driver.maxResultSize`, at most 64 MB of 8-byte keys, each task
+  * sending at most its share) and the query's own job keeps the fact rows
+  * whose key is among them; past the budget the fact rows co-group with
+  * the keys by key (one shuffle of both). Postings past a few MB are read
+  * with the lookup's value conditions pushed into the Parquet scan. High-ndv columns give many short posting rows; low-ndv columns
   * give many CHUNKS of the same value — either way rows stay bounded and
   * the index table is tiny next to the fact table.
   */
@@ -327,7 +332,14 @@ object SecondaryIndex {
       .agg(coalesce(sum(col("cnt")), lit(0L))).head.getLong(0)
 
   /** Index-accelerated filter: semi-join the fact table against the
-    * postings (the host-side rowid-stream intersection, SURVEY §3.2). */
+    * postings (the host-side rowid-stream intersection, SURVEY §3.2).
+    * Over a fact scan (Project/Filter nodes over one parquet dir) and the
+    * keys of [[lookupKeys]], [[lookupRangeKeys]] or [[lookupNotNullKeys]],
+    * it plans as a [[graft.plans.PostingsLookupExec]]: the keys are
+    * collected in one job — at most a quarter of
+    * `spark.driver.maxResultSize` (≤ 64 MB) of them, else the fact rows
+    * co-group with them by key — and the fact rows are kept in the
+    * query's own job, with no exchange. Other key frames join as usual. */
   def semiJoin(fact: DataFrame, factKey: String,
                keys: DataFrame): DataFrame =
     fact.join(keys.withColumnRenamed("key", factKey), Seq(factKey), "left_semi")

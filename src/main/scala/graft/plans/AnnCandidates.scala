@@ -5,15 +5,15 @@ import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, Expression, IntegerLiteral, Literal, NamedExpression, Predicate, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, Expression, GenericInternalRow, IntegerLiteral, JoinedRow, Literal, NamedExpression, Predicate, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, Limit, LogicalPlan, Project, ReturnAnswer, Sort, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LeafNode, Limit, LogicalPlan, Project, ReturnAnswer, Sort, Statistics}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.{FilterExec, InputAdapter, LeafExecNode, ProjectExec, SQLExecution, SparkPlan, SparkStrategy, TakeOrderedAndProjectExec, UnaryExecNode, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, ShortType}
 
 /** Where an [[AnnCandidates]] leaf's rows come from. */
 sealed trait CandidateSource
@@ -303,12 +303,7 @@ final case class GraphCandidatesExec(node: AnnCandidates)
       cols.map(schema(_).dataType)
     }
     val idAt = cols.indexOf(node.idName)
-    val readId: InternalRow => Long = types(idAt) match {
-      case LongType => _.getLong(idAt)
-      case IntegerType => _.getInt(idAt).toLong
-      case ShortType => _.getShort(idAt).toLong
-      case _ => _.getByte(idAt).toLong
-    }
+    val readId = GraphCandidatesExec.longAt(idAt, types(idAt))
     val scorable = (r: InternalRow) => {
       var ok = !r.isNullAt(idAt)
       var i = 0
@@ -399,12 +394,26 @@ object GraphCandidatesExec {
     if (max <= 0) cap else math.min(cap, max / 4)
   }
 
-  /** A bound filter as one task's row test. */
-  def passing(cond: Option[Expression]): InternalRow => Boolean =
+  /** The integral column `at` of type `dt`, widened to long. */
+  def longAt(at: Int, dt: DataType): InternalRow => Long = dt match {
+    case LongType => _.getLong(at)
+    case IntegerType => _.getInt(at).toLong
+    case ShortType => _.getShort(at).toLong
+    case _ => _.getByte(at).toLong
+  }
+
+  /** A bound filter as one task's row test; `params` are the values of
+    * the columns it binds past the row's own. */
+  def passing(cond: Option[Expression],
+              params: Seq[Any] = Nil): InternalRow => Boolean =
     cond.fold((_: InternalRow) => true) { c =>
       val p = Predicate.create(c)
       p.initialize(TaskContext.getPartitionId())
-      p.eval
+      if (params.isEmpty) p.eval
+      else {
+        val row = new JoinedRow(null, new GenericInternalRow(params.toArray))
+        r => p.eval(row.withLeft(r))
+      }
     }
 }
 
@@ -470,14 +479,18 @@ final case class GraphTopKExec(limit: Int, sortOrder: Seq[SortOrder],
     copy(child = c)
 }
 
-/** Plans [[AnnCandidates]] → [[GraphCandidatesExec]], and the query-root
+/** Plans [[AnnCandidates]] → [[GraphCandidatesExec]], the query-root
   * `LIMIT k` over `[Project] Sort` over Project/Filter nodes over one →
   * [[GraphTopKExec]] (the shapes, and the fallback threshold, of the
-  * built-in planner's `TakeOrderedAndProjectExec`); injected by
-  * [[GraftExtensions]]. */
+  * built-in planner's `TakeOrderedAndProjectExec`), and a LEFT SEMI join
+  * of a fact scan with the `rowids` a postings scan explodes →
+  * [[PostingsLookupExec]] (the routed filter of [[IndexRoutingRule]] and
+  * [[graft.index.SecondaryIndex.semiJoin]], recognised by shape:
+  * [[PostingsLookupExec.plan]]); injected by [[GraftExtensions]]. */
 class AnnCandidatesStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case g: AnnCandidates => GraphCandidatesExec(g) :: Nil
+    case j: Join => PostingsLookupExec.plan(j).toList
     case ReturnAnswer(Limit(IntegerLiteral(n), Sort(order, true, c, _)))
         if topK(n, c) => GraphTopKExec(n, order, c.output, planLater(c)) :: Nil
     case ReturnAnswer(Limit(IntegerLiteral(n),

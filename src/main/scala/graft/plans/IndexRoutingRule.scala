@@ -71,12 +71,21 @@ import Routing.qualify
   * keys across element values, which the semi-join tolerates but counts
   * and aggregates must not see.
   *
-  * 100 TB note: the routed semi-join broadcasts the exploded key set when
-  * the predicate is selective (AQE picks it — the gate guarantees the
-  * selective case), so the fact side is a local hash probe with NO shuffle
-  * of fact rows; the index scan itself prunes to the few files whose value
-  * range matches (the table is value-clustered). The aggregate route scans
-  * only those same index files and ships one row per group.
+  * 100 TB note: a single-index route is planned as one
+  * [[PostingsLookupExec]]: one job over the postings collects the
+  * matching keys to the driver, and the query's own job keeps the fact
+  * rows whose key is among them — no exchange, no broadcast, no shuffle
+  * of fact rows. The keys collected are bounded by a budget (a quarter of
+  * `spark.driver.maxResultSize`, at most 64 MB of 8-byte keys, split
+  * evenly over the keys job's tasks; the gate keeps a routed filter
+  * selective); past it the leaf co-groups the fact rows with the exploded
+  * keys by key instead. Postings past a few MB push the value conditions
+  * into their scan, which prunes the value-clustered index files, row
+  * groups and pages; smaller ones are read whole through their memoized
+  * scan. The fact scan reads every file: skipping fact files by key range
+  * is left to a per-dir footer catalog. Intersections, OR unions and
+  * sorted retrieval keep their join plans. The aggregate route scans only
+  * the matching index files and ships one row per group.
   */
 object IndexRouting {
 

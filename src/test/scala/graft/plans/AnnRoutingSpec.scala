@@ -557,27 +557,6 @@ class AnnRoutingSpec extends AnyFunSuite {
     AnnRouting.unregister(SparkT.spark, baseG)
   }
 
-  /** (result, jobs, SQL executions) of `thunk`. */
-  private def executions[A](thunk: => A): (A, Int, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    val sc = SparkT.spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case _: SparkListenerSQLExecutionStart => n.incrementAndGet()
-        case _ =>
-      }
-    }
-    org.apache.spark.GraftTestBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val (out, work) = graft.WorkCount(SparkT.spark)(thunk)
-      org.apache.spark.GraftTestBus.drain(sc)
-      (out, work.jobs, n.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("work per routed search: one SQL execution, ≤ 2 walk jobs, one fetch job for codes, one id job per consumed filter") {
     SparkT.spark.conf.set("spark.graft.graph.hierMinRows", "0")
     val tmp = Files.createTempDirectory("graft-annroute-work")
@@ -612,13 +591,13 @@ class AnnRoutingSpec extends AnyFunSuite {
         assert(df.queryExecution.optimizedPlan.collect {
           case g: AnnCandidates => g.filter.isDefined
         } === Seq(filtered))
-        val (rows, jobs, execs) = executions(df.collect())
+        val (rows, work) = graft.WorkCount(SparkT.spark)(df.collect())
         val what = s"codes=$codes hier=$hier filtered=$filtered"
         assert(rows.map(_.getLong(0)).toSeq ===
           (if (filtered) wantFilt else exactTop10), what)
-        assert(execs === 1, s"$what: $execs SQL executions")
+        assert(work.executions === 1, s"$what: $work")
         val bound = 2 + (if (codes) 1 else 0) + (if (filtered) 1 else 0)
-        assert(jobs >= 1 && jobs <= bound, s"$what: $jobs jobs > $bound")
+        assert(work.jobs >= 1 && work.jobs <= bound, s"$what: $work, > $bound jobs")
       }
       AnnRouting.unregister(SparkT.spark, base)
     } finally SparkT.spark.conf.unset("spark.graft.graph.hierMinRows")
@@ -1559,12 +1538,11 @@ class AnnRoutingSpec extends AnyFunSuite {
       search().collect() // lists the table and plans its scan once
       val routed = search()
       assert(screenLeaves(routed).map(_.filter.isDefined) === Seq(filtered))
-      val (rows, jobs, execs) = executions(routed.collect())
+      val (rows, run) = graft.WorkCount(SparkT.spark)(routed.collect())
       val what = s"$table filtered=$filtered"
       assert(rows.map(_.getLong(0)).toSeq ===
         (if (filtered) wantFilt else exactTop10), what)
-      assert(execs === 1 && jobs === 1, s"$what: $execs SQL executions, " +
-        s"$jobs jobs")
+      assert(run.executions === 1 && run.jobs === 1, s"$what: $run")
       // the leaf reports its work: every row passing the scan screened,
       // the top k·refine of them returned, no walk
       val leaf = routed.queryExecution.executedPlan.collect {

@@ -169,16 +169,16 @@ class IndexRoutingSpec extends AnyFunSuite {
     assert(cnt.as[Long].head() === 2L)
   }
 
-  test("routed semi-join broadcasts the key set: no shuffle of fact rows") {
-    // the 100 TB shape: a selective route ships the exploded keys to the
-    // executors and probes the fact side locally — the fact table is
-    // neither shuffled nor sorted
+  test("routed semi-join plans the postings lookup: no shuffle of fact rows") {
+    // the keys are collected in one job over the postings and the fact
+    // rows are kept where they are read — the fact table is neither
+    // shuffled nor sorted, and no key set is broadcast
     val df = base.filter($"v" === 10L).select($"id")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
-      plan)
-    assert(!plan.contains("SortMergeJoin"), plan)
+    assert(plan.contains("PostingsLookup"), plan)
+    assert(!plan.contains("Exchange") && !plan.contains("SortMergeJoin") &&
+      !plan.contains("BroadcastHashJoin"), plan)
   }
 
   test("threshold config moves the gate") {
@@ -1472,4 +1472,35 @@ class IndexRoutingSpec extends AnyFunSuite {
     |long or-count(*) none base
     |long or-count(*) servable piv+piw
     |long or-count(*) residual base+piv+piw""".stripMargin.trim
+
+  test("a range spanning two histogram boundaries routes, one spanning three declines") {
+    // histFrac pads one bucket: a range holding b of the 33 boundaries
+    // estimates (b + 1) / 32 — 3/32 = 0.094 routes under the 0.1 gate,
+    // 4/32 = 0.125 declines. A width-1,200 range over 15,000 distinct
+    // values (a bucket is ~470 wide) holds two or three of them depending
+    // on where it falls, so the same width routes in one place only.
+    val tmp = Files.createTempDirectory("graft-idxroute-hist")
+    val hb = tmp.resolve("hb").toString
+    val hi = tmp.resolve("hi").toString
+    val n = 15000L
+    Writer.write((0L until n).map(i => (i, i * 7919 % n)).toDF("id", "v"), hb,
+      sortBy = Seq("id"))
+    SecondaryIndex.build(SparkT.spark.read.parquet(hb), "v", "id", hi)
+    IndexRouting.register(SparkT.spark, hb, hi, "v", "id")
+    try {
+      val hist = IndexRouting.lookup(Routing.qualify(SparkT.spark, hb)).head
+        .hist.map(_.asInstanceOf[Long])
+      assert(hist.length === IndexRouting.HistBuckets + 1)
+      def inside(lo: Long) = hist.count(b => b >= lo && b <= lo + 1199L)
+      val los = (0L to n - 1200L by 7L)
+      val two = los.find(inside(_) == 2).get
+      val three = los.find(inside(_) == 3).get
+      for ((lo, routes) <- Seq(two -> 1, three -> 0)) {
+        val df = SparkT.spark.read.parquet(hb)
+          .filter($"v".between(lo, lo + 1199L)).select($"id")
+        assert(semiJoins(df) === routes, s"[$lo, ${lo + 1199}]")
+        assert(df.count() === 1200L)
+      }
+    } finally IndexRouting.unregister(SparkT.spark, hb)
+  }
 }
