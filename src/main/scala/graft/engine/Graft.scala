@@ -3,9 +3,11 @@ package graft.engine
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.DataType
+import org.apache.spark.unsafe.Platform
 
 /** Session factory + table catalog for the engine.
   *
@@ -91,24 +93,51 @@ object Graft {
   // call, a miss reads fresh. Generation-managed dirs are additionally
   // safe by construction: a commit changes the RESOLVED dir path itself.
   // Each entry also holds the executed scans planned over its DataFrame
-  // ([[cachedScan]]), so they share its signature check and its eviction.
-  private final class DirEntry(val sig: String, val df: DataFrame) {
+  // ([[cachedScan]]) and, for small ones, their rows copied to the driver
+  // ([[Pinned.held]]), so they share its signature check and its
+  // eviction: a scan re-reads the files on every run, held rows are read
+  // once and answer later queries with no job.
+  private final class DirEntry(val key: (SparkSession, String, String),
+                               val sig: String, val df: DataFrame) {
     val scans = lru[Seq[String], RDD[InternalRow]](64)
+    /** By column set: the scan's rows held on the driver, or the budget
+      * they did not fit; guarded by [[heldOrder]]'s monitor. */
+    val held = new java.util.HashMap[Seq[String], Either[Long, HeldRows]]()
   }
 
-  /** A map evicting its least recently used entry past `cap`; callers
-    * hold its monitor (a read reorders it). */
-  private def lru[K, V](cap: Int): java.util.LinkedHashMap[K, V] =
+  /** A map evicting its least recently used entry past `cap`, passing it
+    * to `evicted`; callers hold its monitor (a read reorders it). */
+  private def lru[K, V](cap: Int, evicted: V => Unit = (_: V) => ())
+      : java.util.LinkedHashMap[K, V] =
     new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-        size() > cap
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = {
+        val over = size() > cap
+        if (over) evicted(e.getValue)
+        over
+      }
     }
+
+  // Every entry's held rows with their bytes, least recently used first:
+  // their total stays within the budget the last load was given, the
+  // coldest going first. Its monitor guards every entry's `held` too.
+  private val heldOrder =
+    new java.util.LinkedHashMap[(DirEntry, Seq[String]), Long](16, 0.75f, true)
+  private var heldBytes = 0L
+
+  /** Forget `e`'s held rows: `e` left the cache. */
+  private def release(e: DirEntry): Unit = heldOrder.synchronized {
+    e.held.forEach { (cols, h) =>
+      h.foreach { r => heldOrder.remove((e, cols)); heldBytes -= r.bytes }
+    }
+    e.held.clear()
+  }
 
   // Least-recently-used past the cap (r22, VERDICT r21 #6: a long-lived
   // session touching many store generations would otherwise accumulate
   // entries without limit): an eviction drops only the coldest dir's
-  // plans and scans, never every hot one at once.
-  private val dirCache = lru[(SparkSession, String, String), DirEntry](512)
+  // plans, scans and held rows, never every hot one at once.
+  private val dirCache =
+    lru[(SparkSession, String, String), DirEntry](512, release)
 
   private def dirSignature(spark: SparkSession, path: String): String =
     try {
@@ -133,14 +162,14 @@ object Graft {
                     format: String): DirEntry = {
     val live = graft.index.Commit.resolve(spark, path)
     val sig = dirSignature(spark, live)
-    def read() = new DirEntry(sig, spark.read.format(format).load(live))
-    if (sig.isEmpty) return read()
     val key = (spark, live, format)
+    def read() = new DirEntry(key, sig, spark.read.format(format).load(live))
+    if (sig.isEmpty) return read()
     dirCache.synchronized(Option(dirCache.get(key))) match {
       case Some(e) if e.sig == sig => e
       case _ =>
         val e = read()
-        dirCache.synchronized(dirCache.put(key, e))
+        Option(dirCache.synchronized(dirCache.put(key, e))).foreach(release)
         e
     }
   }
@@ -163,19 +192,129 @@ object Graft {
     * and [[invalidate]] drop the scan with its DataFrame. */
   def cachedScan(spark: SparkSession, path: String,
                  columns: Seq[String]): RDD[InternalRow] =
-    cachedReadAndScan(spark, path, columns)._2
+    pinned(spark, path, columns).scan
 
   /** [[cachedRead]] and [[cachedScan]] from one look at the live dir, so
     * the scan reads the files the DataFrame lists. */
-  def cachedReadAndScan(spark: SparkSession, path: String,
-                        columns: Seq[String]): (DataFrame, RDD[InternalRow]) = {
+  def pinned(spark: SparkSession, path: String, columns: Seq[String]): Pinned = {
     val e = entry(spark, path, "parquet")
     val scan = e.scans.synchronized(Option(e.scans.get(columns))).getOrElse {
       val rdd = e.df.select(columns.map(col): _*).queryExecution.toRdd
       e.scans.synchronized(e.scans.put(columns, rdd))
       rdd
     }
-    (e.df, scan)
+    new Pinned(e.df, scan, columns, e)
+  }
+
+  /** One look at a live dir ([[pinned]]): its DataFrame `df`, the scan of
+    * `columns` over it, and the rows of that scan held on the driver. */
+  final class Pinned private[Graft] (val df: DataFrame,
+                                     val scan: RDD[InternalRow],
+                                     columns: Seq[String],
+                                     e: DirEntry) {
+
+    /** The rows of [[scan]] held on the driver: read by one job (two when
+      * a task's rows pass its share of `budget`) the first time, then
+      * kept with the dir's cache entry until the entry goes or the
+      * least recently used held rows make room within `budget` for
+      * newer ones. None while the entry is no longer the dir's live one
+      * (its files were written since) and when the rows take more than
+      * `budget` bytes — neither is retried until the entry changes or
+      * the budget grows. */
+    def held(budget: Long): Option[HeldRows] = {
+      def live = dirCache.synchronized(dirCache.get(e.key) eq e)
+      val had =
+        if (!live) Some(Left(Long.MaxValue))
+        else heldOrder.synchronized {
+          val h = Option(e.held.get(columns))
+          if (h.exists(_.isRight)) heldOrder.get((e, columns)) // a use
+          h
+        }
+      had match {
+        case Some(Right(r)) => Some(r)
+        case Some(Left(over)) if over >= budget => None
+        case _ =>
+          val types = df.select(columns.map(col): _*).schema.map(_.dataType)
+          val got = copyRows(scan, types, budget)
+          dirCache.synchronized(if (dirCache.get(e.key) eq e)
+            heldOrder.synchronized(got match {
+              case Some(r) => keep(e, columns, r, budget)
+              case None => e.held.put(columns, Left(budget))
+            }))
+          got
+      }
+    }
+  }
+
+  /** Rows of a scan held on the driver: each task's rows as one buffer
+    * of (length, `UnsafeRow` bytes) records. */
+  final class HeldRows private[Graft] (numFields: Int, parts: Seq[Array[Byte]]) {
+    val bytes: Long = parts.iterator.map(_.length.toLong).sum
+
+    /** The rows, each read into one row object that the next reuses. */
+    def iterator: Iterator[InternalRow] = {
+      val row = new UnsafeRow(numFields)
+      parts.iterator.flatMap { b =>
+        val in = java.nio.ByteBuffer.wrap(b)
+        Iterator.continually(in).takeWhile(_.hasRemaining).map { in =>
+          val n = in.getInt
+          row.pointTo(b, Platform.BYTE_ARRAY_OFFSET + in.position(), n)
+          in.position(in.position() + n)
+          row
+        }
+      }
+    }
+  }
+
+  /** Holds `r` as `e`'s rows of `cols`, evicting the least recently used
+    * other held rows while the total passes `budget`; under
+    * [[heldOrder]]'s monitor. */
+  private def keep(e: DirEntry, cols: Seq[String], r: HeldRows,
+                   budget: Long): Unit = {
+    Option(e.held.put(cols, Right(r))).flatMap(_.toOption)
+      .foreach(old => heldBytes -= old.bytes)
+    heldOrder.put((e, cols), r.bytes)
+    heldBytes += r.bytes
+    val it = heldOrder.entrySet.iterator
+    while (heldBytes > budget && it.hasNext) {
+      val o = it.next()
+      if (o.getKey != ((e, cols))) {
+        o.getKey._1.held.remove(o.getKey._2)
+        heldBytes -= o.getValue
+        it.remove()
+      }
+    }
+  }
+
+  /** The rows of `scan` (columns of `types`) copied to the driver, or None
+    * past `budget` bytes. Each task sends its rows while they fit its
+    * share of the budget, else only their size; when the sizes fit the
+    * budget, one more job reads the partitions that sent none. The
+    * results of either job stay within the budget. */
+  private def copyRows(scan: RDD[InternalRow], types: Seq[DataType],
+                       budget: Long): Option[HeldRows] = {
+    val sc = scan.sparkContext
+    def copy(limit: Long)(it: Iterator[InternalRow]): Either[Long, Array[Byte]] = {
+      lazy val proj = UnsafeProjection.create(types.toArray)
+      val buf = new java.io.ByteArrayOutputStream
+      val out = new java.io.DataOutputStream(buf)
+      val scratch = new Array[Byte](1 << 12)
+      var size = 0L
+      it.foreach { r =>
+        val u = r match { case u: UnsafeRow => u; case o => proj(o) }
+        size += 4 + u.getSizeInBytes
+        if (size <= limit) { out.writeInt(u.getSizeInBytes); u.writeToStream(out, scratch) }
+      }
+      if (size <= limit) Right(buf.toByteArray) else Left(size)
+    }
+    val first = sc.runJob(scan, copy(budget / math.max(1, scan.getNumPartitions)) _)
+    val over = first.indices.filter(first(_).isLeft)
+    if (first.map(_.fold(identity, _.length.toLong)).sum > budget) None
+    else {
+      val rest = if (over.isEmpty) Array.empty[Either[Long, Array[Byte]]]
+        else sc.runJob(scan, copy(budget) _, over)
+      Some(new HeldRows(types.size, (first ++ rest).toSeq.flatMap(_.toOption)))
+    }
   }
 
   /** [[cachedScan]] of the rows passing `filter`, pushed into the read so
@@ -218,5 +357,9 @@ object Graft {
     // prefix match: one invalidate at an index's base path also drops its
     // generation subdirs and sidecar dirs (`<path>/gen-*`, `<path>_route`,
     // `<path>_layers`, …) — over-invalidation only ever costs a re-listing
-    dirCache.synchronized(dirCache.keySet.removeIf(_._2.startsWith(path)))
+    dirCache.synchronized(dirCache.entrySet.removeIf { e =>
+      val drop = e.getKey._2.startsWith(path)
+      if (drop) release(e.getValue)
+      drop
+    })
 }

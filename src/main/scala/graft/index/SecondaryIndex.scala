@@ -1,8 +1,9 @@
 package graft.index
 
 import graft.engine.Graft.cachedRead
+import graft.plans.PostingsLookupExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Secondary-index analog (SURVEY §2.4, I1-I4/I6/I9 + F5-via-index): a
   * value-sorted index table with CHUNKED rowid postings per indexed column
@@ -29,25 +30,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * What replaces what:
   *  - PGM learned index over sorted distinct values (pgm.h:43-155) → the
-  *    index table is WRITTEN range-clustered by (value, chunk), so a
-  *    point/range lookup prunes to a few files + row groups via Parquet
-  *    stats — the same O(log) skip the learned index buys, supplied by the
-  *    storage layout.
+  *    index table is WRITTEN range-clustered by (value, chunk). Postings
+  *    past [[PostingsLookupExec.PushedBytes]] (4 MB) take the lookup's
+  *    value conditions into the Parquet scan, which skips files and row
+  *    groups by their stats — the O(log) skip the learned index buys,
+  *    supplied by the storage layout. Smaller postings are read whole:
+  *    their rows are held on the driver after the first read (the
+  *    reference's block cache of decoded postings), or scanned whole
+  *    when they do not fit the result budget.
   *  - rowid posting blocks with per-block min/max (blockreader.h:82-89) →
   *    the (chunk_min, chunk_max) columns: a rowid-window probe skips whole
   *    chunks before exploding anything (the reference's block-level seek).
   *  - CalcCount without materialization (secondary.cpp:774-812) → sum of
-  *    the stored per-chunk `cnt`: an index-only scan of a few rows.
+  *    the stored per-chunk `cnt`: over held postings rows on the driver,
+  *    with no job; past the size gate, an aggregate over the postings.
   *
   * 100 TB notes: the index build is one shuffle of (value, chunk, key)
   * triples. A [[semiJoin]] of a fact scan with a lookup's keys is planned
-  * as one [[graft.plans.PostingsLookupExec]]: one job collects the keys
-  * to the driver within a key budget (a quarter of
-  * `spark.driver.maxResultSize`, at most 64 MB of 8-byte keys, each task
-  * sending at most its share) and the query's own job keeps the fact rows
-  * whose key is among them; past the budget the fact rows co-group with
-  * the keys by key (one shuffle of both). Postings past a few MB are read
-  * with the lookup's value conditions pushed into the Parquet scan. High-ndv columns give many short posting rows; low-ndv columns
+  * as one [[graft.plans.PostingsLookupExec]]: the keys are taken to the
+  * driver within a key budget (a quarter of `spark.driver.maxResultSize`,
+  * at most 64 MB of 8-byte keys) — from held postings rows with no job,
+  * else by one job whose tasks each send at most their share — and the
+  * query's own job keeps the fact rows whose key is among them; past the
+  * budget the fact rows co-group with the keys by key (one shuffle of
+  * both). High-ndv columns give many short posting rows; low-ndv columns
   * give many CHUNKS of the same value — either way rows stay bounded and
   * the index table is tiny next to the fact table.
   */
@@ -225,10 +231,10 @@ object SecondaryIndex {
     graft.plans.IndexRouting.onIndexMutated(spark, indexPath)
   }
 
-  /** Postings rows → keys, with the optional rowid-window seek: chunks
-    * whose [chunk_min, chunk_max] miss the window are skipped BEFORE
-    * exploding (the reference's per-block min/max seek,
-    * blockreader.h:82-89).
+  /** Postings rows passing `pred` → keys, with the optional rowid-window
+    * seek: chunks whose [chunk_min, chunk_max] miss the window are skipped
+    * BEFORE exploding (the reference's per-block min/max seek,
+    * blockreader.h:82-89), in the same filter as `pred`.
     *
     * The key stream is NOT deduplicated: for scalar indexes keys are unique
     * by layout invariant 6 (sum(cnt) == distinct keys, enforced by
@@ -238,15 +244,18 @@ object SecondaryIndex {
     * for nothing (VERDICT r8). A MULTI-VALUED index ([[buildMva]]) may
     * repeat a key across several matched values; [[semiJoin]] (left_semi)
     * is duplicate-insensitive, so every consumer stays correct there too. */
-  private def postingsToKeys(base: DataFrame,
-                             keyRange: Option[(Long, Long)]): DataFrame =
+  private def postingsToKeys(spark: SparkSession, indexPath: String,
+                             pred: Column,
+                             keyRange: Option[(Long, Long)]): DataFrame = {
+    val postings = cachedRead(spark, indexPath)
     keyRange match {
       case Some((lo, hi)) =>
-        base.filter(col("chunk_max") >= lo && col("chunk_min") <= hi)
+        postings.filter(pred && col("chunk_max") >= lo && col("chunk_min") <= hi)
           .select(explode(col("rowids")).as("key"))
           .filter(col("key") >= lo && col("key") <= hi)
-      case None => base.select(explode(col("rowids")).as("key"))
+      case None => postings.filter(pred).select(explode(col("rowids")).as("key"))
     }
+  }
 
   /** I9 OPTIMIZE with an OBJECT-STORE-SAFE commit (VERDICT r8 #7): the
     * rename-based [[compact]] is correct where rename is atomic (HDFS,
@@ -292,9 +301,7 @@ object SecondaryIndex {
     * `values` = IN-list semantics (F1 via index). */
   def lookupKeys(spark: SparkSession, indexPath: String, values: Seq[Any],
                  keyRange: Option[(Long, Long)] = None): DataFrame =
-    postingsToKeys(
-      cachedRead(spark, indexPath).filter(col("value").isin(values: _*)),
-      keyRange)
+    postingsToKeys(spark, indexPath, col("value").isin(values: _*), keyRange)
 
   /** I3: VALUE-range lookup — RANGE/FLOATRANGE filters served from the
     * index (ref FixupFilter, secondary/secondary.cpp:680-744; the PGM
@@ -309,10 +316,8 @@ object SecondaryIndex {
                       lo: Option[Any], hi: Option[Any],
                       loInclusive: Boolean = true, hiInclusive: Boolean = true,
                       keyRange: Option[(Long, Long)] = None): DataFrame =
-    postingsToKeys(
-      cachedRead(spark, indexPath)
-        .filter(valueRangePred(lo, hi, loInclusive, hiInclusive)),
-      keyRange)
+    postingsToKeys(spark, indexPath,
+      valueRangePred(lo, hi, loInclusive, hiInclusive), keyRange)
 
   /** F5 via index: NOTNULL served from the postings (ref fullscan-limits
     * path, secondary/secondary.cpp:50-76 — the index enumerates rows per
@@ -321,15 +326,12 @@ object SecondaryIndex {
     * excluded). Composes with the rowid-window seek. */
   def lookupNotNullKeys(spark: SparkSession, indexPath: String,
                         keyRange: Option[(Long, Long)] = None): DataFrame =
-    postingsToKeys(
-      cachedRead(spark, indexPath).filter(col("value").isNotNull), keyRange)
+    postingsToKeys(spark, indexPath, col("value").isNotNull, keyRange)
 
   /** I6 for NOTNULL: count rows with a non-null indexed value from stored
     * per-chunk counts — index-only. */
   def calcCountNotNull(spark: SparkSession, indexPath: String): Long =
-    cachedRead(spark, indexPath)
-      .filter(col("value").isNotNull)
-      .agg(coalesce(sum(col("cnt")), lit(0L))).head.getLong(0)
+    countOf(spark, indexPath, col("value").isNotNull)
 
   /** Index-accelerated filter: semi-join the fact table against the
     * postings (the host-side rowid-stream intersection, SURVEY §3.2).
@@ -342,14 +344,13 @@ object SecondaryIndex {
     * query's own job, with no exchange. Other key frames join as usual. */
   def semiJoin(fact: DataFrame, factKey: String,
                keys: DataFrame): DataFrame =
-    fact.join(keys.withColumnRenamed("key", factKey), Seq(factKey), "left_semi")
+    fact.join(keys, fact.col(s"`${factKey.replace("`", "``")}`") ===
+      keys.col("key"), "left_semi")
 
   /** I6 CalcCount from stored per-chunk counts — index-only, no fact scan. */
   def calcCount(spark: SparkSession, indexPath: String,
                 values: Seq[Any]): Long =
-    cachedRead(spark, indexPath)
-      .filter(col("value").isin(values: _*))
-      .agg(coalesce(sum(col("cnt")), lit(0L))).head.getLong(0)
+    countOf(spark, indexPath, col("value").isin(values: _*))
 
   /** I6 over a VALUE range (ref CalcCount walks the same block list the
     * range FixupFilter selects, secondary.cpp:774-812) — sums stored
@@ -359,7 +360,17 @@ object SecondaryIndex {
                      lo: Option[Any], hi: Option[Any],
                      loInclusive: Boolean = true,
                      hiInclusive: Boolean = true): Long =
-    cachedRead(spark, indexPath)
-      .filter(valueRangePred(lo, hi, loInclusive, hiInclusive))
-      .agg(coalesce(sum(col("cnt")), lit(0L))).head.getLong(0)
+    countOf(spark, indexPath, valueRangePred(lo, hi, loInclusive, hiInclusive))
+
+  /** The stored `cnt` summed over the postings rows passing `pred`: on the
+    * driver over the postings' held rows ([[PostingsLookupExec.heldRows]]),
+    * with no job once they are held; postings past the size gate or the
+    * result budget are aggregated by a job. */
+  private def countOf(spark: SparkSession, indexPath: String,
+                      pred: Column): Long = {
+    val postings = cachedRead(spark, indexPath).filter(pred)
+    PostingsLookupExec.heldRows(postings, Seq("cnt")).fold(
+      postings.agg(coalesce(sum(col("cnt")), lit(0L))).head.getLong(0))(
+      _.foldLeft(0L)((n, r) => if (r.isNullAt(0)) n else n + r.getLong(0)))
+  }
 }

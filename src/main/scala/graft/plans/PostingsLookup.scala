@@ -24,17 +24,20 @@ import scala.util.control.NonFatal
 final case class TaskCond(expr: Expression, params: Seq[Any])
 
 /** One side of a [[PostingsLookupExec]]: the parquet dir at `root`, read
-  * as `cols`, and the condition its tasks evaluate over them. `read` and
-  * `scan` are the dir's [[Graft.cachedReadAndScan]], taken when the plan
-  * was made and its files were checked against the query's relation, so
-  * every run of the plan reads those files. `pushed`, when set, is the
-  * condition by column name, pushed into a [[Graft.prunedScan]] of `read`
-  * instead of reading every row of `scan`. */
+  * as `cols`, and the condition evaluated over them. `pin` is the dir's
+  * [[Graft.pinned]] scan, taken when the plan was made and its files were
+  * checked against the query's relation, so every run of the plan reads
+  * those files, or the rows of that scan held on the driver. `pushed`,
+  * when set, is the condition by column name, pushed into a
+  * [[Graft.prunedScan]] of `read` instead of reading every row of
+  * `scan`. */
 final case class LookupScan(root: String, cols: Seq[String],
                             cond: Option[TaskCond],
                             pushed: Option[Expression],
-                            @transient read: DataFrame,
-                            @transient scan: RDD[InternalRow]) {
+                            @transient pin: Graft.Pinned) {
+  def read: DataFrame = pin.df
+  def scan: RDD[InternalRow] = pin.scan
+
   /** The scan a run reads. */
   def rows: RDD[InternalRow] =
     pushed.fold(scan)(Graft.prunedScan(read, cols, _))
@@ -53,25 +56,32 @@ final case class LookupScan(root: String, cols: Seq[String],
   * way the reference turns a filter into rowid iterators and reads only
   * those rows (`SecondaryIndex_c::CreateIterators`, secondary.cpp:745):
   *
-  *  - job 1 runs over the postings' scan; each task explodes the passing
-  *    rows' keys and sends them while they fit its share of `keyBudget`,
-  *    else only that they overflowed, and the driver sorts and dedups
-  *    them into a `long[]`;
+  *  - the keys: the passing postings rows' keys, sorted and deduplicated
+  *    into a `long[]` on the driver. They are read one of three ways:
+  *    - resident: postings of at most [[PostingsLookupExec.PushedBytes]]
+  *      whose rows are held on the driver ([[Graft.Pinned.held]], within
+  *      [[GraphCandidatesExec.resultBudget]] over all held rows) are
+  *      walked there, with no job — the reference's block cache of
+  *      decoded postings. The first lookup over them reads them in;
+  *    - scanned: small postings that do not fit run job 1 over their
+  *      memoized scan; each task explodes the passing rows' keys and
+  *      sends them while they fit its share of `keyBudget`, else only
+  *      that they overflowed;
+  *    - pushed: past `PushedBytes` job 1 runs over a per-query scan with
+  *      the conditions pushed into it, which skips files, row groups and
+  *      pages by value;
   *  - the fetch is the query's own job over the fact table's memoized
   *    scan: its tasks keep the rows whose key binary-searches into that
   *    array and that pass `fact.cond`.
   *
-  * The fact scan is planned once per live table and column set; so is
-  * the postings scan while the postings are small, and past
-  * [[PostingsLookupExec.PushedBytes]] their conditions are pushed into a
-  * per-query scan that skips files, row groups and pages by value. The
-  * plan holds no exchange, so the built-in planner's broadcast join (an
-  * AQE-wrapped query with a broadcast stage, re-planned on every query)
-  * becomes one SQL execution of two jobs. Past the key budget — a quarter
-  * of `spark.driver.maxResultSize` at most 64 MB, in 8-byte keys, so the
+  * The plan holds no exchange, so the built-in planner's broadcast join
+  * (an AQE-wrapped query with a broadcast stage, re-planned on every
+  * query) becomes one SQL execution: of one job over resident postings,
+  * else of two. Past the key budget — a quarter of
+  * `spark.driver.maxResultSize` at most 64 MB, in 8-byte keys, so the
   * keys job's results never near that limit — the keys stay distributed:
-  * the fetch co-groups the fact rows with the exploded keys by key, one
-  * shuffle of both. */
+  * the fetch co-groups the fact rows with the exploded keys of the
+  * postings' scan by key, one shuffle of both. */
 final case class PostingsLookupExec(output: Seq[Attribute],
                                     postings: LookupScan,
                                     keyCond: Option[TaskCond],
@@ -82,7 +92,9 @@ final case class PostingsLookupExec(output: Seq[Attribute],
     "keys" -> SQLMetrics.createMetric(sparkContext, "keys collected"),
     "scanned" -> SQLMetrics.createMetric(sparkContext, "fact rows scanned"),
     "returned" -> SQLMetrics.createMetric(sparkContext, "rows returned"),
-    "fallback" -> SQLMetrics.createMetric(sparkContext, "fallback taken"))
+    "fallback" -> SQLMetrics.createMetric(sparkContext, "fallback taken"),
+    "resident" -> SQLMetrics.createMetric(sparkContext,
+      "keys read on the driver"))
 
   override def simpleString(maxFields: Int): String =
     s"PostingsLookup ${output.mkString("[", ", ", "]")} " +
@@ -90,17 +102,23 @@ final case class PostingsLookupExec(output: Seq[Attribute],
 
   override protected def doExecute(): RDD[InternalRow] = rows()
 
-  /** Runs job 1 and returns the fetch; `keyBudget` bounds the keys
-    * collected to the driver. The driver's metrics are posted to the
-    * running SQL execution; the fetch's tasks count theirs. */
+  /** Reads the keys and returns the fetch; `keyBudget` bounds the keys
+    * taken to the driver. The driver's metrics are posted to the running
+    * SQL execution; the fetch's tasks count theirs. */
   def rows(keyBudget: Long = PostingsLookupExec.keyBudget(
       sparkContext)): RDD[InternalRow] = {
-    val postingsRows = postings.rows
-    val keys = collectKeys(postingsRows, keyBudget)
+    lazy val postingsRows = postings.rows
+    val held = if (postings.pushed.isDefined) None
+      else postings.pin.held(GraphCandidatesExec.resultBudget(sparkContext))
+    val keys = held.fold(collectKeys(postingsRows, keyBudget)) { r =>
+      val ks = heldKeys(r, keyBudget)
+      if (ks.isDefined) metrics("resident") += 1
+      ks
+    }
     if (keys.isEmpty) metrics("fallback") += 1
     SQLMetrics.postDriverMetricUpdates(sparkContext,
       sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY),
-      Seq(metrics("keys"), metrics("fallback")))
+      Seq(metrics("keys"), metrics("fallback"), metrics("resident")))
     keys.fold(coGrouped(postingsRows))(fetch)
   }
 
@@ -125,19 +143,30 @@ final case class PostingsLookupExec(output: Seq[Attribute],
       },
       (_: Int, part: Array[Long]) =>
         if (part == null) over = true else got ++= part)
-    if (over) None
-    else {
-      val ks = got.result()
-      metrics("keys") += ks.length
-      java.util.Arrays.sort(ks)
-      var m = 0
-      var i = 0
-      while (i < ks.length) {
-        if (m == 0 || ks(i) != ks(m - 1)) { ks(m) = ks(i); m += 1 }
-        i += 1
-      }
-      Some(java.util.Arrays.copyOf(ks, m))
+    if (over) None else Some(distinct(got.result()))
+  }
+
+  /** The keys over postings rows held on the driver, or None past
+    * `keyBudget` of them. */
+  private def heldKeys(held: Graft.HeldRows,
+                       keyBudget: Long): Option[Array[Long]] = {
+    val cap = math.min(math.max(0L, keyBudget), Int.MaxValue - 2L).toInt
+    val ks = PostingsLookupExec.keys(postings.cond, keyCond)(held.iterator)
+      .take(cap + 1).toArray
+    if (ks.length > cap) None else Some(distinct(ks))
+  }
+
+  /** `ks` sorted and deduplicated, in place; counts them in `keys`. */
+  private def distinct(ks: Array[Long]): Array[Long] = {
+    metrics("keys") += ks.length
+    java.util.Arrays.sort(ks)
+    var m = 0
+    var i = 0
+    while (i < ks.length) {
+      if (m == 0 || ks(i) != ks(m - 1)) { ks(m) = ks(i); m += 1 }
+      i += 1
     }
+    java.util.Arrays.copyOf(ks, m)
   }
 
   /** The fetch within budget: the fact rows whose key is in `keys`, which
@@ -184,11 +213,13 @@ object PostingsLookupExec {
 
   /** Postings listings larger than this many bytes are read through a
     * [[Graft.prunedScan]] of the lookup's conditions, planned per query,
-    * which skips files, row groups and pages by value; smaller ones are
-    * read whole through their memoized scan, which costs less than that
-    * planning. At sf0.1 on 4 cores, the routed `IndexQueries` gates over
-    * postings of up to 3 MB (150k rows) ran 11–28 ms faster reading them
-    * whole, and those over an 8.5 MB, 540k-row postings 58–72 ms slower. */
+    * which skips files, row groups and pages by value. Smaller ones are
+    * read whole: held on the driver while their rows fit the result
+    * budget ([[Graft.Pinned.held]]), else through their memoized scan,
+    * which costs less than the per-query planning. At sf0.1 on 4 cores,
+    * the routed `IndexQueries` gates over postings of up to 3 MB (150k
+    * rows) ran 11–28 ms faster scanning them whole, and those over an
+    * 8.5 MB, 540k-row postings 58–72 ms slower. */
   val PushedBytes: Long = 4L << 20
 
   /** Keys a lookup collects to the driver: [[GraphCandidatesExec
@@ -239,20 +270,35 @@ object PostingsLookupExec {
           .map(_.name).distinct
         postCols = (rowids +: postConds.flatMap(_.references)).map(_.name)
           .distinct
-        (factRoot, factRead, factScan, _) <- pinned(factRel, factCols)
-        (postRoot, postRead, postScan, postBytes) <- pinned(postRel, postCols)
+        (factRoot, factPin, _) <- pinned(factRel, factCols)
+        (postRoot, postPin, postBytes) <- pinned(postRel, postCols)
       } yield PostingsLookupExec(left.output,
           LookupScan(postRoot, postCols,
             bind(postConds, postCols.size, a => postCols.indexOf(a.name)),
             postConds.reduceOption(And).filter(_ => postBytes > pushedBytes),
-            postRead, postScan),
+            postPin),
           bind(keyConds, 1, _ => 0),
           LookupScan(factRoot, factCols,
             bind(factConds, factCols.size, a => factCols.indexOf(a.name)),
-            None, factRead, factScan),
+            None, factPin),
           factCols.indexOf(factKey.name), factKey.dataType)
     case _ => None
   }
+
+  /** The rows `df` keeps — Filter nodes over a parquet dir of at most
+    * [[PushedBytes]] — as `cols` followed by the columns the filters read,
+    * from the dir's rows held on the driver ([[Graft.Pinned.held]]), with
+    * no job once they are held. None for postings past that size or
+    * past the result budget, and for any other plan. */
+  def heldRows(df: DataFrame, cols: Seq[String]): Option[Iterator[InternalRow]] =
+    scanChain(df.queryExecution.analyzed).flatMap { case (conds, rel) =>
+      val all = (cols ++ conds.flatMap(_.references).map(_.name)).distinct
+      pinned(rel, all).collect {
+        case (_, pin, bytes) if bytes <= PushedBytes => pin
+      }.flatMap(_.held(GraphCandidatesExec.resultBudget(
+          df.sparkSession.sparkContext)))
+        .map(_.iterator.filter(passing(bind(conds, all.size, a => all.indexOf(a.name)))))
+    }
 
   /** A task's test of a [[TaskCond]]. */
   def passing(cond: Option[TaskCond]): InternalRow => Boolean =
@@ -338,22 +384,21 @@ object PostingsLookupExec {
     }
   }
 
-  /** The root `lr` reads, its [[Graft.cachedReadAndScan]] of `cols` and
-    * the bytes of its files, when that read lists the same files (path,
+  /** The root `lr` reads, its [[Graft.pinned]] scan of `cols` and the
+    * bytes of its files, when that read lists the same files (path,
     * length, modification time) and types `cols` alike — otherwise the
     * memoized scan would answer from other rows. */
   private def pinned(lr: LogicalRelation, cols: Seq[String])
-      : Option[(String, DataFrame, RDD[InternalRow], Long)] =
+      : Option[(String, Graft.Pinned, Long)] =
     lr.relation match {
       case h: HadoopFsRelation if !lr.isStreaming &&
           h.fileFormat.isInstanceOf[ParquetFileFormat] &&
           h.location.rootPaths.size == 1 =>
         val root = h.location.rootPaths.head.toString
         try {
-          val (read, scan) = Graft.cachedReadAndScan(SparkSession.active,
-            root, cols)
+          val pin = Graft.pinned(SparkSession.active, root, cols)
           val listed = files(h)
-          val same = read.queryExecution.analyzed.collectFirst {
+          val same = pin.df.queryExecution.analyzed.collectFirst {
             case c: LogicalRelation => c
           }.exists { c =>
             c.relation match {
@@ -365,7 +410,7 @@ object PostingsLookupExec {
               case _ => false
             }
           }
-          if (same) Some((root, read, scan, listed.toSeq.map(_._2).sum))
+          if (same) Some((root, pin, listed.toSeq.map(_._2).sum))
           else None
         } catch { case NonFatal(_) => None }
       case _ => None

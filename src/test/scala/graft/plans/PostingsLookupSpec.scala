@@ -3,7 +3,7 @@ package graft.plans
 import graft.SparkT
 import graft.index.SecondaryIndex
 import graft.tables.Writer
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.execution.SparkPlan
@@ -120,6 +120,131 @@ class PostingsLookupSpec extends AnyFunSuite {
     }
   }
 
+  test("a warm lookup over resident postings is one SQL execution of one job") {
+    def point = read(base).filter($"v" === 13L).select($"id", $"x")
+    def win = window(read(base), Seq(13L), 0L, 1000L)
+    for ((what, q) <- Seq[(String, () => DataFrame)](
+        "routed point" -> (() => point), "rowid window" -> (() => win))) {
+      q().collect() // reads the postings rows in
+      val df = q()
+      val (rows, work) = graft.WorkCount(SparkT.spark)(df.collect())
+      assert(rows.map(_.getLong(0)).toSet === Set(26L, 27L), what)
+      assert(work.executions === 1 && work.jobs === 1, s"$what: $work")
+      assert(lookups(df).map(_.metrics("resident").value) === Seq(1L), what)
+    }
+  }
+
+  /** `sum(cnt)` of the postings rows of `idx` passing `pred`, by a job. */
+  private def aggregate(idx: String, pred: Column): Long =
+    read(idx).filter(pred).agg(coalesce(sum($"cnt"), lit(0L))).head.getLong(0)
+
+  /** Jobs the thunk runs, and its result. */
+  private def jobs[A](thunk: => A): (A, Int) = {
+    val (a, work) = graft.WorkCount(SparkT.spark)(thunk)
+    (a, work.jobs)
+  }
+
+  test("warm index-only counts run no job and equal the DataFrame aggregate, MVA and null group included") {
+    // v is NULL on every seventh row, so the postings carry a null group
+    val fact = tmp.resolve("nulls").toString
+    val idx = tmp.resolve("nulls_idx").toString
+    val rows = (0L until 500L).map(i =>
+      (i, if (i % 7 == 0) None else Some(i % 40)))
+    Writer.write(rows.toDF("id", "v"), fact, sortBy = Seq("id"))
+    SecondaryIndex.build(read(fact), "v", "id", idx)
+    val arrIdx = { base; tmp.resolve("idxarr").toString }
+    val cases = Seq[(String, () => Long, Long)](
+      ("point", () => SecondaryIndex.calcCount(SparkT.spark, idx, Seq(3L, 9L)),
+        aggregate(idx, $"value".isin(3L, 9L))),
+      ("range", () => SecondaryIndex.calcCountRange(SparkT.spark, idx,
+        Some(5L), Some(12L), hiInclusive = false),
+        aggregate(idx, $"value" >= 5L && $"value" < 12L)),
+      ("not null", () => SecondaryIndex.calcCountNotNull(SparkT.spark, idx),
+        aggregate(idx, $"value".isNotNull)),
+      ("MVA values", () => SecondaryIndex.calcCount(SparkT.spark, arrIdx,
+        Seq(10L, 610L, 611L)), aggregate(arrIdx, $"value".isin(10L, 610L, 611L))))
+    for ((what, count, want) <- cases) {
+      count() // reads the postings rows in
+      val (got, n) = jobs(count())
+      assert(n === 0, what)
+      assert(got === want, what)
+    }
+    assert(cases(1)._3 === read(fact).filter($"v" >= 5L && $"v" < 12L).count())
+    assert(cases(2)._3 === rows.count(_._2.isDefined))
+    // the MVA count is of row occurrences: a row holding 610 and 611 counts twice
+    assert(cases(3)._3 === (0L until 1000L).map(rowsOf).map(_._5)
+      .map(a => (a.toSet & Set(10L, 610L, 611L)).size).sum)
+  }
+
+  test("after appendSegment, deleteKeys and compactManifest, lookups and counts equal an unregistered copy") {
+    val fact = tmp.resolve("life").toString
+    val idx = tmp.resolve("life_idx").toString
+    val all = (0L until 400L).map(i => (i, i % 30)).toDF("id", "v")
+    Writer.write(all.filter($"id" < 300L), fact, sortBy = Seq("id"))
+    SecondaryIndex.build(read(fact), "v", "id", idx)
+    def check(copy: String): Unit = {
+      val vs = Seq(3L, 7L)
+      val df = SecondaryIndex.semiJoin(read(fact), "id",
+        SecondaryIndex.lookupKeys(SparkT.spark, idx, vs))
+      assert(sorted(df) === sorted(read(copy).filter($"v".isin(vs: _*))))
+      assert(lookups(df).map(_.metrics("resident").value) === Seq(1L))
+      assert(SecondaryIndex.calcCount(SparkT.spark, idx, vs) ===
+        read(copy).filter($"v".isin(vs: _*)).count())
+      assert(SecondaryIndex.calcCountRange(SparkT.spark, idx, Some(10L),
+        Some(20L)) === read(copy).filter($"v".between(10L, 20L)).count())
+      assert(SecondaryIndex.calcCountNotNull(SparkT.spark, idx) ===
+        read(copy).count())
+    }
+    def copyOf(rows: DataFrame, name: String): String = {
+      val p = tmp.resolve(name).toString
+      Writer.write(rows, p, sortBy = Seq("id"))
+      p
+    }
+    check(copyOf(all.filter($"id" < 300L), "life_copy0"))
+    all.filter($"id" >= 300L).write.mode("append").parquet(fact)
+    SecondaryIndex.appendSegment(all.filter($"id" >= 300L), "v", "id", idx)
+    check(copyOf(all, "life_copy1"))
+    // the fact keeps the deleted rows; the index no longer posts them
+    SecondaryIndex.deleteKeys(SparkT.spark, idx,
+      all.filter($"id" % 4 === 0L), "id")
+    val kept = copyOf(all.filter($"id" % 4 =!= 0L), "life_copy2")
+    check(kept)
+    SecondaryIndex.compactManifest(SparkT.spark, idx)
+    check(kept)
+  }
+
+  test("under a tiny result budget a postings table past it keeps the job path, and held rows make room by evicting the oldest") {
+    // at 80k, the budget is 20k: each 500-value index's held count rows
+    // (cnt, value) take 14,000 bytes, and the 2,000-key lookup postings
+    // (rowids, value) 60,000
+    def index(name: String, n: Long, per: Long): String = {
+      val p = tmp.resolve(name).toString
+      SecondaryIndex.build(SparkT.spark.range(0L, n)
+        .select($"id", ($"id" / per).cast("long").as("v")), "v", "id", p)
+      p
+    }
+    val (a, c) = (index("held_a", 500L, 1L), index("held_c", 500L, 1L))
+    val big = index("held_big", 2000L, 2L)
+    val fact = tmp.resolve("held_fact").toString
+    Writer.write(SparkT.spark.range(0L, 2000L).toDF("id"), fact, sortBy = Seq("id"))
+    def count(idx: String) = SecondaryIndex.calcCount(SparkT.spark, idx, Seq(7L))
+    org.apache.spark.GraftTestConf.withConf(SparkT.spark.sparkContext,
+        "spark.driver.maxResultSize", "80k") {
+      val df = SecondaryIndex.semiJoin(read(fact), "id",
+        SecondaryIndex.lookupKeys(SparkT.spark, big, Seq(7L, 900L)))
+      assert(df.collect().map(_.getLong(0)).sorted.toSeq ===
+        Seq(14L, 15L, 1800L, 1801L))
+      assert(lookups(df).map(_.metrics("resident").value) === Seq(0L))
+      val (n, bigJobs) = jobs(count(big))
+      assert(n === 2L && bigJobs > 0)
+      assert(count(a) === 1L) // reads a's rows in
+      assert(jobs(count(a)) === ((1L, 0)))
+      assert(count(c) === 1L) // c's rows make room: a's go
+      assert(jobs(count(c)) === ((1L, 0)))
+      assert(jobs(count(a))._2 > 0)
+    }
+  }
+
   test("the lookup leaf posts its keys, rows scanned, rows returned and fallback as SQL metrics") {
     val df = read(base).filter($"v".isin(10L, 20L, 30L)).select($"id")
     assert(df.collect().map(_.getLong(0)).toSet ===
@@ -128,7 +253,7 @@ class PostingsLookupSpec extends AnyFunSuite {
     assert(leaf.size === 1)
     val m = leaf.head.metrics.map { case (k, v) => k -> v.value }
     assert(m === Map("keys" -> 6L, "scanned" -> 1000L, "returned" -> 6L,
-      "fallback" -> 0L))
+      "fallback" -> 0L, "resident" -> 1L))
   }
 
   test("past the key budget the co-grouped fetch returns the in-budget rows") {
