@@ -100,9 +100,10 @@ object Graft {
   private final class DirEntry(val key: (SparkSession, String, String),
                                val sig: String, val df: DataFrame) {
     val scans = lru[Seq[String], RDD[InternalRow]](64)
-    /** By column set: the scan's rows held on the driver, or the budget
-      * they did not fit; guarded by [[heldOrder]]'s monitor. */
-    val held = new java.util.HashMap[Seq[String], Either[Long, HeldRows]]()
+    /** The DataFrame's rows, every column, held on the driver, or the
+      * budget at which they are not held; guarded by [[heldOrder]]'s
+      * monitor. */
+    var held: Option[Either[Long, HeldRows]] = None
   }
 
   /** A map evicting its least recently used entry past `cap`, passing it
@@ -117,19 +118,17 @@ object Graft {
       }
     }
 
-  // Every entry's held rows with their bytes, least recently used first:
-  // their total stays within the budget the last load was given, the
-  // coldest going first. Its monitor guards every entry's `held` too.
+  // The entries holding rows, with their bytes, least recently used
+  // first: their total stays within the budget the last load was given,
+  // the coldest going first. Its monitor guards every entry's `held` too.
   private val heldOrder =
-    new java.util.LinkedHashMap[(DirEntry, Seq[String]), Long](16, 0.75f, true)
+    new java.util.LinkedHashMap[DirEntry, Long](16, 0.75f, true)
   private var heldBytes = 0L
 
   /** Forget `e`'s held rows: `e` left the cache. */
   private def release(e: DirEntry): Unit = heldOrder.synchronized {
-    e.held.forEach { (cols, h) =>
-      h.foreach { r => heldOrder.remove((e, cols)); heldBytes -= r.bytes }
-    }
-    e.held.clear()
+    e.held.foreach(_.foreach { r => heldOrder.remove(e); heldBytes -= r.bytes })
+    e.held = None
   }
 
   // Least-recently-used past the cap (r22, VERDICT r21 #6: a long-lived
@@ -198,62 +197,68 @@ object Graft {
     * the scan reads the files the DataFrame lists. */
   def pinned(spark: SparkSession, path: String, columns: Seq[String]): Pinned = {
     val e = entry(spark, path, "parquet")
-    val scan = e.scans.synchronized(Option(e.scans.get(columns))).getOrElse {
+    new Pinned(e.df, scanOf(e, columns), e)
+  }
+
+  /** `e`'s memoized scan of `columns`. */
+  private def scanOf(e: DirEntry, columns: Seq[String]): RDD[InternalRow] =
+    e.scans.synchronized(Option(e.scans.get(columns))).getOrElse {
       val rdd = e.df.select(columns.map(col): _*).queryExecution.toRdd
       e.scans.synchronized(e.scans.put(columns, rdd))
       rdd
     }
-    new Pinned(e.df, scan, columns, e)
-  }
 
   /** One look at a live dir ([[pinned]]): its DataFrame `df`, the scan of
-    * `columns` over it, and the rows of that scan held on the driver. */
+    * some of its columns over it, and its rows held on the driver. */
   final class Pinned private[Graft] (val df: DataFrame,
                                      val scan: RDD[InternalRow],
-                                     columns: Seq[String],
                                      e: DirEntry) {
 
-    /** The rows of [[scan]] held on the driver: read by one job (two when
-      * a task's rows pass its share of `budget`) the first time, then
-      * kept with the dir's cache entry until the entry goes or the
-      * least recently used held rows make room within `budget` for
-      * newer ones. None while the entry is no longer the dir's live one
-      * (its files were written since) and when the rows take more than
-      * `budget` bytes — neither is retried until the entry changes or
-      * the budget grows. */
+    /** The rows of `df`, every column, held on the driver: read by one job
+      * (two when a task's rows pass its share of `budget`) through the
+      * memoized scan of the dir this look pinned, the first time, then
+      * kept with the dir's cache entry until the entry goes or the least
+      * recently used held rows make room within `budget` for newer ones.
+      * None while the entry is no longer the dir's live one (its files
+      * were written since), when the rows take more than `budget` bytes,
+      * and once they were evicted at `budget`: none of these is read in
+      * again until the entry changes or the budget grows, so a mix that
+      * cycles over more rows than fit keeps the evicted ones on the job
+      * path instead of reading them in on every query. */
     def held(budget: Long): Option[HeldRows] = {
       def live = dirCache.synchronized(dirCache.get(e.key) eq e)
       val had =
         if (!live) Some(Left(Long.MaxValue))
         else heldOrder.synchronized {
-          val h = Option(e.held.get(columns))
-          if (h.exists(_.isRight)) heldOrder.get((e, columns)) // a use
-          h
+          if (e.held.exists(_.isRight)) heldOrder.get(e) // a use
+          e.held
         }
       had match {
         case Some(Right(r)) => Some(r)
         case Some(Left(over)) if over >= budget => None
         case _ =>
-          val types = df.select(columns.map(col): _*).schema.map(_.dataType)
-          val got = copyRows(scan, types, budget)
+          val columns = df.columns.toSeq
+          val got = copyRows(columns, scanOf(e, columns),
+            df.schema.map(_.dataType), budget)
           dirCache.synchronized(if (dirCache.get(e.key) eq e)
             heldOrder.synchronized(got match {
-              case Some(r) => keep(e, columns, r, budget)
-              case None => e.held.put(columns, Left(budget))
+              case Some(r) => keep(e, r, budget)
+              case None => e.held = Some(Left(budget))
             }))
           got
       }
     }
   }
 
-  /** Rows of a scan held on the driver: each task's rows as one buffer
-    * of (length, `UnsafeRow` bytes) records. */
-  final class HeldRows private[Graft] (numFields: Int, parts: Seq[Array[Byte]]) {
+  /** Rows held on the driver, of `columns`: each task's rows as one
+    * buffer of (length, `UnsafeRow` bytes) records. */
+  final class HeldRows private[Graft] (val columns: Seq[String],
+                                       parts: Seq[Array[Byte]]) {
     val bytes: Long = parts.iterator.map(_.length.toLong).sum
 
     /** The rows, each read into one row object that the next reuses. */
     def iterator: Iterator[InternalRow] = {
-      val row = new UnsafeRow(numFields)
+      val row = new UnsafeRow(columns.size)
       parts.iterator.flatMap { b =>
         val in = java.nio.ByteBuffer.wrap(b)
         Iterator.continually(in).takeWhile(_.hasRemaining).map { in =>
@@ -266,33 +271,32 @@ object Graft {
     }
   }
 
-  /** Holds `r` as `e`'s rows of `cols`, evicting the least recently used
-    * other held rows while the total passes `budget`; under
-    * [[heldOrder]]'s monitor. */
-  private def keep(e: DirEntry, cols: Seq[String], r: HeldRows,
-                   budget: Long): Unit = {
-    Option(e.held.put(cols, Right(r))).flatMap(_.toOption)
-      .foreach(old => heldBytes -= old.bytes)
-    heldOrder.put((e, cols), r.bytes)
+  /** Holds `r` as `e`'s rows, evicting the least recently used other held
+    * rows while the total passes `budget`; an evicted entry is marked not
+    * held at `budget`. Under [[heldOrder]]'s monitor. */
+  private def keep(e: DirEntry, r: HeldRows, budget: Long): Unit = {
+    e.held.flatMap(_.toOption).foreach(old => heldBytes -= old.bytes)
+    e.held = Some(Right(r))
+    heldOrder.put(e, r.bytes)
     heldBytes += r.bytes
     val it = heldOrder.entrySet.iterator
     while (heldBytes > budget && it.hasNext) {
       val o = it.next()
-      if (o.getKey != ((e, cols))) {
-        o.getKey._1.held.remove(o.getKey._2)
+      if (o.getKey ne e) {
+        o.getKey.held = Some(Left(budget))
         heldBytes -= o.getValue
         it.remove()
       }
     }
   }
 
-  /** The rows of `scan` (columns of `types`) copied to the driver, or None
-    * past `budget` bytes. Each task sends its rows while they fit its
+  /** The rows of `scan` (`columns` of `types`) copied to the driver, or
+    * None past `budget` bytes. Each task sends its rows while they fit its
     * share of the budget, else only their size; when the sizes fit the
     * budget, one more job reads the partitions that sent none. The
     * results of either job stay within the budget. */
-  private def copyRows(scan: RDD[InternalRow], types: Seq[DataType],
-                       budget: Long): Option[HeldRows] = {
+  private def copyRows(columns: Seq[String], scan: RDD[InternalRow],
+                       types: Seq[DataType], budget: Long): Option[HeldRows] = {
     val sc = scan.sparkContext
     def copy(limit: Long)(it: Iterator[InternalRow]): Either[Long, Array[Byte]] = {
       lazy val proj = UnsafeProjection.create(types.toArray)
@@ -313,7 +317,7 @@ object Graft {
     else {
       val rest = if (over.isEmpty) Array.empty[Either[Long, Array[Byte]]]
         else sc.runJob(scan, copy(budget) _, over)
-      Some(new HeldRows(types.size, (first ++ rest).toSeq.flatMap(_.toOption)))
+      Some(new HeldRows(columns, (first ++ rest).toSeq.flatMap(_.toOption)))
     }
   }
 

@@ -369,8 +369,11 @@ object SecondaryIndex {
   private def countOf(spark: SparkSession, indexPath: String,
                       pred: Column): Long = {
     val postings = cachedRead(spark, indexPath).filter(pred)
-    PostingsLookupExec.heldRows(postings, Seq("cnt")).fold(
-      postings.agg(coalesce(sum(col("cnt")), lit(0L))).head.getLong(0))(
-      _.foldLeft(0L)((n, r) => if (r.isNullAt(0)) n else n + r.getLong(0)))
+    PostingsLookupExec.heldRows(postings).fold(
+      postings.agg(coalesce(sum(col("cnt")), lit(0L))).head.getLong(0)) {
+      case (cols, rows) =>
+        val at = cols.indexOf("cnt")
+        rows.foldLeft(0L)((n, r) => if (r.isNullAt(at)) n else n + r.getLong(at))
+    }
   }
 }

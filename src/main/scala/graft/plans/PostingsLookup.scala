@@ -24,19 +24,26 @@ import scala.util.control.NonFatal
 final case class TaskCond(expr: Expression, params: Seq[Any])
 
 /** One side of a [[PostingsLookupExec]]: the parquet dir at `root`, read
-  * as `cols`, and the condition evaluated over them. `pin` is the dir's
-  * [[Graft.pinned]] scan, taken when the plan was made and its files were
-  * checked against the query's relation, so every run of the plan reads
-  * those files, or the rows of that scan held on the driver. `pushed`,
-  * when set, is the condition by column name, pushed into a
-  * [[Graft.prunedScan]] of `read` instead of reading every row of
+  * as `cols`, and the conjunction of `conds` (by column name) evaluated
+  * over them. `pin` is the dir's [[Graft.pinned]] scan, taken when the
+  * plan was made and its files were checked against the query's
+  * relation, so every run of the plan reads those files, or the dir's
+  * rows held on the driver. `pushed`, when set, is the condition pushed
+  * into a [[Graft.prunedScan]] of `read` instead of reading every row of
   * `scan`. */
 final case class LookupScan(root: String, cols: Seq[String],
-                            cond: Option[TaskCond],
+                            conds: Seq[Expression],
                             pushed: Option[Expression],
                             @transient pin: Graft.Pinned) {
   def read: DataFrame = pin.df
   def scan: RDD[InternalRow] = pin.scan
+
+  /** The condition over a row of `cols`. */
+  lazy val cond: Option[TaskCond] = condOver(cols)
+
+  /** The condition over a row of `columns`. */
+  def condOver(columns: Seq[String]): Option[TaskCond] =
+    PostingsLookupExec.bind(conds, columns.size, a => columns.indexOf(a.name))
 
   /** The scan a run reads. */
   def rows: RDD[InternalRow] =
@@ -63,7 +70,8 @@ final case class LookupScan(root: String, cols: Seq[String],
   *      [[GraphCandidatesExec.resultBudget]] over all held rows) are
   *      walked there, with no job — the reference's block cache of
   *      decoded postings. The first lookup over them reads them in;
-  *    - scanned: small postings that do not fit run job 1 over their
+  *    - scanned: small postings that are not held — they do not fit,
+  *      or were evicted to make room for others — run job 1 over their
   *      memoized scan; each task explodes the passing rows' keys and
   *      sends them while they fit its share of `keyBudget`, else only
   *      that they overflowed;
@@ -133,7 +141,7 @@ final case class PostingsLookupExec(output: Seq[Attribute],
                           keyBudget: Long): Option[Array[Long]] = {
     val share = math.min(math.max(0L, keyBudget) /
       math.max(1, scan.getNumPartitions), Int.MaxValue - 2L).toInt
-    val explode = PostingsLookupExec.keys(postings.cond, keyCond)
+    val explode = PostingsLookupExec.keys(postings.cond, keyCond, 0)
     val got = new scala.collection.mutable.ArrayBuilder.ofLong
     var over = false
     sparkContext.runJob(scan,
@@ -151,7 +159,8 @@ final case class PostingsLookupExec(output: Seq[Attribute],
   private def heldKeys(held: Graft.HeldRows,
                        keyBudget: Long): Option[Array[Long]] = {
     val cap = math.min(math.max(0L, keyBudget), Int.MaxValue - 2L).toInt
-    val ks = PostingsLookupExec.keys(postings.cond, keyCond)(held.iterator)
+    val ks = PostingsLookupExec.keys(postings.condOver(held.columns), keyCond,
+        held.columns.indexOf(postings.cols.head))(held.iterator)
       .take(cap + 1).toArray
     if (ks.length > cap) None else Some(distinct(ks))
   }
@@ -191,7 +200,7 @@ final case class PostingsLookupExec(output: Seq[Attribute],
   /** The fetch past the budget: the passing fact rows co-grouped by key
     * with the exploded keys — one shuffle of both, no key on the driver. */
   private def coGrouped(postingsRows: RDD[InternalRow]): RDD[InternalRow] = {
-    val explode = PostingsLookupExec.keys(postings.cond, keyCond)
+    val explode = PostingsLookupExec.keys(postings.cond, keyCond, 0)
     val (cond, at, dt, proj0) = (fact.cond, keyAt, keyType, projection)
     val (scanned, returned) = (longMetric("scanned"), longMetric("returned"))
     val facts = fact.rows.mapPartitions { it =>
@@ -227,15 +236,16 @@ object PostingsLookupExec {
   def keyBudget(sc: org.apache.spark.SparkContext): Long =
     GraphCandidatesExec.resultBudget(sc) / 8
 
-  /** The keys of the postings rows a task reads that pass `cond`, each
-    * passing `keyCond`; NULL arrays and elements hold no key. */
-  def keys(cond: Option[TaskCond], keyCond: Option[TaskCond])
+  /** The keys, in column `rowids`, of the postings rows a task reads that
+    * pass `cond`, each passing `keyCond`; NULL arrays and elements hold no
+    * key. */
+  def keys(cond: Option[TaskCond], keyCond: Option[TaskCond], rowids: Int)
       : Iterator[InternalRow] => Iterator[Long] = { it =>
     val pass = passing(cond)
     val keyPass = passing(keyCond)
     val one = new SpecificInternalRow(Seq(LongType))
-    it.filter(r => !r.isNullAt(0) && pass(r)).flatMap { r =>
-      val ids = r.getArray(0)
+    it.filter(r => !r.isNullAt(rowids) && pass(r)).flatMap { r =>
+      val ids = r.getArray(rowids)
       Iterator.range(0, ids.numElements()).filter(!ids.isNullAt(_))
         .map(ids.getLong).filter { k => one.setLong(0, k); keyPass(one) }
     }
@@ -273,31 +283,30 @@ object PostingsLookupExec {
         (factRoot, factPin, _) <- pinned(factRel, factCols)
         (postRoot, postPin, postBytes) <- pinned(postRel, postCols)
       } yield PostingsLookupExec(left.output,
-          LookupScan(postRoot, postCols,
-            bind(postConds, postCols.size, a => postCols.indexOf(a.name)),
+          LookupScan(postRoot, postCols, postConds,
             postConds.reduceOption(And).filter(_ => postBytes > pushedBytes),
             postPin),
           bind(keyConds, 1, _ => 0),
-          LookupScan(factRoot, factCols,
-            bind(factConds, factCols.size, a => factCols.indexOf(a.name)),
-            None, factPin),
+          LookupScan(factRoot, factCols, factConds, None, factPin),
           factCols.indexOf(factKey.name), factKey.dataType)
     case _ => None
   }
 
   /** The rows `df` keeps — Filter nodes over a parquet dir of at most
-    * [[PushedBytes]] — as `cols` followed by the columns the filters read,
-    * from the dir's rows held on the driver ([[Graft.Pinned.held]]), with
-    * no job once they are held. None for postings past that size or
-    * past the result budget, and for any other plan. */
-  def heldRows(df: DataFrame, cols: Seq[String]): Option[Iterator[InternalRow]] =
+    * [[PushedBytes]] — with every column of the dir, named by the first
+    * element, from its rows held on the driver ([[Graft.Pinned.held]]),
+    * with no job once they are held. None for postings past that size or
+    * not held within the result budget, and for any other plan. */
+  def heldRows(df: DataFrame): Option[(Seq[String], Iterator[InternalRow])] =
     scanChain(df.queryExecution.analyzed).flatMap { case (conds, rel) =>
-      val all = (cols ++ conds.flatMap(_.references).map(_.name)).distinct
-      pinned(rel, all).collect {
+      pinned(rel, rel.output.map(_.name)).collect {
         case (_, pin, bytes) if bytes <= PushedBytes => pin
       }.flatMap(_.held(GraphCandidatesExec.resultBudget(
           df.sparkSession.sparkContext)))
-        .map(_.iterator.filter(passing(bind(conds, all.size, a => all.indexOf(a.name)))))
+        .map { r =>
+          val cond = bind(conds, r.columns.size, a => r.columns.indexOf(a.name))
+          (r.columns, r.iterator.filter(passing(cond)))
+        }
     }
 
   /** A task's test of a [[TaskCond]]. */
@@ -307,8 +316,8 @@ object PostingsLookupExec {
 
   /** The conjunction of `conds` over a row of `width` columns, each
     * attribute at `at(attribute)`. */
-  private def bind(conds: Seq[Expression], width: Int,
-                   at: AttributeReference => Int): Option[TaskCond] =
+  private[plans] def bind(conds: Seq[Expression], width: Int,
+                          at: AttributeReference => Int): Option[TaskCond] =
     conds.reduceOption(And).map { c =>
       val params = scala.collection.mutable.ArrayBuffer.empty[Any]
       def lift(e: Expression): Expression = e match {

@@ -214,9 +214,9 @@ class PostingsLookupSpec extends AnyFunSuite {
   }
 
   test("under a tiny result budget a postings table past it keeps the job path, and held rows make room by evicting the oldest") {
-    // at 80k, the budget is 20k: each 500-value index's held count rows
-    // (cnt, value) take 14,000 bytes, and the 2,000-key lookup postings
-    // (rowids, value) 60,000
+    // at 240k, the budget is 61,440 bytes: each 500-value index's held
+    // rows (all six postings columns) take 42,000 bytes, and the
+    // 2,000-key lookup postings 92,000
     def index(name: String, n: Long, per: Long): String = {
       val p = tmp.resolve(name).toString
       SecondaryIndex.build(SparkT.spark.range(0L, n)
@@ -229,7 +229,7 @@ class PostingsLookupSpec extends AnyFunSuite {
     Writer.write(SparkT.spark.range(0L, 2000L).toDF("id"), fact, sortBy = Seq("id"))
     def count(idx: String) = SecondaryIndex.calcCount(SparkT.spark, idx, Seq(7L))
     org.apache.spark.GraftTestConf.withConf(SparkT.spark.sparkContext,
-        "spark.driver.maxResultSize", "80k") {
+        "spark.driver.maxResultSize", "240k") {
       val df = SecondaryIndex.semiJoin(read(fact), "id",
         SecondaryIndex.lookupKeys(SparkT.spark, big, Seq(7L, 900L)))
       assert(df.collect().map(_.getLong(0)).sorted.toSeq ===
@@ -241,7 +241,9 @@ class PostingsLookupSpec extends AnyFunSuite {
       assert(jobs(count(a)) === ((1L, 0)))
       assert(count(c) === 1L) // c's rows make room: a's go
       assert(jobs(count(c)) === ((1L, 0)))
-      assert(jobs(count(a))._2 > 0)
+      // a's rows are not read in again at this budget, so c's stay held
+      for (_ <- 0 until 2) assert(jobs(count(a)) match { case (n, j) => n == 1L && j > 0 })
+      assert(jobs(count(c)) === ((1L, 0)))
     }
   }
 
